@@ -4,7 +4,9 @@ import org.apache.spark.sql.SparkSession
 /** Dev tool: time individual queries by name (same session config and
   * noop-sink methodology as Bench) — `runMain graft.BenchOne q64 q37`.
   * Each query runs REPS times (default 2; override SPARK_GRAFT_REPS) so
-  * the second rep shows the warm figure the full bench approximates. */
+  * the second rep shows the warm figure the full bench approximates. Each
+  * rep splits its wall time into construct (building the DataFrame, with
+  * any jobs that fires) and action (the noop-sink write). */
 object BenchOne {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -13,7 +15,6 @@ object BenchOne {
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.session.timeZone", "UTC") // parity with Bench/Verify (ADVICE r8)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
@@ -27,28 +28,23 @@ object BenchOne {
     val wanted = args.toSet
     // Bench's timed pass prewarms the shared session structures after its
     // one clearCache() (VERDICT r12 item 1) — mirror that here so rep
-    // figures stay comparable to BENCH_r*: clear, then re-materialize the
-    // shared logitFeatures cache entry (+ no-op hits on the driver-side
-    // caches) before timing.
-    def prewarm(): Unit = try {
-      val t = Tables(spark, sfDir)
-      graft.ops.Dedup.prewarmShared(t)
-      graft.ops.TextAnalysis.prewarmShared(t)
-      graft.ops.Similarity.prewarmShared(t)
-      graft.ops.Clustering.prewarmShared(t)
-      graft.ops.SuffixArray.prewarmShared(t)
-      ()
-    } catch { case e: Throwable =>
-      System.err.println(s"[benchone] prewarm FAILED: ${e.getMessage}")
-    }
+    // figures stay comparable to BENCH_r*.
+    def prewarm(): Unit =
+      try Shared.prewarm(Tables(spark, sfDir))
+      catch { case e: Throwable =>
+        System.err.println(s"[benchone] prewarm FAILED: ${e.getMessage}") }
     SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => wanted.exists(name.startsWith) }
       .foreach { case (name, fn) =>
         (1 to reps).foreach { rep =>
           if (clearCache) { spark.catalog.clearCache(); prewarm() }
           val t0 = System.nanoTime()
-          fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-          println(f"[benchone] $name rep$rep ${(System.nanoTime() - t0) / 1e9}%.2f s")
+          val df = fn(spark, sfDir)
+          val t1 = System.nanoTime()
+          df.write.format("noop").mode("overwrite").save()
+          val t2 = System.nanoTime()
+          println(f"[benchone] $name rep$rep ${(t2 - t0) / 1e9}%.2f s" +
+            f" (construct ${(t1 - t0) / 1e9}%.2f s, action ${(t2 - t1) / 1e9}%.2f s)")
         }
       }
     spark.stop()

@@ -14,7 +14,6 @@ object Verify {
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true") // ignored by Spark 4.1.2 (ts read dispatch: Tables.normalizeEventTs); kept for older runtimes
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

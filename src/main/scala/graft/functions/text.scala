@@ -71,21 +71,6 @@ object text {
         transform(sequence(lit(0), size(tokens) - n),
           i => concat_ws(" ", slice(tokens, i + 1, n))))
 
-  /** Character shingles (for MinHash/Jaccard dedup): distinct k-length
-    * substrings of the lowercased text. Column-only. */
-  def charShingles(c: Column, k: Int): Column = {
-    val s = lower(c)
-    when(length(s) < k, array(s))
-      .otherwise(array_distinct(
-        transform(sequence(lit(1), length(s) - k + 1),
-          i => s.substr(i, lit(k)))))
-  }
-
-  /** 64-bit FNV-1a over a string — deterministic, cheap, good dispersion;
-    * used for shingle hashing and fingerprints. Column-only via xxhash64
-    * (Spark's built-in 64-bit hash, codegen'd). */
-  def hash64(c: Column, seed: Int = 42): Column = xxhash64(lit(seed), c)
-
   /** Document fingerprint (SURVEY north-star "document fingerprinting"):
     * min-hash of character shingles — equal texts always collide, near-equal
     * texts collide with prob ≈ Jaccard similarity. One 64-bit value.
@@ -129,9 +114,6 @@ object text {
     }
     def ends(suf: String): Boolean = b.endsWith(suf)
     def stem(suf: String): String = b.substring(0, b.length - suf.length)
-    def replace(suf: String, rep: String, cond: String => Boolean): Boolean =
-      if (ends(suf)) { val st = stem(suf); if (cond(st)) { b = st + rep }; true }
-      else false
 
     // Step 1a
     if (ends("sses")) b = stem("es")
@@ -296,9 +278,6 @@ object text {
       .filterNot(queryTokens.contains)
       .map(porterStem)
   }
-
-  def posFilterTokensUdf(queryTokens: Set[String]) =
-    udf((s: String) => posFilterTokens(s, queryTokens))
 
   // ------------------------------------------------------------- quality
 

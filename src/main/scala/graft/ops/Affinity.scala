@@ -209,13 +209,6 @@ object Affinity {
     apGrouped(df, groupCol, idCol, vecCol, preference, damping, rounds,
       Summarize.groupCapOrMax(df, groupCol, cap, "ap"))
 
-  /** Governed agglomerative front door (same contract as apGoverned; the
-    * merge loop is super-quadratic, so the default cap sits lower). */
-  def agglomerativeGoverned(df: DataFrame, groupCol: String, idCol: String,
-      vecCol: String, nClusters: Int = 5, cap: Int = 512): DataFrame =
-    agglomerativeGrouped(df, groupCol, idCol, vecCol, nClusters,
-      Summarize.groupCapOrMax(df, groupCol, cap, "agglomerative"))
-
   /** The reference's AP cluster-assembly gate (cluster.py:80-93, the P10/W4
     * composition): keep only clusters with ≥ `minMembers` members whose
     * cosine to the exemplar exceeds `simThreshold` (ref constants 3 / .55),

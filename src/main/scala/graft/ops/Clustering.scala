@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.Tables
+import graft.{Shared, Tables}
 import graft.functions.text
 import org.apache.spark.ml.clustering.{KMeans, LDA}
 import org.apache.spark.ml.feature.{CountVectorizer, IDF, Normalizer}
@@ -222,8 +222,8 @@ object Clustering {
         round(col("sim"), 6).as("sim"))
       .orderBy(col("vec_id"))
 
-  /** Session-cached materialization of [[kmeansAssignments]] (the
-    * fuzzyLabelsCached / cosinePairs04Cached sibling): FIVE queries ride
+  /** [[kmeansAssignments]] materialized once as a `graft.Shared` entry
+    * (like fuzzyLabelsCached / cosinePairs04Cached): FIVE queries ride
     * the identical (k=8, updates=2) Lloyd pipeline — q134 semdedup,
     * q233/q234's contingency, q266 embedding outliers, q277 cluster
     * labels — and each previously re-ran the 2-round fit (3 driver
@@ -232,24 +232,16 @@ object Clustering {
     * downstream oracle is unaffected. q119's own bench entry keeps the
     * uncached builder so the fit's true cost stays measured (the
     * fuzzyPairsCached q32 precedent). */
-  private val kmeansCache =
-    scala.collection.concurrent.TrieMap[String, DataFrame]()
-
   private[graft] def kmeansAssignmentsCached(t: Tables, k: Int = 8,
       updates: Int = 2): DataFrame =
-    kmeansCache.getOrElseUpdate(
-      s"${Layout.sessionTag(t.spark)}#${t.sfDir}#kmeans#$k#$updates",
+    Shared(t, s"kmeans_assign#$k#$updates")(
       kmeansAssignments(t, k, updates).localCheckpoint())
 
   /** Bench warm-structure hook (VERDICT r12 item 1): forces the shared
     * Lloyd assignment at the query defaults so no timed consumer pays
     * another's fit. */
-  private[graft] def prewarmShared(t: Tables): Seq[(String, Double)] = {
-    def timed(name: String)(f: => Unit): (String, Double) = {
-      val t0 = System.nanoTime(); f; name -> ((System.nanoTime() - t0) / 1e9)
-    }
-    Seq(timed("kmeans_assign") { kmeansAssignmentsCached(t); () })
-  }
+  private[graft] def prewarmShared(t: Tables): Seq[(String, Double)] =
+    Seq(Shared.timed("kmeans_assign")(kmeansAssignmentsCached(t)))
 
   /** The q119 Lloyd pipeline up to (and including) the final assignment,
     * with the vectors still attached: (vec_id, e, cid, sim). Shared by
@@ -437,7 +429,6 @@ object Clustering {
   private[graft] def nmfFactors(t: Tables, k: Int, rounds: Int)
       : (DataFrame, DataFrame, DataFrame) = {
     import org.apache.spark.sql.expressions.Window
-    val spark = t.spark
     val toks = t.fanout(t.documents)
       .select(col("doc_id"),
         explode(text.removeStopwords(text.tokenize(col("text")))).as("term"))
@@ -604,7 +595,6 @@ object Clustering {
   /** LDA topic keywords: top-10 terms per topic (lda.py:54-56 intent,
     * gensim show_topics ≈ ml describeTopics). */
   def ldaTopicKeywords(t: Tables, k: Int = 10): DataFrame = {
-    val spark = t.spark
     val toks = t.fanout(t.documents).withColumn("tokens",
       text.removeStopwords(text.tokenize(col("text"))))
     val cv = new CountVectorizer().setInputCol("tokens").setOutputCol("tf")

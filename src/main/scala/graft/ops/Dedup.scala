@@ -1,8 +1,8 @@
 package graft.ops
 
-import graft.Tables
+import graft.{Shared, Tables}
 import graft.functions.{fasthash, text}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Near-duplicate detection (SURVEY.md §2.2 P4, §2.3 J2, §2.9 M7, and the
@@ -452,16 +452,11 @@ object Dedup {
     * q195/q257: (doc_id, cv0..cv3, chunk, cv) — one 64-column signature
     * aggregate, then a single projection + explode for the 4 band rows
     * per doc (q128: a 4-way union of selects recomputes the pipeline per
-    * branch). Session-cached (the fuzzyLabelsCached contract): FIVE
-    * consumers, one deterministic build, bit-identical hits; the table is
-    * 4 small rows per doc, so the checkpoint is cheap at any SF. */
-  private val bandsCache =
-    scala.collection.concurrent.TrieMap[String, DataFrame]()
-
+    * branch). A `graft.Shared` entry: FIVE consumers, one deterministic
+    * build, bit-identical hits; the table is 4 small rows per doc, so the
+    * checkpoint is cheap at any SF. */
   private def simhashBands(t: Tables): DataFrame =
-    bandsCache.getOrElseUpdate(
-      s"${Layout.sessionTag(t.spark)}#${t.sfDir}#simhash-bands",
-      simhashBandsBuild(t).localCheckpoint())
+    Shared(t, "simhash_bands")(simhashBandsBuild(t).localCheckpoint())
 
   private def simhashBandsBuild(t: Tables): DataFrame = {
     val toks = t.fanout(t.documents)
@@ -1402,34 +1397,25 @@ object Dedup {
       .select(col("id"), coalesce(col("root"), col("id")).as("label"))
   }
 
-  /** Session-cached component labels over the DEFAULT q32 fuzzy pair
-    * graph — the warm-structure contract (weightsCache / indexCache /
-    * mergeCache sibling): NINE queries consume the identical
+  /** Component labels over the DEFAULT q32 fuzzy pair graph, a
+    * `graft.Shared` entry: NINE queries consume the identical
     * qFuzzyPairs → starContract pipeline (q115/q141/q147/q226/q230/q249/
     * q252/q254/q257/q258); whichever runs first in a session pays the
     * contraction, the rest read the localCheckpointed (id, label) table.
     * The contraction is deterministic, so a hit is bit-identical and
     * every downstream oracle stays hash-green; Bench's full warm pass
     * pre-builds it. */
-  private val labelsCache =
-    scala.collection.concurrent.TrieMap[String, DataFrame]()
-
   private[graft] def fuzzyLabelsCached(t: Tables): DataFrame =
-    labelsCache.getOrElseUpdate(
-      s"${Layout.sessionTag(t.spark)}#${t.sfDir}#fuzzy-labels",
-      componentLabels(fuzzyPairsCached(t),
-        t.documents.select(col("doc_id").as("id"))).localCheckpoint())
+    Shared(t, "fuzzy_labels")(componentLabels(fuzzyPairsCached(t),
+      t.documents.select(col("doc_id").as("id"))).localCheckpoint())
 
-  /** Session-cached DEFAULT q32 pair list (id_a, id_b) — the generator
-    * itself, shared by the walk/audit/closure consumers (q36/q37/q147/
-    * q195/q227 + the labels cache above). q32's own bench entry keeps the
-    * uncached builder so the generator's true cost stays measured. */
-  private val pairsCache =
-    scala.collection.concurrent.TrieMap[String, DataFrame]()
-
+  /** The DEFAULT q32 pair list (id_a, id_b), a `graft.Shared` entry — the
+    * generator itself, shared by the walk/audit/closure consumers
+    * (q36/q37/q147/q195/q227 + the labels entry above). q32's own bench
+    * entry keeps the uncached builder so the generator's true cost stays
+    * measured. */
   private[graft] def fuzzyPairsCached(t: Tables): DataFrame =
-    pairsCache.getOrElseUpdate(
-      s"${Layout.sessionTag(t.spark)}#${t.sfDir}#fuzzy-pairs",
+    Shared(t, "fuzzy_pairs")(
       qFuzzyPairs(t).select(col("id_a"), col("id_b")).localCheckpoint())
 
   /** Bench warm-structure hook (VERDICT r12 item 1): forces the three
@@ -1438,15 +1424,10 @@ object Dedup {
     * here makes a fresh session order-independent and puts the build cost
     * on the bench stderr record instead of on whichever timed consumer
     * (q36/q37/q147/q195/q227/…) happens to run first. */
-  private[graft] def prewarmShared(t: Tables): Seq[(String, Double)] = {
-    def timed(name: String)(f: => Unit): (String, Double) = {
-      val t0 = System.nanoTime(); f; name -> ((System.nanoTime() - t0) / 1e9)
-    }
-    Seq(
-      timed("simhash_bands")(simhashBands(t).count()),
-      timed("fuzzy_pairs")(fuzzyPairsCached(t).count()),
-      timed("fuzzy_labels")(fuzzyLabelsCached(t).count()))
-  }
+  private[graft] def prewarmShared(t: Tables): Seq[(String, Double)] = Seq(
+    Shared.timed("simhash_bands")(simhashBands(t).count()),
+    Shared.timed("fuzzy_pairs")(fuzzyPairsCached(t).count()),
+    Shared.timed("fuzzy_labels")(fuzzyLabelsCached(t).count()))
 
   /** Min-id-per-component dedup: contract the near-dup pair graph into
     * connected components (distributed star contraction, O(log n) rounds —

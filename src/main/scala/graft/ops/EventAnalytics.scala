@@ -305,7 +305,6 @@ object EventAnalytics {
     * cell table). The exact counts ride along as ground truth, making
     * the CMS guarantee est ≥ exact a driver-checked column. */
   def qCmsFreq(t: Tables, d: Int = 4, w: Int = 64, topK: Int = 10): DataFrame = {
-    val spark = t.spark
     val ev = t.events.select(col("user_id"))
     val js = array((0 until d).map(lit): _*)
     def bucket(j: org.apache.spark.sql.Column, key: org.apache.spark.sql.Column) =

@@ -3,7 +3,7 @@ package graft.ops
 import graft.Tables
 import graft.functions.text
 import org.apache.spark.ml.clustering.KMeans
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** The reference's batch pipeline, end to end (SURVEY.md §3.1,

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.Tables
+import graft.{Shared, Tables}
 import graft.functions.fasthash
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
@@ -16,18 +16,6 @@ import org.apache.spark.sql.functions._
   * list_cosine_similarity over DOUBLE[].
   */
 object Similarity {
-
-  /** Fitted ANN index structures (PQ sub-codebooks, the IVF coarse
-    * quantizer), cached per (session, sfDir, params) — an ANN index is
-    * built ONCE and amortized over every query against it; that
-    * amortization is the index's entire reason to exist, and mirrors how
-    * FAISS persists the trained quantizers. The fits are seeded, so a
-    * cache hit returns bit-identical structures to a refit (correctness
-    * is unchanged — only the duplicate spark.ml jobs are skipped when
-    * q121's audit re-runs the q56/q137 methods). Session-scoped keys per
-    * the Layout.prepared precedent: no cross-session reuse, fresh
-    * sessions rebuild. */
-  private val indexCache = scala.collection.concurrent.TrieMap[String, AnyRef]()
 
   /** Sequential-order double dot product of two float arrays. */
   def dot(a: Column, b: Column): Column =
@@ -63,36 +51,27 @@ object Similarity {
       .select(col("probe_id"), col("rank"), col("neighbor_id"), round(col("sim"), 6).as("sim"))
   }
 
-  /** Session-cached exact-cosine top-k baseline for the STANDARD probes
-    * (vec_id < 10) over the full embeddings corpus — the warm-structure
-    * contract (indexCache / labelsCache sibling): q38 plus every ANN
-    * rung's in-plan recall join (q40/q56/q81/q137/q323) and the q165/q166
+  /** Exact-cosine top-k baseline for the STANDARD probes (vec_id < 10)
+    * over the full embeddings corpus, a `graft.Shared` entry: q38 plus
+    * every ANN rung's in-plan recall join (q40/q56/q81/q137/q323) and the q165/q166
     * binary-rung pair consume the IDENTICAL brute-force pass. The pass is
     * deterministic, so a hit is bit-identical and every downstream oracle
     * is unaffected; Bench's prewarm builds it once so no timed query pays
     * another's baseline. */
-  private val exactTopKCache =
-    scala.collection.concurrent.TrieMap[String, DataFrame]()
-
   private[graft] def exactTopKCached(t: Tables, k: Int): DataFrame =
-    exactTopKCache.getOrElseUpdate(
-      s"${Layout.sessionTag(t.spark)}#${t.sfDir}#exact-topk#$k",
+    Shared(t, s"exact_topk#$k")(
       bruteForceTopK(t.embeddings, t.embeddings.filter(col("vec_id") < 10), k)
         .localCheckpoint())
 
-  /** Session-cached exact 0.4-cosine pair graph over the embeddings
-    * corpus (exactTopKCached's sibling): q39 (qCosinePairs), q64
+  /** Exact 0.4-cosine pair graph over the embeddings corpus, a
+    * `graft.Shared` entry like exactTopKCached: q39 (qCosinePairs), q64
     * (qDedupEmbedding) and q313 (qDbscan) all mine the IDENTICAL
     * blocked-exact ε-graph — three full O(n·block) kernel passes per
     * bench run. The kernel is deterministic, so a hit is bit-identical
     * and every downstream oracle is unaffected; Bench's prewarm builds
     * it once so no timed query pays another's graph. */
-  private val pairGraphCache =
-    scala.collection.concurrent.TrieMap[String, DataFrame]()
-
   private[graft] def cosinePairs04Cached(t: Tables): DataFrame =
-    pairGraphCache.getOrElseUpdate(
-      s"${Layout.sessionTag(t.spark)}#${t.sfDir}#cosine-pairs#0.4",
+    Shared(t, "cosine_pairs#0.4")(
       cosinePairs(t.embeddings, 0.4, exactOnly = true).localCheckpoint())
 
   /** Oracle-checked ANN baseline: top-10 cosine neighbors for probes
@@ -347,7 +326,7 @@ object Similarity {
 
   /** Deterministic random hyperplanes: nBits planes × dim coefficients from
     * a seeded xorshift — reproducible across sessions, no RNG state. */
-  private def hyperplanes(nBits: Int, dim: Int, seed: Long = 42L): Array[Array[Double]] = {
+  private def hyperplanes(nBits: Int, dim: Int, seed: Long): Array[Array[Double]] = {
     var s = seed
     def next(): Double = {
       // xorshift64* — public-domain PRNG; uniform in (-1, 1)
@@ -468,7 +447,7 @@ object Similarity {
     * SimilaritySpec asserts it lands above that floor. */
   def ivfTopK(corpus: DataFrame, probes: DataFrame, k: Int,
       nCells: Int = 16, nProbe: Int = 6,
-      indexKey: Option[String] = None): DataFrame = {
+      index: Option[Tables] = None): DataFrame = {
     import org.apache.spark.ml.clustering.{KMeans, KMeansModel}
     import org.apache.spark.ml.functions.array_to_vector
     val spark = corpus.sparkSession
@@ -485,11 +464,7 @@ object Similarity {
     def fit(): KMeansModel =
       new KMeans().setK(nCells).setMaxIter(15).setSeed(42L)
         .setFeaturesCol("features").setPredictionCol("cell").fit(feats)
-    val model = indexKey match {
-      case Some(key) => indexCache
-        .getOrElseUpdate(s"$key#ivf#$nCells", fit()).asInstanceOf[KMeansModel]
-      case None => fit()
-    }
+    val model = sharedIndex(index, s"ivf_index#$nCells")(fit())
     val cells = model.transform(feats).select(col("neighbor_id"), col("emb_n"), col("cell"))
     // probe → its nProbe nearest centroids (tiny loop over broadcast centroids)
     val centroids = model.clusterCenters.map(_.toArray.map(_.toFloat)).zipWithIndex
@@ -514,34 +489,34 @@ object Similarity {
     * floor asserted in SimilaritySpec AND emitted as recall_at_k). */
   def qKnnIvf(t: Tables): DataFrame = {
     val probes = t.embeddings.filter(col("vec_id") < 10)
-    withRecallAtK(ivfTopK(t.embeddings, probes, 10,
-        indexKey = Some(annIndexKey(t))),
+    withRecallAtK(ivfTopK(t.embeddings, probes, 10, index = Some(t)),
       exactTopKCached(t, 10), 10)
       .orderBy(col("probe_id"), col("rank"))
   }
 
-  /** Session+SF-scoped key for the fitted-index cache (q56/q137 and the
-    * q121 audit share one index build per session). */
-  private def annIndexKey(t: Tables): String =
-    s"${Layout.sessionTag(t.spark)}#${t.sfDir}"
+  /** A fitted ANN index structure (PQ sub-codebooks, the IVF coarse
+    * quantizer): a `graft.Shared` entry when `index` names the query's
+    * tables, a fresh fit otherwise. An ANN index is built ONCE and
+    * amortized over every query against it; that amortization is the
+    * index's entire reason to exist, and mirrors how FAISS persists the
+    * trained quantizers. The fits are seeded, so a hit returns
+    * bit-identical structures to a refit (q56/q137 and the q121 audit
+    * share one fit per session). */
+  private def sharedIndex[A](index: Option[Tables], name: String)(fit: => A): A =
+    index.fold(fit)(Shared(_, name)(fit))
 
   /** Bench warm-structure hook (VERDICT r12 item 1): forces the fitted
     * ANN index structures (IVF quantizer, PQ codebooks) for the standard
     * probe queries. The fits run at DataFrame-CONSTRUCTION time inside
-    * ivfTopK/pqTopK (driver-side getOrElseUpdate), so constructing the
-    * query frames — without executing them — is enough; on a warm session
-    * both are TrieMap hits and this is free. indexCache survives
-    * clearCache(); this exists for fresh-session order-independence. */
-  private[graft] def prewarmShared(t: Tables): Seq[(String, Double)] = {
-    def timed(name: String)(f: => Unit): (String, Double) = {
-      val t0 = System.nanoTime(); f; name -> ((System.nanoTime() - t0) / 1e9)
-    }
-    Seq(
-      timed("ivf_index") { qKnnIvf(t); () },
-      timed("pq_index") { qKnnPq(t); () },
-      timed("exact_topk") { exactTopKCached(t, 10).count(); () },
-      timed("cosine_pairs") { cosinePairs04Cached(t); () })
-  }
+    * ivfTopK/pqTopK, so constructing the query frames — without executing
+    * them — is enough; on a warm session both are `graft.Shared` hits and
+    * this is free. The entries survive clearCache(); this exists for
+    * fresh-session order-independence. */
+  private[graft] def prewarmShared(t: Tables): Seq[(String, Double)] = Seq(
+    Shared.timed("ivf_index")(qKnnIvf(t)),
+    Shared.timed("pq_index")(qKnnPq(t)),
+    Shared.timed("exact_topk")(exactTopKCached(t, 10).count()),
+    Shared.timed("cosine_pairs")(cosinePairs04Cached(t)))
 
   // ------------------------------------------------- SQ8 quantized path
 
@@ -654,7 +629,7 @@ object Similarity {
     * rows touch raw vectors. */
   def pqTopK(corpus: DataFrame, probes: DataFrame, k: Int,
       rerank: Int = 30, dim: Int = 64, m: Int = 8, ksub: Int = 16,
-      indexKey: Option[String] = None): DataFrame = {
+      index: Option[Tables] = None): DataFrame = {
     import org.apache.spark.ml.clustering.KMeans
     import org.apache.spark.ml.functions.array_to_vector
     val spark = corpus.sparkSession
@@ -691,12 +666,7 @@ object Similarity {
       slices.foreach(_.unpersist(blocking = false))
       out
     }
-    val codebooks: Array[Array[Array[Double]]] = indexKey match {
-      case Some(key) => indexCache
-        .getOrElseUpdate(s"$key#pq#$m#$ksub", fitCodebooks())
-        .asInstanceOf[Array[Array[Array[Double]]]]
-      case None => fitCodebooks()
-    }
+    val codebooks = sharedIndex(index, s"pq_index#$m#$ksub")(fitCodebooks())
     val bCb = spark.sparkContext.broadcast(codebooks)
     // per-centroid squared norms for the ADC cosine denominator
     val bCn = spark.sparkContext.broadcast(
@@ -778,8 +748,7 @@ object Similarity {
     // 8x rerank budget: 8-byte codes on isotropic noise make the ADC
     // ordering the lossiest of the ladder; the rerank set is still
     // k-proportional and the scan still reads only codes
-    withRecallAtK(pqTopK(t.embeddings, probes, 10, rerank = 80,
-        indexKey = Some(annIndexKey(t))),
+    withRecallAtK(pqTopK(t.embeddings, probes, 10, rerank = 80, index = Some(t)),
       exactTopKCached(t, 10), 10)
       .orderBy(col("probe_id"), col("rank"))
   }

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.Tables
+import graft.{Shared, Tables}
 import graft.functions.text
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
@@ -45,32 +45,25 @@ import org.apache.spark.sql.functions._
   */
 object SuffixArray {
 
-  /** Session cache of the per-round rank chain (element r = the
-    * checkpointed table through rank_r): the suffix array IS a fitted
-    * index structure, so it follows the warm-structure contract
-    * (Similarity.indexCache / weightsCache precedent — deterministic
-    * build, bit-identical hits; q324 at rounds=6 and q325 at rounds=4
-    * share one chain instead of each paying the full doubling build). */
-  private val chainCache =
-    scala.collection.concurrent.TrieMap[String, Vector[DataFrame]]()
+  /** The checkpointed table through rank_depth, one `graft.Shared` entry
+    * per depth, each extending the one below it: the suffix array IS a
+    * fitted index structure (deterministic build, bit-identical hits), and
+    * q324 at rounds=6 and q325 at rounds=4 share one chain instead of
+    * each paying the full doubling build. */
+  private def rankChain(t: Tables, depth: Int): DataFrame =
+    Shared(t, s"suffix_chain#$depth")(
+      if (depth == 0) rankRound0(t) else extendRank(rankChain(t, depth - 1), depth))
 
   private[graft] def rankTables(t: Tables, rounds: Int): DataFrame = {
-    val key = s"${Layout.sessionTag(t.spark)}#${t.sfDir}#sa-chain"
-    var chain = chainCache.getOrElse(key, Vector(rankRound0(t)))
-    while (chain.size <= rounds) chain = chain :+ extendRank(chain.last, chain.size)
-    chainCache.put(key, chain)
-    val ranked = chain(rounds)
+    val ranked = rankChain(t, rounds)
     val lens = ranked.groupBy(col("doc_id")).agg(count(lit(1)).as("doc_len"))
     ranked.join(lens, Seq("doc_id"))
   }
 
   /** Bench warm-structure hook (the r13 prewarm contract): force the
     * shared rank chain to the q324 depth. */
-  private[graft] def prewarmShared(t: Tables): Seq[(String, Double)] = {
-    val t0 = System.nanoTime()
-    rankTables(t, 6)
-    Seq("suffix_chain" -> ((System.nanoTime() - t0) / 1e9))
-  }
+  private[graft] def prewarmShared(t: Tables): Seq[(String, Double)] =
+    Seq(Shared.timed("suffix_chain")(rankTables(t, 6)))
 
   private def rankRound0(t: Tables): DataFrame = {
     val toks = text.tokenize(col("text"))

@@ -2,7 +2,7 @@ package graft.ops
 
 import graft.Tables
 import graft.functions.text
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.Tables
+import graft.{Shared, Tables}
 import graft.functions.text
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -118,20 +118,15 @@ object TextAnalysis {
   def qQualityScore(t: Tables): DataFrame =
     qualityScoreFrame(t).orderBy(col("doc_id"))
 
-  /** Session-cached materialization of the q27 score frame (the
-    * logitFeaturesShared sibling): NINE queries compose the identical
+  /** The q27 score frame, materialized once as a `graft.Shared` entry:
+    * NINE queries compose the identical
     * tokenize+score projection (q144/q169/q204/q210/q224/q249/q304/q306
     * + the bootstrap CI) and each previously re-ran the corpus scan.
     * Per-row raw doubles are bit-identical on a cache hit (deterministic
     * projection), so every downstream oracle is unaffected. q27's own
     * entry keeps the uncached builder. */
-  private val qualityCache =
-    scala.collection.concurrent.TrieMap[String, DataFrame]()
-
   private[graft] def qualityScoreShared(t: Tables): DataFrame =
-    qualityCache.getOrElseUpdate(
-      s"${Layout.sessionTag(t.spark)}#${t.sfDir}#quality",
-      qualityScoreFrame(t).localCheckpoint())
+    Shared(t, "quality_score")(qualityScoreFrame(t).localCheckpoint())
 
   /** Session-cached corpus UNIGRAM counts (w, f) and BIGRAM counts
     * (a, b, c) — q111 PMI, q152 bigram LM, q261 Kneser–Ney and q265
@@ -140,41 +135,32 @@ object TextAnalysis {
     * integer counts; a hit is bit-identical; per-doc bigram STREAMS
     * (q152/q261 scoring) stay per-query — only the bounded aggregates
     * are shared. */
-  private val ngramCache =
-    scala.collection.concurrent.TrieMap[String, DataFrame]()
-
   private[graft] def unigramCountsShared(t: Tables): DataFrame =
-    ngramCache.getOrElseUpdate(
-      s"${Layout.sessionTag(t.spark)}#${t.sfDir}#unigrams",
-      t.fanout(t.documents)
-        .select(explode(text.tokenize(col("text"))).as("w"))
-        .groupBy(col("w")).agg(count(lit(1)).as("f"))
-        .localCheckpoint())
+    Shared(t, "unigram_counts")(t.fanout(t.documents)
+      .select(explode(text.tokenize(col("text"))).as("w"))
+      .groupBy(col("w")).agg(count(lit(1)).as("f"))
+      .localCheckpoint())
 
   /** Session-cached (source, term, c) count table — q211 domain xent,
     * q264 source JSD and q319 Burrows delta each built the identical
     * aggregate from their own tokenize pass. Exact integers;
     * |sources|·|vocab|-bounded. */
   private[graft] def sourceTermCountsShared(t: Tables): DataFrame =
-    ngramCache.getOrElseUpdate(
-      s"${Layout.sessionTag(t.spark)}#${t.sfDir}#srcterms",
-      t.fanout(t.documents)
-        .select(col("source"), explode(text.tokenize(col("text"))).as("term"))
-        .groupBy(col("source"), col("term")).agg(count(lit(1)).as("c"))
-        .localCheckpoint())
+    Shared(t, "srcterm_counts")(t.fanout(t.documents)
+      .select(col("source"), explode(text.tokenize(col("text"))).as("term"))
+      .groupBy(col("source"), col("term")).agg(count(lit(1)).as("c"))
+      .localCheckpoint())
 
   private[graft] def bigramCountsShared(t: Tables): DataFrame =
-    ngramCache.getOrElseUpdate(
-      s"${Layout.sessionTag(t.spark)}#${t.sfDir}#bigrams",
-      t.fanout(t.documents)
-        .select(text.tokenize(col("text")).as("toks"))
-        .filter(size(col("toks")) >= 2)
-        .select(explode(expr(
-          "transform(sequence(1, size(toks) - 1), i -> struct(toks[i - 1] AS a, toks[i] AS b))"))
-          .as("p"))
-        .select(col("p.a").as("a"), col("p.b").as("b"))
-        .groupBy(col("a"), col("b")).agg(count(lit(1)).as("c"))
-        .localCheckpoint())
+    Shared(t, "bigram_counts")(t.fanout(t.documents)
+      .select(text.tokenize(col("text")).as("toks"))
+      .filter(size(col("toks")) >= 2)
+      .select(explode(expr(
+        "transform(sequence(1, size(toks) - 1), i -> struct(toks[i - 1] AS a, toks[i] AS b))"))
+        .as("p"))
+      .select(col("p.a").as("a"), col("p.b").as("b"))
+      .groupBy(col("a"), col("b")).agg(count(lit(1)).as("c"))
+      .localCheckpoint())
 
   /** The q27 feature+score CTE chain ending in
     * `scored(doc_id, n_tokens, …, quality_score)`, shared verbatim between
@@ -437,9 +423,7 @@ object TextAnalysis {
     * corpus; one checkpoint serves both (exact integers, bit-identical
     * hits). */
   private[graft] def winnowedFpsShared(t: Tables, w: Int = 8): DataFrame =
-    ngramCache.getOrElseUpdate(
-      s"${Layout.sessionTag(t.spark)}#${t.sfDir}#winnow#$w",
-      winnowedFps(t, w).localCheckpoint())
+    Shared(t, s"winnow_fps#$w")(winnowedFps(t, w).localCheckpoint())
 
   def qWinnowing(t: Tables, w: Int = 8): DataFrame = {
     // barrier: the selected-fingerprint frame is referenced three times
@@ -1901,7 +1885,6 @@ object TextAnalysis {
     * side) split max and argmax into two aggregates — same contract. */
   def qKsQuality(t: Tables, cAlpha: Double = 1.358): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val spark = t.documents.sparkSession
     val q = qualityScoreShared(t).select(col("doc_id"),
       round(col("quality_score") * lit(1000000.0), 0).cast("long").as("qm"))
       .join(t.documents.select(col("doc_id"), col("source")), Seq("doc_id"))
@@ -2014,12 +1997,10 @@ object TextAnalysis {
     * sparse, never |S|²·|V| dense) into a map-side-combinable (i,j)
     * aggregate; the correction is a broadcast-sized |S|-row join. */
   def qDomainXent(t: Tables): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     // r14: tf (feeds the vocab count, per-source masses AND both sides
     // of the model/data join) rides the shared session (source, term)
     // counts — identical exact integers
     val tf = sourceTermCountsShared(t)
-    val all = Window.partitionBy()
     // V = global distinct terms; N_j = per-source token mass (bounded |S| rows)
     val vCount = tf.select(col("term")).distinct().count()
     val nj = tf.groupBy(col("source")).agg(sum(col("c")).as("n"))
@@ -4071,8 +4052,7 @@ object TextAnalysis {
       .withColumn("f5", least(col("f1"), col("f2"), col("f3"), col("f4")))
   }
 
-  /** Session-cached MATERIALIZATION of [[logitFeatures]] (the
-    * Similarity.exactTopKCached sibling; warm-structure contract). ~16
+  /** [[logitFeatures]] materialized once as a `graft.Shared` entry. ~16
     * consumers (q139/q188/q198/q200/q205/q206/q231/q241/q263/q286/q293/
     * q299/q301/q316/q318 + qCvFolds/qCohensKappa) previously each did
     * `.cache()` … `finally unpersist()` on the identical canonicalized
@@ -4082,64 +4062,46 @@ object TextAnalysis {
     * first timed rider then destroyed). One eager localCheckpoint per
     * (session, sfDir) now serves all of them; hits are bit-identical
     * (the frame is a deterministic projection), so every downstream
-    * oracle is unaffected. Survives Bench's clearCache() — prewarm's
+    * oracle is unaffected. Survives Bench's clearCache(), so prewarm's
     * rebuild is a no-op hit. */
-  private val featsCache =
-    scala.collection.concurrent.TrieMap[String, DataFrame]()
-
   private def logitFeaturesShared(t: Tables): DataFrame =
-    featsCache.getOrElseUpdate(
-      s"${Layout.sessionTag(t.spark)}#${t.sfDir}#logitfeats",
-      logitFeatures(t).localCheckpoint())
+    Shared(t, "logit_features")(logitFeatures(t).localCheckpoint())
 
-  /** Session+SF-scoped cache of trained logistic weights, the
-    * `Similarity.indexCache` precedent applied to `logitTrain`: the GD
+  /** Registry name of the trained logistic weights (a `graft.Shared`
+    * entry, like the fitted ANN indexes) for `logitTrain`: the GD
     * sequence is deterministic (round(6) gradient averages, exact
     * power-of-two lr), so a hit is bit-identical to a refit and every
-    * downstream oracle (q188/q198/q200) stays hash-green. Without the
-    * cache, q139/q188/q198/q200 each re-ran the identical 16-round
-    * training — 64 redundant full-corpus scans per bench (the r9 judge's
-    * top leverage item). Warm-structure semantics are the BASELINE.md
-    * contract (same as fitted ANN indexes). */
-  private val weightsCache =
-    scala.collection.concurrent.TrieMap[String, Option[Array[Double]]]()
-
-  private def logitKey(t: Tables, rounds: Int, lr: Double): String =
-    s"${Layout.sessionTag(t.spark)}#${t.sfDir}#logit#$rounds#$lr"
+    * downstream oracle (q188/q198/q200) stays hash-green. Shared, the
+    * identical 16-round training runs once instead of once per
+    * q139/q188/q198/q200 (64 redundant full-corpus scans per bench). */
+  private def logitWeightsName(rounds: Int, lr: Double): String =
+    s"logit_weights#$rounds#$lr"
 
   /** Cached front of [[logitTrain]]; whichever of q139/q188/q198/q200
     * runs first in a session pays the training scans, the rest score. */
   private def logitTrainCached(t: Tables, feats: DataFrame, rounds: Int,
       lr: Double): Option[Array[Double]] =
-    weightsCache.getOrElseUpdate(logitKey(t, rounds, lr),
-      logitTrain(feats, rounds, lr))
+    Shared(t, logitWeightsName(rounds, lr))(logitTrain(feats, rounds, lr))
 
   /** Bench warm-structure hook (VERDICT r12 item 1). Forces, in a FIXED
     * order, every shared structure this module's timed queries ride:
     * the [[logitFeaturesShared]] session checkpoint plus the driver-side
-    * weights/BPE/Dawid–Skene caches (all survive clearCache; forcing
+    * weights/BPE/Dawid–Skene entries (all survive clearCache; forcing
     * them here makes a fresh session order-independent). All params are
     * the query defaults — (16, 8.0) logit, 8 BPE rounds, 5 DS rounds —
-    * so the cache keys match every consumer. Returns
+    * so the registry names match every consumer. Returns
     * (structure, seconds) for the bench stderr record. */
-  private[graft] def prewarmShared(t: Tables): Seq[(String, Double)] = {
-    def timed(name: String)(f: => Unit): (String, Double) = {
-      val t0 = System.nanoTime(); f; name -> ((System.nanoTime() - t0) / 1e9)
-    }
-    Seq(
-      // logitFeaturesShared is an EAGER localCheckpoint: the call itself
-      // materializes the session structure (a no-op hit when warm —
-      // unlike the pre-r14 CacheManager entry, it survives clearCache()
-      // AND the riders no longer unpersist it out from under each other)
-      timed("logit_features")(logitFeaturesShared(t)),
-      timed("logit_weights")(logitTrainCached(t, logitFeaturesShared(t), 16, 8.0)),
-      timed("quality_score")(qualityScoreShared(t)),
-      timed("unigram_counts")(unigramCountsShared(t)),
-      timed("bigram_counts")(bigramCountsShared(t)),
-      timed("srcterm_counts")(sourceTermCountsShared(t)),
-      timed("bpe_merges")(bpeMerges(t, 8)),
-      timed("dawid_skene")(dawidSkeneCached(t, 5)))
-  }
+  private[graft] def prewarmShared(t: Tables): Seq[(String, Double)] = Seq(
+    // logitFeaturesShared is an EAGER localCheckpoint: the call itself
+    // materializes the session structure (a no-op hit when warm)
+    Shared.timed("logit_features")(logitFeaturesShared(t)),
+    Shared.timed("logit_weights")(logitTrainCached(t, logitFeaturesShared(t), 16, 8.0)),
+    Shared.timed("quality_score")(qualityScoreShared(t)),
+    Shared.timed("unigram_counts")(unigramCountsShared(t)),
+    Shared.timed("bigram_counts")(bigramCountsShared(t)),
+    Shared.timed("srcterm_counts")(sourceTermCountsShared(t)),
+    Shared.timed("bpe_merges")(bpeMerges(t, 8)),
+    Shared.timed("dawid_skene")(dawidSkeneCached(t, 5)))
 
   /** The trained-weight vector after `rounds` full-batch GD updates over
     * `feats` — the q139 gradient sequence verbatim (round(6) aggregates,
@@ -4194,11 +4156,10 @@ object TextAnalysis {
         r += 1
       }
     }
-    // Seed the shared weight cache: after the trace loop w is exactly
+    // Seed the shared weights entry: after the trace loop w is exactly
     // logitTrain's result (updates are applied only for r < rounds), so
     // a q139 run warms q188/q198/q200 regardless of execution order.
-    weightsCache.putIfAbsent(logitKey(t, rounds, lr),
-      if (out.nonEmpty) Some(w) else None)
+    Shared(t, logitWeightsName(rounds, lr))(if (out.nonEmpty) Some(w) else None)
     val names = Seq("round") ++ (0 until dims).map(j => s"w$j") ++ Seq("acc", "n")
     if (out.isEmpty)
       return graft.Tables.emptyFrame(spark, names.map(nm =>
@@ -4755,19 +4716,14 @@ object TextAnalysis {
     * TakeOrdered for the argmax, and a scan-stage replace. The per-round
     * best-pair fetch is a bounded 1-row collect (the Lloyd-centroid
     * contract); localCheckpoint bounds lineage AND the optimizer tree
-    * across rounds (the q132/q139 iterative-model rule). */
-  /** The trained merge table per (session, sfDir, rounds) — the r10
-    * warm-structure contract (weightsCache's sibling): the training loop
-    * is deterministic, so cache hits are bit-identical and hash gates
-    * are unaffected; q244 (the merge table) and q247 (the encoder) share
-    * one training. */
-  private val bpeMergeCache =
-    scala.collection.concurrent.TrieMap
-      .empty[(org.apache.spark.sql.SparkSession, String, Int), Seq[(Int, String, String, Long)]]
-
-  /** Run the K-round merge training (see [[qBpeTrainer]]); cached. */
+    * across rounds (the q132/q139 iterative-model rule).
+    *
+    * The training runs once per (session, sfDir, rounds), a `graft.Shared`
+    * entry: the loop is deterministic, so hits are bit-identical and hash
+    * gates are unaffected; q244 (the merge table) and q247 (the encoder)
+    * share one training. */
   private def bpeMerges(t: Tables, rounds: Int): Seq[(Int, String, String, Long)] =
-    bpeMergeCache.getOrElseUpdate((t.spark, t.sfDir, rounds), {
+    Shared(t, s"bpe_merges#$rounds") {
       var wf = t.fanout(t.documents)
         .select(explode(text.tokenize(col("text"))).as("term"))
         .filter(length(col("term")) >= 2)
@@ -4794,7 +4750,7 @@ object TextAnalysis {
           .localCheckpoint()
       }
       merges.toSeq
-    })
+    }
 
   def qBpeTrainer(t: Tables, rounds: Int = 8): DataFrame = {
     val spark = t.documents.sparkSession
@@ -6162,17 +6118,12 @@ object TextAnalysis {
   }
   private case class DsModel(rounds: Seq[DsRound], nPos: Long, postMass: Long)
 
-  /** Trained Dawid–Skene state per (session, sfDir, rounds) — the
-    * weightsCache warm-structure contract: the EM sequence is fully
+  /** Trained Dawid–Skene state per (session, sfDir, rounds), a
+    * `graft.Shared` entry: the EM sequence is fully
     * deterministic (micro-grid posteriors, exact integer masses), so a
     * cache hit is bit-identical to a refit. */
-  private val dsCache =
-    scala.collection.concurrent.TrieMap[String, Option[DsModel]]()
-
   private def dawidSkeneCached(t: Tables, rounds: Int): Option[DsModel] =
-    dsCache.getOrElseUpdate(
-      s"${Layout.sessionTag(t.spark)}#${t.sfDir}#ds#$rounds",
-      dawidSkeneTrain(t, rounds))
+    Shared(t, s"dawid_skene#$rounds")(dawidSkeneTrain(t, rounds))
 
   /** Fixed-round binary Dawid–Skene EM (Dawid & Skene 1979): posterior
     * class probabilities live on the exact micro grid (pm = round(1e6·p),
@@ -6633,7 +6584,7 @@ object TextAnalysis {
     * the four threshold sums ride the driver as one bounded fetch (the
     * k-means-centroid contract); counts exact, noise rate one division.
     *
-    * Scale shape: training is the cached 16-round GD (weightsCache); the
+    * Scale shape: training is the shared 16-round GD (`graft.Shared`); the
     * audit is two linear scans (threshold aggregate, cell aggregate) plus
     * windows over the ≤4-row cell table. */
   def qLabelNoise(t: Tables, rounds: Int = 16, lr: Double = 8.0): DataFrame = {

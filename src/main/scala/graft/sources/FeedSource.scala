@@ -3,7 +3,6 @@ package graft.sources
 import java.util
 
 import scala.collection.concurrent.TrieMap
-import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}

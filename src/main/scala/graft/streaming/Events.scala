@@ -261,7 +261,7 @@ object Events {
           .outputMode("append").trigger(Trigger.AvailableNow()).start()
         sq.awaitTermination()
       }
-      val liveKey = s"stream_dedup#${graft.ops.Layout.sessionTag(spark)}#${t.sfDir}"
+      val liveKey = s"stream_dedup#${graft.Shared.sessionTag(spark)}#${t.sfDir}"
       liveStreamOuts.put(liveKey, dir).foreach(deleteRecursively)
       spark.read.schema(survivors.schema).parquet(outDir.toString)
         .groupBy(col("event_type"))
@@ -373,7 +373,6 @@ object Events {
     * each side buffers only rows younger than watermark + range width. */
   def qStreamJoin(t: Tables): DataFrame = {
     import org.apache.spark.sql.streaming.Trigger
-    import org.apache.spark.sql.types._
     val spark = t.spark
     val path = s"${t.sfDir}/events.parquet"
     val dir = java.nio.file.Files.createTempDirectory("graft-stream-join")
@@ -413,11 +412,11 @@ object Events {
           .outputMode("append").trigger(Trigger.AvailableNow()).start()
         sq.awaitTermination()
       }
-      // key by (session, sfDir) — the Layout sessionTag pattern: two
+      // key by (session, sfDir) via graft.Shared.sessionTag: two
       // concurrent sessions on one sfDir must not delete each other's live
       // output. The returned DataFrame stays valid only until the NEXT
       // qStreamJoin call on the same session+sfDir (documented contract).
-      val liveKey = s"stream_join#${graft.ops.Layout.sessionTag(spark)}#${t.sfDir}"
+      val liveKey = s"stream_join#${graft.Shared.sessionTag(spark)}#${t.sfDir}"
       liveStreamOuts.put(liveKey, dir).foreach(deleteRecursively)
       // explicit schema: a zero-match SF writes _spark_metadata but no
       // data files, which would otherwise fail schema inference
@@ -450,7 +449,6 @@ object Events {
     * the serving-layer read that stitches them. */
   def q159LambdaView(t: Tables): DataFrame = {
     import org.apache.spark.sql.streaming.Trigger
-    import org.apache.spark.sql.types._
     val spark = t.spark
     val cutoff = "2024-01-24 00:00:00"
     val cents = sum(expr("cast(round(value * 100) as bigint)"))

@@ -170,7 +170,7 @@ object TrainGate {
         sqB.awaitTermination()
       }
 
-      val liveKey = s"train_gate#${graft.ops.Layout.sessionTag(spark)}#${t.sfDir}"
+      val liveKey = s"train_gate#${graft.Shared.sessionTag(spark)}#${t.sfDir}"
       Events.liveStreamOuts.put(liveKey, dir).foreach(Events.deleteRecursively)
       spark.read.schema(packed.schema).parquet(outDir.toString)
         .orderBy(col("shard"), col("seq_id"))
