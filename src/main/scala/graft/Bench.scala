@@ -1,21 +1,10 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // contract: local[32] with shuffle.partitions=32 (env-overridable)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // parity with Verify/SparkSpec: the TimestampNTZ->Timestamp cast in
-      // Tables.normalizeEventTs is session-timezone-sensitive (ADVICE r8) —
-      // on a non-UTC host the bench would otherwise window different rows
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     // Materialize through the built-in noop DSv2 sink: unlike count(),
     // Catalyst cannot prune unused projections away, so per-row expressions
     // (string funcs, lag/lead columns, …) are actually evaluated and timed.
@@ -123,14 +112,11 @@ object Bench {
     val fullPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_FULL", "/root/repo/BENCH_FULL.json")
     // env-controlled paths must be JSON-escaped or a quote/backslash in them
     // invalidates both output lines (ADVICE r7)
-    def jq(s: String): String = s.flatMap {
-      case '"' => "\\\""; case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
-    }
+    import GraftSession.jsonString
     val fullQs = results.toSeq.sortBy(-_._2)
       .map { case (k, v) => "\"" + k + "\":" + f3(v) }.mkString("{", ",", "}")
     val fullLine =
-      s"""{"metric":"total","value":${f3(total)},"unit":"sec","n":${results.size},"probe":${f3(probe)},"probe_mid":${f3(probeMid)},"queries":$fullQs,"sf":"${jq(sfDir)}"}"""
+      s"""{"metric":"total","value":${f3(total)},"unit":"sec","n":${results.size},"probe":${f3(probe)},"probe_mid":${f3(probeMid)},"queries":$fullQs,"sf":${jsonString(sfDir)}}"""
     try {
       val w = new java.io.PrintWriter(fullPath, "UTF-8")
       try w.println(fullLine) finally w.close()
@@ -138,8 +124,8 @@ object Bench {
       System.err.println(s"[bench] could not write $fullPath: ${e.getMessage}")
     }
     val budget = 1500
-    val sb = new StringBuilder(s"""{"metric":"total","value":${f3(total)},"unit":"sec","n":${results.size},"probe":${f3(probe)},"probe_mid":${f3(probeMid)},"full":"${jq(fullPath)}","queries":{""")
-    val closing = s"""},"sf":"${jq(sfDir)}"}"""
+    val sb = new StringBuilder(s"""{"metric":"total","value":${f3(total)},"unit":"sec","n":${results.size},"probe":${f3(probe)},"probe_mid":${f3(probeMid)},"full":${jsonString(fullPath)},"queries":{""")
+    val closing = s"""},"sf":${jsonString(sfDir)}}"""
     // stop at the FIRST entry that doesn't fit, so the stdout map is exactly
     // the top-N slowest — continuing would let a later short-named entry
     // displace a slower one (ADVICE r7); the full map lives in the file

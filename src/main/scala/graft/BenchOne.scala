@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Dev tool: time individual queries by name (same session config and
   * noop-sink methodology as Bench) — `runMain graft.BenchOne q64 q37`.
@@ -10,15 +9,8 @@ import org.apache.spark.sql.SparkSession
 object BenchOne {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "2").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC") // parity with Bench/Verify (ADVICE r8)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     // SPARK_GRAFT_CLEARCACHE=1 reproduces the full bench's timed-pass
     // methodology exactly: plan/codegen warm but .cache()'d intermediates
     // dropped before each rep, so rep2+ pays its own caching work the way

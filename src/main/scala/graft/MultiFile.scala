@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool (VERDICT r12 item 5): rewrite a scale-factor directory as a
   * realistic MULTI-FILE parquet layout — `runMain graft.MultiFile
   * <srcSfDir> <dstDir> [filesPerBigTable]` — so the bench's scan
@@ -22,13 +20,7 @@ object MultiFile {
     require(args.length >= 2, "usage: MultiFile <srcSfDir> <dstDir> [filesPerBigTable]")
     val (src, dst) = (args(0), args(1))
     val files = if (args.length > 2) args(2).toInt else 32
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     val big = Set("lineitem", "orders", "events", "documents", "embeddings",
       "part", "customer", "supplier")
     val all = Seq("region", "nation", "customer", "supplier", "part",

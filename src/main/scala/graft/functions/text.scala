@@ -19,6 +19,20 @@ object text {
   def tokenize(c: Column): Column =
     filter(split(lower(c), "[^\\p{L}\\p{N}']+"), t => length(t) > 0)
 
+  /** DuckDB twin of [[tokenize]] over the SQL expression `c` — the one
+    * spelling every oracle uses. `[^a-z0-9']` and `[^\p{L}\p{N}']` split the
+    * same way only on lowercase ASCII text (after `lower`, any ASCII text);
+    * a non-ASCII letter is a separator here and a token character in Spark.
+    * The test corpus is lowercase ASCII: 0 of the 500/500/5000 documents at
+    * sf0.001/sf0.01/sf0.1 hold a character outside printable ASCII or an
+    * uppercase letter. */
+  def tokenizeSql(c: String): String =
+    s"list_filter(string_split_regex(lower($c), '[^a-z0-9'']+'), x -> len(x) > 0)"
+
+  /** DuckDB twin of `split(trim(c), "\\s+")`, the whitespace token split. */
+  def splitWhitespaceSql(c: String): String =
+    s"string_split_regex(trim($c), '\\s+')"
+
   /** English stopword list (the scikit-learn/NLTK common core — public). */
   val stopwords: Seq[String] = Seq(
     "a", "about", "above", "after", "again", "against", "all", "am", "an",
@@ -36,6 +50,9 @@ object text {
     "until", "up", "very", "was", "we", "were", "what", "when", "where",
     "which", "while", "who", "whom", "why", "will", "with", "you", "your",
     "yours", "yourself", "yourselves")
+
+  /** [[stopwords]] as a SQL IN-list body: `'a', 'about', …`. */
+  def stopwordsSql: String = stopwords.map(w => s"'$w'").mkString(", ")
 
   /** Drop stopwords from a token array (reference `cluster.py:14-16`).
     * array_except also dedups; use filter(NOT IN) to keep multiplicity. */

@@ -1,9 +1,8 @@
 package graft.model
 
-/** Typed boundary records (SURVEY.md §1.1). DataFrames are the working
-  * currency inside operators; these case classes pin the schemas at the
-  * API edges (Dataset[T] where type safety helps).
-  */
+// Typed boundary records (SURVEY.md §1.1). DataFrames are the working
+// currency inside operators; these case classes pin the schemas at the
+// API edges (Dataset[T] where type safety helps).
 
 /** An article (reference pipeline.py:36-40 / reddit_api.py:49-53 —
   * the CLI's `text_content` and the servers' `text` unified to `text`,

@@ -160,17 +160,17 @@ object Affinity {
     }
   }
 
-  /** Oracle-contract note (q179/q180/q183/q184): the generated SQL unrolls
-    * a FIXED round count derived from the subset parameter `n`, while the
-    * kernels adapt to the actual group size — the replay is exact only when
-    * the embeddings table has ≥ n rows (true at every shipped SF, asserted
-    * by AffinitySpec, which also asserts non-zero norms over the first
-    * max(n) vec_ids so the kernels' NaN degrade paths stay out of oracled
-    * territory — ADVICE r8). q183/q184 gate the SMALL-subset regime
-    * (n = 6 / 8, below the q179/q180 defaults), so bounded groups smaller
-    * than the default subset are oracle-backed too (VERDICT r9 item 4);
-    * only the n==1 AP fast path remains kernel-only (its SQL replay
-    * degenerates: m2 is NULL with a single candidate), spec-covered. */
+  // Oracle-contract note (q179/q180/q183/q184): the generated SQL unrolls
+  // a FIXED round count derived from the subset parameter `n`, while the
+  // kernels adapt to the actual group size — the replay is exact only when
+  // the embeddings table has ≥ n rows (true at every shipped SF, asserted
+  // by AffinitySpec, which also asserts non-zero norms over the first
+  // max(n) vec_ids so the kernels' NaN degrade paths stay out of oracled
+  // territory — ADVICE r8). q183/q184 gate the SMALL-subset regime
+  // (n = 6 / 8, below the q179/q180 defaults), so bounded groups smaller
+  // than the default subset are oracle-backed too (VERDICT r9 item 4);
+  // only the n==1 AP fast path remains kernel-only (its SQL replay
+  // degenerates: m2 is NULL with a single candidate), spec-covered.
 
   /** AP per bounded group — the scale face. One shuffle (groupByKey),
     * each group runs the kernel in its task. */

@@ -91,9 +91,9 @@ object Clustering {
   }
 
   val qTfidfExactSql: String =
-    """WITH tok AS (
+    s"""WITH tok AS (
       |  SELECT doc_id,
-      |    unnest(list_filter(string_split_regex(lower(text), '[^a-z0-9'']+'), x -> len(x) > 0)) AS term
+      |    unnest(${text.tokenizeSql("text")}) AS term
       |  FROM documents),
       |tf AS (SELECT doc_id, term, COUNT(*)::BIGINT AS c FROM tok GROUP BY 1, 2),
       |df AS (SELECT term, COUNT(*)::BIGINT AS df FROM tf GROUP BY 1),
@@ -374,14 +374,13 @@ object Clustering {
   }
 
   val qBowCorpusSql: String =
-    """WITH toks AS (
+    s"""WITH toks AS (
       |  SELECT doc_id,
-      |    unnest(list_filter(string_split_regex(lower(text), '[^a-z0-9'']+'),
-      |           x -> len(x) > 0)) AS term
+      |    unnest(${text.tokenizeSql("text")}) AS term
       |  FROM documents),
       |tf AS (
       |  SELECT doc_id, term, COUNT(*)::BIGINT AS c FROM toks
-      |  WHERE term NOT IN (STOPWORDS) GROUP BY doc_id, term),
+      |  WHERE term NOT IN (${text.stopwordsSql}) GROUP BY doc_id, term),
       |vocab AS (
       |  SELECT term, CAST(DENSE_RANK() OVER (ORDER BY term) - 1 AS BIGINT) AS tid
       |  FROM (SELECT DISTINCT term FROM tf))
@@ -392,7 +391,6 @@ object Clustering {
       |    ORDER BY v.tid) AS bow
       |FROM tf JOIN vocab v USING (term)
       |GROUP BY tf.doc_id ORDER BY tf.doc_id""".stripMargin
-      .replace("STOPWORDS", graft.functions.text.stopwords.map(s => s"'$s'").mkString(", "))
 
   /** Q132: a fixed-round NMF topic-model step under the HASH GATE — the
     * deterministic face of the reference's topic modeling (lda.py:43-51
@@ -564,12 +562,11 @@ object Clustering {
     val last = if (rounds > 0) s"r${rounds}_w" else "w0"
     s"""WITH toks AS (
        |  SELECT doc_id,
-       |    unnest(list_filter(string_split_regex(lower(text), '[^a-z0-9'']+'),
-       |           x -> len(x) > 0)) AS term
+       |    unnest(${text.tokenizeSql("text")}) AS term
        |  FROM documents),
        |tf AS (
        |  SELECT doc_id, term, COUNT(*)::BIGINT AS c FROM toks
-       |  WHERE term NOT IN (STOPWORDS) GROUP BY doc_id, term),
+       |  WHERE term NOT IN (${text.stopwordsSql}) GROUP BY doc_id, term),
        |vocab AS (
        |  SELECT term, CAST(DENSE_RANK() OVER (ORDER BY term) - 1 AS BIGINT) AS tid
        |  FROM (SELECT DISTINCT term FROM tf)),
@@ -589,7 +586,6 @@ object Clustering {
        |$chain
        |SELECT doc_id, i AS topic, w AS weight FROM $last
        |ORDER BY doc_id, topic""".stripMargin
-      .replace("STOPWORDS", graft.functions.text.stopwords.map(s => s"'$s'").mkString(", "))
   }
 
   /** LDA topic keywords: top-10 terms per topic (lda.py:54-56 intent,
@@ -612,25 +608,6 @@ object Clustering {
 
   // ------------------------------------------------- PCA power iteration
 
-  /** Q148: top principal direction of the embedding matrix by fixed-round
-    * power iteration on the (uncentered) second-moment matrix — the
-    * whitening/dimensionality step an embedding pipeline runs before
-    * IVF/SemDeDup (ABTT "all-but-the-top", Mu & Viswanath 2018, removes
-    * exactly such directions). v₀ = 1/8 per dim (= 1/√64, exactly binary);
-    * each round: s = round₆(avg(x·(xᵀv))) per dim (ONE scan, 64 map-side
-    * aggregates sharing one dot column), then v' = s/‖s‖ and the Rayleigh
-    * quotient λ = Σ vⱼsⱼ ride the driver (64-double bounded fetch, the
-    * k-means-centroid contract).
-    *
-    * Determinism: the per-row dot is a LEFT-TO-RIGHT 64-term product sum
-    * written identically in both engines (no rounding needed — same IEEE
-    * sequence); only the row-order-dependent avg gets round(6); the norm,
-    * division, and λ are exact ops on rounded values. The oracle unrolls
-    * rounds as MATERIALIZED CTEs (the q139 lesson).
-    *
-    * Scale shape: one linear scan per round, 64 combinable aggregates,
-    * nothing shuffles but 64 doubles — textbook distributed power
-    * iteration at any corpus size. */
   /** The q148 iteration body, shared with q149: per-round (v, λ) history,
     * empty if the corpus is. */
   private[graft] def pcaPowerRounds(t: Tables, rounds: Int,
@@ -660,6 +637,25 @@ object Clustering {
     hist.toSeq
   }
 
+  /** Q148: top principal direction of the embedding matrix by fixed-round
+    * power iteration on the (uncentered) second-moment matrix — the
+    * whitening/dimensionality step an embedding pipeline runs before
+    * IVF/SemDeDup (ABTT "all-but-the-top", Mu & Viswanath 2018, removes
+    * exactly such directions). v₀ = 1/8 per dim (= 1/√64, exactly binary);
+    * each round: s = round₆(avg(x·(xᵀv))) per dim (ONE scan, 64 map-side
+    * aggregates sharing one dot column), then v' = s/‖s‖ and the Rayleigh
+    * quotient λ = Σ vⱼsⱼ ride the driver (64-double bounded fetch, the
+    * k-means-centroid contract).
+    *
+    * Determinism: the per-row dot is a LEFT-TO-RIGHT 64-term product sum
+    * written identically in both engines (no rounding needed — same IEEE
+    * sequence); only the row-order-dependent avg gets round(6); the norm,
+    * division, and λ are exact ops on rounded values. The oracle unrolls
+    * rounds as MATERIALIZED CTEs (the q139 lesson).
+    *
+    * Scale shape: one linear scan per round, 64 combinable aggregates,
+    * nothing shuffles but 64 doubles — textbook distributed power
+    * iteration at any corpus size. */
   def qPcaPower(t: Tables, rounds: Int = 3, dim: Int = 64): DataFrame = {
     import org.apache.spark.sql.types._
     val spark = t.embeddings.sparkSession
@@ -1333,8 +1329,7 @@ object Clustering {
        |ct AS MATERIALIZED (
        |  SELECT a.cid, tk.term, COUNT(*)::BIGINT AS tf
        |  FROM (SELECT doc_id,
-       |          unnest(list_filter(string_split_regex(lower(text), '[^a-z0-9'']+'),
-       |                 x -> len(x) > 0)) AS term
+       |          unnest(${text.tokenizeSql("text")}) AS term
        |        FROM documents) tk
        |  JOIN a$updates a ON a.vec_id = tk.doc_id
        |  GROUP BY 1, 2),

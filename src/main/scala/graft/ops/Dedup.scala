@@ -352,10 +352,8 @@ object Dedup {
          |  FROM sigs""".stripMargin).mkString("\n  UNION ALL\n  ")
     s"""toks AS (
        |  SELECT doc_id,
-       |    unnest(list_filter(string_split_regex(lower(text), '[^a-z0-9'']+'),
-       |           x -> len(x) > 0)) AS term,
-       |    generate_subscripts(list_filter(string_split_regex(lower(text), '[^a-z0-9'']+'),
-       |           x -> len(x) > 0), 1) AS pos
+       |    unnest(${text.tokenizeSql("text")}) AS term,
+       |    generate_subscripts(${text.tokenizeSql("text")}, 1) AS pos
        |  FROM documents),
        |shingles AS (
        |  SELECT DISTINCT doc_id, shingle FROM (
@@ -429,25 +427,6 @@ object Dedup {
       .orderBy(col("id_a"), col("id_b"))
   }
 
-  /** Q131: SimHash near-dup detection under the HASH GATE — the
-    * oracle-replayable face of q35 (whose splitmix sketch is
-    * engine-specific and stays the fast rows-only path). Same Charikar
-    * construction as fasthash.simhash64 — token-MULTISET weights,
-    * majority vote with ties → 1, 4×16-bit pigeonhole blocking, exact
-    * hamming ≤ 3 verify — but every step is declarative integer
-    * arithmetic both engines replay bit-for-bit: per-term 16-bit chunk
-    * hashes are md5 hex nibbles 1-4/5-8/9-12/13-16 (ONE md5 per distinct
-    * (doc, term) row — the q128 lesson), the 64 per-bit majority sums are
-    * 64 conditional SUM columns in ONE aggregate (no ×64 row fan-out:
-    * map-side combinable, the exchange carries 64 longs per doc), chunk
-    * values are CASE-sum bit packs, and the verify is xor + bit_count
-    * (DuckDB: xor()/bit_count — exact on both engines).
-    *
-    * Scale shape: one token-count aggregate, one 64-column signature
-    * aggregate, a 4-rows-per-doc band equi-join — O(n·4) candidates,
-    * never n². The pigeonhole guarantee (hamming ≤ 3 over 4 chunks ⇒
-    * some chunk equal) makes the equi-join lossless for the emitted
-    * distance, so this IS the exact hamming-≤3 pair set. */
   /** The oracle-replayable SimHash band rows shared by q131/q185/q186/
     * q195/q257: (doc_id, cv0..cv3, chunk, cv) — one 64-column signature
     * aggregate, then a single projection + explode for the 4 band rows
@@ -485,6 +464,25 @@ object Dedup {
       .select(bandCols: _*)
   }
 
+  /** Q131: SimHash near-dup detection under the HASH GATE — the
+    * oracle-replayable face of q35 (whose splitmix sketch is
+    * engine-specific and stays the fast rows-only path). Same Charikar
+    * construction as fasthash.simhash64 — token-MULTISET weights,
+    * majority vote with ties → 1, 4×16-bit pigeonhole blocking, exact
+    * hamming ≤ 3 verify — but every step is declarative integer
+    * arithmetic both engines replay bit-for-bit: per-term 16-bit chunk
+    * hashes are md5 hex nibbles 1-4/5-8/9-12/13-16 (ONE md5 per distinct
+    * (doc, term) row — the q128 lesson), the 64 per-bit majority sums are
+    * 64 conditional SUM columns in ONE aggregate (no ×64 row fan-out:
+    * map-side combinable, the exchange carries 64 longs per doc), chunk
+    * values are CASE-sum bit packs, and the verify is xor + bit_count
+    * (DuckDB: xor()/bit_count — exact on both engines).
+    *
+    * Scale shape: one token-count aggregate, one 64-column signature
+    * aggregate, a 4-rows-per-doc band equi-join — O(n·4) candidates,
+    * never n². The pigeonhole guarantee (hamming ≤ 3 over 4 chunks ⇒
+    * some chunk equal) makes the equi-join lossless for the emitted
+    * distance, so this IS the exact hamming-≤3 pair set. */
   def qSimhashGate(t: Tables, maxHamming: Int = 3): DataFrame = {
     val bands = simhashBands(t)
     def side(tag: String): DataFrame =
@@ -501,9 +499,6 @@ object Dedup {
       .orderBy(col("id_a"), col("id_b"))
   }
 
-  /** q131 oracle: the identical relational program — DuckDB's >>, &,
-    * xor() and bit_count are exact on BIGINT, and the md5-nibble chunk
-    * hashes replay via CAST('0x…' AS BIGINT). */
   /** Shared DuckDB CTE block producing the `bands` relation of
     * simhashBands (q131/q185 oracles). */
   private def simhashBandsCtes: String = {
@@ -523,8 +518,7 @@ object Dedup {
     s"""toks AS (
       |  SELECT doc_id, term, COUNT(*)::BIGINT AS cnt FROM (
       |    SELECT doc_id,
-      |      unnest(list_filter(string_split_regex(lower(text), '[^a-z0-9'']+'),
-      |             x -> len(x) > 0)) AS term
+      |      unnest(${text.tokenizeSql("text")}) AS term
       |    FROM documents)
       |  GROUP BY doc_id, term),
       |hashed AS (
@@ -543,6 +537,9 @@ object Dedup {
       |  $bandSelects)""".stripMargin
   }
 
+  /** q131 oracle: the identical relational program — DuckDB's >>, &,
+    * xor() and bit_count are exact on BIGINT, and the md5-nibble chunk
+    * hashes replay via CAST('0x…' AS BIGINT). */
   def qSimhashGateSql(maxHamming: Int = 3): String = {
     s"""WITH $simhashBandsCtes,
       |pairs AS (
@@ -936,13 +933,12 @@ object Dedup {
     * (df, gram) rank window, ⌊sz/2⌋+1 prefix, posting join, exact
     * list_intersect verify. All integers until the final division. */
   val qContainmentJoinSql: String =
-    """WITH g AS (
+    s"""WITH g AS (
       |  SELECT doc_id,
       |    list_distinct([list_aggregate(toks[i:i+2], 'string_agg', ' ')
       |                   FOR i IN range(1, len(toks)-1)]) AS gr
       |  FROM (SELECT doc_id,
-      |          list_filter(string_split_regex(lower(text), '[^a-z0-9'']+'),
-      |                      x -> len(x) > 0) AS toks
+      |          ${text.tokenizeSql("text")} AS toks
       |        FROM documents)),
       |e AS (SELECT doc_id, unnest(gr) AS gram FROM g),
       |dfreq AS (SELECT gram, COUNT(*)::BIGINT AS df FROM e GROUP BY gram),
@@ -1036,10 +1032,9 @@ object Dedup {
     * comparator is q33's oracle expression verbatim, weights/thresholds
     * as ::DOUBLE literals in the same summation order. */
   val qRecordLinkageSql: String =
-    """WITH d AS (
+    s"""WITH d AS (
       |  SELECT doc_id, text, source, n_chars, substr(text, 1, 10) AS blk,
-      |    list_filter(string_split_regex(lower(text), '[^a-z0-9'']+'),
-      |                x -> len(x) > 0) AS toks,
+      |    ${text.tokenizeSql("text")} AS toks,
       |    list_distinct([list_aggregate(tk[i:i+2], 'string_agg', ' ')
       |                   FOR i IN range(1, len(tk)-1)]) AS gr
       |  FROM (SELECT *, string_split(lower(text), ' ') AS tk FROM documents)),
@@ -1709,8 +1704,7 @@ object Dedup {
       |          FROM rep GROUP BY keep_id),
       |docs AS (
       |  SELECT doc_id AS id, source,
-      |    CAST(len(list_filter(string_split_regex(lower(text), '[^a-z0-9'']+'),
-      |         x -> len(x) > 0)) AS BIGINT) AS n_tokens
+      |    CAST(len(${text.tokenizeSql("text")}) AS BIGINT) AS n_tokens
       |  FROM documents)
       |SELECT d.source,
       |  COUNT(*)::BIGINT AS n_docs,
@@ -2497,8 +2491,7 @@ object Dedup {
 
   /** q115 oracle: q37's recursive-CTE component labels joined to q27's
     * quality replay, window argmax per label. */
-  val qDedupBestRepSql: String = {
-    val sw = graft.functions.text.stopwords.map(w => s"'$w'").mkString(", ")
+  val qDedupBestRepSql: String =
     s"""WITH RECURSIVE pairs AS (
        |  SELECT a.doc_id AS a, b.doc_id AS b
        |  FROM documents a JOIN documents b
@@ -2517,14 +2510,14 @@ object Dedup {
        |  GROUP BY v.doc_id
        |), f AS (
        |  SELECT doc_id, text,
-       |    list_filter(string_split_regex(lower(text), '[^a-z0-9'']+'), x -> len(x) > 0) AS toks
+       |    ${text.tokenizeSql("text")} AS toks
        |  FROM documents
        |), feats AS (
        |  SELECT doc_id,
        |    CAST(len(toks) AS BIGINT) AS n_tokens,
        |    CAST(list_sum(list_transform(toks, x -> len(x))) AS DOUBLE)
        |      / CAST(greatest(len(toks), 1) AS DOUBLE) AS mean_token_len,
-       |    CAST(len(list_filter(toks, x -> x IN ($sw))) AS DOUBLE)
+       |    CAST(len(list_filter(toks, x -> x IN (${text.stopwordsSql}))) AS DOUBLE)
        |      / CAST(greatest(len(toks), 1) AS DOUBLE) AS stopword_ratio,
        |    CAST(length(regexp_replace(text, '[^a-zA-Z]', '', 'g')) AS DOUBLE)
        |      / CAST(greatest(length(text), 1) AS DOUBLE) AS alpha_ratio
@@ -2545,7 +2538,6 @@ object Dedup {
        |)
        |SELECT id AS keep_id, CAST(component_size AS BIGINT) AS component_size, quality_score
        |FROM r WHERE rn = 1 ORDER BY keep_id""".stripMargin
-  }
 
   // --------------------------------------- incremental ingest dedup
 
@@ -3134,8 +3126,7 @@ object Dedup {
       |tok AS MATERIALIZED (
       |  SELECT doc_id, token, CAST(COUNT(*) AS BIGINT) AS c FROM (
       |    SELECT doc_id,
-      |      unnest(list_filter(string_split_regex(lower(text), '[^a-z0-9'']+'),
-      |                         x -> len(x) > 0)) AS token
+      |      unnest(${text.tokenizeSql("text")}) AS token
       |    FROM documents)
       |  GROUP BY doc_id, token),
       |ln AS (SELECT doc_id, CAST(SUM(c) AS BIGINT) AS l FROM tok GROUP BY doc_id),

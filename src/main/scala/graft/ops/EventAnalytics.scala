@@ -1075,7 +1075,7 @@ object EventAnalytics {
       ty -> (for (a <- types; b <- types if a < b && (a == ty || b == ty))
         yield (a, b)).toSeq
     }.toMap
-    val pairCol = map(types.flatMap { ty =>
+    val pairCol = map(types.toSeq.flatMap { ty =>
       Seq(lit(ty), array(pairsOf(ty).map { case (a, b) =>
         struct(lit(a).as("a"), lit(b).as("b"))
       }: _*))
@@ -1183,9 +1183,6 @@ object EventAnalytics {
       .orderBy(col("event_type"), col("day_x"))
   }
 
-  /** q192 oracle: the same integer program over window functions — RANGE
-    * frame for the trend, dow partition for the seasonal mean, BIGINT
-    * cross-multiplied anomaly test. */
   /** Q215: CUSUM change-point detection on daily event volumes (Page
     * 1954) — the sequential drift detector that catches slow level
     * shifts q107's per-day z-score misses (a 1σ/day drift never trips a
@@ -1266,6 +1263,9 @@ object EventAnalytics {
       |      * CAST(dd * ssq - tot * tot AS DOUBLE) AS alarm_neg
       |FROM s ORDER BY event_type, day_x""".stripMargin
 
+  /** q192 oracle: the same integer program over window functions — RANGE
+    * frame for the trend, dow partition for the seasonal mean, BIGINT
+    * cross-multiplied anomaly test. */
   val qSeasonalDecompSql: String =
     """WITH daily AS (
       |  SELECT event_type,
@@ -1460,6 +1460,12 @@ object EventAnalytics {
     trans.join(tot, Seq("from"))
   }
 
+  /** The non-absorbing channel states q190's oracle unrolls scenario
+    * CTEs for — one source of truth for the Spark-side loud assert and
+    * the SQL generator (ADVICE r9: a new event_type must fail loudly,
+    * not silently hash-mismatch). */
+  private[graft] val markovOracleChannels = Seq("view", "click", "signup", "error")
+
   /** Q190: Markov removal-effect attribution (Anderl et al. 2014 — the
     * data-driven alternative to last-touch): model the session journey as
     * a first-order Markov chain over channel states with absorbing `conv`
@@ -1483,12 +1489,6 @@ object EventAnalytics {
     * bounded-fetch contract — so the 5 scenario solves ride the driver;
     * at 100 TB the edge aggregate is the same one shuffle and the matrix
     * is still tiny. */
-  /** The non-absorbing channel states q190's oracle unrolls scenario
-    * CTEs for — one source of truth for the Spark-side loud assert and
-    * the SQL generator (ADVICE r9: a new event_type must fail loudly,
-    * not silently hash-mismatch). */
-  private[graft] val markovOracleChannels = Seq("view", "click", "signup", "error")
-
   def qMarkovAttribution(t: Tables, rounds: Int = 12): DataFrame = {
     val spark = t.events.sparkSession
     import spark.implicits._
@@ -1553,10 +1553,6 @@ object EventAnalytics {
       .orderBy(col("channel"))
   }
 
-  /** q190 oracle: sessionize/truncate/count in SQL (the q106 window
-    * idiom), then the 5 scenario solves unrolled as chained MATERIALIZED
-    * CTEs — per round one aggregate over the ≤50-row edge table, BIGINT-
-    * micro terms, every literal ::DOUBLE. */
   /** Q221: Kaplan–Meier survival curve of conversion latency (Kaplan &
     * Meier 1958) — time from a user's first event to first purchase, in
     * minutes, with never-converting users RIGHT-CENSORED at their last
@@ -1934,6 +1930,10 @@ object EventAnalytics {
       |    / CAST(MAX(tot) AS DOUBLE) AS top_share
       |FROM tm GROUP BY f ORDER BY state""".stripMargin
 
+  /** q190 oracle: sessionize/truncate/count in SQL (the q106 window
+    * idiom), then the 5 scenario solves unrolled as chained MATERIALIZED
+    * CTEs — per round one aggregate over the ≤50-row edge table, BIGINT-
+    * micro terms, every literal ::DOUBLE. */
   def qMarkovAttributionSql(rounds: Int = 12): String = {
     val head =
       s"""WITH $attributionEdgesCtes,

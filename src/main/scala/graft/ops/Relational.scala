@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.Tables
+import graft.functions.text
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -1001,12 +1002,12 @@ object Relational {
   }
 
   val q70Sql: String =
-    """SELECT doc_id,
+    s"""SELECT doc_id,
       |  array_to_string(list_sort(list_distinct(toks))[1:5], ',') AS first5_sorted,
       |  list_sort(list_distinct(toks))[-1] AS max_token,
       |  CAST(2 * len(toks) AS BIGINT) AS n_doubled
       |FROM (SELECT doc_id,
-      |        list_filter(string_split_regex(lower(text), '[^a-z0-9'']+'), x -> len(x) > 0) AS toks
+      |        ${text.tokenizeSql("text")} AS toks
       |      FROM documents)
       |ORDER BY doc_id""".stripMargin
 

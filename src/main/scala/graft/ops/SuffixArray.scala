@@ -148,7 +148,7 @@ object SuffixArray {
          |  FROM e$i),""".stripMargin
     }.mkString("\n")
     s"""tok AS (SELECT doc_id,
-       |    list_filter(string_split_regex(lower(text), '[^a-z0-9'']+'), x -> len(x) > 0) AS toks
+       |    ${text.tokenizeSql("text")} AS toks
        |  FROM documents),
        |p AS MATERIALIZED (
        |  SELECT doc_id, CAST(UNNEST(range(len(toks))) AS BIGINT) AS off, toks

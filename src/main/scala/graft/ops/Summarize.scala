@@ -103,13 +103,6 @@ object Summarize {
     scores.select(col("grp").as(groupCol), col("sid").as(idCol), col("score"))
   }
 
-  /** LexRank with the per-group computation as an in-memory kernel inside
-    * flatMapGroups: ONE shuffle (group the sentences), then each story
-    * cluster — bounded by construction — computes its idf, cosine graph and
-    * power iteration locally; thousands of groups run in parallel across
-    * the cluster. This is the default: the iterative DataFrame variant
-    * above (`lexrank`) exists for groups too large for one task, at the
-    * cost of a shuffle per iteration. Same algorithm, same parameters. */
   /** Keep the `cap` smallest-by-id elements of a streaming group iterator
     * in O(n log cap) time and O(cap) memory (max-heap by id, evict the
     * largest) — the kernel-side enforcement arm of the per-group size
@@ -126,6 +119,13 @@ object Summarize {
     heap.toArray
   }
 
+  /** LexRank with the per-group computation as an in-memory kernel inside
+    * flatMapGroups: ONE shuffle (group the sentences), then each story
+    * cluster — bounded by construction — computes its idf, cosine graph and
+    * power iteration locally; thousands of groups run in parallel across
+    * the cluster. This is the default: the iterative DataFrame variant
+    * above (`lexrank`) exists for groups too large for one task, at the
+    * cost of a shuffle per iteration. Same algorithm, same parameters. */
   def lexrankGrouped(sentences: DataFrame, groupCol: String, idCol: String,
       textCol: String, threshold: Double = 0.1, damping: Double = 0.85,
       iterations: Int = 20, stem: Boolean = true,
@@ -205,20 +205,6 @@ object Summarize {
     }.toDF(groupCol, idCol, "score")
   }
 
-  /** Governed grouped LexRank — the q185/q201 audit-plus-cap recipe
-    * applied to the per-cluster kernel (VERDICT r11 item 2): group sizes
-    * are bounded by construction at the reference's scale, but grow with
-    * the corpus (5 sources / k clusters over a growing doc count) while
-    * the kernel's cos graph is quadratic IN the group (q120 measured
-    * 13.1× wall at 10× data). ONE bounded audit aggregate prices the
-    * group sizes; when every group is ≤ cap this IS lexrankGrouped
-    * (bit-identical — the oracled shipped-SF contract); when one
-    * exceeds it, the kernel keeps each oversized group's `cap`
-    * smallest-by-id sentences (streamed, O(cap) memory — no count
-    * window, no mega-group single-task sort) and the audit line goes to
-    * stderr. Scores for governed groups are LexRank over the kept
-    * subset; dropped sentences emit no row — the documented recall
-    * trade, priced by the audit exactly like q186's bucket cap. */
   /** The priced per-group size audit shared by every grouped-kernel
     * governor (lexrank, AP, agglomerative): ONE bounded aggregate fetch;
     * returns Int.MaxValue (ungoverned — kernel behavior bit-identical)
@@ -240,6 +226,20 @@ object Summarize {
     }
   }
 
+  /** Governed grouped LexRank — the q185/q201 audit-plus-cap recipe
+    * applied to the per-cluster kernel (VERDICT r11 item 2): group sizes
+    * are bounded by construction at the reference's scale, but grow with
+    * the corpus (5 sources / k clusters over a growing doc count) while
+    * the kernel's cos graph is quadratic IN the group (q120 measured
+    * 13.1× wall at 10× data). ONE bounded audit aggregate prices the
+    * group sizes; when every group is ≤ cap this IS lexrankGrouped
+    * (bit-identical — the oracled shipped-SF contract); when one
+    * exceeds it, the kernel keeps each oversized group's `cap`
+    * smallest-by-id sentences (streamed, O(cap) memory — no count
+    * window, no mega-group single-task sort) and the audit line goes to
+    * stderr. Scores for governed groups are LexRank over the kept
+    * subset; dropped sentences emit no row — the documented recall
+    * trade, priced by the audit exactly like q186's bucket cap. */
   def lexrankGoverned(sentences: DataFrame, groupCol: String, idCol: String,
       textCol: String, threshold: Double = 0.1, damping: Double = 0.85,
       iterations: Int = 20, stem: Boolean = true, cap: Int = 2048): DataFrame =
@@ -383,7 +383,6 @@ object Summarize {
       damping: Double = 0.85, iterations: Int = 10,
       materialized: Boolean = false): String = {
     val m = if (materialized) "MATERIALIZED " else ""
-    val stop = text.stopwords.map(s => s"'$s'").mkString(", ")
     val iterCtes = (0 until iterations).map { i =>
       s"""s${i + 1} AS $m(
          |  SELECT e.grp, e.dst AS sid,
@@ -396,12 +395,11 @@ object Summarize {
     }.mkString(",\n")
     s"""toks AS (
        |  SELECT grp, sid,
-       |    unnest(list_filter(string_split_regex(lower(txt), '[^a-z0-9'']+'),
-       |           x -> len(x) > 0)) AS term
+       |    unnest(${text.tokenizeSql("txt")}) AS term
        |  FROM nodes),
        |tf AS (
        |  SELECT grp, sid, term, CAST(COUNT(*) AS DOUBLE) AS tf FROM toks
-       |  WHERE term NOT IN ($stop) GROUP BY grp, sid, term),
+       |  WHERE term NOT IN (${text.stopwordsSql}) GROUP BY grp, sid, term),
        |nd AS $m(SELECT grp, CAST(COUNT(*) AS BIGINT) AS n
        |       FROM nodes GROUP BY grp),
        |verts AS (SELECT grp, sid FROM nodes),

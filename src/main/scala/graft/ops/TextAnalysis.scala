@@ -2,7 +2,7 @@ package graft.ops
 
 import graft.{Shared, Tables}
 import graft.functions.text
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Text-analysis operators over the documents table (SURVEY.md §2.8,
@@ -17,8 +17,6 @@ import org.apache.spark.sql.functions._
   */
 object TextAnalysis {
 
-  /** Token count per document (whitespace tokens + a regex word-token count,
-    * the "BPE-ish" proxy) — SURVEY north-star token counting. */
   /** GPT-2-style pre-tokenizer pieces (the "BPE-ish regex"): contraction
     * suffixes, space-prefixed letter runs, digit runs, punctuation runs,
     * whitespace runs — lookahead-free so Java regex and DuckDB's RE2 agree.
@@ -27,6 +25,8 @@ object TextAnalysis {
   private val bpePiecePattern =
     "'(?:s|t|re|ve|m|ll|d)| ?[a-z]+| ?[0-9]+| ?[^\\sa-z0-9]+|\\s+"
 
+  /** Token count per document (whitespace tokens + a regex word-token count,
+    * the "BPE-ish" proxy) — SURVEY north-star token counting. */
   def qTokenCount(t: Tables): DataFrame =
     t.fanout(t.documents)
       .select(
@@ -41,8 +41,8 @@ object TextAnalysis {
 
   val qTokenCountSql: String =
     s"""SELECT doc_id,
-       |  CAST(len(string_split_regex(trim(text), '\\s+')) AS BIGINT) AS n_ws_tokens,
-       |  CAST(len(list_filter(string_split_regex(lower(text), '[^a-z0-9'']+'), x -> len(x) > 0)) AS BIGINT) AS n_word_tokens,
+       |  CAST(len(${text.splitWhitespaceSql("text")}) AS BIGINT) AS n_ws_tokens,
+       |  CAST(len(${text.tokenizeSql("text")}) AS BIGINT) AS n_word_tokens,
        |  CAST(len(regexp_extract_all(lower(text), '${bpePiecePattern.replace("'", "''")}')) AS BIGINT) AS n_bpe_pieces,
        |  CAST(length(text) AS BIGINT) AS n_chars_actual,
        |  n_chars
@@ -60,8 +60,8 @@ object TextAnalysis {
       .limit(20)
 
   val qWordFreqSql: String =
-    """SELECT token, COUNT(*) AS freq FROM (
-      |  SELECT unnest(list_filter(string_split_regex(lower(text), '[^a-z0-9'']+'), x -> len(x) > 0)) AS token
+    s"""SELECT token, COUNT(*) AS freq FROM (
+      |  SELECT unnest(${text.tokenizeSql("text")}) AS token
       |  FROM documents)
       |GROUP BY token ORDER BY freq DESC, token LIMIT 20""".stripMargin
 
@@ -81,18 +81,16 @@ object TextAnalysis {
       .orderBy(col("doc_id"))
   }
 
-  val qQualityCountsSql: String = {
-    val sw = text.stopwords.map(w => s"'$w'").mkString(", ")
+  val qQualityCountsSql: String =
     s"""SELECT doc_id,
        |  CAST(len(toks) AS BIGINT) AS n_tokens,
-       |  CAST(len(list_filter(toks, x -> x IN ($sw))) AS BIGINT) AS n_stopwords,
+       |  CAST(len(list_filter(toks, x -> x IN (${text.stopwordsSql}))) AS BIGINT) AS n_stopwords,
        |  CAST(length(regexp_replace(text, '[^a-zA-Z]', '', 'g')) AS BIGINT) AS n_alpha,
        |  CAST(len(list_distinct(toks)) AS BIGINT) AS n_distinct_tokens
        |FROM (SELECT doc_id, text,
-       |        list_filter(string_split_regex(lower(text), '[^a-z0-9'']+'), x -> len(x) > 0) AS toks
+       |        ${text.tokenizeSql("text")} AS toks
        |      FROM documents)
        |ORDER BY doc_id""".stripMargin
-  }
 
   /** The q27 score frame WITHOUT the presentation sort — the builder
     * behind [[qQualityScore]] (q27's own bench entry, uncached by the
@@ -165,18 +163,17 @@ object TextAnalysis {
   /** The q27 feature+score CTE chain ending in
     * `scored(doc_id, n_tokens, …, quality_score)`, shared verbatim between
     * the q27 oracle and the q144 budget-selection oracle. */
-  private val qualityScoreCtes: String = {
-    val sw = text.stopwords.map(w => s"'$w'").mkString(", ")
+  private val qualityScoreCtes: String =
     s"""f AS (
        |  SELECT doc_id, text,
-       |    list_filter(string_split_regex(lower(text), '[^a-z0-9'']+'), x -> len(x) > 0) AS toks
+       |    ${text.tokenizeSql("text")} AS toks
        |  FROM documents),
        |feats AS (
        |  SELECT doc_id,
        |    CAST(len(toks) AS BIGINT) AS n_tokens,
        |    CAST(list_sum(list_transform(toks, x -> len(x))) AS DOUBLE)
        |      / CAST(greatest(len(toks), 1) AS DOUBLE) AS mean_token_len,
-       |    CAST(len(list_filter(toks, x -> x IN ($sw))) AS DOUBLE)
+       |    CAST(len(list_filter(toks, x -> x IN (${text.stopwordsSql}))) AS DOUBLE)
        |      / CAST(greatest(len(toks), 1) AS DOUBLE) AS stopword_ratio,
        |    CAST(length(regexp_replace(text, '[^a-zA-Z]', '', 'g')) AS DOUBLE)
        |      / CAST(greatest(length(text), 1) AS DOUBLE) AS alpha_ratio,
@@ -191,7 +188,6 @@ object TextAnalysis {
        |      + alpha_ratio * 0.3
        |      + least(mean_token_len / 8.0, 1.0) * 0.2 END AS quality_score
        |  FROM feats)""".stripMargin
-  }
 
   /** q27 oracle: per-row int-division doubles are IEEE-exact (no aggregation
     * order involved), so the raw ratio columns hash-match across engines;
@@ -226,7 +222,7 @@ object TextAnalysis {
     }
     s"""WITH f AS (
        |  SELECT doc_id, text, lang,
-       |    list_filter(string_split_regex(lower(text), '[^a-z0-9'']+'), x -> len(x) > 0) AS toks
+       |    ${text.tokenizeSql("text")} AS toks
        |  FROM documents),
        |s AS (
        |  SELECT doc_id, text, lang,
@@ -358,12 +354,10 @@ object TextAnalysis {
   }
 
   val qFingerprintGateSql: String =
-    """WITH toks AS (
+    s"""WITH toks AS (
       |  SELECT doc_id,
-      |    unnest(list_filter(string_split_regex(lower(text), '[^a-z0-9'']+'),
-      |           x -> len(x) > 0)) AS term,
-      |    generate_subscripts(list_filter(string_split_regex(lower(text), '[^a-z0-9'']+'),
-      |           x -> len(x) > 0), 1) AS pos
+      |    unnest(${text.tokenizeSql("text")}) AS term,
+      |    generate_subscripts(${text.tokenizeSql("text")}, 1) AS pos
       |  FROM documents),
       |vals AS (
       |  SELECT doc_id, pos, CAST('0x' || substr(md5(term), 1, 8) AS BIGINT) AS v
@@ -376,28 +370,6 @@ object TextAnalysis {
       |SELECT doc_id, COUNT(h)::BIGINT AS n_windows, MIN(h) AS fingerprint
       |FROM wins GROUP BY doc_id ORDER BY doc_id""".stripMargin
 
-  /** Q196: winnowing fingerprint sets + shared-fingerprint pair mining
-    * (Schleimer–Wilkerson–Aiken, SIGMOD 2003 — the MOSS algorithm): from
-    * each document's rolling 4-token hashes (the q125 base-257 polynomial,
-    * integer-replayable cross-engine), keep the MINIMUM hash of every
-    * window of `w`=8 consecutive positions. The winnowing guarantee: any
-    * shared token run of ≥ w+k−1 tokens yields a shared fingerprint, with
-    * ~2/(w+1) selection density — the local-dedup/plagiarism primitive
-    * that q125's single global min (one fingerprint per doc) cannot
-    * localize. Pairs sharing ≥2 selected fingerprints are emitted with
-    * their overlap fraction.
-    *
-    * Exactness: hashes, window minima, the distinct selection, and all
-    * pair counts are integers; overlap = shared/min(|A|,|B|) is one
-    * division of exact integers, raw. Docs with fewer than w complete
-    * hash windows select nothing (documented contract; q125 covers the
-    * short-doc fingerprint).
-    *
-    * Scale shape: per-doc ROWS-frame minima (hash partition by doc), a
-    * distinct on (doc, fp), and an inverted-index self-join on the
-    * fingerprint value — candidate cost is Σ postings², concentrated on
-    * true shared content by the winnowing guarantee; a q185-style
-    * governor caps boilerplate-fingerprint skew at 100 TB. */
   /** The q196/q218 shared winnowing selection: each doc's distinct
     * window-minimum fingerprints (doc_id, fp). */
   private def winnowedFps(t: Tables, w: Int): DataFrame = {
@@ -425,6 +397,28 @@ object TextAnalysis {
   private[graft] def winnowedFpsShared(t: Tables, w: Int = 8): DataFrame =
     Shared(t, s"winnow_fps#$w")(winnowedFps(t, w).localCheckpoint())
 
+  /** Q196: winnowing fingerprint sets + shared-fingerprint pair mining
+    * (Schleimer–Wilkerson–Aiken, SIGMOD 2003 — the MOSS algorithm): from
+    * each document's rolling 4-token hashes (the q125 base-257 polynomial,
+    * integer-replayable cross-engine), keep the MINIMUM hash of every
+    * window of `w`=8 consecutive positions. The winnowing guarantee: any
+    * shared token run of ≥ w+k−1 tokens yields a shared fingerprint, with
+    * ~2/(w+1) selection density — the local-dedup/plagiarism primitive
+    * that q125's single global min (one fingerprint per doc) cannot
+    * localize. Pairs sharing ≥2 selected fingerprints are emitted with
+    * their overlap fraction.
+    *
+    * Exactness: hashes, window minima, the distinct selection, and all
+    * pair counts are integers; overlap = shared/min(|A|,|B|) is one
+    * division of exact integers, raw. Docs with fewer than w complete
+    * hash windows select nothing (documented contract; q125 covers the
+    * short-doc fingerprint).
+    *
+    * Scale shape: per-doc ROWS-frame minima (hash partition by doc), a
+    * distinct on (doc, fp), and an inverted-index self-join on the
+    * fingerprint value — candidate cost is Σ postings², concentrated on
+    * true shared content by the winnowing guarantee; a q185-style
+    * governor caps boilerplate-fingerprint skew at 100 TB. */
   def qWinnowing(t: Tables, w: Int = 8): DataFrame = {
     // barrier: the selected-fingerprint frame is referenced three times
     // (per-doc counts + both posting-join sides) and each re-ran the
@@ -446,17 +440,13 @@ object TextAnalysis {
       .orderBy(col("id_a"), col("id_b"))
   }
 
-  /** q196 oracle: the q125 hash CTEs + the same ROWS-frame minima,
-    * distinct selection, and posting self-join. */
   /** The q196/q218 shared winnowing CTE chain ending in
     * `sel(doc_id, fp)`. */
   private def winnowingSelCtes(w: Int): String =
     s"""toks AS (
       |  SELECT doc_id,
-      |    unnest(list_filter(string_split_regex(lower(text), '[^a-z0-9'']+'),
-      |           x -> len(x) > 0)) AS term,
-      |    generate_subscripts(list_filter(string_split_regex(lower(text), '[^a-z0-9'']+'),
-      |           x -> len(x) > 0), 1) AS pos
+      |    unnest(${text.tokenizeSql("text")}) AS term,
+      |    generate_subscripts(${text.tokenizeSql("text")}, 1) AS pos
       |  FROM documents),
       |vals AS (
       |  SELECT doc_id, pos, CAST('0x' || substr(md5(term), 1, 8) AS BIGINT) AS v
@@ -477,6 +467,8 @@ object TextAnalysis {
       |                  ROWS BETWEEN CURRENT ROW AND ${w - 1} FOLLOWING))
       |  WHERE cw = $w)""".stripMargin
 
+  /** q196 oracle: the q125 hash CTEs + the same ROWS-frame minima,
+    * distinct selection, and posting self-join. */
   def qWinnowingSql(w: Int = 8): String =
     s"""WITH ${winnowingSelCtes(w)},
       |pd AS (SELECT doc_id, COUNT(*)::BIGINT AS n_fp FROM sel GROUP BY doc_id),
@@ -591,8 +583,7 @@ object TextAnalysis {
       |  FROM (
       |    SELECT term, doc_id, COUNT(*)::BIGINT AS c FROM (
       |      SELECT doc_id,
-      |        unnest(list_filter(string_split_regex(lower(text), '[^a-z0-9'']+'),
-      |               x -> len(x) > 0)) AS term
+      |        unnest(${text.tokenizeSql("text")}) AS term
       |      FROM documents)
       |    GROUP BY term, doc_id)
       |  GROUP BY term),
@@ -700,10 +691,10 @@ object TextAnalysis {
   }
 
   val qRepetitionSql: String =
-    """WITH g AS (
+    s"""WITH g AS (
       |  SELECT doc_id, unnest([list_aggregate(toks[i:i+1], 'string_agg', ' ') FOR i IN range(1, len(toks))]) AS gram
       |  FROM (SELECT doc_id,
-      |          list_filter(string_split_regex(lower(text), '[^a-z0-9'']+'), x -> len(x) > 0) AS toks
+      |          ${text.tokenizeSql("text")} AS toks
       |        FROM documents)),
       |c AS (
       |  SELECT doc_id, CAST(max(cnt) AS BIGINT) AS max_2gram_count,
@@ -744,10 +735,10 @@ object TextAnalysis {
   }
 
   val qDecontaminateSql: String =
-    """WITH g AS (
+    s"""WITH g AS (
       |  SELECT doc_id, unnest(list_distinct([list_aggregate(toks[i:i+7], 'string_agg', ' ') FOR i IN range(1, len(toks) - 6)])) AS gram
       |  FROM (SELECT doc_id,
-      |          list_filter(string_split_regex(lower(text), '[^a-z0-9'']+'), x -> len(x) > 0) AS toks
+      |          ${text.tokenizeSql("text")} AS toks
       |        FROM documents)),
       |hits AS (
       |  SELECT p.doc_id AS probe_id, COUNT(DISTINCT tr.doc_id) AS n_contaminating_docs
@@ -801,13 +792,11 @@ object TextAnalysis {
       .orderBy(col("doc_id"), col("rank"))
   }
 
-  val qTopTermsSql: String = {
-    val sw = text.stopwords.map(w => s"'$w'").mkString(", ")
+  val qTopTermsSql: String =
     s"""WITH tf AS (
        |  SELECT doc_id, token, CAST(COUNT(*) AS BIGINT) AS tf FROM (
        |    SELECT doc_id,
-       |      unnest(list_filter(string_split_regex(lower(text), '[^a-z0-9'']+'),
-       |             x -> len(x) > 0 AND x NOT IN ($sw))) AS token
+       |      unnest(list_filter(${text.tokenizeSql("text")}, x -> x NOT IN (${text.stopwordsSql}))) AS token
        |    FROM documents)
        |  GROUP BY doc_id, token)
        |SELECT doc_id, CAST(rank AS INT) AS rank, token, tf FROM (
@@ -815,7 +804,50 @@ object TextAnalysis {
        |    ROW_NUMBER() OVER (PARTITION BY doc_id ORDER BY tf DESC, token) AS rank
        |  FROM tf)
        |WHERE rank <= 3 ORDER BY doc_id, rank""".stripMargin
+
+  /** The four Gopher-style quality counts per document (q86 and every
+    * query that composes its gate): the `keep` columns, then n_tokens,
+    * n_tok_chars (token characters = text minus separators; codegen'd,
+    * no interpreted aggregate() over the token array), n_stop and
+    * n_distinct — one tokenize value shared by the three array counts. */
+  private[graft] def gopherCounts(docs: DataFrame, keep: Column*): DataFrame = {
+    val toks = text.tokenize(col("text"))
+    docs.select(keep ++ Seq(
+      size(toks).cast("long").as("n_tokens"),
+      length(regexp_replace(lower(col("text")), "[^a-z0-9']", ""))
+        .cast("long").as("n_tok_chars"),
+      size(filter(toks, tk => tk.isInCollection(text.stopwords)))
+        .cast("long").as("n_stop"),
+      size(array_distinct(toks)).cast("long").as("n_distinct")): _*)
   }
+
+  /** The four Gopher rules over [[gopherCounts]], each a cross-multiplied
+    * integer comparison (see [[qQualityFilter]]), and their AND. */
+  private[graft] def gopherLen: Column = col("n_tokens") >= 20 && col("n_tokens") <= 80
+  private[graft] def gopherMwl: Column =
+    col("n_tok_chars") >= col("n_tokens") * 4 && col("n_tok_chars") <= col("n_tokens") * 5
+  private[graft] def gopherStop: Column = col("n_stop") * 20 >= col("n_tokens")
+  private[graft] def gopherDistinct: Column = col("n_distinct") * 2 >= col("n_tokens")
+  private[graft] def gopherKeep: Column =
+    gopherLen && gopherMwl && gopherStop && gopherDistinct
+
+  /** DuckDB twin of [[gopherCounts]]: a SELECT over `documents` of the
+    * `keep` columns then the four counts, same names and BIGINT types. */
+  private[graft] def gopherCountsSql(keep: String*): String =
+    s"""SELECT ${keep.map(_ + ", ").mkString}CAST(len(toks) AS BIGINT) AS n_tokens,
+       |  CAST(length(regexp_replace(lower(text), '[^a-z0-9'']', '', 'g')) AS BIGINT) AS n_tok_chars,
+       |  CAST(len(list_filter(toks, x -> x IN (${text.stopwordsSql}))) AS BIGINT) AS n_stop,
+       |  CAST(len(list_distinct(toks)) AS BIGINT) AS n_distinct
+       |FROM (SELECT *, ${text.tokenizeSql("text")} AS toks FROM documents)""".stripMargin
+
+  /** DuckDB twins of the rule columns and [[gopherKeep]]. */
+  private[graft] def gopherLenSql: String = "(n_tokens >= 20 AND n_tokens <= 80)"
+  private[graft] def gopherMwlSql: String =
+    "(n_tok_chars >= n_tokens * 4 AND n_tok_chars <= n_tokens * 5)"
+  private[graft] def gopherStopSql: String = "(n_stop * 20 >= n_tokens)"
+  private[graft] def gopherDistinctSql: String = "(n_distinct * 2 >= n_tokens)"
+  private[graft] def gopherKeepSql: String =
+    s"($gopherLenSql AND $gopherMwlSql AND $gopherStopSql AND $gopherDistinctSql)"
 
   /** Q86: C4/Gopher-style composite quality GATE (Raffel et al. 2020 §2.2,
     * Rae et al. 2021 A1.1 — published rule families; thresholds tuned to the
@@ -829,49 +861,24 @@ object TextAnalysis {
     * Per-row column arithmetic only — the plan is a single scan stage,
     * linear at 100 TB, and the keep flag feeds a filter for free. */
   def qQualityFilter(t: Tables): DataFrame = {
-    val toks = text.tokenize(col("text"))
-    t.fanout(t.documents)
-      .select(col("doc_id"),
-        size(toks).cast("long").as("n_tokens"),
-        // token characters = text minus separators (codegen'd; avoids an
-        // interpreted aggregate() over the token array)
-        length(regexp_replace(lower(col("text")), "[^a-z0-9']", ""))
-          .cast("long").as("n_tok_chars"),
-        size(filter(toks, tk => tk.isInCollection(text.stopwords)))
-          .cast("long").as("n_stop"),
-        size(array_distinct(toks)).cast("long").as("n_distinct"))
-      .select(col("doc_id"), col("n_tokens"),
-        (col("n_tokens") >= 20 && col("n_tokens") <= 80).as("rule_len"),
-        (col("n_tok_chars") >= col("n_tokens") * 4 &&
-          col("n_tok_chars") <= col("n_tokens") * 5).as("rule_mwl"),
-        (col("n_stop") * 20 >= col("n_tokens")).as("rule_stop"),
-        (col("n_distinct") * 2 >= col("n_tokens")).as("rule_distinct"))
+    gopherCounts(t.fanout(t.documents), col("doc_id"))
+      .select(col("doc_id"), col("n_tokens"), gopherLen.as("rule_len"),
+        gopherMwl.as("rule_mwl"), gopherStop.as("rule_stop"),
+        gopherDistinct.as("rule_distinct"))
       .withColumn("keep",
         col("rule_len") && col("rule_mwl") && col("rule_stop") && col("rule_distinct"))
       .orderBy(col("doc_id"))
   }
 
-  val qQualityFilterSql: String = {
-    val sw = text.stopwords.map(w => s"'$w'").mkString(", ")
+  val qQualityFilterSql: String =
     s"""SELECT doc_id, n_tokens,
-       |  (n_tokens >= 20 AND n_tokens <= 80) AS rule_len,
-       |  (n_tok_chars >= n_tokens * 4 AND n_tok_chars <= n_tokens * 5) AS rule_mwl,
-       |  (n_stop * 20 >= n_tokens) AS rule_stop,
-       |  (n_distinct * 2 >= n_tokens) AS rule_distinct,
-       |  ((n_tokens >= 20 AND n_tokens <= 80)
-       |   AND (n_tok_chars >= n_tokens * 4 AND n_tok_chars <= n_tokens * 5)
-       |   AND (n_stop * 20 >= n_tokens)
-       |   AND (n_distinct * 2 >= n_tokens)) AS keep
-       |FROM (SELECT doc_id,
-       |        CAST(len(toks) AS BIGINT) AS n_tokens,
-       |        CAST(length(regexp_replace(lower(text), '[^a-z0-9'']', '', 'g')) AS BIGINT) AS n_tok_chars,
-       |        CAST(len(list_filter(toks, x -> x IN ($sw))) AS BIGINT) AS n_stop,
-       |        CAST(len(list_distinct(toks)) AS BIGINT) AS n_distinct
-       |      FROM (SELECT doc_id, text,
-       |              list_filter(string_split_regex(lower(text), '[^a-z0-9'']+'), x -> len(x) > 0) AS toks
-       |            FROM documents))
+       |  $gopherLenSql AS rule_len,
+       |  $gopherMwlSql AS rule_mwl,
+       |  $gopherStopSql AS rule_stop,
+       |  $gopherDistinctSql AS rule_distinct,
+       |  $gopherKeepSql AS keep
+       |FROM (${gopherCountsSql("doc_id")})
        |ORDER BY doc_id""".stripMargin
-  }
 
   /** Q87: head-vocabulary coverage filter (the OOV/noisiness signal a
     * training pipeline runs before tokenizer fitting): phase 1 derives the
@@ -899,9 +906,9 @@ object TextAnalysis {
   }
 
   val qHeadCoverageSql: String =
-    """WITH tokens AS (
+    s"""WITH tokens AS (
       |  SELECT doc_id,
-      |    unnest(list_filter(string_split_regex(lower(text), '[^a-z0-9'']+'), x -> len(x) > 0)) AS token
+      |    unnest(${text.tokenizeSql("text")}) AS token
       |  FROM documents),
       |head AS (
       |  SELECT token FROM tokens GROUP BY token
@@ -941,11 +948,11 @@ object TextAnalysis {
       |WHERE rank <= 10 ORDER BY source, rank""".stripMargin
 
   val qNgramsSql: String =
-    """SELECT doc_id,
+    s"""SELECT doc_id,
       |  CAST(len(list_distinct([list_aggregate(toks[i:i+1], 'string_agg', ' ') FOR i IN range(1, len(toks))])) AS BIGINT) AS n_distinct_2grams,
       |  CAST(len(list_distinct([list_aggregate(toks[i:i+2], 'string_agg', ' ') FOR i IN range(1, len(toks)-1)])) AS BIGINT) AS n_distinct_3grams
       |FROM (SELECT doc_id,
-      |        list_filter(string_split_regex(lower(text), '[^a-z0-9'']+'), x -> len(x) > 0) AS toks
+      |        ${text.tokenizeSql("text")} AS toks
       |      FROM documents)
       |ORDER BY doc_id""".stripMargin
 
@@ -994,9 +1001,9 @@ object TextAnalysis {
   }
 
   val qPassageDedupSql: String =
-    """WITH toks AS (
+    s"""WITH toks AS (
       |  SELECT doc_id,
-      |    list_filter(string_split_regex(lower(text), '[^a-z0-9'']+'), x -> len(x) > 0) AS toks
+      |    ${text.tokenizeSql("text")} AS toks
       |  FROM documents),
       |chunks AS (
       |  SELECT doc_id, CAST(i AS INT) AS idx,
@@ -1070,9 +1077,9 @@ object TextAnalysis {
       .orderBy(col("doc_id"))
 
   val qEntropySql: String =
-    """WITH tok AS (
+    s"""WITH tok AS (
       |  SELECT doc_id,
-      |    unnest(list_filter(string_split_regex(lower(text), '[^a-z0-9'']+'), x -> len(x) > 0)) AS token
+      |    unnest(${text.tokenizeSql("text")}) AS token
       |  FROM documents),
       |cnt AS (SELECT doc_id, token, COUNT(*)::BIGINT AS c FROM tok GROUP BY 1, 2)
       |SELECT doc_id,
@@ -1114,7 +1121,7 @@ object TextAnalysis {
     val ladder = Seq(16, 32, 64, 128, 256, 512, 1024, 2048, 4096)
       .map(b => s"WHEN n_tokens <= $b THEN $b").mkString(" ")
     s"""WITH d AS (
-       |  SELECT CAST(len(string_split_regex(trim(text), '\\s+')) AS BIGINT) AS n_tokens
+       |  SELECT CAST(len(${text.splitWhitespaceSql("text")}) AS BIGINT) AS n_tokens
        |  FROM documents),
        |b AS (SELECT n_tokens, CASE $ladder ELSE 8192 END AS bucket FROM d)
        |SELECT CAST(bucket AS BIGINT) AS bucket, CAST(COUNT(*) AS BIGINT) AS n_docs,
@@ -1166,9 +1173,9 @@ object TextAnalysis {
   }
 
   val qZipfFitSql: String =
-    """WITH freqs AS (
+    s"""WITH freqs AS (
       |  SELECT token, COUNT(*)::BIGINT AS freq FROM (
-      |    SELECT unnest(list_filter(string_split_regex(lower(text), '[^a-z0-9'']+'), x -> len(x) > 0)) AS token
+      |    SELECT unnest(${text.tokenizeSql("text")}) AS token
       |    FROM documents)
       |  GROUP BY token HAVING COUNT(*) >= 5),
       |ranked AS (
@@ -1288,8 +1295,7 @@ object TextAnalysis {
   def qHeapsFitSql(points: Int = 10): String =
     s"""WITH d AS (
       |  SELECT doc_id,
-      |    list_filter(string_split_regex(lower(text), '[^a-z0-9'']+'),
-      |                x -> len(x) > 0) AS toks
+      |    ${text.tokenizeSql("text")} AS toks
       |  FROM documents),
       |nv AS (
       |  SELECT fo AS doc_id, COUNT(*)::BIGINT AS nv FROM (
@@ -1460,9 +1466,7 @@ object TextAnalysis {
           Tables.emptyFrame(spark, "n" -> LongType, "sum_d2" -> LongType,
             "rho" -> DoubleType)
         case Some(w) =>
-          val z = lit(w(0)) + lit(w(1)) * col("f1") + lit(w(2)) * col("f2") +
-            lit(w(3)) * col("f3") + lit(w(4)) * col("f4") + lit(w(5)) * col("f5")
-          val p = lit(1.0) / (lit(1.0) + exp(-z))
+          val p = logitProb(w)
           val conf = feats.select(col("doc_id"),
             round(p * lit(1000000.0), 0).cast("long").as("cm"))
           val docs = t.documents.select(col("doc_id"),
@@ -1489,7 +1493,7 @@ object TextAnalysis {
     * two-phase prefix is a Spark-side execution detail). */
   def qSpearmanSql(rounds: Int = 16, lr: Double = 8.0): String = {
     val (chain, wFinal) = logitChainCtes(rounds, lr)
-    val p = s"1.0::DOUBLE / (1.0::DOUBLE + exp(-($logitZExpr)))"
+    val p = logitProbSql()
     s"""WITH $chain,
        |conf AS (
        |  SELECT doc_id, CAST(round(($p) * 1000000.0::DOUBLE) AS BIGINT) AS cm
@@ -1544,9 +1548,7 @@ object TextAnalysis {
             "best_f1_micro" -> LongType, "best_conf_micro" -> LongType,
             "best_f1" -> DoubleType, "best_thresh" -> DoubleType)
         case Some(w) =>
-          val z = lit(w(0)) + lit(w(1)) * col("f1") + lit(w(2)) * col("f2") +
-            lit(w(3)) * col("f3") + lit(w(4)) * col("f4") + lit(w(5)) * col("f5")
-          val p = lit(1.0) / (lit(1.0) + exp(-z))
+          val p = logitProb(w)
           val groups = feats
             .select(round(p, 6).as("conf"), col("y"))
             .groupBy(col("conf"))
@@ -1601,7 +1603,7 @@ object TextAnalysis {
     * decodes the same integer encoding with // and %. */
   def qPrCurveSql(rounds: Int = 16, lr: Double = 8.0): String = {
     val (chain, wFinal) = logitChainCtes(rounds, lr)
-    val p = s"1.0::DOUBLE / (1.0::DOUBLE + exp(-($logitZExpr)))"
+    val p = logitProbSql()
     s"""WITH $chain,
        |sc AS (SELECT round(($p), 6) AS conf, y FROM f, $wFinal w),
        |groups AS (
@@ -1702,8 +1704,7 @@ object TextAnalysis {
   def qDoremiWeightsSql(eta: Double = 1.0): String =
     s"""WITH toks AS (
       |  SELECT source, doc_id,
-      |    unnest(list_filter(string_split_regex(lower(text), '[^a-z0-9'']+'),
-      |           x -> len(x) > 0)) AS term
+      |    unnest(${text.tokenizeSql("text")}) AS term
       |  FROM documents),
       |uf AS (SELECT term, COUNT(*)::BIGINT AS cnt FROM toks GROUP BY term),
       |uft AS (SELECT term, cnt, CAST(SUM(cnt) OVER () AS BIGINT) AS tot FROM uf),
@@ -1788,8 +1789,7 @@ object TextAnalysis {
   def qTemperatureAllocSql(budget: Long = 100000L): String =
     s"""WITH mass AS (
       |  SELECT source,
-      |    CAST(SUM(len(list_filter(string_split_regex(lower(text), '[^a-z0-9'']+'),
-      |                 x -> len(x) > 0))) AS BIGINT) AS w
+      |    CAST(SUM(len(${text.tokenizeSql("text")})) AS BIGINT) AS w
       |  FROM documents GROUP BY source),
       |sm AS (
       |  SELECT source, w,
@@ -2035,10 +2035,9 @@ object TextAnalysis {
   /** q211 oracle: identical split (observed sparse join + exact unseen-
     * mass correction), same micro grids. */
   val qDomainXentSql: String =
-    """WITH toks AS (
+    s"""WITH toks AS (
       |  SELECT source,
-      |    unnest(list_filter(string_split_regex(lower(text), '[^a-z0-9'']+'),
-      |           x -> len(x) > 0)) AS term
+      |    unnest(${text.tokenizeSql("text")}) AS term
       |  FROM documents),
       |tf AS (SELECT source, term, COUNT(*)::BIGINT AS c FROM toks GROUP BY source, term),
       |v AS (SELECT COUNT(DISTINCT term)::BIGINT AS v FROM tf),
@@ -2140,8 +2139,7 @@ object TextAnalysis {
   def qTopicCoherenceSql(k: Int = 5): String =
     s"""WITH toks AS (
       |  SELECT source, doc_id,
-      |    unnest(list_filter(string_split_regex(lower(text), '[^a-z0-9'']+'),
-      |           x -> len(x) > 0)) AS term
+      |    unnest(${text.tokenizeSql("text")}) AS term
       |  FROM documents),
       |top AS (
       |  SELECT * FROM (
@@ -2209,9 +2207,7 @@ object TextAnalysis {
             "acc_micro" -> LongType, "mean_acc" -> DoubleType,
             "spread_micro" -> LongType)
         case Some(w) =>
-          val z = lit(w(0)) + lit(w(1)) * col("f1") + lit(w(2)) * col("f2") +
-            lit(w(3)) * col("f3") + lit(w(4)) * col("f4") + lit(w(5)) * col("f5")
-          val p = lit(1.0) / (lit(1.0) + exp(-z))
+          val p = logitProb(w)
           val scored = feats.select(col("y"),
             expr(("cast(conv(substring(md5(cast(doc_id as string)), 1, 13), 16, 10) " +
               s"as bigint) % ${folds}L")).as("fold"),
@@ -2244,7 +2240,7 @@ object TextAnalysis {
     * summary windows. */
   def qCvFoldsSql(folds: Int = 5, rounds: Int = 16, lr: Double = 8.0): String = {
     val (chain, wFinal) = logitChainCtes(rounds, lr)
-    val p = s"1.0::DOUBLE / (1.0::DOUBLE + exp(-($logitZExpr)))"
+    val p = logitProbSql()
     s"""WITH $chain,
        |sc AS (
        |  SELECT y,
@@ -2307,10 +2303,9 @@ object TextAnalysis {
 
   /** q216 oracle: identical counts-of-counts and divisions. */
   val qUnseenVocabSql: String =
-    """WITH tf AS (
+    s"""WITH tf AS (
       |  SELECT term, COUNT(*)::BIGINT AS c FROM (
-      |    SELECT unnest(list_filter(string_split_regex(lower(text), '[^a-z0-9'']+'),
-      |           x -> len(x) > 0)) AS term
+      |    SELECT unnest(${text.tokenizeSql("text")}) AS term
       |    FROM documents)
       |  GROUP BY term),
       |s AS (
@@ -2390,10 +2385,9 @@ object TextAnalysis {
 
   /** q217 oracle: same count tables and micro-grid entropy terms. */
   val qEntropyRateSql: String =
-    """WITH d AS (
+    s"""WITH d AS (
       |  SELECT doc_id,
-      |    list_filter(string_split_regex(lower(text), '[^a-z0-9'']+'),
-      |                x -> len(x) > 0) AS toks
+      |    ${text.tokenizeSql("text")} AS toks
       |  FROM documents),
       |uni AS (
       |  SELECT w, COUNT(*)::BIGINT AS c FROM (
@@ -2459,10 +2453,9 @@ object TextAnalysis {
 
   /** q223 oracle: the same md5-group window and per-source rollup. */
   val qDedupSavingsSql: String =
-    """WITH f AS (
+    s"""WITH f AS (
       |  SELECT source,
-      |    CAST(len(list_filter(string_split_regex(lower(text), '[^a-z0-9'']+'),
-      |             x -> len(x) > 0)) AS BIGINT) AS ntok,
+      |    CAST(len(${text.tokenizeSql("text")}) AS BIGINT) AS ntok,
       |    doc_id = MIN(doc_id) OVER (PARTITION BY md5(text)) AS keep
       |  FROM documents)
       |SELECT source, COUNT(*)::BIGINT AS n_docs,
@@ -2636,9 +2629,9 @@ object TextAnalysis {
   }
 
   val qSlidingChunksSql: String =
-    """WITH toks AS (
+    s"""WITH toks AS (
       |  SELECT doc_id,
-      |    list_filter(string_split_regex(lower(text), '[^a-z0-9'']+'), x -> len(x) > 0) AS toks
+      |    ${text.tokenizeSql("text")} AS toks
       |  FROM documents),
       |chunks AS (
       |  SELECT doc_id, CAST(i AS INT) AS idx,
@@ -2666,21 +2659,8 @@ object TextAnalysis {
     * stage's semantics. */
   def qTrainPipeline(t: Tables): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val toksCol = text.tokenize(col("text"))
     val base = t.fanout(t.documents).select(col("doc_id"), col("text"))
-    val quality = base.select(col("doc_id"), col("text"),
-        size(toksCol).cast("long").as("n_tokens"),
-        length(regexp_replace(lower(col("text")), "[^a-z0-9']", ""))
-          .cast("long").as("n_tok_chars"),
-        size(filter(toksCol, tk => tk.isInCollection(text.stopwords)))
-          .cast("long").as("n_stop"),
-        size(array_distinct(toksCol)).cast("long").as("n_distinct"))
-      .filter(col("n_tokens") >= 20 && col("n_tokens") <= 80 &&
-        col("n_tok_chars") >= col("n_tokens") * 4 &&
-        col("n_tok_chars") <= col("n_tokens") * 5 &&
-        col("n_stop") * 20 >= col("n_tokens") &&
-        col("n_distinct") * 2 >= col("n_tokens"))
-      .select(col("doc_id"), col("text"), col("n_tokens"))
+    val quality = trainQualityStage(base)
       // barrier: the stage-1 readout AND the dedup window both consume
       // quality — un-barriered, the 4-expression tokenize filter chain
       // re-ran once per downstream stage (4 corpus tokenize passes
@@ -2726,22 +2706,21 @@ object TextAnalysis {
       .orderBy(col("stage"))
   }
 
-  val qTrainPipelineSql: String = {
-    val sw = text.stopwords.map(w => s"'$w'").mkString(", ")
+  /** q112 stage 1: the (doc_id, text, n_tokens) rows of `base` that pass
+    * the q86 gate. */
+  private[graft] def trainQualityStage(base: DataFrame): DataFrame =
+    gopherCounts(base, col("doc_id"), col("text"))
+      .filter(gopherKeep)
+      .select(col("doc_id"), col("text"), col("n_tokens"))
+
+  val qTrainPipelineSql: String =
     s"""WITH base AS (
        |  SELECT doc_id, text,
-       |    list_filter(string_split_regex(lower(text), '[^a-z0-9'']+'), x -> len(x) > 0) AS toks
+       |    ${text.tokenizeSql("text")} AS toks
        |  FROM documents),
        |q AS (
-       |  SELECT doc_id, text, CAST(len(toks) AS BIGINT) AS n_tokens
-       |  FROM (SELECT doc_id, text, toks,
-       |          CAST(len(toks) AS BIGINT) AS nt,
-       |          CAST(length(regexp_replace(lower(text), '[^a-z0-9'']', '', 'g')) AS BIGINT) AS nc,
-       |          CAST(len(list_filter(toks, x -> x IN ($sw))) AS BIGINT) AS ns,
-       |          CAST(len(list_distinct(toks)) AS BIGINT) AS nd
-       |        FROM base)
-       |  WHERE nt >= 20 AND nt <= 80 AND nc >= nt * 4 AND nc <= nt * 5
-       |    AND ns * 20 >= nt AND nd * 2 >= nt),
+       |  SELECT doc_id, text, n_tokens FROM (${gopherCountsSql("doc_id", "text")})
+       |  WHERE $gopherKeepSql),
        |dd AS (
        |  SELECT doc_id, text, n_tokens
        |  FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY md5(text) ORDER BY doc_id) AS rn FROM q)
@@ -2775,7 +2754,6 @@ object TextAnalysis {
        |  UNION ALL
        |  SELECT CAST(4 AS BIGINT), 'packed', n_docs, n_tokens, n_sequences FROM st4)
        |ORDER BY stage""".stripMargin
-  }
 
   /** Q103: corpus heavy hitters via the native SpaceSaving aggregate
     * (functions.SpaceSavingTopK — a Catalyst TypedImperativeAggregate:
@@ -2803,9 +2781,9 @@ object TextAnalysis {
   }
 
   val qHeavyHittersSql: String =
-    """SELECT CAST(ROW_NUMBER() OVER (ORDER BY COUNT(*) DESC, term) AS BIGINT) AS rank,
+    s"""SELECT CAST(ROW_NUMBER() OVER (ORDER BY COUNT(*) DESC, term) AS BIGINT) AS rank,
       |  term, COUNT(*)::BIGINT AS freq
-      |FROM (SELECT unnest(list_filter(string_split_regex(lower(text), '[^a-z0-9'']+'), x -> len(x) > 0)) AS term
+      |FROM (SELECT unnest(${text.tokenizeSql("text")}) AS term
       |      FROM documents)
       |GROUP BY term ORDER BY rank LIMIT 10""".stripMargin
 
@@ -2835,9 +2813,9 @@ object TextAnalysis {
   }
 
   val qUnigramLogprobSql: String =
-    """WITH tok AS (
+    s"""WITH tok AS (
       |  SELECT doc_id,
-      |    unnest(list_filter(string_split_regex(lower(text), '[^a-z0-9'']+'), x -> len(x) > 0)) AS term
+      |    unnest(${text.tokenizeSql("text")}) AS term
       |  FROM documents),
       |tf AS (SELECT doc_id, term, COUNT(*)::BIGINT AS c FROM tok GROUP BY 1, 2),
       |f AS (SELECT term, COUNT(*)::BIGINT AS f FROM tok GROUP BY 1),
@@ -2872,8 +2850,8 @@ object TextAnalysis {
   }
 
   val qPmiCollocationsSql: String =
-    """WITH toks AS (
-      |  SELECT list_filter(string_split_regex(lower(text), '[^a-z0-9'']+'), x -> len(x) > 0) AS toks
+    s"""WITH toks AS (
+      |  SELECT ${text.tokenizeSql("text")} AS toks
       |  FROM documents),
       |uni AS (SELECT unnest(toks) AS w FROM toks),
       |uf AS (SELECT w, COUNT(*)::BIGINT AS f FROM uni GROUP BY w),
@@ -2889,9 +2867,9 @@ object TextAnalysis {
       |ORDER BY pmi DESC, bf.a, bf.b LIMIT 20""".stripMargin
 
   val qSequencePackSql: String =
-    """WITH toks AS (
+    s"""WITH toks AS (
       |  SELECT doc_id,
-      |    CAST(len(list_filter(string_split_regex(lower(text), '[^a-z0-9'']+'), x -> len(x) > 0)) AS BIGINT) AS n_tokens,
+      |    CAST(len(${text.tokenizeSql("text")}) AS BIGINT) AS n_tokens,
       |    CAST(doc_id // 1000 AS BIGINT) AS shard
       |  FROM documents),
       |packed AS (
@@ -3059,8 +3037,7 @@ object TextAnalysis {
     val terms = query.map(q => "'" + q.replace("'", "''") + "'").mkString(", ")
     s"""toks AS (
       |  SELECT doc_id,
-      |    unnest(list_filter(string_split_regex(lower(text), '[^a-z0-9'']+'),
-      |           x -> len(x) > 0)) AS term
+      |    unnest(${text.tokenizeSql("text")}) AS term
       |  FROM documents),
       |lens AS (SELECT doc_id, COUNT(*)::BIGINT AS len FROM toks GROUP BY doc_id),
       |stats AS (SELECT COUNT(*)::BIGINT AS n, SUM(len)::BIGINT AS sum_len FROM lens),
@@ -3265,8 +3242,7 @@ object TextAnalysis {
     val nq = query.size
     s"""WITH toks AS (
        |  SELECT doc_id,
-       |    list_filter(string_split_regex(lower(text), '[^a-z0-9'']+'),
-       |                x -> len(x) > 0) AS toks
+       |    ${text.tokenizeSql("text")} AS toks
        |  FROM documents),
        |chunks AS (
        |  SELECT doc_id, CAST(i AS BIGINT) AS idx,
@@ -3621,8 +3597,7 @@ object TextAnalysis {
   def qConcatChunksSql(capacity: Long = 512L): String =
     s"""WITH d AS (
        |  SELECT doc_id,
-       |    CAST(len(list_filter(string_split_regex(lower(text), '[^a-z0-9'']+'),
-       |         x -> len(x) > 0)) AS BIGINT) AS n
+       |    CAST(len(${text.tokenizeSql("text")}) AS BIGINT) AS n
        |  FROM documents),
        |p AS (
        |  SELECT doc_id, n,
@@ -3669,7 +3644,7 @@ object TextAnalysis {
 
   def qDupSpansSql(w: Int = 8, minDocs: Int = 2): String =
     s"""WITH tok AS (SELECT doc_id,
-       |    list_filter(string_split_regex(lower(text), '[^a-z0-9'']+'), x -> len(x) > 0) AS toks
+       |    ${text.tokenizeSql("text")} AS toks
        |  FROM documents),
        |spans AS (
        |  SELECT doc_id,
@@ -3757,7 +3732,7 @@ object TextAnalysis {
     * a position unnest, rebuild via ordered string_agg (q92's pattern). */
   def qSubstrRemovalSql(w: Int = 8): String =
     s"""WITH tok AS (SELECT doc_id,
-       |    list_filter(string_split_regex(lower(text), '[^a-z0-9'']+'), x -> len(x) > 0) AS toks
+       |    ${text.tokenizeSql("text")} AS toks
        |  FROM documents),
        |spans AS (
        |  SELECT doc_id, CAST(i AS INT) AS idx,
@@ -3845,7 +3820,7 @@ object TextAnalysis {
     * + per-doc integer counts. */
   def qDecontaminationSql(w: Int = 8, mod: Long = 97L): String =
     s"""WITH tok AS (SELECT doc_id,
-       |    list_filter(string_split_regex(lower(text), '[^a-z0-9'']+'), x -> len(x) > 0) AS toks
+       |    ${text.tokenizeSql("text")} AS toks
        |  FROM documents),
        |sp AS (
        |  SELECT doc_id, substr(md5(span), 1, 16) AS h FROM (
@@ -3908,7 +3883,7 @@ object TextAnalysis {
 
   def qNgramNoveltySql(w: Int = 8): String =
     s"""WITH tok AS (SELECT doc_id,
-       |    list_filter(string_split_regex(lower(text), '[^a-z0-9'']+'), x -> len(x) > 0) AS toks
+       |    ${text.tokenizeSql("text")} AS toks
        |  FROM documents),
        |sp AS (
        |  SELECT doc_id, substr(md5(span), 1, 16) AS h FROM (
@@ -3973,7 +3948,7 @@ object TextAnalysis {
       topThresh: Double = 0.05, dupThresh: Double = 0.10): String = {
     val nsList = ns.mkString(", ")
     s"""WITH tok AS (SELECT doc_id,
-       |    list_filter(string_split_regex(lower(text), '[^a-z0-9'']+'), x -> len(x) > 0) AS toks
+       |    ${text.tokenizeSql("text")} AS toks
        |  FROM documents),
        |g AS (
        |  SELECT doc_id, n,
@@ -3995,56 +3970,15 @@ object TextAnalysis {
        |FROM a ORDER BY doc_id, n""".stripMargin
   }
 
-  /** Q139: fixed-round logistic-regression quality classifier trained by
-    * full-batch gradient descent — the learned-quality-classifier step of a
-    * training-data pipeline (fastText-style filtering, Joulin et al. 2017;
-    * the GPT-3/CCNet quality-classifier pattern). The label DISTILLS the
-    * hand-written q86 Gopher-rule gate (`keep` = AND of four rules) into a
-    * linear model — exactly how production pipelines bootstrap a classifier
-    * from heuristic labels. Features are the per-rule margins (1 − scaled
-    * band distance for the two band rules; scaled ratio − 1 for the two
-    * floor rules) plus the weakest-rule margin least(f1..f4), so the AND
-    * label is near-linearly separable; trained accuracy reaches ~0.93-0.95
-    * vs the ~0.81-0.83 majority baseline at all three SFs. Emits one row
-    * per round r = 0..`rounds`: the weights AFTER r updates and training
-    * accuracy under those weights.
-    *
-    * Determinism (the q119/q120/q132 fixed-round recipe): weights start at
-    * 0; each round's gradient components are round(6)-ed aggregates
-    * (aggregation-order floats); lr = 8 is a power of two so the update
-    * w − 8·g is exact; every per-row feature is single IEEE ops (abs,
-    * one division, ×2⁻ᵏ-free constants written identically both engines);
-    * accuracy is an exact integer ratio with the prediction thresholded on
-    * round(p, 6) (exp parity has the q123 ln precedent). The oracle
-    * unrolls the rounds as chained CTEs.
-    *
-    * Scale shape: one linear scan per round over a cached 6-column feature
-    * projection (tokenize runs once into the cache); gradients are
-    * map-side-combinable aggregates; the weight vector rides the driver
-    * between rounds (the k-means-centroid bounded-fetch contract, 6
-    * doubles). At 100 TB each round is one pass — exactly how distributed
-    * full-batch GD is shaped on a cluster. */
   /** The q139/q188/q198 shared feature frame: Gopher-rule label `y` + the
     * five per-rule margin features (see qLogitClassifier scaladoc), keyed
     * by doc_id (ignored by the gradient aggregates; q198 selects on it). */
-  private def logitFeatures(t: Tables): DataFrame = {
-    val toks = text.tokenize(col("text"))
-    val counts = t.fanout(t.documents).select(
-      col("doc_id"),
-      size(toks).cast("long").as("n_tokens"),
-      length(regexp_replace(lower(col("text")), "[^a-z0-9']", ""))
-        .cast("long").as("n_tok_chars"),
-      size(filter(toks, tk => tk.isInCollection(text.stopwords)))
-        .cast("long").as("n_stop"),
-      size(array_distinct(toks)).cast("long").as("n_distinct"))
+  private[graft] def logitFeatures(t: Tables): DataFrame = {
+    val counts = gopherCounts(t.fanout(t.documents), col("doc_id"))
     val den = greatest(col("n_tokens"), lit(1L)).cast("double")
     counts.select(
       col("doc_id"),
-      when((col("n_tokens") >= 20 && col("n_tokens") <= 80) &&
-        (col("n_tok_chars") >= col("n_tokens") * 4 &&
-          col("n_tok_chars") <= col("n_tokens") * 5) &&
-        (col("n_stop") * 20 >= col("n_tokens")) &&
-        (col("n_distinct") * 2 >= col("n_tokens")), 1.0).otherwise(0.0).as("y"),
+      when(gopherKeep, 1.0).otherwise(0.0).as("y"),
       (lit(1.0) - abs(col("n_tokens").cast("double") - lit(50.0)) / lit(30.0)).as("f1"),
       (lit(1.0) - abs(col("n_tok_chars").cast("double") / den - lit(4.5)) * lit(2.0)).as("f2"),
       (col("n_stop").cast("double") * lit(20.0) / den - lit(1.0)).as("f3"),
@@ -4111,9 +4045,7 @@ object TextAnalysis {
     var w = Array.fill(dims)(0.0)
     var r = 0
     while (r < rounds) {
-      val z = lit(w(0)) + lit(w(1)) * col("f1") + lit(w(2)) * col("f2") +
-        lit(w(3)) * col("f3") + lit(w(4)) * col("f4") + lit(w(5)) * col("f5")
-      val p = lit(1.0) / (lit(1.0) + exp(-z))
+      val p = logitProb(w)
       val err = p - col("y")
       val gradCols = round(avg(err), 6) +: (1 until dims).map(j =>
         round(avg(err * col(s"f$j")), 6))
@@ -4125,6 +4057,35 @@ object TextAnalysis {
     Some(w)
   }
 
+  /** Q139: fixed-round logistic-regression quality classifier trained by
+    * full-batch gradient descent — the learned-quality-classifier step of a
+    * training-data pipeline (fastText-style filtering, Joulin et al. 2017;
+    * the GPT-3/CCNet quality-classifier pattern). The label DISTILLS the
+    * hand-written q86 Gopher-rule gate (`keep` = AND of four rules) into a
+    * linear model — exactly how production pipelines bootstrap a classifier
+    * from heuristic labels. Features are the per-rule margins (1 − scaled
+    * band distance for the two band rules; scaled ratio − 1 for the two
+    * floor rules) plus the weakest-rule margin least(f1..f4), so the AND
+    * label is near-linearly separable; trained accuracy reaches ~0.93-0.95
+    * vs the ~0.81-0.83 majority baseline at all three SFs. Emits one row
+    * per round r = 0..`rounds`: the weights AFTER r updates and training
+    * accuracy under those weights.
+    *
+    * Determinism (the q119/q120/q132 fixed-round recipe): weights start at
+    * 0; each round's gradient components are round(6)-ed aggregates
+    * (aggregation-order floats); lr = 8 is a power of two so the update
+    * w − 8·g is exact; every per-row feature is single IEEE ops (abs,
+    * one division, ×2⁻ᵏ-free constants written identically both engines);
+    * accuracy is an exact integer ratio with the prediction thresholded on
+    * round(p, 6) (exp parity has the q123 ln precedent). The oracle
+    * unrolls the rounds as chained CTEs.
+    *
+    * Scale shape: one linear scan per round over a cached 6-column feature
+    * projection (tokenize runs once into the cache); gradients are
+    * map-side-combinable aggregates; the weight vector rides the driver
+    * between rounds (the k-means-centroid bounded-fetch contract, 6
+    * doubles). At 100 TB each round is one pass — exactly how distributed
+    * full-batch GD is shaped on a cluster. */
   def qLogitClassifier(t: Tables, rounds: Int = 16, lr: Double = 8.0): DataFrame = {
     import org.apache.spark.sql.types._
     val spark = t.documents.sparkSession
@@ -4136,9 +4097,7 @@ object TextAnalysis {
     var r = 0
     var nonEmpty = true
     while (r <= rounds && nonEmpty) {
-      val z = lit(w(0)) + lit(w(1)) * col("f1") + lit(w(2)) * col("f2") +
-        lit(w(3)) * col("f3") + lit(w(4)) * col("f4") + lit(w(5)) * col("f5")
-      val p = lit(1.0) / (lit(1.0) + exp(-z))
+      val p = logitProb(w)
       val err = p - col("y")
       val gradCols = round(avg(err), 6) +: (1 until dims).map(j =>
         round(avg(err * col(s"f$j")), 6))
@@ -4169,47 +4128,33 @@ object TextAnalysis {
     out.toSeq.toDF(names: _*).orderBy(col("round"))
   }
 
-  /** q139 oracle: the rounds unrolled as chained CTEs (the qKmeansStepSql
-    * pattern) — each pass CTE computes the six round(6) gradient averages
-    * plus the exact correct-prediction count under the incoming weights;
-    * each weights CTE applies w − lr·g. Feature/label expressions are
-    * q86's parity pairs verbatim plus the margin rescalings. */
   /** The q139/q188 shared oracle feature CTEs (c/f0/f) — logitFeatures in
     * SQL, parity expressions verbatim. */
-  private def logitFeatureCtes: String = {
-    val sw = text.stopwords.map(w => s"'$w'").mkString(", ")
-    s"""c AS (
-       |  SELECT doc_id, CAST(len(toks) AS BIGINT) AS n_tokens,
-       |    CAST(length(regexp_replace(lower(text), '[^a-z0-9'']', '', 'g')) AS BIGINT) AS n_tok_chars,
-       |    CAST(len(list_filter(toks, x -> x IN ($sw))) AS BIGINT) AS n_stop,
-       |    CAST(len(list_distinct(toks)) AS BIGINT) AS n_distinct
-       |  FROM (SELECT doc_id, text,
-       |          list_filter(string_split_regex(lower(text), '[^a-z0-9'']+'), x -> len(x) > 0) AS toks
-       |        FROM documents)),
+  private def logitFeatureCtes: String =
+    s"""c AS (${gopherCountsSql("doc_id")}),
        |f0 AS (
-       |  SELECT doc_id, CASE WHEN (n_tokens >= 20 AND n_tokens <= 80)
-       |      AND (n_tok_chars >= n_tokens * 4 AND n_tok_chars <= n_tokens * 5)
-       |      AND (n_stop * 20 >= n_tokens)
-       |      AND (n_distinct * 2 >= n_tokens) THEN 1.0::DOUBLE ELSE 0.0::DOUBLE END AS y,
+       |  SELECT doc_id, CASE WHEN $gopherKeepSql THEN 1.0::DOUBLE ELSE 0.0::DOUBLE END AS y,
        |    1.0::DOUBLE - abs(CAST(n_tokens AS DOUBLE) - 50.0::DOUBLE) / 30.0::DOUBLE AS f1,
        |    1.0::DOUBLE - abs(CAST(n_tok_chars AS DOUBLE) / CAST(greatest(n_tokens, 1) AS DOUBLE) - 4.5::DOUBLE) * 2.0::DOUBLE AS f2,
        |    CAST(n_stop AS DOUBLE) * 20.0::DOUBLE / CAST(greatest(n_tokens, 1) AS DOUBLE) - 1.0::DOUBLE AS f3,
        |    CAST(n_distinct AS DOUBLE) * 2.0::DOUBLE / CAST(greatest(n_tokens, 1) AS DOUBLE) - 1.0::DOUBLE AS f4
        |  FROM c),
        |f AS MATERIALIZED (SELECT doc_id, y, f1, f2, f3, f4, least(f1, f2, f3, f4) AS f5 FROM f0)""".stripMargin
-  }
 
+  /** q139 oracle: the rounds unrolled as chained CTEs (the qKmeansStepSql
+    * pattern) — each pass CTE computes the six round(6) gradient averages
+    * plus the exact correct-prediction count under the incoming weights;
+    * each weights CTE applies w − lr·g. Feature/label expressions are
+    * q86's parity pairs verbatim plus the margin rescalings. */
   def qLogitClassifierSql(rounds: Int = 16, lr: Double = 8.0): String = {
     val dims = 6
     def feat(j: Int): String = if (j == 0) "1.0::DOUBLE" else s"f$j"
-    def zExpr: String =
-      "w.w0 + w.w1 * f1 + w.w2 * f2 + w.w3 * f3 + w.w4 * f4 + w.w5 * f5"
     def passCte(name: String, wFrom: Option[String]): String = {
       val (z, from) = wFrom match {
-        case Some(src) => (zExpr, s"FROM f, $src w")
+        case Some(src) => (logitZExpr, s"FROM f, $src w")
         case None      => ("0.0::DOUBLE", "FROM f")
       }
-      val p = s"1.0::DOUBLE / (1.0::DOUBLE + exp(-($z)))"
+      val p = logitProbSql(z)
       val grads = (0 until dims).map { j =>
         val term = if (j == 0) s"$p - y" else s"($p - y) * ${feat(j)}"
         s"round(avg($term), 6) AS g$j"
@@ -4294,9 +4239,7 @@ object TextAnalysis {
             "mean_conf" -> DoubleType, "frac_pos" -> DoubleType,
             "gap_micro" -> LongType, "ece" -> DoubleType)
         case Some(w) =>
-          val z = lit(w(0)) + lit(w(1)) * col("f1") + lit(w(2)) * col("f2") +
-            lit(w(3)) * col("f3") + lit(w(4)) * col("f4") + lit(w(5)) * col("f5")
-          val p = lit(1.0) / (lit(1.0) + exp(-z))
+          val p = logitProb(w)
           // Bin and conf_micro derive from ONE rounded quantity (the r9
           // exp-ulp invariant): floor on the raw sigmoid could bin a
           // p within 1 ulp of an edge differently cross-engine, so the
@@ -4325,13 +4268,22 @@ object TextAnalysis {
     }
   }
 
-  /** q188 oracle: the q139 weight chain (gradient-only pass CTEs) to the
-    * final weights, then score/bin/aggregate with the same BIGINT-micro
-    * arithmetic; ECE via window sums over the bounded bin table. */
-  /** The z-score expression over the final-weights CTE alias `w`, shared
-    * by every logit-family oracle. */
-  private val logitZExpr: String =
+  /** The logit score over the f1..f5 feature columns under weights `w`
+    * (bias first): z = w0 + Σ wᵢ·fᵢ, and its probability 1/(1+e^−z). */
+  private def logitZ(w: Array[Double]): Column =
+    lit(w(0)) + lit(w(1)) * col("f1") + lit(w(2)) * col("f2") +
+      lit(w(3)) * col("f3") + lit(w(4)) * col("f4") + lit(w(5)) * col("f5")
+  private def logitProb(w: Array[Double]): Column = {
+    val z = logitZ(w)
+    lit(1.0) / (lit(1.0) + exp(-z))
+  }
+
+  /** DuckDB twins of [[logitZ]] over the weights CTE alias `w`, and of
+    * [[logitProb]] for a z expression (default: [[logitZExpr]]). */
+  private def logitZExpr: String =
     "w.w0 + w.w1 * f1 + w.w2 * f2 + w.w3 * f3 + w.w4 * f4 + w.w5 * f5"
+  private def logitProbSql(z: String = logitZExpr): String =
+    s"1.0::DOUBLE / (1.0::DOUBLE + exp(-($z)))"
 
   /** The shared logit-oracle scaffold (q188/q198/q200/q205): the feature
     * CTEs plus `rounds` unrolled (gradient-pass, weights) CTE pairs —
@@ -4345,7 +4297,7 @@ object TextAnalysis {
         case Some(src) => (logitZExpr, s"FROM f, $src w")
         case None      => ("0.0::DOUBLE", "FROM f")
       }
-      val p = s"1.0::DOUBLE / (1.0::DOUBLE + exp(-($z)))"
+      val p = logitProbSql(z)
       val grads = (0 until dims).map { j =>
         val term = if (j == 0) s"$p - y" else s"($p - y) * f$j"
         s"round(avg($term), 6) AS g$j"
@@ -4378,9 +4330,12 @@ object TextAnalysis {
     (ctes.mkString(",\n"), prevW.getOrElse("(SELECT 0.0 AS w0)"))
   }
 
+  /** q188 oracle: the q139 weight chain (gradient-only pass CTEs) to the
+    * final weights, then score/bin/aggregate with the same BIGINT-micro
+    * arithmetic; ECE via window sums over the bounded bin table. */
   def qCalibrationSql(rounds: Int = 16, lr: Double = 8.0, bins: Int = 10): String = {
     val (chain, wFinal) = logitChainCtes(rounds, lr)
-    val p = s"1.0::DOUBLE / (1.0::DOUBLE + exp(-($logitZExpr)))"
+    val p = logitProbSql()
     s"""WITH $chain,
        |scored0 AS (
        |  SELECT y,
@@ -4453,10 +4408,9 @@ object TextAnalysis {
   /** q193 oracle: the identical window program; the uncapped test and all
     * prefixes stay BIGINT, λ and alloc are single divisions. */
   val qWaterFillSql: String =
-    """WITH mass AS (
+    s"""WITH mass AS (
       |  SELECT source,
-      |    CAST(SUM(len(list_filter(string_split_regex(lower(text), '[^a-z0-9'']+'),
-      |                             x -> len(x) > 0))) AS BIGINT) AS w
+      |    CAST(SUM(len(${text.tokenizeSql("text")})) AS BIGINT) AS w
       |  FROM documents GROUP BY source),
       |ranked AS (
       |  SELECT *,
@@ -4509,9 +4463,7 @@ object TextAnalysis {
           Tables.emptyFrame(spark, "rank" -> LongType, "doc_id" -> LongType,
             "y" -> DoubleType, "conf" -> DoubleType, "margin" -> DoubleType)
         case Some(w) =>
-          val z = lit(w(0)) + lit(w(1)) * col("f1") + lit(w(2)) * col("f2") +
-            lit(w(3)) * col("f3") + lit(w(4)) * col("f4") + lit(w(5)) * col("f5")
-          val p = lit(1.0) / (lit(1.0) + exp(-z))
+          val p = logitProb(w)
           val scored = feats.select(col("doc_id"), col("y"),
             round(p, 6).as("conf"),
             round(abs(p - lit(0.5)), 6).as("margin"))
@@ -4529,7 +4481,7 @@ object TextAnalysis {
   /** q198 oracle: the q188 weight chain + the same rounded-margin top-k. */
   def qUncertaintySamplingSql(rounds: Int = 16, lr: Double = 8.0, k: Int = 25): String = {
     val (chain, wFinal) = logitChainCtes(rounds, lr)
-    val p = s"1.0::DOUBLE / (1.0::DOUBLE + exp(-($logitZExpr)))"
+    val p = logitProbSql()
     s"""WITH $chain,
        |scored AS (
        |  SELECT doc_id, y,
@@ -4573,9 +4525,7 @@ object TextAnalysis {
           Tables.emptyFrame(spark, "n_pos" -> LongType, "n_neg" -> LongType,
             "rank_sum2" -> LongType, "auc" -> DoubleType, "gini" -> DoubleType)
         case Some(w) =>
-          val z = lit(w(0)) + lit(w(1)) * col("f1") + lit(w(2)) * col("f2") +
-            lit(w(3)) * col("f3") + lit(w(4)) * col("f4") + lit(w(5)) * col("f5")
-          val p = lit(1.0) / (lit(1.0) + exp(-z))
+          val p = logitProb(w)
           val groups = feats
             .select(round(p, 6).as("conf"), col("y"))
             .groupBy(col("conf"))
@@ -4615,7 +4565,7 @@ object TextAnalysis {
     * replays the bucket-prefix rank as one ordered window). */
   def qRocAucSql(rounds: Int = 16, lr: Double = 8.0): String = {
     val (chain, wFinal) = logitChainCtes(rounds, lr)
-    val p = s"1.0::DOUBLE / (1.0::DOUBLE + exp(-($logitZExpr)))"
+    val p = logitProbSql()
     s"""WITH $chain,
        |groups_ AS (
        |  SELECT round($p, 6) AS conf, COUNT(*)::BIGINT AS cnt,
@@ -4674,8 +4624,7 @@ object TextAnalysis {
 
   def qBpePairsSql(topK: Int = 50): String =
     s"""WITH toks AS (
-       |  SELECT unnest(list_filter(string_split_regex(lower(text), '[^a-z0-9'']+'),
-       |         x -> len(x) > 0)) AS term
+       |  SELECT unnest(${text.tokenizeSql("text")}) AS term
        |  FROM documents),
        |wf AS (
        |  SELECT term, COUNT(*)::BIGINT AS f FROM toks
@@ -4761,23 +4710,6 @@ object TextAnalysis {
       .orderBy(col("round"))
   }
 
-  /** Q247: BPE ENCODING with the q244-trained merges — the tokenizer
-    * APPLY step that closes the prep story (q24 counting → q135 pair
-    * counts → q244 trained merges → encode): every distinct corpus token
-    * is symbolized (chars + </w>) and the K learned merges are applied
-    * in training order (the same single-pass padded replace — greedy
-    * merge-order encoding equals the training-end symbolization for
-    * in-vocab words, and out-of-vocab-for-training 1-char tokens get the
-    * same replay, so e.g. a learned (e,</w>) merge compresses the word
-    * "e" too). Per document: token count, encoded symbol count, chars
-    * per symbol (the budget-accounting statistic a 100 TB pipeline
-    * prices corpora with).
-    *
-    * Scale shape: the merge chain runs on the DISTINCT-token table
-    * (vocab-bounded, K scan-stage replaces — no shuffle); the corpus
-    * pays one explode + one co-partitioned join on the term + one
-    * per-doc aggregate. The training itself is the cached q244 loop —
-    * one fetch per (session, sfDir, rounds). */
   /** The distinct-token vocabulary run through the trained merge chain —
     * (term, syms) with syms the space-separated encoded symbols ending in
     * the `</w>` marker. Shared by q247 (symbol counts) and q262 (census +
@@ -4796,6 +4728,23 @@ object TextAnalysis {
     }
   }
 
+  /** Q247: BPE ENCODING with the q244-trained merges — the tokenizer
+    * APPLY step that closes the prep story (q24 counting → q135 pair
+    * counts → q244 trained merges → encode): every distinct corpus token
+    * is symbolized (chars + </w>) and the K learned merges are applied
+    * in training order (the same single-pass padded replace — greedy
+    * merge-order encoding equals the training-end symbolization for
+    * in-vocab words, and out-of-vocab-for-training 1-char tokens get the
+    * same replay, so e.g. a learned (e,</w>) merge compresses the word
+    * "e" too). Per document: token count, encoded symbol count, chars
+    * per symbol (the budget-accounting statistic a 100 TB pipeline
+    * prices corpora with).
+    *
+    * Scale shape: the merge chain runs on the DISTINCT-token table
+    * (vocab-bounded, K scan-stage replaces — no shuffle); the corpus
+    * pays one explode + one co-partitioned join on the term + one
+    * per-doc aggregate. The training itself is the cached q244 loop —
+    * one fetch per (session, sfDir, rounds). */
   def qBpeEncode(t: Tables, rounds: Int = 8): DataFrame = {
     val toks = t.fanout(t.documents)
       .select(col("doc_id"), col("n_chars"),
@@ -4845,8 +4794,7 @@ object TextAnalysis {
        |  CAST(len(string_split(syms, ' ')) AS BIGINT) AS n_syms FROM ev$rounds),
        |dt AS (
        |  SELECT doc_id, n_chars,
-       |    unnest(list_filter(string_split_regex(lower(text), '[^a-z0-9'']+'),
-       |           x -> len(x) > 0)) AS term
+       |    unnest(${text.tokenizeSql("text")}) AS term
        |  FROM documents)
        |SELECT dt.doc_id,
        |  COUNT(*)::BIGINT AS n_tokens,
@@ -4967,10 +4915,6 @@ object TextAnalysis {
        |GROUP BY symbol ORDER BY symbol""".stripMargin
   }
 
-  /** q244 oracle: the q135 word-frequency base + K chained MATERIALIZED
-    * per-round CTE triples (pairs → 1-row best → rewritten vocab), best
-    * pair applied via the same padded-space replace, merges unioned at
-    * the end (the q139/q179 chained-CTE replay shape). */
   /** The q244 training CTE chain (toks → w0 word-freq symbolization →
     * per-round p/b/w triples), shared by the q244 merge-table oracle and
     * the q247 encoder oracle. */
@@ -4991,8 +4935,7 @@ object TextAnalysis {
          |  FROM w${r - 1})""".stripMargin
     }.mkString(",\n")
     s"""toks AS MATERIALIZED (
-       |  SELECT unnest(list_filter(string_split_regex(lower(text), '[^a-z0-9'']+'),
-       |         x -> len(x) > 0)) AS term
+       |  SELECT unnest(${text.tokenizeSql("text")}) AS term
        |  FROM documents),
        |w0 AS MATERIALIZED (
        |  SELECT COUNT(*)::BIGINT AS f,
@@ -5001,6 +4944,10 @@ object TextAnalysis {
        |$roundCtes""".stripMargin
   }
 
+  /** q244 oracle: the q135 word-frequency base + K chained MATERIALIZED
+    * per-round CTE triples (pairs → 1-row best → rewritten vocab), best
+    * pair applied via the same padded-space replace, merges unioned at
+    * the end (the q139/q179 chained-CTE replay shape). */
   def qBpeTrainerSql(rounds: Int = 8): String = {
     val out = (1 to rounds).map(r =>
       s"SELECT $r AS round, pair, replace(pair, ' ', '') AS merged, total FROM b$r")
@@ -5072,8 +5019,7 @@ object TextAnalysis {
   def qDsirScoresSql(buckets: Int = 256): String =
     s"""WITH toks AS (
        |  SELECT doc_id, lang,
-       |    list_filter(string_split_regex(lower(text), '[^a-z0-9'']+'),
-       |      x -> len(x) > 0) AS tk
+       |    ${text.tokenizeSql("text")} AS tk
        |  FROM documents),
        |grams AS (
        |  SELECT doc_id, lang,
@@ -5158,10 +5104,9 @@ object TextAnalysis {
   }
 
   val qBigramLmSql: String =
-    """WITH toks AS (
+    s"""WITH toks AS (
       |  SELECT doc_id,
-      |    list_filter(string_split_regex(lower(text), '[^a-z0-9'']+'),
-      |      x -> len(x) > 0) AS tk
+      |    ${text.tokenizeSql("text")} AS tk
       |  FROM documents),
       |uf AS (SELECT w, COUNT(*)::BIGINT AS f
       |       FROM (SELECT unnest(tk) AS w FROM toks) GROUP BY w),
@@ -5252,10 +5197,9 @@ object TextAnalysis {
   /** q261 oracle: same counts, same one-row discount CTE, same
     * left-associated probability expression under round(-ln, 6). */
   val qKneserNeySql: String =
-    """WITH toks AS (
+    s"""WITH toks AS (
       |  SELECT doc_id,
-      |    list_filter(string_split_regex(lower(text), '[^a-z0-9'']+'),
-      |      x -> len(x) > 0) AS tk
+      |    ${text.tokenizeSql("text")} AS tk
       |  FROM documents),
       |bi AS MATERIALIZED (
       |  SELECT doc_id, tk[i] AS a, tk[i+1] AS b
@@ -5330,10 +5274,9 @@ object TextAnalysis {
     * DuckDB's sort is fine; the Spark side uses bucketRank) and the same
     * exact-integer moments. */
   val qGiniTokensSql: String =
-    """WITH d AS (
+    s"""WITH d AS (
       |  SELECT doc_id,
-      |    CAST(len(list_filter(string_split_regex(lower(text), '[^a-z0-9'']+'),
-      |             x -> len(x) > 0)) AS BIGINT) AS ntok
+      |    CAST(len(${text.tokenizeSql("text")}) AS BIGINT) AS ntok
       |  FROM documents),
       |r AS (SELECT ntok,
       |        CAST(ROW_NUMBER() OVER (ORDER BY ntok, doc_id) AS BIGINT) AS rk
@@ -5383,9 +5326,7 @@ object TextAnalysis {
             "o_k" -> LongType, "sum_term_micro" -> LongType,
             "rbo" -> DoubleType)
         case Some(w) =>
-          val z = lit(w(0)) + lit(w(1)) * col("f1") + lit(w(2)) * col("f2") +
-            lit(w(3)) * col("f3") + lit(w(4)) * col("f4") + lit(w(5)) * col("f5")
-          val prob = lit(1.0) / (lit(1.0) + exp(-z))
+          val prob = logitProb(w)
           val conf = feats.select(col("doc_id"),
             round(prob * lit(1000000.0), 0).cast("long").as("cm"))
           // barrier: bucketRank evaluates its input twice (offset fetch +
@@ -5439,7 +5380,7 @@ object TextAnalysis {
   def qRankOverlapSql(rounds: Int = 16, lr: Double = 8.0,
       k: Int = 100, p: Double = 0.9): String = {
     val (chain, wFinal) = logitChainCtes(rounds, lr)
-    val prob = s"1.0::DOUBLE / (1.0::DOUBLE + exp(-($logitZExpr)))"
+    val prob = logitProbSql()
     val qsCtes = qualityScoreCtes
       .replace("f AS (", "qsf AS (").replace("FROM f)", "FROM qsf)")
     s"""WITH $chain,
@@ -5621,23 +5562,10 @@ object TextAnalysis {
     * Scale shape: one linear scan into a ≤16-row aggregate. */
   def qFilterAttribution(t: Tables): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val toks = text.tokenize(col("text"))
-    val counts = t.fanout(t.documents).select(
-      size(toks).cast("long").as("n_tokens"),
-      length(regexp_replace(lower(col("text")), "[^a-z0-9']", ""))
-        .cast("long").as("n_tok_chars"),
-      size(filter(toks, tk => tk.isInCollection(text.stopwords)))
-        .cast("long").as("n_stop"),
-      size(array_distinct(toks)).cast("long").as("n_distinct"))
-    val f1 = !(col("n_tokens") >= 20 && col("n_tokens") <= 80)
-    val f2 = !(col("n_tok_chars") >= col("n_tokens") * 4 &&
-      col("n_tok_chars") <= col("n_tokens") * 5)
-    val f3 = !(col("n_stop") * 20 >= col("n_tokens"))
-    val f4 = !(col("n_distinct") * 2 >= col("n_tokens"))
-    val classes = counts
+    val classes = gopherCounts(t.fanout(t.documents))
       .withColumn("bitmap",
-        when(f1, 8L).otherwise(0L) + when(f2, 4L).otherwise(0L) +
-          when(f3, 2L).otherwise(0L) + when(f4, 1L).otherwise(0L))
+        when(!gopherLen, 8L).otherwise(0L) + when(!gopherMwl, 4L).otherwise(0L) +
+          when(!gopherStop, 2L).otherwise(0L) + when(!gopherDistinct, 1L).otherwise(0L))
       .groupBy(col("bitmap")).agg(count(lit(1)).as("n_docs"))
     val all = Window.partitionBy()
     def bit(b: Int) = expr(s"(bitmap div ${1 << b}L) % 2") === 1
@@ -5663,22 +5591,14 @@ object TextAnalysis {
 
   /** q238 oracle: identical rule expressions (q86/q139 parity pairs),
     * integer bitmap classes and windows. */
-  val qFilterAttributionSql: String = {
-    val sw = text.stopwords.map(w => s"'$w'").mkString(", ")
-    s"""WITH c AS (
-       |  SELECT CAST(len(toks) AS BIGINT) AS n_tokens,
-       |    CAST(length(regexp_replace(lower(text), '[^a-z0-9'']', '', 'g')) AS BIGINT) AS n_tok_chars,
-       |    CAST(len(list_filter(toks, x -> x IN ($sw))) AS BIGINT) AS n_stop,
-       |    CAST(len(list_distinct(toks)) AS BIGINT) AS n_distinct
-       |  FROM (SELECT text,
-       |          list_filter(string_split_regex(lower(text), '[^a-z0-9'']+'), x -> len(x) > 0) AS toks
-       |        FROM documents)),
+  val qFilterAttributionSql: String =
+    s"""WITH c AS (${gopherCountsSql()}),
        |b AS (
        |  SELECT CAST(
-       |    CASE WHEN NOT (n_tokens >= 20 AND n_tokens <= 80) THEN 8 ELSE 0 END
-       |    + CASE WHEN NOT (n_tok_chars >= n_tokens * 4 AND n_tok_chars <= n_tokens * 5) THEN 4 ELSE 0 END
-       |    + CASE WHEN NOT (n_stop * 20 >= n_tokens) THEN 2 ELSE 0 END
-       |    + CASE WHEN NOT (n_distinct * 2 >= n_tokens) THEN 1 ELSE 0 END
+       |    CASE WHEN NOT $gopherLenSql THEN 8 ELSE 0 END
+       |    + CASE WHEN NOT $gopherMwlSql THEN 4 ELSE 0 END
+       |    + CASE WHEN NOT $gopherStopSql THEN 2 ELSE 0 END
+       |    + CASE WHEN NOT $gopherDistinctSql THEN 1 ELSE 0 END
        |    AS BIGINT) AS bitmap
        |  FROM c),
        |cls AS (SELECT bitmap, COUNT(*)::BIGINT AS n_docs FROM b GROUP BY bitmap)
@@ -5695,7 +5615,6 @@ object TextAnalysis {
        |  CAST(SUM(CASE WHEN bitmap = 2 THEN n_docs ELSE 0 END) OVER () AS BIGINT) AS sole_r3,
        |  CAST(SUM(CASE WHEN bitmap = 1 THEN n_docs ELSE 0 END) OVER () AS BIGINT) AS sole_r4
        |FROM cls ORDER BY bitmap""".stripMargin
-  }
 
   /** Q241: split-conformal coverage audit (Vovk's conformal prediction,
     * the Angelopoulos–Bates split recipe) for the q139 classifier — the
@@ -5729,9 +5648,7 @@ object TextAnalysis {
             "n_covered" -> LongType, "coverage" -> DoubleType,
             "alpha" -> DoubleType)
         case Some(w) =>
-          val z = lit(w(0)) + lit(w(1)) * col("f1") + lit(w(2)) * col("f2") +
-            lit(w(3)) * col("f3") + lit(w(4)) * col("f4") + lit(w(5)) * col("f5")
-          val p = lit(1.0) / (lit(1.0) + exp(-z))
+          val p = logitProb(w)
           val scored = feats.select(col("doc_id"), col("y"),
               round(p * lit(1000000.0), 0).cast("long").as("cm"))
             .withColumn("s_micro",
@@ -5771,7 +5688,7 @@ object TextAnalysis {
   def qConformalCoverageSql(rounds: Int = 16, lr: Double = 8.0,
       alpha: Double = 0.1): String = {
     val (chain, wFinal) = logitChainCtes(rounds, lr)
-    val p = s"1.0::DOUBLE / (1.0::DOUBLE + exp(-($logitZExpr)))"
+    val p = logitProbSql()
     s"""WITH $chain,
       |scored AS (
       |  SELECT f.doc_id, f.y,
@@ -5834,9 +5751,7 @@ object TextAnalysis {
             "n10" -> LongType, "n01" -> LongType, "n00" -> LongType,
             "po" -> DoubleType, "pe" -> DoubleType, "kappa" -> DoubleType)
         case Some(w) =>
-          val z = lit(w(0)) + lit(w(1)) * col("f1") + lit(w(2)) * col("f2") +
-            lit(w(3)) * col("f3") + lit(w(4)) * col("f4") + lit(w(5)) * col("f5")
-          val p = lit(1.0) / (lit(1.0) + exp(-z))
+          val p = logitProb(w)
           val ra = feats.select(col("doc_id"),
             (round(p * lit(1000000.0), 0).cast("long") > 500000L).as("a"))
           val rb = qualityScoreShared(t).select(col("doc_id"),
@@ -5920,12 +5835,10 @@ object TextAnalysis {
   /** q250 oracle: the q125 rolling-hash base + a cumulative cut-count
     * window, chunk text re-joined with string_agg ORDER BY pos. */
   val qCdcChunkingSql: String =
-    """WITH toks AS (
+    s"""WITH toks AS (
       |  SELECT doc_id,
-      |    unnest(list_filter(string_split_regex(lower(text), '[^a-z0-9'']+'),
-      |           x -> len(x) > 0)) AS term,
-      |    generate_subscripts(list_filter(string_split_regex(lower(text), '[^a-z0-9'']+'),
-      |           x -> len(x) > 0), 1) AS pos
+      |    unnest(${text.tokenizeSql("text")}) AS term,
+      |    generate_subscripts(${text.tokenizeSql("text")}, 1) AS pos
       |  FROM documents),
       |vals AS (
       |  SELECT doc_id, pos, term,
@@ -6057,7 +5970,7 @@ object TextAnalysis {
   def qCohensKappaSql(rounds: Int = 16, lr: Double = 8.0,
       thresh: Double = 0.7): String = {
     val (chain, wFinal) = logitChainCtes(rounds, lr)
-    val p = s"1.0::DOUBLE / (1.0::DOUBLE + exp(-($logitZExpr)))"
+    val p = logitProbSql()
     val qsCtes = qualityScoreCtes
       .replace("f AS (", "qsf AS (").replace("FROM f)", "FROM qsf)")
     s"""WITH $chain,
@@ -6223,13 +6136,13 @@ object TextAnalysis {
     * and ::DOUBLE literal discipline. */
   def qDawidSkeneSql(rounds: Int = 5): String = {
     val base =
-      """v AS MATERIALIZED (
+      s"""v AS MATERIALIZED (
         |  SELECT doc_id,
         |    CASE WHEN len(toks) >= 30 THEN 1 ELSE 0 END AS v1,
         |    CASE WHEN 2 * length(regexp_replace(text, '[^a-zA-Z]', '', 'g')) >= length(text) THEN 1 ELSE 0 END AS v2,
         |    CASE WHEN 2 * len(list_distinct(toks)) >= len(toks) THEN 1 ELSE 0 END AS v3
         |  FROM (SELECT doc_id, text,
-        |          list_filter(string_split_regex(lower(text), '[^a-z0-9'']+'), x -> len(x) > 0) AS toks
+        |          ${text.tokenizeSql("text")} AS toks
         |        FROM documents)),
         |p0 AS MATERIALIZED (
         |  SELECT doc_id, v1, v2, v3,
@@ -6321,9 +6234,7 @@ object TextAnalysis {
             "n_docs" -> LongType, "n_kept" -> LongType,
             "kept_score_micro" -> LongType, "retention" -> DoubleType)
         case Some(w) =>
-          val z = lit(w(0)) + lit(w(1)) * col("f1") + lit(w(2)) * col("f2") +
-            lit(w(3)) * col("f3") + lit(w(4)) * col("f4") + lit(w(5)) * col("f5")
-          val p = lit(1.0) / (lit(1.0) + exp(-z))
+          val p = logitProb(w)
           val scored = feats.select(col("doc_id"),
             round(abs(p - col("y")) * lit(1000000.0), 0).cast("long").as("sm"))
           val n = scored.count()
@@ -6405,8 +6316,7 @@ object TextAnalysis {
     * CTE over it. */
   def qGreedyDecodeSql(steps: Int = 10, nSeeds: Int = 5): String =
     s"""WITH RECURSIVE toks AS MATERIALIZED (
-       |  SELECT list_filter(string_split_regex(lower(text), '[^a-z0-9'']+'),
-       |         x -> len(x) > 0) AS tk
+       |  SELECT ${text.tokenizeSql("text")} AS tk
        |  FROM documents),
        |uf AS (SELECT w, COUNT(*)::BIGINT AS f
        |       FROM (SELECT unnest(tk) AS w FROM toks) GROUP BY w),
@@ -6463,10 +6373,10 @@ object TextAnalysis {
         "source_b" -> StringType, "n_terms_a" -> LongType,
         "n_terms_b" -> LongType, "kl_a_micro" -> LongType,
         "kl_b_micro" -> LongType, "jsd" -> DoubleType)
-    val bDim = array(ntRows.map { case (s, n) =>
+    val bDim = array(ntRows.toSeq.map { case (s, n) =>
       struct(lit(s).as("src_b"), lit(n).as("nb")) }: _*)
     val naDf = broadcast(st.sparkSession.createDataFrame(
-      spark.sparkContext.parallelize(ntRows.map(r => org.apache.spark.sql.Row(r._1, r._2)), 1),
+      spark.sparkContext.parallelize(ntRows.toSeq.map(r => org.apache.spark.sql.Row(r._1, r._2)), 1),
       org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField("source", StringType),
         org.apache.spark.sql.types.StructField("na", LongType)))))
@@ -6502,10 +6412,9 @@ object TextAnalysis {
   /** q264 oracle: the same count tables, the source dimension as a plain
     * join (bounded), identical IEEE term expressions micro-summed. */
   val qSourceJsdSql: String =
-    """WITH toks AS MATERIALIZED (
+    s"""WITH toks AS MATERIALIZED (
       |  SELECT source,
-      |    unnest(list_filter(string_split_regex(lower(text), '[^a-z0-9'']+'),
-      |           x -> len(x) > 0)) AS term
+      |    unnest(${text.tokenizeSql("text")}) AS term
       |  FROM documents),
       |st AS MATERIALIZED (
       |  SELECT source, term, COUNT(*)::BIGINT AS c FROM toks GROUP BY 1, 2),
@@ -6546,7 +6455,7 @@ object TextAnalysis {
   def qDataDietSql(rounds: Int = 16, lr: Double = 8.0,
       keepPct: Int = 70): String = {
     val (chain, wFinal) = logitChainCtes(rounds, lr)
-    val p = s"1.0::DOUBLE / (1.0::DOUBLE + exp(-($logitZExpr)))"
+    val p = logitProbSql()
     s"""WITH $chain,
        |scored AS (
        |  SELECT doc_id,
@@ -6599,9 +6508,7 @@ object TextAnalysis {
             "n" -> LongType, "n_assigned" -> LongType, "off_diag" -> LongType,
             "noise_rate" -> DoubleType)
         case Some(w) =>
-          val z = lit(w(0)) + lit(w(1)) * col("f1") + lit(w(2)) * col("f2") +
-            lit(w(3)) * col("f3") + lit(w(4)) * col("f4") + lit(w(5)) * col("f5")
-          val p = lit(1.0) / (lit(1.0) + exp(-z))
+          val p = logitProb(w)
           val scored = feats.select(col("y").cast("long").as("y"),
             round(p * lit(1000000.0), 0).cast("long").as("cm"))
           val th = scored.agg(
@@ -6636,7 +6543,7 @@ object TextAnalysis {
     * 1-row CTE cross join and identical decision CASE. */
   def qLabelNoiseSql(rounds: Int = 16, lr: Double = 8.0): String = {
     val (chain, wFinal) = logitChainCtes(rounds, lr)
-    val p = s"1.0::DOUBLE / (1.0::DOUBLE + exp(-($logitZExpr)))"
+    val p = logitProbSql()
     s"""WITH $chain,
        |sc AS MATERIALIZED (
        |  SELECT CAST(y AS BIGINT) AS y,
@@ -6698,19 +6605,8 @@ object TextAnalysis {
         val q = (n - pos).cast("double") / n.cast("double")
         -(p * log(p) + q * log(q))
       }
-    val toks = text.tokenize(col("text"))
-    val counts = t.fanout(t.documents).select(
-      size(toks).cast("long").as("n_tokens"),
-      length(regexp_replace(lower(col("text")), "[^a-z0-9']", ""))
-        .cast("long").as("n_tok_chars"),
-      size(filter(toks, tk => tk.isInCollection(text.stopwords)))
-        .cast("long").as("n_stop"),
-      size(array_distinct(toks)).cast("long").as("n_distinct"))
-    val y = when((col("n_tokens") >= 20 && col("n_tokens") <= 80) &&
-      (col("n_tok_chars") >= col("n_tokens") * 4 &&
-        col("n_tok_chars") <= col("n_tokens") * 5) &&
-      (col("n_stop") * 20 >= col("n_tokens")) &&
-      (col("n_distinct") * 2 >= col("n_tokens")), 1L).otherwise(0L)
+    val counts = gopherCounts(t.fanout(t.documents))
+    val y = when(gopherKeep, 1L).otherwise(0L)
     counts.select(col("n_tokens").as("v"), y.as("y"))
       .groupBy(col("v")).agg(count(lit(1)).as("cnt"), sum(col("y")).as("p"))
       .withColumn("n_le", sum(col("cnt")).over(wPfx))
@@ -6736,7 +6632,6 @@ object TextAnalysis {
   /** q288 oracle: same census, explicit ROWS prefix frame, identical
     * entropy IEEE sequence and argmax encoding. */
   def qDecisionStumpSql: String = {
-    val sw = text.stopwords.map(s => s"'$s'").mkString(", ")
     def h(n0: String, pos0: String): String = {
       val n = s"($n0)"; val pos = s"($pos0)" // substituted exprs need parens
       s"""CASE WHEN $n = 0 OR $pos = 0 OR $pos = $n THEN 0.0::DOUBLE
@@ -6746,22 +6641,10 @@ object TextAnalysis {
          |         * ln(CAST($n - $pos AS DOUBLE) / CAST($n AS DOUBLE))) END"""
         .stripMargin.replace("\n", " ")
     }
-    s"""WITH c AS (
-       |  SELECT CAST(len(toks) AS BIGINT) AS n_tokens,
-       |    CAST(length(regexp_replace(lower(text), '[^a-z0-9'']', '', 'g')) AS BIGINT)
-       |      AS n_tok_chars,
-       |    CAST(len(list_filter(toks, x -> x IN ($sw))) AS BIGINT) AS n_stop,
-       |    CAST(len(list_distinct(toks)) AS BIGINT) AS n_distinct
-       |  FROM (SELECT text,
-       |          list_filter(string_split_regex(lower(text), '[^a-z0-9'']+'),
-       |                      x -> len(x) > 0) AS toks
-       |        FROM documents)),
+    s"""WITH c AS (${gopherCountsSql()}),
        |cells AS (
        |  SELECT n_tokens AS v, COUNT(*)::BIGINT AS cnt,
-       |    CAST(SUM(CASE WHEN (n_tokens >= 20 AND n_tokens <= 80)
-       |      AND (n_tok_chars >= n_tokens * 4 AND n_tok_chars <= n_tokens * 5)
-       |      AND (n_stop * 20 >= n_tokens)
-       |      AND (n_distinct * 2 >= n_tokens) THEN 1 ELSE 0 END) AS BIGINT) AS p
+       |    CAST(SUM(CASE WHEN $gopherKeepSql THEN 1 ELSE 0 END) AS BIGINT) AS p
        |  FROM c GROUP BY n_tokens),
        |pfx AS (
        |  SELECT v,
@@ -6807,19 +6690,8 @@ object TextAnalysis {
     * bounded bin table. */
   def qWoeIv(t: Tables, binWidth: Int = 10, maxBin: Int = 12): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val toks = text.tokenize(col("text"))
-    val counts = t.fanout(t.documents).select(
-      size(toks).cast("long").as("n_tokens"),
-      length(regexp_replace(lower(col("text")), "[^a-z0-9']", ""))
-        .cast("long").as("n_tok_chars"),
-      size(filter(toks, tk => tk.isInCollection(text.stopwords)))
-        .cast("long").as("n_stop"),
-      size(array_distinct(toks)).cast("long").as("n_distinct"))
-    val y = when((col("n_tokens") >= 20 && col("n_tokens") <= 80) &&
-      (col("n_tok_chars") >= col("n_tokens") * 4 &&
-        col("n_tok_chars") <= col("n_tokens") * 5) &&
-      (col("n_stop") * 20 >= col("n_tokens")) &&
-      (col("n_distinct") * 2 >= col("n_tokens")), 1L).otherwise(0L)
+    val counts = gopherCounts(t.fanout(t.documents))
+    val y = when(gopherKeep, 1L).otherwise(0L)
     val w = Window.partitionBy(lit(0))
     counts
       .select(least(expr(s"n_tokens div ${binWidth}L"), lit(maxBin.toLong)).as("bin"),
@@ -6846,24 +6718,11 @@ object TextAnalysis {
 
   /** q289 oracle: the logit-feature gate defs + the same exact-rational
     * WOE/IV arithmetic over the bounded bin table. */
-  def qWoeIvSql(binWidth: Int = 10, maxBin: Int = 12): String = {
-    val sw = text.stopwords.map(s => s"'$s'").mkString(", ")
-    s"""WITH c AS (
-       |  SELECT CAST(len(toks) AS BIGINT) AS n_tokens,
-       |    CAST(length(regexp_replace(lower(text), '[^a-z0-9'']', '', 'g')) AS BIGINT)
-       |      AS n_tok_chars,
-       |    CAST(len(list_filter(toks, x -> x IN ($sw))) AS BIGINT) AS n_stop,
-       |    CAST(len(list_distinct(toks)) AS BIGINT) AS n_distinct
-       |  FROM (SELECT text,
-       |          list_filter(string_split_regex(lower(text), '[^a-z0-9'']+'),
-       |                      x -> len(x) > 0) AS toks
-       |        FROM documents)),
+  def qWoeIvSql(binWidth: Int = 10, maxBin: Int = 12): String =
+    s"""WITH c AS (${gopherCountsSql()}),
        |b AS (
        |  SELECT LEAST(n_tokens // $binWidth, $maxBin) AS bin,
-       |    CASE WHEN (n_tokens >= 20 AND n_tokens <= 80)
-       |      AND (n_tok_chars >= n_tokens * 4 AND n_tok_chars <= n_tokens * 5)
-       |      AND (n_stop * 20 >= n_tokens)
-       |      AND (n_distinct * 2 >= n_tokens) THEN 1 ELSE 0 END AS y
+       |    CASE WHEN $gopherKeepSql THEN 1 ELSE 0 END AS y
        |  FROM c),
        |cells AS (
        |  SELECT CAST(bin AS BIGINT) AS bin, COUNT(*)::BIGINT AS n,
@@ -6892,7 +6751,6 @@ object TextAnalysis {
        |  CAST(iv_term_micro AS BIGINT) AS iv_term_micro,
        |  CAST(SUM(iv_term_micro) OVER () AS BIGINT) AS iv_total_micro
        |FROM iv ORDER BY bin""".stripMargin
-  }
 
   /** Q292: Hill tail-index estimator over the token-frequency
     * distribution (Hill 1975) — the MLE of the Pareto exponent from the
@@ -6944,8 +6802,7 @@ object TextAnalysis {
   def qHillTailSql(k: Int = 20): String =
     s"""WITH freq AS MATERIALIZED (
       |  SELECT token, COUNT(*)::BIGINT AS freq FROM (
-      |    SELECT unnest(list_filter(string_split_regex(lower(text), '[^a-z0-9'']+'),
-      |                              x -> len(x) > 0)) AS token
+      |    SELECT unnest(${text.tokenizeSql("text")}) AS token
       |    FROM documents)
       |  GROUP BY token),
       |rk AS (
@@ -7006,10 +6863,9 @@ object TextAnalysis {
   /** q287 oracle: the q25 tokenizer census + the same regexp counters and
     * ::DOUBLE-disciplined constant arithmetic. */
   val qReadabilitySql: String =
-    """WITH d AS (
+    s"""WITH d AS (
       |  SELECT source,
-      |    CAST(len(list_filter(string_split_regex(lower(text), '[^a-z0-9'']+'),
-      |                         x -> len(x) > 0)) AS BIGINT) AS w,
+      |    CAST(len(${text.tokenizeSql("text")}) AS BIGINT) AS w,
       |    GREATEST(CAST(len(regexp_extract_all(text, '[.!?]+')) AS BIGINT), 1) AS s,
       |    CAST(len(regexp_extract_all(lower(text), '[aeiouy]+')) AS BIGINT) AS y
       |  FROM documents)
@@ -7106,8 +6962,7 @@ object TextAnalysis {
       |tk AS MATERIALIZED (
       |  SELECT doc_id, term, CAST(COUNT(*) AS BIGINT) AS c FROM (
       |    SELECT doc_id,
-      |      unnest(list_filter(string_split_regex(lower(text), '[^a-z0-9'']+'),
-      |                         x -> len(x) > 0)) AS term
+      |      unnest(${text.tokenizeSql("text")}) AS term
       |    FROM documents)
       |  GROUP BY doc_id, term),
       |tcls AS MATERIALIZED (
@@ -7192,11 +7047,10 @@ object TextAnalysis {
   /** q298 oracle: same distinct postings, lag gaps, bin()-exact bit
     * lengths. */
   val qPostingsAuditSql: String =
-    """WITH posts AS (
+    s"""WITH posts AS (
       |  SELECT DISTINCT doc_id, term FROM (
       |    SELECT doc_id,
-      |      unnest(list_filter(string_split_regex(lower(text), '[^a-z0-9'']+'),
-      |                         x -> len(x) > 0)) AS term
+      |      unnest(${text.tokenizeSql("text")}) AS term
       |    FROM documents)),
       |gaps AS (
       |  SELECT term,
@@ -7298,8 +7152,7 @@ object TextAnalysis {
     val qlist = query.map(q => s"'$q'").mkString(", ")
     s"""WITH toks AS (
       |  SELECT doc_id,
-      |    unnest(list_filter(string_split_regex(lower(text), '[^a-z0-9'']+'),
-      |           x -> len(x) > 0)) AS term
+      |    unnest(${text.tokenizeSql("text")}) AS term
       |  FROM documents),
       |lens AS MATERIALIZED (
       |  SELECT doc_id, COUNT(*)::BIGINT AS len FROM toks GROUP BY doc_id),
@@ -7344,9 +7197,7 @@ object TextAnalysis {
       bins: Int): Option[DataFrame] = {
     val feats = logitFeaturesShared(t)
     val out = logitTrainCached(t, feats, rounds, lr).map { w =>
-      val z = lit(w(0)) + lit(w(1)) * col("f1") + lit(w(2)) * col("f2") +
-        lit(w(3)) * col("f3") + lit(w(4)) * col("f4") + lit(w(5)) * col("f5")
-      val p = lit(1.0) / (lit(1.0) + exp(-z))
+      val p = logitProb(w)
       feats
         .select(col("y").cast("long").as("y"),
           round(p * lit(1000000.0), 0).cast("long").as("cm"))
@@ -7370,8 +7221,7 @@ object TextAnalysis {
     s"""$chain,
        |cmicro AS (
        |  SELECT CAST(y AS BIGINT) AS y,
-       |    CAST(round(1.0::DOUBLE / (1.0::DOUBLE + exp(-($logitZExpr)))
-       |      * 1000000.0::DOUBLE) AS BIGINT) AS cm
+       |    CAST(round(${logitProbSql()} * 1000000.0::DOUBLE) AS BIGINT) AS cm
        |  FROM f, $wFinal w),
        |cal AS MATERIALIZED (
        |  SELECT LEAST((cm * $bins) // 1000000, ${bins - 1}) AS bin,
@@ -7585,22 +7435,10 @@ object TextAnalysis {
   def qSimpsonsAudit(t: Tables): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy(lit(0))
-    val toks = text.tokenize(col("text"))
-    val base = t.fanout(t.documents).select(col("source"),
-      col("doc_id"),
-      size(toks).cast("long").as("n_tokens"),
-      length(regexp_replace(lower(col("text")), "[^a-z0-9']", ""))
-        .cast("long").as("n_tok_chars"),
-      size(filter(toks, tk => tk.isInCollection(text.stopwords)))
-        .cast("long").as("n_stop"),
-      size(array_distinct(toks)).cast("long").as("n_distinct"))
+    val base = gopherCounts(t.fanout(t.documents), col("source"), col("doc_id"))
       .select(col("source"),
         (col("n_tokens") >= 50L).cast("long").as("x"),
-        when((col("n_tokens") >= 20 && col("n_tokens") <= 80) &&
-          (col("n_tok_chars") >= col("n_tokens") * 4 &&
-            col("n_tok_chars") <= col("n_tokens") * 5) &&
-          (col("n_stop") * 20 >= col("n_tokens")) &&
-          (col("n_distinct") * 2 >= col("n_tokens")), 1L).otherwise(0L).as("y"))
+        when(gopherKeep, 1L).otherwise(0L).as("y"))
     val cells = base.groupBy(col("source")).agg(
       sum(when(col("x") === 1L && col("y") === 1L, 1L).otherwise(0L)).as("a"),
       sum(when(col("x") === 1L && col("y") === 0L, 1L).otherwise(0L)).as("b"),
@@ -7624,24 +7462,12 @@ object TextAnalysis {
 
   /** q306 oracle: q86 parity census, integer cross-product association
     * signs. */
-  def qSimpsonsAuditSql(): String = {
-    val sw = text.stopwords.map(w => s"'$w'").mkString(", ")
-    s"""WITH cn AS (
-      |  SELECT source, CAST(len(toks) AS BIGINT) AS n_tokens,
-      |    CAST(length(regexp_replace(lower(text), '[^a-z0-9'']', '', 'g')) AS BIGINT) AS n_tok_chars,
-      |    CAST(len(list_filter(toks, x -> x IN ($sw))) AS BIGINT) AS n_stop,
-      |    CAST(len(list_distinct(toks)) AS BIGINT) AS n_distinct
-      |  FROM (SELECT source, text,
-      |          list_filter(string_split_regex(lower(text), '[^a-z0-9'']+'),
-      |                      x -> len(x) > 0) AS toks
-      |        FROM documents)),
+  def qSimpsonsAuditSql(): String =
+    s"""WITH cn AS (${gopherCountsSql("source")}),
       |xy AS (
       |  SELECT source,
       |    CASE WHEN n_tokens >= 50 THEN 1 ELSE 0 END AS x,
-      |    CASE WHEN (n_tokens >= 20 AND n_tokens <= 80)
-      |      AND (n_tok_chars >= n_tokens * 4 AND n_tok_chars <= n_tokens * 5)
-      |      AND (n_stop * 20 >= n_tokens)
-      |      AND (n_distinct * 2 >= n_tokens) THEN 1 ELSE 0 END AS y
+      |    CASE WHEN $gopherKeepSql THEN 1 ELSE 0 END AS y
       |  FROM cn),
       |cl AS (
       |  SELECT source,
@@ -7661,7 +7487,6 @@ object TextAnalysis {
       |  OR (a * d - b * c < 0 AND SUM(a) OVER () * SUM(d) OVER ()
       |     - SUM(b) OVER () * SUM(c) OVER () > 0) AS reversed
       |FROM cl ORDER BY source""".stripMargin
-  }
 
   /** Q303: unigram-LM tokenizer segmentation (the Viterbi E-step of
     * SentencePiece's trainer, Kudo 2018) — every vocabulary word is
@@ -7764,9 +7589,7 @@ object TextAnalysis {
     s"""WITH wd AS MATERIALIZED (
        |  SELECT word, CAST(COUNT(*) AS BIGINT) AS wcnt,
        |    CAST(length(word) AS BIGINT) AS len
-       |  FROM (SELECT unnest(list_filter(
-       |          string_split_regex(lower(text), '[^a-z0-9'']+'),
-       |          x -> len(x) > 0)) AS word
+       |  FROM (SELECT unnest(${text.tokenizeSql("text")}) AS word
        |        FROM documents)
        |  GROUP BY word HAVING length(word) <= $maxLen),
        |sp AS (
@@ -7815,27 +7638,15 @@ object TextAnalysis {
     * tables. */
   def qMrmrSelection(t: Tables): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val toks = text.tokenize(col("text"))
-    val base = t.fanout(t.documents).select(col("doc_id"), col("lang"),
-        col("n_chars"),
-        size(toks).cast("long").as("n_tokens"),
-        length(regexp_replace(lower(col("text")), "[^a-z0-9']", ""))
-          .cast("long").as("n_tok_chars"),
-        size(filter(toks, tk => tk.isInCollection(text.stopwords)))
-          .cast("long").as("n_stop"),
-        size(array_distinct(toks)).cast("long").as("n_distinct"))
+    val base = gopherCounts(t.fanout(t.documents), col("doc_id"), col("lang"), col("n_chars"))
       .select(col("doc_id"),
         least(expr("n_tokens div 10L"), lit(12L)).as("fa"),
         expr("CASE lang WHEN 'de' THEN 0L WHEN 'en' THEN 1L WHEN 'es' THEN 2L " +
           "WHEN 'fr' THEN 3L WHEN 'zh' THEN 4L ELSE 5L END").as("fb"),
         least(expr("n_chars div 100L"), lit(9L)).as("fc"),
-        (col("n_stop") * 20L >= col("n_tokens")).cast("long").as("fd"),
-        (col("n_distinct") * 2L >= col("n_tokens")).cast("long").as("fe"),
-        when((col("n_tokens") >= 20 && col("n_tokens") <= 80) &&
-          (col("n_tok_chars") >= col("n_tokens") * 4 &&
-            col("n_tok_chars") <= col("n_tokens") * 5) &&
-          (col("n_stop") * 20 >= col("n_tokens")) &&
-          (col("n_distinct") * 2 >= col("n_tokens")), 1L).otherwise(0L).as("yy"))
+        gopherStop.cast("long").as("fd"),
+        gopherDistinct.cast("long").as("fe"),
+        when(gopherKeep, 1L).otherwise(0L).as("yy"))
     // all 15 u<v pairs emitted per row directly: the previous tall
     // self-join evaluated the tokenize-heavy `base` twice and paid a
     // doc_id shuffle join for cells one projection can produce (r13 opt:
@@ -7908,29 +7719,17 @@ object TextAnalysis {
 
   /** q305 oracle: same stack/cells/micro-MI + the greedy rounds unrolled
     * with ROW_NUMBER argmaxes. */
-  def qMrmrSelectionSql(): String = {
-    val sw = text.stopwords.map(w => s"'$w'").mkString(", ")
-    s"""WITH cn AS (
-      |  SELECT doc_id, lang, n_chars, CAST(len(toks) AS BIGINT) AS n_tokens,
-      |    CAST(length(regexp_replace(lower(text), '[^a-z0-9'']', '', 'g')) AS BIGINT) AS n_tok_chars,
-      |    CAST(len(list_filter(toks, x -> x IN ($sw))) AS BIGINT) AS n_stop,
-      |    CAST(len(list_distinct(toks)) AS BIGINT) AS n_distinct
-      |  FROM (SELECT doc_id, lang, n_chars, text,
-      |          list_filter(string_split_regex(lower(text), '[^a-z0-9'']+'),
-      |                      x -> len(x) > 0) AS toks
-      |        FROM documents)),
+  def qMrmrSelectionSql(): String =
+    s"""WITH cn AS (${gopherCountsSql("doc_id", "lang", "n_chars")}),
       |ftr AS (
       |  SELECT doc_id,
       |    LEAST(n_tokens // 10, 12) AS fa,
       |    CASE lang WHEN 'de' THEN 0 WHEN 'en' THEN 1 WHEN 'es' THEN 2
       |      WHEN 'fr' THEN 3 WHEN 'zh' THEN 4 ELSE 5 END AS fb,
       |    LEAST(n_chars // 100, 9) AS fc,
-      |    CASE WHEN n_stop * 20 >= n_tokens THEN 1 ELSE 0 END AS fd,
-      |    CASE WHEN n_distinct * 2 >= n_tokens THEN 1 ELSE 0 END AS fe,
-      |    CASE WHEN (n_tokens >= 20 AND n_tokens <= 80)
-      |      AND (n_tok_chars >= n_tokens * 4 AND n_tok_chars <= n_tokens * 5)
-      |      AND (n_stop * 20 >= n_tokens)
-      |      AND (n_distinct * 2 >= n_tokens) THEN 1 ELSE 0 END AS yy
+      |    CASE WHEN $gopherStopSql THEN 1 ELSE 0 END AS fd,
+      |    CASE WHEN $gopherDistinctSql THEN 1 ELSE 0 END AS fe,
+      |    CASE WHEN $gopherKeepSql THEN 1 ELSE 0 END AS yy
       |  FROM cn),
       |tall AS (
       |  SELECT doc_id, nm, vl FROM ftr
@@ -7980,7 +7779,6 @@ object TextAnalysis {
       |  UNION ALL SELECT 2, sel2, rel2, sc2, 1 FROM s2
       |  UNION ALL SELECT 3, sel3, rel3, sc3, 2 FROM s3)
       |ORDER BY step""".stripMargin
-  }
 
   /** Q308: pairwise 1-Wasserstein (earth-mover) distance matrix between
     * the sources' token-count distributions — the transport-metric third
@@ -8036,10 +7834,8 @@ object TextAnalysis {
   /** q308 oracle: same global support grid, integer cross-multiplied CDF
     * gaps. */
   val qWassersteinMatrixSql: String =
-    """WITH cnt AS (
-      |  SELECT source, CAST(len(list_filter(
-      |      string_split_regex(lower(text), '[^a-z0-9'']+'),
-      |      x -> len(x) > 0)) AS BIGINT) AS v, COUNT(*)::BIGINT AS c
+    s"""WITH cnt AS (
+      |  SELECT source, CAST(len(${text.tokenizeSql("text")}) AS BIGINT) AS v, COUNT(*)::BIGINT AS c
       |  FROM documents GROUP BY 1, 2),
       |grid AS (
       |  SELECT s.source, u.v, CAST(COALESCE(k.c, 0) AS BIGINT) AS c
@@ -8113,8 +7909,7 @@ object TextAnalysis {
     * divisions. */
   def qGoodTuringSql(maxR: Int = 10): String =
     s"""WITH tl AS (
-      |  SELECT list_filter(string_split_regex(lower(text), '[^a-z0-9'']+'),
-      |         x -> len(x) > 0) AS toks
+      |  SELECT ${text.tokenizeSql("text")} AS toks
       |  FROM documents),
       |ix AS (
       |  SELECT toks, CAST(unnest(range(1, len(toks))) AS BIGINT) AS i
@@ -8202,10 +7997,8 @@ object TextAnalysis {
 
   /** q315 oracle: the q308 grid + pico-rounded squared-gap terms. */
   val qCramerVonMisesSql: String =
-    """WITH cnt AS (
-      |  SELECT source, CAST(len(list_filter(
-      |      string_split_regex(lower(text), '[^a-z0-9'']+'),
-      |      x -> len(x) > 0)) AS BIGINT) AS v, COUNT(*)::BIGINT AS c
+    s"""WITH cnt AS (
+      |  SELECT source, CAST(len(${text.tokenizeSql("text")}) AS BIGINT) AS v, COUNT(*)::BIGINT AS c
       |  FROM documents GROUP BY 1, 2),
       |grid AS (
       |  SELECT s.source, u.v, CAST(COALESCE(k.c, 0) AS BIGINT) AS c
@@ -8268,8 +8061,7 @@ object TextAnalysis {
             "nll_micro" -> LongType, "nll_mean" -> DoubleType,
             "is_best" -> BooleanType)
         case Some(w) =>
-          val z = lit(w(0)) + lit(w(1)) * col("f1") + lit(w(2)) * col("f2") +
-            lit(w(3)) * col("f3") + lit(w(4)) * col("f4") + lit(w(5)) * col("f5")
+          val z = logitZ(w)
           val zy = feats.select(col("y"), z.as("z"))
           val terms = zy.select(col("y"), col("z"),
             explode(array(grid.map(lit(_)): _*)).as("temp"))
@@ -8389,18 +8181,16 @@ object TextAnalysis {
     * micro |Δz| sums. Derivation note: z = (fm − μ)/σ with μ = sf/g and
     * σ = sqrt(varnum/g²) rewrites to (fm·g − sf)/sqrt(varnum·g) — the
     * form both engines evaluate. */
-  def qBurrowsDeltaSql(): String = {
-    val sw = text.stopwords.map(w => s"'$w'").mkString(", ")
+  def qBurrowsDeltaSql(): String =
     s"""WITH toks AS (
       |  SELECT source,
-      |    unnest(list_filter(string_split_regex(lower(text), '[^a-z0-9'']+'),
-      |           x -> len(x) > 0)) AS w
+      |    unnest(${text.tokenizeSql("text")}) AS w
       |  FROM documents),
       |tot AS MATERIALIZED (
       |  SELECT source, COUNT(*)::BIGINT AS tot FROM toks GROUP BY source),
       |swc AS (
       |  SELECT source, w, COUNT(*)::BIGINT AS cnt FROM toks
-      |  WHERE w IN ($sw) GROUP BY source, w),
+      |  WHERE w IN (${text.stopwordsSql}) GROUP BY source, w),
       |gridw AS (
       |  SELECT u.w, s.source,
       |    CAST(round(CAST(COALESCE(k.cnt, 0) AS DOUBLE) / CAST(t.tot AS DOUBLE)
@@ -8430,7 +8220,6 @@ object TextAnalysis {
       |    AS DOUBLE) / (CAST(COUNT(*) AS DOUBLE) * 1000000.0::DOUBLE) AS delta
       |FROM zs a JOIN zs b ON b.w = a.w AND a.source < b.source
       |GROUP BY a.source, b.source ORDER BY sa, sb""".stripMargin
-  }
 
   /** Q316: NB learning curve over md5-nested training fractions — the
     * data-scaling audit (how much accuracy does each doubling of
@@ -8610,8 +8399,7 @@ object TextAnalysis {
       |tk AS MATERIALIZED (
       |  SELECT doc_id, term, CAST(COUNT(*) AS BIGINT) AS c FROM (
       |    SELECT doc_id,
-      |      unnest(list_filter(string_split_regex(lower(text), '[^a-z0-9'']+'),
-      |                         x -> len(x) > 0)) AS term
+      |      unnest(${text.tokenizeSql("text")}) AS term
       |    FROM documents)
       |  GROUP BY doc_id, term)
       |SELECT CAST(thr AS BIGINT) AS thr, n_train, n_eval, n_correct, acc FROM (

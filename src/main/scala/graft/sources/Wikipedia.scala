@@ -20,7 +20,7 @@ object Wikipedia {
     * (realtimeapi.py:185-191). */
   def pages(spark: SparkSession, json: String): DataFrame = {
     import spark.implicits._
-    val raw = spark.read.option("multiLine", true).json(Seq(json).toDS)
+    val raw = spark.read.option("multiLine", true).json(Seq(json).toDS())
     raw.select(explode(col("query.pages")).as("p"))
       .select(
         col("p.pageid").cast("long").as("pageid"),
@@ -79,7 +79,7 @@ object Wikipedia {
     * input shape for ServerFlow.sectionsToQueries (realtimeapi.py:119-130). */
   def sections(spark: SparkSession, json: String): DataFrame = {
     import spark.implicits._
-    val raw = spark.read.option("multiLine", true).json(Seq(json).toDS)
+    val raw = spark.read.option("multiLine", true).json(Seq(json).toDS())
     raw.select(posexplode(col("parse.sections")).as(Seq("pos", "s")))
       .select(col("s.line").as("line"),
         col("s.toclevel").cast("int").as("toclevel"),

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.Tables
-import graft.functions.text
+import graft.ops.TextAnalysis
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
@@ -83,19 +83,8 @@ object TrainGate {
       val docs = spark.readStream.schema(schema).parquet(dir.toString)
 
       // ---- job A: quality gate → watermark → exact min-id dedup ----
-      val toksCol = text.tokenize(col("text"))
-      val quality = docs.select(col("doc_id"), col("text"),
-          size(toksCol).cast("long").as("n_tokens"),
-          length(regexp_replace(lower(col("text")), "[^a-z0-9']", ""))
-            .cast("long").as("n_tok_chars"),
-          size(filter(toksCol, tk => tk.isInCollection(text.stopwords)))
-            .cast("long").as("n_stop"),
-          size(array_distinct(toksCol)).cast("long").as("n_distinct"))
-        .filter(col("n_tokens") >= 20 && col("n_tokens") <= 80 &&
-          col("n_tok_chars") >= col("n_tokens") * 4 &&
-          col("n_tok_chars") <= col("n_tokens") * 5 &&
-          col("n_stop") * 20 >= col("n_tokens") &&
-          col("n_distinct") * 2 >= col("n_tokens"))
+      val quality = TextAnalysis.gopherCounts(docs, col("doc_id"), col("text"))
+        .filter(TextAnalysis.gopherKeep)
         .select(md5(col("text")).as("h"), col("doc_id"), col("n_tokens"),
           timestamp_seconds(lit(tsAnchor) + col("doc_id")).as("ts"))
       // the watermark must tag the event-time column that REACHES the
@@ -181,22 +170,11 @@ object TrainGate {
 
   /** Batch replay of the identical chain (quality → keep-first dedup →
     * shard prefix pack), the q112 oracle minus its decontamination stage. */
-  val qStreamTrainGateSql: String = {
-    val sw = text.stopwords.map(w => s"'$w'").mkString(", ")
-    s"""WITH base AS (
-       |  SELECT doc_id, text,
-       |    list_filter(string_split_regex(lower(text), '[^a-z0-9'']+'), x -> len(x) > 0) AS toks
-       |  FROM documents),
-       |q AS (
-       |  SELECT doc_id, text, CAST(len(toks) AS BIGINT) AS n_tokens
-       |  FROM (SELECT doc_id, text, toks,
-       |          CAST(len(toks) AS BIGINT) AS nt,
-       |          CAST(length(regexp_replace(lower(text), '[^a-z0-9'']', '', 'g')) AS BIGINT) AS nc,
-       |          CAST(len(list_filter(toks, x -> x IN ($sw))) AS BIGINT) AS ns,
-       |          CAST(len(list_distinct(toks)) AS BIGINT) AS nd
-       |        FROM base)
-       |  WHERE nt >= 20 AND nt <= 80 AND nc >= nt * 4 AND nc <= nt * 5
-       |    AND ns * 20 >= nt AND nd * 2 >= nt),
+  val qStreamTrainGateSql: String =
+    s"""WITH q AS (
+       |  SELECT doc_id, text, n_tokens
+       |  FROM (${TextAnalysis.gopherCountsSql("doc_id", "text")})
+       |  WHERE ${TextAnalysis.gopherKeepSql}),
        |dd AS (
        |  SELECT doc_id, n_tokens
        |  FROM (SELECT doc_id, n_tokens,
@@ -210,5 +188,4 @@ object TrainGate {
        |SELECT CAST(shard AS BIGINT) AS shard, CAST(seq_id AS BIGINT) AS seq_id,
        |  CAST(COUNT(*) AS BIGINT) AS n_docs, CAST(SUM(n_tokens) AS BIGINT) AS n_tokens
        |FROM packed GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin
-  }
 }

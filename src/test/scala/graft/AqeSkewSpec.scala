@@ -10,7 +10,6 @@ import org.apache.spark.sql.functions._
 class AqeSkewSpec extends SparkSpec {
 
   test("AQE splits a skewed sort-merge join partition (skew=true in the final plan)") {
-    import spark.implicits._
     val conf = spark.conf
     val saved = Seq(
       "spark.sql.adaptive.enabled",

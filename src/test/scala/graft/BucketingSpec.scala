@@ -108,8 +108,8 @@ class BucketingSpec extends SparkSpec {
     val t = sf001
     val target = 65536L
     val files = ops.Layout.q155CompactionPlan(t, target).collect()
-    val totalChars = t.documents.agg(sum(col("n_chars"))).head.getLong(0)
-    val maxDoc = t.documents.agg(max(col("n_chars"))).head.getLong(0)
+    val totalChars = t.documents.agg(sum(col("n_chars"))).head().getLong(0)
+    val maxDoc = t.documents.agg(max(col("n_chars"))).head().getLong(0)
     // nothing lost, file ids contiguous from 0
     assert(files.map(_.getLong(2)).sum == totalChars)
     assert(files.map(_.getLong(0)).toSeq == (0L until files.length).toSeq)
@@ -129,7 +129,7 @@ class BucketingSpec extends SparkSpec {
   test("q92: passage dedup keeps exactly the distinct passages, null on empty") {
     val t = sf0001
     val out = ops.TextAnalysis.qPassageDedup(t).cache()
-    val keptTotal = out.agg(sum("n_kept")).head.getLong(0)
+    val keptTotal = out.agg(sum("n_kept")).head().getLong(0)
     // corpus-wide keep-first ⇒ kept passages = distinct passages
     val toks = t.documents.select(col("doc_id"),
       graft.functions.text.tokenize(col("text")).as("toks"))

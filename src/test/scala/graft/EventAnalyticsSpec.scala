@@ -654,7 +654,6 @@ class EventAnalyticsSpec extends SparkSpec {
     val (sx, sy) = (panel.map(_._2).sum, panel.map(_._3).sum)
     val sxy = panel.map(p => p._2 * p._3).sum
     val sxx = panel.map(p => p._2 * p._2).sum
-    val syy = panel.map(p => p._3 * p._3).sum
     val theta = (n * sxy - sx.toDouble * sy) / (n * sxx - sx.toDouble * sx)
     assert(math.abs(cu.getDouble(4) - theta) < 1e-9, s"theta ${cu.getDouble(4)} want $theta")
     // variance reduction is a correlation² — in (0, 1], and the adjusted

@@ -70,7 +70,7 @@ class FormatsSpec extends SparkSpec {
     val quarantined = parsed.filter(col("_corrupt").isNotNull)
     assert(good.count() == 2)
     assert(quarantined.count() == 2)
-    assert(good.select(sum(col("id"))).head.getLong(0) == 4L)
+    assert(good.select(sum(col("id"))).head().getLong(0) == 4L)
     // DROPMALFORMED is the lossy alternative — same parse, bad rows gone
     val dropped = spark.read
       .schema(StructType(schema.dropRight(1)))

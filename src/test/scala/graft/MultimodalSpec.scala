@@ -1,7 +1,6 @@
 package graft
 
 import graft.ops.Multimodal
-import org.apache.spark.sql.functions._
 
 class MultimodalSpec extends SparkSpec {
 

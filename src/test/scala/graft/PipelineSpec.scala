@@ -2,7 +2,6 @@ package graft
 
 import graft.ops.Pipeline
 import graft.sources.Webhose
-import org.apache.spark.sql.functions._
 
 class PipelineSpec extends SparkSpec {
 

@@ -84,7 +84,7 @@ class PivotSampleSpec extends SparkSpec {
     // mean (heavier rows are more likely to be drawn)
     val sampledMean = base.map(r => r.getDouble(r.fieldIndex("sum_qty"))).sum /
       base.map(_.getLong(1)).sum
-    val popMean = t.lineitem.agg(avg(col("l_quantity"))).head.getDouble(0)
+    val popMean = t.lineitem.agg(avg(col("l_quantity"))).head().getDouble(0)
     assert(sampledMean > popMean,
       s"PPS sample mean $sampledMean not above population mean $popMean")
   }
@@ -96,7 +96,7 @@ class PivotSampleSpec extends SparkSpec {
     val rev = rows.groupBy(_._1).map { case (p, rs) => (p, rs.map(_._2).sum) }.toSeq
     val total = rev.map(_._2).sum
     var cum = 0L
-    val classes = rev.sortBy { case (p, r) => (-r, p) }.map { case (p, r) =>
+    val classes = rev.sortBy { case (p, r) => (-r, p) }.map { case (_, r) =>
       cum += r
       (if (cum * 100L <= 80L * total) "A"
        else if (cum * 100L <= 95L * total) "B" else "C", r)
@@ -124,7 +124,7 @@ class PivotSampleSpec extends SparkSpec {
     }.toSeq
     val n = cust.length.toLong
     def quint(key: Seq[(Long, Long)]): Map[Long, Long] =
-      key.sortBy(identity).zipWithIndex.map { case ((k, ck), i) =>
+      key.sortBy(identity).zipWithIndex.map { case ((_, ck), i) =>
         ck -> ((i.toLong * 5L) / n + 1L)
       }.toMap
     val qr = quint(cust.map(c => (c._2, c._1)).map { case (k, ck) => (k, ck) })

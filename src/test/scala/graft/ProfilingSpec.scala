@@ -49,7 +49,7 @@ class ProfilingSpec extends SparkSpec {
     // the xor checksums of disjoint classes fold to the xor over the union
     val allXor = out.values.map(_._2).reduce(_ ^ _)
     val direct = ops.Relational.q158SnapshotDiff(t)
-      .agg(expr("bit_xor(key_xor)")).head.getLong(0)
+      .agg(expr("bit_xor(key_xor)")).head().getLong(0)
     assert(allXor == direct)
   }
 
@@ -62,7 +62,7 @@ class ProfilingSpec extends SparkSpec {
     // cross-check two pairs against the built-in (floating) estimator
     val ref = t.lineitem.agg(
       corr(col("l_quantity"), col("l_extendedprice")),
-      corr(col("l_discount"), col("l_tax"))).head
+      corr(col("l_discount"), col("l_tax"))).head()
     assert(math.abs(out("quantity_price") - ref.getDouble(0)) < 1e-6)
     assert(math.abs(out("discount_tax") - ref.getDouble(1)) < 1e-6)
   }
@@ -145,7 +145,7 @@ class ProfilingSpec extends SparkSpec {
     assert(byDet("n_nationkey") && byDet("o_orderkey"))
     val segs = t.customer.groupBy("c_nationkey")
       .agg(countDistinct("c_mktsegment").as("s"))
-      .agg(max("s")).head.getLong(0)
+      .agg(max("s")).head().getLong(0)
     assert(byDet("c_nationkey") == (segs <= 1))
   }
 
@@ -160,9 +160,9 @@ class ProfilingSpec extends SparkSpec {
     out.values.foreach { r =>
       assert(r.getLong(1) + r.getLong(2) == total, r.toString) // n + n_null
     }
-    val flags = t.lineitem.select(countDistinct(col("l_returnflag"))).head.getLong(0)
+    val flags = t.lineitem.select(countDistinct(col("l_returnflag"))).head().getLong(0)
     assert(out("l_returnflag").getLong(3) == flags)
-    val minKey = t.lineitem.agg(min(col("l_orderkey"))).head.getLong(0)
+    val minKey = t.lineitem.agg(min(col("l_orderkey"))).head().getLong(0)
     assert(out("l_orderkey").getString(4) == minKey.toString)
     // decimal-cast formatting is fixed-scale (trailing zeros kept)
     assert(out("l_extendedprice").getString(4).matches("""\d+\.\d\d"""))
@@ -180,9 +180,9 @@ class ProfilingSpec extends SparkSpec {
       assert(r.getLong(1) == total, s"$k n_rows")
       val counts = t.lineitem.groupBy(col(k)).agg(count(lit(1)).as("c"))
       assert(r.getLong(2) == counts.count(), s"$k n_keys")
-      assert(r.getLong(3) == counts.agg(max(col("c"))).head.getLong(0), s"$k max_cnt")
+      assert(r.getLong(3) == counts.agg(max(col("c"))).head().getLong(0), s"$k max_cnt")
       val top10 = counts.orderBy(col("c").desc, col(k)).limit(10)
-        .agg(sum(col("c"))).head.getLong(0)
+        .agg(sum(col("c"))).head().getLong(0)
       assert(math.abs(r.getDouble(5) - top10.toDouble / total) < 1e-6, s"$k top10_share")
       assert(r.getDouble(4) >= 1.0 - 1e-9, s"$k skew_ratio >= 1 (max >= mean)")
     }

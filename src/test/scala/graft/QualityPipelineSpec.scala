@@ -485,6 +485,71 @@ class QualityPipelineSpec extends SparkSpec {
     }
   }
 
+  /** A document with exactly `n` tokens, `chars` token characters, `stop`
+    * stopword tokens and `distinct` distinct tokens: "a" fills the
+    * n − distinct repeats (needs stop > n − distinct), the other stopwords
+    * are the shortest distinct ones, the non-stop words are unique
+    * "zq??" words, and the last of them takes the remaining characters. */
+  private def gopherDoc(n: Int, chars: Int, stop: Int, distinct: Int): String = {
+    import graft.functions.text
+    val as = n - distinct + 1
+    val others = text.stopwords.filter(_ != "a").sortBy(w => (w.length, w))
+      .take(stop - as)
+    val plain = (0 until n - stop).map(i =>
+      "zq" + ('a' + i / 26).toChar + ('a' + i % 26).toChar)
+    val extra = chars - as - others.map(_.length).sum - plain.map(_.length).sum
+    require(as >= 1 && others.length == stop - as && plain.nonEmpty && extra >= 0)
+    (Seq.fill(as)("a") ++ others ++ plain.init :+ (plain.last + "x" * extra))
+      .mkString(" ")
+  }
+
+  test("Gopher rules: each inclusive edge, one step inside and one outside") {
+    import spark.implicits._
+    // (n, chars, stop, distinct) -> (rule_len, rule_mwl, rule_stop, rule_distinct)
+    val cases = Seq(
+      (19, 85, 5, 19) -> (false, true, true, true),
+      (20, 90, 5, 20) -> (true, true, true, true),
+      (80, 360, 5, 80) -> (true, true, true, true),
+      (81, 364, 5, 81) -> (false, true, true, true),
+      (40, 159, 5, 40) -> (true, false, true, true),
+      (40, 160, 5, 40) -> (true, true, true, true),
+      (40, 200, 5, 40) -> (true, true, true, true),
+      (40, 201, 5, 40) -> (true, false, true, true),
+      (41, 184, 2, 40) -> (true, true, false, true),  // 20·stop = n − 1
+      (40, 180, 2, 39) -> (true, true, true, true),   // 20·stop = n
+      (41, 184, 22, 20) -> (true, true, true, false), // 2·distinct = n − 1
+      (40, 180, 21, 20) -> (true, true, true, true))  // 2·distinct = n
+    val docs = cases.zipWithIndex.map { case (((n, c, s, d), _), i) =>
+      (i.toLong, gopherDoc(n, c, s, d)) }.toDF("doc_id", "text")
+    val rows = TextAnalysis.gopherCounts(docs, col("doc_id"))
+      .select(col("doc_id"), col("n_tokens"), col("n_tok_chars"), col("n_stop"),
+        col("n_distinct"), TextAnalysis.gopherLen, TextAnalysis.gopherMwl,
+        TextAnalysis.gopherStop, TextAnalysis.gopherDistinct, TextAnalysis.gopherKeep)
+      .orderBy(col("doc_id")).collect()
+    assert(rows.length == cases.length)
+    rows.zip(cases).foreach { case (r, ((n, c, s, d), (len, mwl, st, dis))) =>
+      val label = s"n=$n chars=$c stop=$s distinct=$d"
+      assert((r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)) ==
+        ((n.toLong, c.toLong, s.toLong, d.toLong)), s"counts of $label")
+      assert((r.getBoolean(5), r.getBoolean(6), r.getBoolean(7), r.getBoolean(8)) ==
+        ((len, mwl, st, dis)), s"rules of $label")
+      assert(r.getBoolean(9) == (len && mwl && st && dis), s"keep of $label")
+    }
+  }
+
+  test("Gopher gate: q86 keep, the logit label y and q112 stage 1 select one doc set") {
+    val t = sf0001
+    def ids(df: org.apache.spark.sql.DataFrame): Set[Long] =
+      df.select(col("doc_id")).collect().map(_.getLong(0)).toSet
+    val keep = ids(TextAnalysis.qQualityFilter(t).filter(col("keep")))
+    val label = ids(TextAnalysis.logitFeatures(t).filter(col("y") === 1.0))
+    val stage1 = ids(TextAnalysis.trainQualityStage(
+      t.documents.select(col("doc_id"), col("text"))))
+    assert(keep.nonEmpty && keep.size < 500)
+    assert(label == keep)
+    assert(stage1 == keep)
+  }
+
   test("q87: n_head ≤ n_tokens, every doc present, coverage flag matches the ratio") {
     val rows = TextAnalysis.qHeadCoverage(sf0001).collect()
     assert(rows.length == 500)
@@ -535,7 +600,7 @@ class QualityPipelineSpec extends SparkSpec {
     assert(out.map(_.getAs[Long]("n_docs")).sum == docs)
     val totalToks = t.documents
       .select(size(graft.functions.text.tokenize(col("text"))).cast("long").as("nt"))
-      .agg(sum(col("nt"))).head.getLong(0)
+      .agg(sum(col("nt"))).head().getLong(0)
     assert(out.map(_.getAs[Long]("n_tokens")).sum == totalToks)
     // within a shard, bins cover disjoint contiguous doc-id ranges in order
     out.groupBy(_.getAs[Long]("shard")).foreach { case (_, bins) =>
@@ -569,7 +634,7 @@ class QualityPipelineSpec extends SparkSpec {
     }
     // hand-recompute one document from raw tokens (independent path)
     val doc0 = sf0001.documents.filter(col("doc_id") === 0)
-      .select(graft.functions.text.tokenize(col("text"))).head.getSeq[String](0)
+      .select(graft.functions.text.tokenize(col("text"))).head().getSeq[String](0)
     val counts = doc0.groupBy(identity).map(_._2.size.toDouble)
     val n0 = doc0.size.toDouble
     val expected = counts.map(c => -(c / n0) * (math.log(c / n0) / math.log(2.0))).sum
@@ -614,7 +679,7 @@ class QualityPipelineSpec extends SparkSpec {
       .select(explode(graft.functions.text.tokenize(col("text"))).as("w"))
       .groupBy(col("w")).count().collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     val toks0 = t.documents.filter(col("doc_id") === 0)
-      .select(graft.functions.text.tokenize(col("text"))).head.getSeq[String](0)
+      .select(graft.functions.text.tokenize(col("text"))).head().getSeq[String](0)
     val expected = toks0.map(w => -math.log(fmap(w) / n)).sum / toks0.size
     val got = rows.find(_.getLong(0) == 0L).get.getDouble(2)
     assert(math.abs(got - expected) < 1e-5, s"doc0 $got vs $expected")
@@ -720,7 +785,7 @@ class QualityPipelineSpec extends SparkSpec {
     }
     // total shared instances = occurrences of cross-doc spans (q143 view)
     val dupOcc = TextAnalysis.qDupSpans(t).agg(sum(col("n_occ")))
-      .head.getLong(0)
+      .head().getLong(0)
     assert(out.map(_._3).sum == dupOcc)
   }
 
@@ -1178,7 +1243,7 @@ class QualityPipelineSpec extends SparkSpec {
     val docs = t.documents.select("doc_id", "text").collect()
       .map(r => (r.getLong(0), tok(r.getString(1))))
     val d = docs.length.toLong
-    val perTerm = docs.flatMap { case (id, tk) =>
+    val perTerm = docs.flatMap { case (_, tk) =>
       tk.groupBy(identity).map { case (w, o) => (w, o.length.toLong) } }
       .groupBy(_._1)
     rows.foreach { case (term, tot, df, ssq, vmr, bursty) =>
@@ -1517,7 +1582,7 @@ class QualityPipelineSpec extends SparkSpec {
 
   test("q247 BPE encode: per-doc symbol counts match a sequential encoder") {
     val t = sf0001
-    import org.apache.spark.sql.functions.{col, explode, length}
+    import org.apache.spark.sql.functions.{col, explode}
     // sequential reference: train merges on the >=2-char word-freq table
     // (as in the q244 spec), then apply them in order to EVERY distinct
     // token (including 1-char tokens, which training excluded)
@@ -2210,7 +2275,7 @@ class QualityPipelineSpec extends SparkSpec {
       } else (b, c, pp, neg, None: Option[Double], 0L)
     }
     ivTot = terms.map(_._6).sum
-    got289.zip(terms).foreach { case (r, (b, c, pp, neg, woe, term)) =>
+    got289.zip(terms).foreach { case (r, (_, c, pp, neg, woe, term)) =>
       assert(r.getLong(1) == c); assert(r.getLong(2) == pp); assert(r.getLong(3) == neg)
       woe match {
         case Some(wv) => assert(math.abs(r.getDouble(6) - wv) < 1e-9)

@@ -244,7 +244,7 @@ class SimilaritySpec extends SparkSpec {
     assert(ev.nonEmpty && tr.nonEmpty)
     def cos(a: Array[Float], b: Array[Float]): Double =
       graft.functions.fasthash.cosine(a, b)
-    val maxSim = tr.map { case (id, v, lab) =>
+    val maxSim = tr.map { case (_, v, lab) =>
       (lab, ev.map(e => cos(v, e._2)).max) }
     val got = Similarity.qSemanticDecontamination(t).collect()
     // per-label counts and flags tie out against the brute recompute

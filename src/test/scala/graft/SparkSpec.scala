@@ -13,11 +13,5 @@ trait SparkSpec extends AnyFunSuite {
 
 object SparkSpec {
   /** The live spec session, or a new one if none is running. */
-  def session(): SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  def session(): SparkSession = GraftSession.local(4)
 }

@@ -2,7 +2,6 @@ package graft
 
 import graft.streaming.Events
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 class StreamingSpec extends SparkSpec {
 
@@ -127,7 +126,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("streaming agg resumes from checkpoint exactly-once across restarts") {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
+    import java.nio.file.{Files, StandardCopyOption}
     val t = sf0001
     val inDir = Files.createTempDirectory("resume-in")
     val ckpt = Files.createTempDirectory("resume-ckpt")
