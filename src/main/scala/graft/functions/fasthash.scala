@@ -402,6 +402,4 @@ object fasthash {
     udf((text: String) => minhashSignature(text, numHashes, shingleLen))
 
   val simhashUdf = udf((text: String) => simhash64(text))
-
-  val cosineUdf = udf((a: Seq[Float], b: Seq[Float]) => cosine(a, b))
 }

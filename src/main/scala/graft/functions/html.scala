@@ -101,25 +101,6 @@ object html {
     }
   }
 
-  /** The NewsAPI registry (news_parsers.py:16-33): source id → selector. */
-  val newsapiSelectors: Map[String, String] = Map(
-    "abc-news" -> "div.article-copy",
-    "bbc-news" -> "div.story-body__inner",
-    "cnbc" -> "div#article_body",
-    "cnn" -> "section#body-text",
-    "fox-news" -> "div.article-body",
-    "nbc-news" -> "div.article-body",
-    "msnbc" -> "div[itemprop=\"articleBody\"]",
-    "reuters" -> "div[class^=\"body_\"]",
-    "politico" -> "div.story-text",
-    "the-economist" -> "div.blog-post__text",
-    "time" -> "div#article-body",
-    "the-washington-post" -> "div[itemprop=\"articleBody\"]",
-    "the-wall-street-journal" -> "div.wsj-snipped-body",
-    "the-new-york-times" -> "article#story",
-    "usa-today" -> "article.story",
-    "vice-news" -> "div.post-content")
-
   /** The Reddit registry (news_parsers.py:35-51): domain key → selector. */
   val redditSelectors: Map[String, String] = Map(
     "bbc" -> "div.story-body__inner",

@@ -239,8 +239,6 @@ object text {
     math.rint(100.0 * (total - indelDistance(a, b)) / total).toInt
   }
 
-  val fuzzRatioUdf = udf((a: String, b: String) => fuzzRatio(a, b))
-
   /** Scalable approximation used in oracle-checked plans: plain levenshtein
     * similarity (built-in, codegen'd, identical in DuckDB). */
   def levenshteinSim(a: Column, b: Column): Column =

@@ -176,38 +176,20 @@ object Affinity {
     * each group runs the kernel in its task. */
   def apGrouped(df: DataFrame, groupCol: String, idCol: String,
       vecCol: String, preference: Double = -4.0, damping: Double = 0.7,
-      rounds: Int = 15, maxGroup: Int = Int.MaxValue): DataFrame = {
+      rounds: Int = 15): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
     df.select(col(groupCol).cast("string"), col(idCol).cast("long"), col(vecCol))
       .as[(String, Long, Seq[Float])]
       .groupByKey(_._1)
       .flatMapGroups { (grp, iter) =>
-        // O(n²·rounds) kernel: an oversized group keeps its maxGroup
-        // smallest ids (streamed, bounded memory — the r12 group governor)
-        val trimmed =
-          if (maxGroup == Int.MaxValue) iter.toArray
-          else Summarize.smallestByIdCap(iter, maxGroup,
-            (e: (String, Long, Seq[Float])) => e._2)
-        val rows = trimmed.sortBy(_._2)
+        val rows = iter.toArray.sortBy(_._2)
         apKernel(rows.map(_._2), rows.map(_._3.toArray.map(_.toDouble)),
           preference, damping, rounds)
           .iterator.map { case (id, c, cl, ne, cos) => (grp, id, c, cl, ne, cos) }
       }
       .toDF(groupCol, idCol, "crit", "cluster", "n_exemplars", "exemplar_cos")
   }
-
-  /** Governed AP front door — the r12 group-size governor (the q185/q201
-    * audit-plus-cap recipe on the flatMapGroups families): one priced
-    * audit, bit-identical fallback below the cap, smallest-cap-ids trim
-    * plus a stderr audit line above it. The kernel is O(n²·rounds) time
-    * AND memory per group — the cap is what keeps a pathological story
-    * cluster from owning a task at 100 TB. */
-  def apGoverned(df: DataFrame, groupCol: String, idCol: String,
-      vecCol: String, preference: Double = -4.0, damping: Double = 0.7,
-      rounds: Int = 15, cap: Int = 1024): DataFrame =
-    apGrouped(df, groupCol, idCol, vecCol, preference, damping, rounds,
-      Summarize.groupCapOrMax(df, groupCol, cap, "ap"))
 
   /** The reference's AP cluster-assembly gate (cluster.py:80-93, the P10/W4
     * composition): keep only clusters with ≥ `minMembers` members whose
@@ -382,21 +364,14 @@ object Affinity {
   /** Agglomerative per bounded group — the scale face (same shuffle shape
     * as apGrouped). */
   def agglomerativeGrouped(df: DataFrame, groupCol: String, idCol: String,
-      vecCol: String, nClusters: Int = 5,
-      maxGroup: Int = Int.MaxValue): DataFrame = {
+      vecCol: String, nClusters: Int = 5): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
     df.select(col(groupCol).cast("string"), col(idCol).cast("long"), col(vecCol))
       .as[(String, Long, Seq[Float])]
       .groupByKey(_._1)
       .flatMapGroups { (grp, iter) =>
-        // the merge loop is super-quadratic in the group — same governor
-        // trim as apGrouped
-        val trimmed =
-          if (maxGroup == Int.MaxValue) iter.toArray
-          else Summarize.smallestByIdCap(iter, maxGroup,
-            (e: (String, Long, Seq[Float])) => e._2)
-        val rows = trimmed.sortBy(_._2)
+        val rows = iter.toArray.sortBy(_._2)
         aggloKernel(rows.map(_._2), rows.map(_._3.toArray.map(_.toDouble)), nClusters)
           .iterator.map { case (id, cl, sz) => (grp, id, cl, sz) }
       }

@@ -1468,83 +1468,6 @@ object Dedup {
     }
   }
 
-  // ---------------------- fuzzy-family production compositions (r12):
-  // the substr-10 prefix family gets the same promotion the LSH family
-  // got in r11 — every consumer of the ungoverned q32 generator
-  // (componentsMinId for q37, greedyWalk for q227/q36, componentLabels
-  // for q230) now has a production front door routed through
-  // governedFuzzyPairs, so a caller at scale inherits the priced
-  // block-cap governor instead of the oracle-semantics exact generator.
-  // Below the cap every one of these is bit-identical to its ungoverned
-  // sibling (the governor's fallback arm IS the plain blocked join);
-  // above it, the blow-up is bounded by cap²/2 per block — the measured
-  // difference at 10× data is q202's 1.6× vs q37's 12.4× / q227's 26.6×
-  // / q230's 12× (BENCH_NOTES r11).
-
-  /** Production min-id-per-component fuzzy dedup: governed prefix-blocked
-    * pair graph → star contraction → keep the min id per component.
-    * The fuzzy-family sibling of [[nearDupKeepIds]]'s governed LSH arm.
-    * Returns one `idCol` row per kept representative. */
-  def fuzzyNearDupKeepIds(df: DataFrame, textCol: String, idCol: String,
-      cap: Int = 64): DataFrame =
-    componentsMinId(
-      governedFuzzyPairs(df, textCol, idCol, cap).select(col("id_a"), col("id_b")),
-      df.select(col(idCol).as("id")))
-      .select(col("keep_id").as(idCol))
-
-  /** Production keep-first greedy fuzzy dedup: governed pair graph →
-    * the single-task keep-first walk (ids ascending, drop an id iff it
-    * conflicts with an already-kept id — q227's semantics). The collect
-    * of the SPARSE governed conflict graph is the documented
-    * sequential-by-semantics contract (the walk consumes only the pair
-    * graph); the governor is what bounds that graph at scale. */
-  def fuzzyGreedyKeepIds(df: DataFrame, textCol: String, idCol: String,
-      cap: Int = 64): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val conflicts = governedFuzzyPairs(df, textCol, idCol, cap)
-      .select(col("id_a"), col("id_b")).as[(Long, Long)].collect()
-    greedyWalk(df.select(col(idCol).as("id")), conflicts)
-  }
-
-  /** Production soft-dedup weights (the q230 semantics over an arbitrary
-    * frame, governed): every document weighted 1/|component| from the
-    * governed pair graph — downweight-don't-delete for near-dup clusters.
-    * Σ weights = #components exactly, below or above the cap. */
-  def softDedupWeightsGoverned(df: DataFrame, textCol: String, idCol: String,
-      cap: Int = 64): DataFrame = {
-    val labels = componentLabels(
-      governedFuzzyPairs(df, textCol, idCol, cap).select(col("id_a"), col("id_b")),
-      df.select(col(idCol).as("id")))
-    val sizes = labels.groupBy(col("label")).agg(count(lit(1)).as("comp_size"))
-    labels.join(sizes, Seq("label"))
-      .select(col("id").as(idCol), col("label").as("component"),
-        col("comp_size"),
-        (lit(1.0) / col("comp_size").cast("double")).as("weight"))
-  }
-
-  /** Production best-representative fuzzy dedup (q115's semantics over an
-    * arbitrary frame, governed): governed pair graph → component labels →
-    * keep the highest-`scoreCol` member per component (ties by min id).
-    * The fourth consumer of the ungoverned q32 generator promoted to the
-    * governed front door (with components/walk/weights above). The
-    * argmax window partitions by component label — bounded groups by the
-    * same cap that bounds the pair graph. */
-  def bestRepKeepIds(df: DataFrame, textCol: String, idCol: String,
-      scoreCol: String, cap: Int = 64): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val labels = componentLabels(
-      governedFuzzyPairs(df, textCol, idCol, cap).select(col("id_a"), col("id_b")),
-      df.select(col(idCol).as("id")))
-    val byLabel = Window.partitionBy(col("label"))
-    labels
-      .join(df.select(col(idCol).as("id"), col(scoreCol)), Seq("id"))
-      .withColumn("rn", row_number().over(
-        byLabel.orderBy(col(scoreCol).desc, col("id"))))
-      .filter(col("rn") === 1)
-      .select(col("id").as(idCol))
-  }
-
   /** Q242: the fuzzy-family production composition under the HASH GATE —
     * ONE governed pair graph (governedFuzzyPairs, the q202 front door)
     * feeding all three consumers at once: star-contraction component

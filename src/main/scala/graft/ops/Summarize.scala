@@ -15,12 +15,14 @@ import org.apache.spark.sql.functions._
   * damping). The summary is the top-k sentences per cluster (top-1
   * title/text in the CLI path, top-3 joined in the server path — W1/W2).
   *
-  * Distribution: everything per-group is computed via group-keyed joins and
-  * aggregations — thousands of clusters process in parallel, no per-cluster
-  * driver work. The power iteration is a fixed-iteration driver loop over
-  * one edges DataFrame (SURVEY §4 custom-concern 2), localCheckpoint-ed to
-  * cut lineage; iterations cost one shuffle each regardless of cluster
-  * count.
+  * Distribution: the default path (`lexrankGrouped`) shuffles the
+  * sentences once by group and runs each group's graph and power iteration
+  * in one task — thousands of clusters process in parallel, no per-cluster
+  * driver work. `lexrank` is the all-DataFrame variant: a fixed-iteration
+  * driver loop over one edges DataFrame (SURVEY §4 custom-concern 2),
+  * localCheckpoint-ed to cut lineage, one shuffle per iteration regardless
+  * of cluster count. Group size is governed inside the kernel only
+  * (`lexrankGrouped`'s `maxGroup` trim): no job runs to price the groups.
   */
 object Summarize {
 
@@ -105,10 +107,10 @@ object Summarize {
 
   /** Keep the `cap` smallest-by-id elements of a streaming group iterator
     * in O(n log cap) time and O(cap) memory (max-heap by id, evict the
-    * largest) — the kernel-side enforcement arm of the per-group size
-    * governor. Deterministic: the kept SET is the cap smallest ids,
-    * independent of arrival order. */
-  private[graft] def smallestByIdCap[T: scala.reflect.ClassTag](
+    * largest). Deterministic: the kept SET is the cap smallest ids,
+    * independent of arrival order; a group of at most `cap` elements is
+    * kept whole. The result is in heap order — callers sort it. */
+  private def smallestByIdCap[T: scala.reflect.ClassTag](
       iter: Iterator[T], cap: Int, id: T => Long): Array[T] = {
     val heap = scala.collection.mutable.PriorityQueue.empty[T](
       Ordering.by[T, Long](id)) // max-heap on id
@@ -121,11 +123,22 @@ object Summarize {
 
   /** LexRank with the per-group computation as an in-memory kernel inside
     * flatMapGroups: ONE shuffle (group the sentences), then each story
-    * cluster — bounded by construction — computes its idf, cosine graph and
-    * power iteration locally; thousands of groups run in parallel across
-    * the cluster. This is the default: the iterative DataFrame variant
-    * above (`lexrank`) exists for groups too large for one task, at the
-    * cost of a shuffle per iteration. Same algorithm, same parameters. */
+    * cluster computes its idf, cosine graph and power iteration locally;
+    * thousands of groups run in parallel across the cluster. This is the
+    * default: the iterative DataFrame variant above (`lexrank`) exists for
+    * groups too large for one task, at the cost of a shuffle per
+    * iteration. Same algorithm, same parameters.
+    *
+    * `maxGroup` is the group-size governor, and this kernel is its only
+    * arm: the cosine graph is quadratic in the group, so a group of more
+    * than `maxGroup` sentences keeps its `maxGroup` smallest ids (streamed,
+    * O(maxGroup) memory) and the task writes one `[lexrank-governor]`
+    * stderr line (group, size, cap, dropped). Scores of a trimmed group
+    * are LexRank over the kept subset; dropped sentences emit no row. A
+    * group at or below the cap is kept whole, so the default
+    * (Int.MaxValue) never trims. Ids must be unique within a group (every
+    * caller's are: article id, sentence id, doc_id): the kernel sorts by
+    * id, and equal ids would keep heap order, not arrival order. */
   def lexrankGrouped(sentences: DataFrame, groupCol: String, idCol: String,
       textCol: String, threshold: Double = 0.1, damping: Double = 0.85,
       iterations: Int = 20, stem: Boolean = true,
@@ -143,17 +156,15 @@ object Summarize {
         chain)
       .as[(String, Long, Seq[String])]
     toks.groupByKey(_._1).flatMapGroups { (grp, iter) =>
-      // the quadratic cos graph is bounded by maxGroup² — an oversized
-      // group keeps its maxGroup smallest sentence ids (deterministic),
-      // streamed with bounded memory; ungoverned callers pass MaxValue
-      // and take the plain path. sortBy(id) pins the in-kernel float
-      // accumulation order (idf/score sums) — shuffle arrival order must
-      // never be able to flip a last-ulp (r12, with the governor; the
-      // Affinity kernels already sort)
-      val sents = (
-        if (maxGroup == Int.MaxValue) iter.toArray
-        else smallestByIdCap(iter, maxGroup, (e: (String, Long, Seq[String])) => e._2)
-      ).sortBy(_._2)
+      // sortBy(id) pins the in-kernel float accumulation order (idf/score
+      // sums) — shuffle arrival order must never be able to flip a
+      // last-ulp (the Affinity kernels sort too)
+      var size = 0L
+      val sents = smallestByIdCap(iter.map { e => size += 1; e }, maxGroup,
+        (e: (String, Long, Seq[String])) => e._2).sortBy(_._2)
+      if (size > maxGroup)
+        System.err.println(s"[lexrank-governor] group=$grp size=$size " +
+          s"cap=$maxGroup dropped=${size - maxGroup}")
       val n = sents.length
       // per-group smooth idf
       val dfCount = scala.collection.mutable.HashMap.empty[String, Int]
@@ -205,62 +216,20 @@ object Summarize {
     }.toDF(groupCol, idCol, "score")
   }
 
-  /** The priced per-group size audit shared by every grouped-kernel
-    * governor (lexrank, AP, agglomerative): ONE bounded aggregate fetch;
-    * returns Int.MaxValue (ungoverned — kernel behavior bit-identical)
-    * when every group prices ≤ cap, else logs the audit to stderr and
-    * returns the cap for the kernel's enforcement trim. */
-  private[graft] def groupCapOrMax(df: DataFrame, groupCol: String,
-      cap: Int, tag: String): Int = {
-    val a = df.groupBy(col(groupCol)).agg(count(lit(1)).as("n"))
-      .agg(coalesce(max(col("n")), lit(0L)).as("max_group"),
-        sum(when(col("n") > cap, 1L).otherwise(0L)).as("n_governed"),
-        sum(when(col("n") > cap, col("n") - cap).otherwise(0L)).as("dropped"))
-      .head()
-    if (a.getLong(0) <= cap) Int.MaxValue
-    else {
-      System.err.println(s"[$tag-governor] groups over cap=$cap: " +
-        s"n_governed=${a.getLong(1)} max_group=${a.getLong(0)} " +
-        s"dropped_rows=${a.getLong(2)}")
-      cap
-    }
-  }
-
-  /** Governed grouped LexRank — the q185/q201 audit-plus-cap recipe
-    * applied to the per-cluster kernel (VERDICT r11 item 2): group sizes
-    * are bounded by construction at the reference's scale, but grow with
-    * the corpus (5 sources / k clusters over a growing doc count) while
-    * the kernel's cos graph is quadratic IN the group (q120 measured
-    * 13.1× wall at 10× data). ONE bounded audit aggregate prices the
-    * group sizes; when every group is ≤ cap this IS lexrankGrouped
-    * (bit-identical — the oracled shipped-SF contract); when one
-    * exceeds it, the kernel keeps each oversized group's `cap`
-    * smallest-by-id sentences (streamed, O(cap) memory — no count
-    * window, no mega-group single-task sort) and the audit line goes to
-    * stderr. Scores for governed groups are LexRank over the kept
-    * subset; dropped sentences emit no row — the documented recall
-    * trade, priced by the audit exactly like q186's bucket cap. */
-  def lexrankGoverned(sentences: DataFrame, groupCol: String, idCol: String,
-      textCol: String, threshold: Double = 0.1, damping: Double = 0.85,
-      iterations: Int = 20, stem: Boolean = true, cap: Int = 2048): DataFrame =
-    lexrankGrouped(sentences, groupCol, idCol, textCol, threshold, damping,
-      iterations, stem, groupCapOrMax(sentences, groupCol, cap, "lexrank"))
-
-  /** Q246: qLexrankPower routed through the GOVERNED kernel — the gate
-    * for the group-size governor's fallback arm. Contract (the q186/q242
-    * pattern): at every shipped SF the source groups price under the cap
-    * (sf0.1 max group = 250 < 512), so the governed path is bit-identical
-    * to q120's program and the oracle replays it exactly; at sf1.0
-    * (groups of 2500) the governor engages, the kernel runs on each
-    * group's 512 smallest doc_ids, and the stderr audit prices the drop —
-    * the capped-run scale measurement VERDICT r11 item 2 asks for. */
+  /** Q246: qLexrankPower routed through the GOVERNED kernel
+    * (`lexrankGrouped` with `maxGroup = cap`). At every shipped SF the
+    * source groups are under the cap (sf0.1 max group = 250 < 512), so the
+    * kernel trims nothing, the result is bit-identical to q120's program
+    * and the oracle replays it exactly; at sf1.0 (groups of 2500) each
+    * group runs on its 512 smallest doc_ids, and the kernel's stderr line
+    * prices the drop. */
   def qLexrankGoverned(t: Tables, threshold: Double = 0.1,
       damping: Double = 0.85, iterations: Int = 10, topK: Int = 3,
       cap: Int = 512): DataFrame = {
-    val scored = lexrankGoverned(
+    val scored = lexrankGrouped(
       t.fanout(t.documents).select(col("source"), col("doc_id"), col("text")),
       "source", "doc_id", "text", threshold, damping, iterations,
-      stem = false, cap = cap)
+      stem = false, maxGroup = cap)
     val wnd = Window.partitionBy(col("source"))
       .orderBy(round(col("score"), 6).desc, col("doc_id"))
     scored.withColumn("rnk", row_number().over(wnd))
@@ -272,12 +241,12 @@ object Summarize {
 
   /** Top-k summary rows per group by LexRank score (W1/W2): deterministic
     * tie-break on id. The PRODUCTION summary surface (newsPipeline /
-    * joinedSummaries consume it), so it routes through the governed
-    * kernel: bit-identical at reference-scale cluster sizes, priced and
-    * bounded when a story cluster outgrows the cap (r12 governor). */
+    * joinedSummaries consume it), so it runs the kernel with
+    * `maxGroup = cap`: a story cluster at or below the cap is scored
+    * whole, one that outgrows it is trimmed and logged by the kernel. */
   def summarize(sentences: DataFrame, groupCol: String, idCol: String,
       textCol: String, k: Int, cap: Int = 2048): DataFrame = {
-    val scored = lexrankGoverned(sentences, groupCol, idCol, textCol, cap = cap)
+    val scored = lexrankGrouped(sentences, groupCol, idCol, textCol, maxGroup = cap)
       .join(sentences.select(col(groupCol), col(idCol), col(textCol)),
         Seq(groupCol, idCol))
     val w = Window.partitionBy(col(groupCol))

@@ -170,17 +170,22 @@ class FeedScanBuilder(feed: String) extends ScanBuilder
     FeedSource.lastPushed(feed) =
       (pushed.map(_.toString).toSeq, limit, cols.fieldNames.toSeq)
     if (topN.nonEmpty) FeedSource.lastPushedTopN(feed) = (topN, limit)
-    new FeedScan(feed, pushed, limit, topN, cols)
+    FeedScan(feed, pushed.toSeq, limit, topN, cols)
   }
 }
 
-class FeedScan(feed: String, filters: Array[Filter], limit: Int,
+/** Value equality (a case class of immutable fields) lets Spark reuse one
+  * exchange for identical scans of a feed within one query. With reference
+  * equality, each reference to a feed-backed frame re-reads the feed and
+  * re-runs everything above it, side-effecting stages such as
+  * `ServerFlow.fetchContent` included. */
+final case class FeedScan(feed: String, filters: Seq[Filter], limit: Int,
     topN: Seq[(String, Boolean, Boolean)], cols: StructType) extends Scan with Batch {
   override def readSchema(): StructType = cols
   override def toBatch: Batch = this
 
   override def planInputPartitions(): Array[InputPartition] =
-    Array(FeedPartition(feed, filters, limit, topN, cols.fieldNames))
+    Array(FeedPartition(feed, filters.toArray, limit, topN, cols.fieldNames))
 
   override def createReaderFactory(): PartitionReaderFactory =
     new FeedReaderFactory

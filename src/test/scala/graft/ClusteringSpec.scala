@@ -139,18 +139,24 @@ class ClusteringSpec extends SparkSpec {
   test("group-size governor: bit-identical below cap, bounded trim above") {
     val t = sf0001
     val sents = t.documents.select(col("source"), col("doc_id"), col("text"))
-    // below the cap (max source group = 25) the governed path is the
-    // plain kernel, bit for bit
+    def scores(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getString(0), r.getLong(1)) -> r.getDouble(2)).toMap
+    // below the cap (max source group = 25) the kernel trims nothing: the
+    // governed call is q120's plain kernel, bit for bit
     val plain = Summarize.qLexrankPower(t).collect().map(_.toSeq).toSeq
     val governed = Summarize.qLexrankGoverned(t).collect().map(_.toSeq).toSeq
     assert(plain == governed, "governed lexrank != plain below cap")
+    val plainScores = scores(Summarize.lexrankGrouped(sents, "source", "doc_id",
+      "text", iterations = 10, stem = false))
+    val belowCap = scores(Summarize.lexrankGrouped(sents, "source", "doc_id",
+      "text", iterations = 10, stem = false, maxGroup = 25))
+    assert(belowCap == plainScores, "kernel at cap = max group != plain kernel")
 
     // above the cap: each group keeps exactly its cap smallest doc_ids,
     // and scores equal the plain kernel run on that trimmed subset
     val cap = 10
-    val capped = Summarize.lexrankGoverned(sents, "source", "doc_id", "text",
-        iterations = 10, stem = false, cap = cap)
-      .collect().map(r => (r.getString(0), r.getLong(1)) -> r.getDouble(2)).toMap
+    val capped = scores(Summarize.lexrankGrouped(sents, "source", "doc_id",
+      "text", iterations = 10, stem = false, maxGroup = cap))
     val expectIds = sents.collect()
       .map(r => (r.getString(0), r.getLong(1)))
       // .toSeq before flatMap: a Map flatMapped to tuples collapses per
@@ -163,25 +169,9 @@ class ClusteringSpec extends SparkSpec {
           .partitionBy(col("source")).orderBy(col("doc_id"))))
       .filter(col("rn") <= cap)
       .select(col("source"), col("doc_id"), col("text"))
-    val expectScores = Summarize.lexrankGrouped(trimmed, "source", "doc_id",
-        "text", iterations = 10, stem = false)
-      .collect().map(r => (r.getString(0), r.getLong(1)) -> r.getDouble(2)).toMap
+    val expectScores = scores(Summarize.lexrankGrouped(trimmed, "source", "doc_id",
+      "text", iterations = 10, stem = false))
     assert(capped == expectScores, "governed scores != plain kernel on the trim")
-
-    // the Affinity governors share the same contract
-    val emb = t.embeddings.orderBy(col("vec_id")).limit(20)
-      .select(lit("all").as("g"), col("vec_id"), col("embedding"))
-    val apPlain = graft.ops.Affinity.apGrouped(emb, "g", "vec_id", "embedding")
-      .collect().map(_.toSeq).toSeq
-    val apGov = graft.ops.Affinity.apGoverned(emb, "g", "vec_id", "embedding")
-      .collect().map(_.toSeq).toSeq
-    assert(apPlain == apGov, "governed AP != plain below cap")
-    val apCapped = graft.ops.Affinity.apGoverned(emb, "g", "vec_id", "embedding",
-      cap = 8).collect().map(_.getLong(1)).toSet
-    val apExpect = graft.ops.Affinity.apGrouped(
-      emb.orderBy(col("vec_id")).limit(8), "g", "vec_id", "embedding")
-      .collect().map(_.getLong(1)).toSet
-    assert(apCapped == apExpect, "governed AP trim != 8 smallest ids")
   }
 
   test("q129 BoW corpus agrees with the CountVectorizer vectorization") {

@@ -1,6 +1,8 @@
 package graft
 
 import graft.ops.Dedup
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 class DedupSpec extends SparkSpec {
@@ -434,33 +436,60 @@ class DedupSpec extends SparkSpec {
     assert(unGov.columns.toSeq == governed.columns.toSeq, "schema parity with q32")
   }
 
+  // The fuzzy-family production compositions, built the way q242 builds
+  // them: one governed pair graph (governedFuzzyPairs) feeding the
+  // componentsMinId / greedyWalk / componentLabels building blocks.
+  private def governedPairs(df: DataFrame, cap: Int = 64): DataFrame =
+    Dedup.governedFuzzyPairs(df, "text", "doc_id", cap).select(col("id_a"), col("id_b"))
+
+  private def docIds(df: DataFrame): DataFrame = df.select(col("doc_id").as("id"))
+
+  private def componentKeep(df: DataFrame, cap: Int = 64): Set[Long] =
+    Dedup.componentsMinId(governedPairs(df, cap), docIds(df))
+      .select(col("keep_id")).collect().map(_.getLong(0)).toSet
+
+  private def walkKeep(df: DataFrame, cap: Int = 64): Set[Long] = {
+    import spark.implicits._
+    Dedup.greedyWalk(docIds(df), governedPairs(df, cap).as[(Long, Long)].collect())
+      .collect().map(_.getLong(0)).toSet
+  }
+
+  /** (doc_id, component, comp_size, weight = 1/comp_size) — q230's shape. */
+  private def softWeights(df: DataFrame, cap: Int = 64): DataFrame = {
+    val labels = Dedup.componentLabels(governedPairs(df, cap), docIds(df))
+    val sizes = labels.groupBy(col("label")).agg(count(lit(1)).as("comp_size"))
+    labels.join(sizes, Seq("label"))
+      .select(col("id").as("doc_id"), col("label").as("component"),
+        col("comp_size"), (lit(1.0) / col("comp_size").cast("double")).as("weight"))
+  }
+
   test("fuzzy production compositions: below-cap parity with q37/q227/q230") {
-    // the r12 promotion (VERDICT r11 item 1): every consumer of the
-    // ungoverned q32 generator has a governed production front door —
-    // below the cap each one must be bit-identical to its oracled sibling
+    // below the cap every composition over the governed pair graph must be
+    // bit-identical to its oracled sibling over the exact q32 graph
     val t = sf0001
 
-    val prodComp = Dedup.fuzzyNearDupKeepIds(t.documents, "text", "doc_id")
-      .collect().map(_.getLong(0)).toSet
     val q37Keep = Dedup.qDedupComponents(t).collect().map(_.getLong(0)).toSet
-    assert(prodComp == q37Keep, "governed components != q37 keep set below cap")
+    assert(componentKeep(t.documents) == q37Keep,
+      "governed components != q37 keep set below cap")
 
-    val prodWalk = Dedup.fuzzyGreedyKeepIds(t.documents, "text", "doc_id")
-      .collect().map(_.getLong(0)).toSet
     val q227Keep = Dedup.qDedupGreedyGate(t).collect().map(_.getLong(0)).toSet
-    assert(prodWalk == q227Keep, "governed walk != q227 keep set below cap")
+    assert(walkKeep(t.documents) == q227Keep, "governed walk != q227 keep set below cap")
 
-    val prodW = Dedup.softDedupWeightsGoverned(t.documents, "text", "doc_id")
+    val prodW = softWeights(t.documents)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3))).toSet
     val q230W = Dedup.qSoftDedupWeights(t)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3))).toSet
     assert(prodW == q230W, "governed soft weights != q230 below cap")
 
-    val prodBest = Dedup.bestRepKeepIds(
-      t.documents.join(graft.ops.TextAnalysis.qQualityScore(t)
-          .select(col("doc_id"), col("quality_score")), Seq("doc_id")),
-      "text", "doc_id", "quality_score")
-      .collect().map(_.getLong(0)).toSet
+    // best representative per component: highest quality_score, ties by min id
+    val scored = t.documents.join(graft.ops.TextAnalysis.qQualityScore(t)
+      .select(col("doc_id"), col("quality_score")), Seq("doc_id"))
+    val prodBest = Dedup.componentLabels(governedPairs(scored), docIds(scored))
+      .join(scored.select(col("doc_id").as("id"), col("quality_score")), Seq("id"))
+      .withColumn("rn", row_number().over(Window.partitionBy(col("label"))
+        .orderBy(col("quality_score").desc, col("id"))))
+      .filter(col("rn") === 1)
+      .collect().map(_.getAs[Long]("id")).toSet
     val q115Keep = Dedup.qDedupBestRep(t).collect().map(_.getLong(0)).toSet
     assert(prodBest == q115Keep, "governed best-rep != q115 keep set below cap")
 
@@ -474,7 +503,7 @@ class DedupSpec extends SparkSpec {
   }
 
   test("fuzzy production compositions: the governor arm bounds a mega-block") {
-    // above the cap the front doors consume the governed graph: the
+    // above the cap the compositions consume the governed graph: the
     // mega-block's pairs are priced away, so every mega doc becomes its
     // own component/survivor while the small dup pairs still contract
     import spark.implicits._
@@ -484,15 +513,13 @@ class DedupSpec extends SparkSpec {
       (201L, "alpha prefix pair survives the governor ab"))
     val df = (mega ++ dup).toDF("doc_id", "text")
 
-    val kept = Dedup.fuzzyNearDupKeepIds(df, "text", "doc_id", cap = 8)
-      .collect().map(_.getLong(0)).toSet
+    val kept = componentKeep(df, cap = 8)
     assert(kept == (0L until 40L).toSet + 200L, s"got $kept")
 
-    val walk = Dedup.fuzzyGreedyKeepIds(df, "text", "doc_id", cap = 8)
-      .collect().map(_.getLong(0)).toSet
+    val walk = walkKeep(df, cap = 8)
     assert(walk == (0L until 40L).toSet + 200L, s"got $walk")
 
-    val w = Dedup.softDedupWeightsGoverned(df, "text", "doc_id", cap = 8)
+    val w = softWeights(df, cap = 8)
       .collect().map(r => r.getLong(0) -> r.getDouble(3)).toMap
     assert(w(0L) == 1.0 && w(200L) == 0.5 && w(201L) == 0.5)
   }

@@ -4,13 +4,29 @@ import graft.functions.html
 import graft.ops.ServerFlow
 import graft.sources.FeedSource
 import graft.sources.FeedSource.FeedRow
+import scala.jdk.CollectionConverters._
+
+/** Per-URL call counts of the counting fetcher below. A JVM-global object:
+  * local mode runs the executor tasks in the test JVM, so the fetcher
+  * closure the tasks deserialize still increments these counters. */
+object FetchCounter {
+  val calls = new java.util.concurrent.ConcurrentHashMap[String, Int]()
+  def fetch(pages: Map[String, String])(url: String): Option[String] = {
+    calls.merge(url, 1, _ + _)
+    pages.get(url)
+  }
+}
 
 /** End-to-end §3.2 trace: Wikipedia sections → scored queries → DSv2 feed
   * source (pushdown) → greedy dedup → fetch → CSS extraction → section
   * clusters → LexRank top-3 summaries. Every stage is the real operator. */
 class ServerPipelineSpec extends SparkSpec {
 
-  test("full server search pipeline over the feed source") {
+  /** Runs the pipeline over a fixture of 7 articles in 3 sections; the
+    * feed has one near-dup title pair (2 dups 1), one unknown source (5),
+    * and one url the fetcher cannot fetch (7). */
+  private def runFixture(fetcher: Map[String, String] => String => Option[String])
+      : Array[org.apache.spark.sql.Row] = {
     import spark.implicits._
 
     val sections = Seq(
@@ -18,8 +34,6 @@ class ServerPipelineSpec extends SparkSpec {
       ("References", 1, 4), ("External links", 1, 5))
       .toDF("line", "toclevel", "pos")
 
-    // one feed with 3 sections' worth of articles; one near-dup title pair;
-    // one unknown source; one url that will fail to fetch
     FeedSource.feeds("search") = Seq(
       FeedRow(1, "City approves new transit plan for the north side", "u1", "bbc", 1),
       FeedRow(2, "City approves new transit plan for the north side!", "u2", "cnbc", 1), // dup → dropped
@@ -37,10 +51,13 @@ class ServerPipelineSpec extends SparkSpec {
 
     val articles = spark.read.format("graft.sources.FeedSource")
       .option("feed", "search").load()
-      .withColumnRenamed("section_id", "section_id")
 
-    val out = ServerFlow.searchPipeline(sections, articles, "Test Topic",
-      html.redditSelectors, pages.get).collect()
+    ServerFlow.searchPipeline(sections, articles, "Test Topic",
+      html.redditSelectors, fetcher(pages)).collect()
+  }
+
+  test("full server search pipeline over the feed source") {
+    val out = runFixture(pages => pages.get)
 
     // sections 1..3 got articles; reserved sections never queried
     val bySection = out.map(r => r.getInt(0) -> r).toMap
@@ -58,5 +75,16 @@ class ServerPipelineSpec extends SparkSpec {
     }
     assert(bySection(1).getString(3).contains("transit") ||
       bySection(1).getString(3).contains("museum"))
+  }
+
+  test("the pipeline fetches each kept, in-scope article exactly once") {
+    FetchCounter.calls.clear()
+    val out = runFixture(FetchCounter.fetch)
+    assert(out.length == 3)
+    // the dedup drops u2 before the fetch; u5 is fetched, then dropped by
+    // the registry; u7's fetch returns None
+    val expected = Seq("u1", "u3", "u4", "u5", "u6", "u7").map(_ -> 1).toMap
+    val got = FetchCounter.calls.asScala.toMap
+    assert(got == expected, s"fetch calls per url: $got")
   }
 }
