@@ -1,9 +1,10 @@
 package graft.ops
 
 import graft.functions.html
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StringType
 
 /** The servers' dataflow, relationalized (SURVEY.md §3.2/§3.3): section
   * scoring and pruning (P7/W3), query construction (F8), source-domain
@@ -31,20 +32,19 @@ object ServerFlow {
 
   /** W3 + F8, reddit_api flavor (reddit_api.py:94-103): stable-sort
     * sections by score desc (original order preserved within ties — Python
-    * sorted is stable), take 10, prepend the synthetic Uncategorized
-    * section; F8 query string `"title" +"section"` from realtimeapi.py's
-    * construct_query (realtimeapi.py:98-101). */
+    * sorted is stable, so that is one sort by (score desc, pos)), take 10,
+    * prepend the synthetic Uncategorized section; F8 query string
+    * `"title" +"section"` from realtimeapi.py's construct_query
+    * (realtimeapi.py:98-101). With `sortByTocLevel`, realtimeapi.py:121-123's
+    * pre-sort by toclevel desc makes the order (score desc, toclevel desc,
+    * pos). */
   def sectionsToQueries(sections: DataFrame, pageTitle: String,
       numQueries: Int = 10, sortByTocLevel: Boolean = false): DataFrame = {
-    val pre = if (sortByTocLevel) // realtimeapi.py:121-123 pre-sort
-      Window.orderBy(col("toclevel").desc, col("pos"))
-    else Window.orderBy(col("pos"))
-    val preRanked = sections
-      .withColumn("pre_rank", row_number().over(pre))
-    val w = Window.orderBy(col("score").desc, col("pre_rank"))
-    val top = preRanked
+    val order = Seq(col("score").desc) ++
+      (if (sortByTocLevel) Seq(col("toclevel").desc) else Nil) :+ col("pos")
+    val top = sections
       .withColumn("score", sectionScore(col("line")))
-      .withColumn("rank", row_number().over(w))
+      .withColumn("rank", row_number().over(Window.orderBy(order: _*)))
       .filter(col("rank") <= numQueries)
       .select(col("rank").cast("int").as("section_id"), col("line"))
     val uncategorized = sections.sparkSession.range(1)
@@ -52,7 +52,9 @@ object ServerFlow {
     uncategorized.unionByName(top)
       .withColumn("query",
         concat(lit("\"" + pageTitle + "\" +\""), col("line"), lit("\"")))
-      .orderBy(col("section_id"))
+      // at most numQueries + 1 rows: one task sorts them, where orderBy
+      // would add a sampling job and a range shuffle
+      .coalesce(1).sortWithinPartitions(col("section_id"))
   }
 
   /** P3: source domain derivation (reddit.py:50-53) — drop the TLD, take
@@ -76,67 +78,58 @@ object ServerFlow {
   /** S5 + P11: content fetch via a pluggable fetcher inside mapPartitions
     * (executor-side I/O stage), then error-row filtering. The fetcher maps
     * a URL to Some(body) or None (4xx/parse failure — reddit_api.py:39-40).
+    * Each row keeps its article columns and gains `body`; rows whose fetch
+    * fails are dropped (P11).
     */
   def fetchContent(articles: DataFrame, fetcher: String => Option[String]): DataFrame = {
-    val spark = articles.sparkSession
-    import spark.implicits._
-    val fetched = articles
-      .select(col("id").cast("long"), col("url").cast("string"))
-      .as[(Long, String)]
-      .mapPartitions { rows =>
-        // one fetcher per partition = one http client per task in a real
-        // deployment; errors become nulls, filtered below (P11)
-        rows.map { case (id, url) => (id, fetcher(url).orNull) }
-      }
-      .toDF("id", "body")
-    articles.join(fetched, "id")
-      .filter(col("body").isNotNull)
+    val url = articles.schema.fieldIndex("url")
+    // one fetcher per partition = one http client per task in a real
+    // deployment
+    articles.mapPartitions { rows =>
+      rows.flatMap(r => fetcher(r.getString(url)).map(b => Row.fromSeq(r.toSeq :+ b)))
+    }(Encoders.row(articles.schema.add("body", StringType)))
   }
 
-  /** The whole `GET /search` dataflow (reddit_api.py:68-153, SURVEY §3.2),
-    * composed: score+prune sections (P7/W3) → articles for those sections
-    * (any source incl. the DSv2 feed) → greedy fuzzy title dedup (J2) →
-    * fetch (S5) → registry filter + CSS extraction (P9/S7) → section
-    * clusters (J1/P8) → LexRank top-3 joined summaries (M6/W2).
+  /** The whole `GET /search` dataflow (reddit_api.py:68-153, SURVEY §3.2)
+    * as one keyed pass: score+prune sections (P7/W3, collected: at most 11
+    * rows) → articles of those sections (any source incl. the DSv2 feed) →
+    * greedy fuzzy title dedup on the driver (J2) → fetch (S5) → registry
+    * filter + CSS extraction (P9/S7) → LexRank tokens, all narrow; then one
+    * shuffle by section (J1/P8), where each section's cluster is scored by
+    * the LexRank kernel and summarized by its top 3 (M6/W2,
+    * `Summarize.joinedSummary`).
     *
     * @param articles (id, title, url, source, section_id)
     * @param fetcher  url → Some(html) | None (the HTTP stage)
-    * @return (section_id, line, n_articles, summary) */
+    * @return (section_id, n_articles, line, summary) by section_id, one row
+    *         per section with at least one extracted article */
   def searchPipeline(sections: DataFrame, articles: DataFrame, pageTitle: String,
       registry: Map[String, String], fetcher: String => Option[String]): DataFrame = {
     val spark = articles.sparkSession
     import spark.implicits._
-    val queries = sectionsToQueries(sections, pageTitle)
-    val inScope = articles.join(
-      queries.select(col("section_id"), col("line")), Seq("section_id"), "left_semi")
+    val lines = sectionsToQueries(sections, pageTitle)
+      .select(col("section_id"), col("line")).as[(Int, String)].collect().toMap
+    val inScope = articles.filter(col("section_id").isInCollection(lines.keys))
     // greedy keep-first dedup on titles, arrival order = id order
     val rows = inScope.select(col("id"), col("title")).as[(Long, String)].collect().toSeq
     val keptIds = Dedup.greedyFuzzyKeepIds(rows)
     val kept = inScope.filter(col("id").isInCollection(keptIds))
-    val fetched = fetchContent(kept, fetcher).withColumnRenamed("body", "html")
-    val clusters = articlesToClusters(fetched, registry)
-    val members = clusters.select(col("section_id"),
-        explode(col("articles")).as("a"))
-      .select(col("section_id"), col("a.id"), col("a.text"))
-    val summaries = Summarize.joinedSummaries(members, "section_id", "id", "text")
-    clusters.select(col("section_id"), size(col("articles")).as("n_articles"))
-      .join(queries.select(col("section_id"), col("line")), Seq("section_id"))
-      .join(summaries, Seq("section_id"), "left")
-      .orderBy(col("section_id"))
-  }
-
-  /** The full §3.2 tail over fixture data: dedup surviving articles →
-    * extract body text per source → group into section clusters (J1) →
-    * summarize (the LexRank stage is ops.Summarize — composed in
-    * ServerFlowSpec). */
-  def articlesToClusters(articles: DataFrame, registry: Map[String, String]): DataFrame = {
     val extract = extractBody(registry)
-    val withBody = withRegisteredParser(articles, registry)
-      .withColumn("text", extract(col("html"), col("source")))
+    withRegisteredParser(fetchContent(kept, fetcher), registry)
+      .select(col("section_id").cast("int"), col("id").cast("long"),
+        extract(col("body"), col("source")).as("text"))
       .filter(col("text").isNotNull)
-    withBody
-      .groupBy(col("section_id"))
-      .agg(collect_list(struct(col("id"), col("title"), col("text"))).as("articles"))
-      .filter(size(col("articles")) > 0) // P8
+      .select(col("section_id"), col("id"), col("text"), Summarize.lexTokens(col("text")))
+      .as[(Int, Long, String, Seq[String])]
+      .groupByKey(_._1)
+      .mapGroups { (section, iter) =>
+        val (n, summary) = Summarize.joinedSummary(section.toString,
+          iter.map(a => (a._2, a._3, a._4)))
+        (section, n.toInt, lines(section), summary)
+      }
+      .toDF("section_id", "n_articles", "line", "summary")
+      // ≤ 11 rows, sorted as in sectionsToQueries; the one task also runs
+      // the per-section kernels, cheaper at a request's size than a stage
+      .coalesce(1).sortWithinPartitions(col("section_id"))
   }
 }

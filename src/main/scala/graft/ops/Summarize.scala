@@ -2,7 +2,7 @@ package graft.ops
 
 import graft.Tables
 import graft.functions.text
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -13,96 +13,23 @@ import org.apache.spark.sql.functions._
   * sentence pairs whose TF-IDF cosine exceeds a threshold; scores are the
   * stationary distribution of a random walk over that graph (PageRank with
   * damping). The summary is the top-k sentences per cluster (top-1
-  * title/text in the CLI path, top-3 joined in the server path — W1/W2).
+  * title/text in the CLI path via `summarize`, top-3 joined in the server
+  * path via `joinedSummary` — W1/W2).
   *
-  * Distribution: the default path (`lexrankGrouped`) shuffles the
-  * sentences once by group and runs each group's graph and power iteration
-  * in one task — thousands of clusters process in parallel, no per-cluster
-  * driver work. `lexrank` is the all-DataFrame variant: a fixed-iteration
-  * driver loop over one edges DataFrame (SURVEY §4 custom-concern 2),
-  * localCheckpoint-ed to cut lineage, one shuffle per iteration regardless
-  * of cluster count. Group size is governed inside the kernel only
-  * (`lexrankGrouped`'s `maxGroup` trim): no job runs to price the groups.
+  * Distribution: `lexrankGrouped` shuffles the sentences once by group and
+  * runs each group's graph and power iteration in one task — thousands of
+  * clusters process in parallel, no per-cluster driver work; the serving
+  * pass's `joinedSummary` runs the same per-group kernel (`groupScores`)
+  * inside its own shuffle. Group size is governed inside that kernel only
+  * (the `maxGroup` trim): no job runs to price the groups.
   */
 object Summarize {
 
-  /** Sentence-level TF (stemmed, stopword-filtered) as a token-count map. */
-  private val tfMap = udf((tokens: Seq[String]) =>
-    if (tokens == null) Map.empty[String, Int]
-    else tokens.groupBy(identity).map { case (k, v) => k -> v.length })
-
-  /** idf-weighted cosine between two token-count maps (LexRank eq. 3). */
-  private val idfCosine = udf(
-    (a: Map[String, Int], b: Map[String, Int], idf: Map[String, Double]) => {
-      def w(m: Map[String, Int], t: String) = m.getOrElse(t, 0).toDouble * idf.getOrElse(t, 0.0)
-      val terms = a.keySet ++ b.keySet
-      var ab = 0.0; var aa = 0.0; var bb = 0.0
-      terms.foreach { t =>
-        val x = w(a, t); val y = w(b, t)
-        ab += x * y; aa += x * x; bb += y * y
-      }
-      if (aa == 0.0 || bb == 0.0) 0.0 else ab / (math.sqrt(aa) * math.sqrt(bb))
-    })
-
-  /** LexRank scores for (group, sentence) rows.
-    *
-    * @param sentences (groupCol, idCol, textCol) — one row per sentence
-    * @return (group, id, score) — scores sum to ~1 within each group
-    */
-  def lexrank(sentences: DataFrame, groupCol: String, idCol: String,
-      textCol: String, threshold: Double = 0.1, damping: Double = 0.85,
-      iterations: Int = 12, stem: Boolean = true): DataFrame = {
-    val g = col(groupCol).as("grp")
-    val chain = {
-      val base = text.removeStopwords(text.tokenize(col(textCol)))
-      if (stem) text.stemTokens(base) else base
-    }
-    val toks = sentences.select(g, col(idCol).as("sid"), chain.as("toks"))
-
-    // per-group smooth idf: log((N+1)/(df+1)) + 1
-    val groupSizes = toks.groupBy(col("grp")).agg(count(lit(1)).as("n_sent"))
-    val dfCounts = toks.select(col("grp"), col("sid"),
-        explode(array_distinct(col("toks"))).as("term"))
-      .groupBy(col("grp"), col("term")).agg(count(lit(1)).as("df"))
-    val idfMaps = dfCounts.join(groupSizes, "grp")
-      .withColumn("idf", log((col("n_sent") + 1).cast("double") / (col("df") + 1)) + 1)
-      .groupBy(col("grp"))
-      .agg(map_from_arrays(collect_list(col("term")), collect_list(col("idf"))).as("idf"))
-
-    val vecs = toks.withColumn("tf", tfMap(col("toks"))).join(idfMaps, "grp")
-
-    // intra-group sentence graph: cosine > threshold (both directions kept)
-    val a = vecs.select(col("grp"), col("sid").as("src"), col("tf").as("tf_a"), col("idf"))
-    val b = vecs.select(col("grp"), col("sid").as("dst"), col("tf").as("tf_b"))
-    val edges = a.join(b, Seq("grp"))
-      .filter(col("src") =!= col("dst"))
-      .withColumn("sim", idfCosine(col("tf_a"), col("tf_b"), col("idf")))
-      .filter(col("sim") > threshold)
-      .select(col("grp"), col("src"), col("dst"))
-      .cache()
-    val outDegree = edges.groupBy(col("grp"), col("src")).agg(count(lit(1)).as("deg"))
-
-    // power iteration: s = (1-d)/n + d * Σ_in s_j/deg_j  (binary LexRank)
-    var scores = vecs.select(col("grp"), col("sid"))
-      .join(groupSizes, "grp")
-      .withColumn("score", lit(1.0) / col("n_sent"))
-      .select(col("grp"), col("sid"), col("score"))
-    for (i <- 1 to iterations) {
-      val contrib = edges
-        .join(scores.select(col("grp"), col("sid").as("src"), col("score")), Seq("grp", "src"))
-        .join(outDegree, Seq("grp", "src"))
-        .groupBy(col("grp"), col("dst"))
-        .agg(sum(col("score") / col("deg")).as("inflow"))
-      scores = scores
-        .join(contrib.select(col("grp"), col("dst").as("sid"), col("inflow")),
-          Seq("grp", "sid"), "left")
-        .join(groupSizes, "grp")
-        .withColumn("score",
-          (lit(1.0) - damping) / col("n_sent") + lit(damping) * coalesce(col("inflow"), lit(0.0)))
-        .select(col("grp"), col("sid"), col("score"))
-      if (i % 4 == 0) scores = scores.localCheckpoint()
-    }
-    scores.select(col("grp").as(groupCol), col("sid").as(idCol), col("score"))
+  /** The sentence tokens LexRank compares: tokenize, drop stopwords and,
+    * with `stem`, Porter-stem. */
+  private[graft] def lexTokens(textCol: Column, stem: Boolean = true): Column = {
+    val base = text.removeStopwords(text.tokenize(textCol))
+    if (stem) text.stemTokens(base) else base
   }
 
   /** Keep the `cap` smallest-by-id elements of a streaming group iterator
@@ -124,10 +51,7 @@ object Summarize {
   /** LexRank with the per-group computation as an in-memory kernel inside
     * flatMapGroups: ONE shuffle (group the sentences), then each story
     * cluster computes its idf, cosine graph and power iteration locally;
-    * thousands of groups run in parallel across the cluster. This is the
-    * default: the iterative DataFrame variant above (`lexrank`) exists for
-    * groups too large for one task, at the cost of a shuffle per
-    * iteration. Same algorithm, same parameters.
+    * thousands of groups run in parallel across the cluster.
     *
     * `maxGroup` is the group-size governor, and this kernel is its only
     * arm: the cosine graph is quadratic in the group, so a group of more
@@ -148,72 +72,82 @@ object Summarize {
     // fan the (single-row-group) scan out before the tokenize→stem chain;
     // the groupByKey below re-shuffles by group anyway
     val fanned = sentences.repartition(spark.sparkContext.defaultParallelism)
-    val chain = {
-      val base = text.removeStopwords(text.tokenize(col(textCol)))
-      if (stem) text.stemTokens(base) else base
-    }
     val toks = fanned.select(col(groupCol).cast("string"), col(idCol).cast("long"),
-        chain)
+        lexTokens(col(textCol), stem))
       .as[(String, Long, Seq[String])]
     toks.groupByKey(_._1).flatMapGroups { (grp, iter) =>
-      // sortBy(id) pins the in-kernel float accumulation order (idf/score
-      // sums) — shuffle arrival order must never be able to flip a
-      // last-ulp (the Affinity kernels sort too)
-      var size = 0L
-      val sents = smallestByIdCap(iter.map { e => size += 1; e }, maxGroup,
-        (e: (String, Long, Seq[String])) => e._2).sortBy(_._2)
-      if (size > maxGroup)
-        System.err.println(s"[lexrank-governor] group=$grp size=$size " +
-          s"cap=$maxGroup dropped=${size - maxGroup}")
-      val n = sents.length
-      // per-group smooth idf
-      val dfCount = scala.collection.mutable.HashMap.empty[String, Int]
-      sents.foreach(_._3.distinct.foreach(t =>
-        dfCount.update(t, dfCount.getOrElse(t, 0) + 1)))
-      val idf = dfCount.map { case (t, d) =>
-        t -> (math.log((n + 1).toDouble / (d + 1)) + 1)
-      }
-      val vecs: Array[Map[String, Double]] = sents.map { s =>
-        s._3.groupBy(identity).map { case (t, o) => t -> o.length * idf(t) }
-      }
-      val norms = vecs.map(v => math.sqrt(v.values.map(x => x * x).sum))
-      def cos(i: Int, j: Int): Double = {
-        if (norms(i) == 0.0 || norms(j) == 0.0) return 0.0
-        val (small, big) = if (vecs(i).size < vecs(j).size) (vecs(i), vecs(j)) else (vecs(j), vecs(i))
-        var s = 0.0
-        small.foreach { case (t, x) => big.get(t).foreach(y => s += x * y) }
-        s / (norms(i) * norms(j))
-      }
-      // binary adjacency over the threshold
-      val adj = Array.fill(n)(List.newBuilder[Int])
-      var i = 0
-      while (i < n) {
-        var j = i + 1
-        while (j < n) {
-          if (cos(i, j) > threshold) { adj(i) += j; adj(j) += i }
-          j += 1
-        }
-        i += 1
-      }
-      val neighbors = adj.map(_.result().toArray)
-      val deg = neighbors.map(_.length)
-      var score = Array.fill(n)(1.0 / n)
-      var it = 0
-      while (it < iterations) {
-        val next = Array.fill(n)((1.0 - damping) / n)
-        var u = 0
-        while (u < n) {
-          if (deg(u) > 0) {
-            val share = damping * score(u) / deg(u)
-            neighbors(u).foreach(v => next(v) += share)
-          }
-          u += 1
-        }
-        score = next
-        it += 1
-      }
+      val (_, sents, score) = groupScores(grp, iter, threshold, damping,
+        iterations, maxGroup)(_._2, _._3)
       sents.indices.iterator.map(ix => (grp, sents(ix)._2, score(ix)))
     }.toDF(groupCol, idCol, "score")
+  }
+
+  /** The LexRank kernel over one group's rows (`lexrankGrouped`'s and the
+    * serving pass's): trim to the `maxGroup` smallest ids, sort by id, then
+    * per-group smooth idf, the binary cosine graph over `threshold` and
+    * `iterations` rounds of damped power iteration. Returns the group's
+    * full size, the kept rows in id order and their scores. */
+  private def groupScores[T: scala.reflect.ClassTag](grp: String,
+      iter: Iterator[T], threshold: Double, damping: Double, iterations: Int,
+      maxGroup: Int)(id: T => Long, tokens: T => Seq[String])
+      : (Long, Array[T], Array[Double]) = {
+    // sortBy(id) pins the in-kernel float accumulation order (idf/score
+    // sums) — shuffle arrival order must never be able to flip a
+    // last-ulp (the Affinity kernels sort too)
+    var size = 0L
+    val sents = smallestByIdCap(iter.map { e => size += 1; e }, maxGroup, id)
+      .sortBy(id)
+    if (size > maxGroup)
+      System.err.println(s"[lexrank-governor] group=$grp size=$size " +
+        s"cap=$maxGroup dropped=${size - maxGroup}")
+    val n = sents.length
+    // per-group smooth idf
+    val dfCount = scala.collection.mutable.HashMap.empty[String, Int]
+    sents.foreach(s => tokens(s).distinct.foreach(t =>
+      dfCount.update(t, dfCount.getOrElse(t, 0) + 1)))
+    val idf = dfCount.map { case (t, d) =>
+      t -> (math.log((n + 1).toDouble / (d + 1)) + 1)
+    }
+    val vecs: Array[Map[String, Double]] = sents.map { s =>
+      tokens(s).groupBy(identity).map { case (t, o) => t -> o.length * idf(t) }
+    }
+    val norms = vecs.map(v => math.sqrt(v.values.map(x => x * x).sum))
+    def cos(i: Int, j: Int): Double = {
+      if (norms(i) == 0.0 || norms(j) == 0.0) return 0.0
+      val (small, big) = if (vecs(i).size < vecs(j).size) (vecs(i), vecs(j)) else (vecs(j), vecs(i))
+      var s = 0.0
+      small.foreach { case (t, x) => big.get(t).foreach(y => s += x * y) }
+      s / (norms(i) * norms(j))
+    }
+    // binary adjacency over the threshold
+    val adj = Array.fill(n)(List.newBuilder[Int])
+    var i = 0
+    while (i < n) {
+      var j = i + 1
+      while (j < n) {
+        if (cos(i, j) > threshold) { adj(i) += j; adj(j) += i }
+        j += 1
+      }
+      i += 1
+    }
+    val neighbors = adj.map(_.result().toArray)
+    val deg = neighbors.map(_.length)
+    var score = Array.fill(n)(1.0 / n)
+    var it = 0
+    while (it < iterations) {
+      val next = Array.fill(n)((1.0 - damping) / n)
+      var u = 0
+      while (u < n) {
+        if (deg(u) > 0) {
+          val share = damping * score(u) / deg(u)
+          neighbors(u).foreach(v => next(v) += share)
+        }
+        u += 1
+      }
+      score = next
+      it += 1
+    }
+    (size, sents, score)
   }
 
   /** Q246: qLexrankPower routed through the GOVERNED kernel
@@ -240,13 +174,14 @@ object Summarize {
   }
 
   /** Top-k summary rows per group by LexRank score (W1/W2): deterministic
-    * tie-break on id. The PRODUCTION summary surface (newsPipeline /
-    * joinedSummaries consume it), so it runs the kernel with
-    * `maxGroup = cap`: a story cluster at or below the cap is scored
+    * tie-break on id. The PRODUCTION summary surface (Pipeline's
+    * newsPipeline and qLexrankBySource consume it; the serving pass's
+    * `joinedSummary` is its k = 3 twin), so it runs the kernel with
+    * `maxGroup = SummaryCap`: a story cluster at or below the cap is scored
     * whole, one that outgrows it is trimmed and logged by the kernel. */
   def summarize(sentences: DataFrame, groupCol: String, idCol: String,
-      textCol: String, k: Int, cap: Int = 2048): DataFrame = {
-    val scored = lexrankGrouped(sentences, groupCol, idCol, textCol, maxGroup = cap)
+      textCol: String, k: Int): DataFrame = {
+    val scored = lexrankGrouped(sentences, groupCol, idCol, textCol, maxGroup = SummaryCap)
       .join(sentences.select(col(groupCol), col(idCol), col(textCol)),
         Seq(groupCol, idCol))
     val w = Window.partitionBy(col(groupCol))
@@ -255,6 +190,24 @@ object Summarize {
       .filter(col("rank") <= k)
       .select(col(groupCol), col("rank"), col(idCol),
         round(col("score"), 6).as("score"), col(textCol))
+  }
+
+  /** The story-cluster size above which `summarize` and `joinedSummary`
+    * score only the smallest ids. */
+  private val SummaryCap = 2048
+
+  /** One story cluster's summary on the serving path (reddit_api.py:148-150's
+    * ' '.join of the top sentences): `summarize(…, k = 3)` for one group —
+    * the same kernel, parameters and cap, ranked by (score desc, id) — with
+    * the texts joined by " " in rank order. Rows are (id, text,
+    * `lexTokens(text)`); returns the group's size and its summary. */
+  private[graft] def joinedSummary(grp: String,
+      rows: Iterator[(Long, String, Seq[String])]): (Long, String) = {
+    val (size, kept, score) = groupScores(grp, rows, threshold = 0.1,
+      damping = 0.85, iterations = 20, maxGroup = SummaryCap)(_._1, _._3)
+    val byRank = kept.indices.sortBy(i => (-score(i), kept(i)._1))(
+      Ordering.Tuple2(Ordering.Double.TotalOrdering, Ordering.Long))
+    (size, byRank.take(3).map(kept(_)._2).mkString(" "))
   }
 
   /** Query surface: each source is a "story cluster" of documents, each
@@ -266,18 +219,6 @@ object Summarize {
       "source", "doc_id", "text", 3)
       .select(col("source"), col("rank"), col("doc_id"), col("score"))
       .orderBy(col("source"), col("rank"))
-
-  /** Concatenated top-3 summary text per group (reddit_api.py:148-150's
-    * ' '.join of the top sentences), rank-ordered. */
-  def joinedSummaries(sentences: DataFrame, groupCol: String, idCol: String,
-      textCol: String): DataFrame =
-    summarize(sentences, groupCol, idCol, textCol, 3)
-      .groupBy(col(groupCol))
-      // collect_list order is nondeterministic — sort the (rank, text)
-      // structs before joining so the summary is rank-ordered.
-      .agg(array_join(
-        transform(sort_array(collect_list(struct(col("rank"), col(textCol)))),
-          s => s.getField(textCol)), " ").as("summary"))
 
   /** Q120: LexRank power iteration under the HASH GATE (summarize.py:5-26
     * intent, Erkan & Radev 2004) — the oracle-replayable counterpart of
@@ -305,12 +246,11 @@ object Summarize {
     * Execution is the grouped kernel (lexrankGrouped): ONE shuffle keys
     * the sentences by group, then each group — bounded by construction
     * (a story cluster's sentences) — builds its idf, graph and iteration
-    * locally; thousands of groups run in parallel. The per-round
-    * DataFrame-join variant (`lexrank`) remains the escape hatch for a
-    * group too large for one task. (A first cut ran the iteration as 10
-    * rounds of |E|-join DataFrames — 17 s at sf0.1 vs ~1 s for the
-    * kernel, all of it Spark scheduling floor on tiny per-round state;
-    * the measured reason the grouped kernel is this surface's default.) */
+    * locally; thousands of groups run in parallel. (A first cut ran the
+    * iteration as 10 rounds of |E|-join DataFrames — 17 s at sf0.1 vs
+    * ~1 s for the kernel, all of it Spark scheduling floor on tiny
+    * per-round state; the measured reason the grouped kernel is this
+    * surface's default.) */
   def qLexrankPower(t: Tables, threshold: Double = 0.1, damping: Double = 0.85,
       iterations: Int = 10, topK: Int = 3): DataFrame = {
     val scored = lexrankGrouped(

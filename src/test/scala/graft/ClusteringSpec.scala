@@ -120,7 +120,7 @@ class ClusteringSpec extends SparkSpec {
         t.documents.select(col("source"), col("doc_id"), col("text")),
         "source", "doc_id", "text", iterations = 10, stem = false)
       .collect().map(r => (r.getString(0), r.getLong(1)) -> r.getDouble(2)).toMap
-    val loop = Summarize.lexrank(
+    val loop = LexrankLoop.lexrank(
         t.documents.select(col("source"), col("doc_id"), col("text")),
         "source", "doc_id", "text", iterations = 10, stem = false)
       .collect().map(r => (r.getString(0), r.getLong(1)) -> r.getDouble(2)).toMap
@@ -331,12 +331,23 @@ class ClusteringSpec extends SparkSpec {
   }
 
   test("joined summaries are rank-ordered concatenations") {
+    // the serving pass's per-section summary vs summarize's top-3 rows
+    import spark.implicits._
     val sents = sf0001.documents.filter(col("doc_id") < 50)
       .select(col("source"), col("doc_id"), col("text"))
-    val joined = Summarize.joinedSummaries(sents, "source", "doc_id", "text")
-      .collect()
-    assert(joined.nonEmpty)
-    joined.foreach(r => assert(r.getString(1).nonEmpty))
+    val joined = sents.select(col("source"), col("doc_id"), col("text"),
+        Summarize.lexTokens(col("text")))
+      .as[(String, Long, String, Seq[String])]
+      .collect().groupBy(_._1).map { case (src, rows) =>
+        src -> Summarize.joinedSummary(src, rows.iterator.map(r => (r._2, r._3, r._4)))._2
+      }
+    val expect = Summarize.summarize(sents, "source", "doc_id", "text", 3)
+      .collect().groupBy(_.getString(0)).map { case (src, rows) =>
+        src -> rows.sortBy(_.getInt(1)).map(_.getString(4)).mkString(" ")
+      }
+    assert(joined.size == sents.select("source").distinct().count())
+    assert(joined == expect)
+    joined.values.foreach(s => assert(s.nonEmpty))
   }
 
   test("q120 oracle contract: no pair cosine sits on the 0.1 edge threshold") {

@@ -84,7 +84,7 @@ class ServerFlowSpec extends SparkSpec {
     val fetched = ServerFlow.fetchContent(articles, pages.get)
     assert(fetched.count() == 3) // u4 missing
 
-    val clusters = ServerFlow.articlesToClusters(
+    val clusters = SearchReference.articlesToClusters(
       fetched.withColumnRenamed("body", "html"), html.redditSelectors)
       .collect()
     // only sources with parsers AND exactly-one-match survive: ids 1, 2

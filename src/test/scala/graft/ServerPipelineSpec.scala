@@ -4,6 +4,9 @@ import graft.functions.html
 import graft.ops.ServerFlow
 import graft.sources.FeedSource
 import graft.sources.FeedSource.FeedRow
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, Row}
 import scala.jdk.CollectionConverters._
 
 /** Per-URL call counts of the counting fetcher below. A JVM-global object:
@@ -22,18 +25,23 @@ object FetchCounter {
   * clusters → LexRank top-3 summaries. Every stage is the real operator. */
 class ServerPipelineSpec extends SparkSpec {
 
-  /** Runs the pipeline over a fixture of 7 articles in 3 sections; the
-    * feed has one near-dup title pair (2 dups 1), one unknown source (5),
-    * and one url the fetcher cannot fetch (7). */
-  private def runFixture(fetcher: Map[String, String] => String => Option[String])
-      : Array[org.apache.spark.sql.Row] = {
-    import spark.implicits._
+  /** `searchPipeline`'s signature: the fused pass or the staged reference. */
+  private type SearchFn = (DataFrame, DataFrame, String, Map[String, String],
+    String => Option[String]) => DataFrame
 
-    val sections = Seq(
-      ("History", 1, 1), ("Design", 2, 2), ("Reception", 1, 3),
+  private def sections: DataFrame = {
+    import spark.implicits._
+    Seq(("History", 1, 1), ("Design", 2, 2), ("Reception", 1, 3),
       ("References", 1, 4), ("External links", 1, 5))
       .toDF("line", "toclevel", "pos")
+  }
 
+  /** Runs `pipeline` (the fused `searchPipeline` unless given) over a
+    * fixture of 7 articles in 3 sections; the feed has one near-dup title
+    * pair (2 dups 1), one unknown source (5), and one url the fetcher
+    * cannot fetch (7). */
+  private def runFixture(fetcher: Map[String, String] => String => Option[String],
+      pipeline: SearchFn = ServerFlow.searchPipeline): Array[Row] = {
     FeedSource.feeds("search") = Seq(
       FeedRow(1, "City approves new transit plan for the north side", "u1", "bbc", 1),
       FeedRow(2, "City approves new transit plan for the north side!", "u2", "cnbc", 1), // dup → dropped
@@ -52,8 +60,8 @@ class ServerPipelineSpec extends SparkSpec {
     val articles = spark.read.format("graft.sources.FeedSource")
       .option("feed", "search").load()
 
-    ServerFlow.searchPipeline(sections, articles, "Test Topic",
-      html.redditSelectors, fetcher(pages)).collect()
+    pipeline(sections, articles, "Test Topic", html.redditSelectors,
+      fetcher(pages)).collect()
   }
 
   test("full server search pipeline over the feed source") {
@@ -86,5 +94,74 @@ class ServerPipelineSpec extends SparkSpec {
     val expected = Seq("u1", "u3", "u4", "u5", "u6", "u7").map(_ -> 1).toMap
     val got = FetchCounter.calls.asScala.toMap
     assert(got == expected, s"fetch calls per url: $got")
+  }
+
+  test("the fused pass returns the staged composition's rows, summaries included") {
+    val reference = runFixture(pages => pages.get, SearchReference.searchPipeline)
+    assert(runFixture(pages => pages.get).toSeq == reference.toSeq)
+  }
+
+  test("fused = staged on 3+ articles per section, with LexRank score ties") {
+    import spark.implicits._
+    def page(cls: String, body: String) = s"""<div $cls>$body</div>"""
+    val bbc = "class=\"story-body__inner\""; val cnbc = "id=\"article_body\""
+    val harbor = "The harbor tunnel opened today. Drivers saved twenty minutes. Officials praised the crews."
+    // section 1: 11 and 12 carry one body, so their scores tie; section 2
+    // shares no term, so no edge and all three tie; 41 is out of scope
+    val arts = Seq(
+      (11L, "Harbor tunnel opens after years of delay", "p11", "bbc", 1, page(bbc, harbor)),
+      (12L, "Commuters react to the long awaited crossing", "p12", "cnbc", 1, page(cnbc, harbor)),
+      (13L, "Toll prices for the new route spark debate", "p13", "bbc", 1,
+        page(bbc, "Toll prices for the tunnel were announced. Drivers questioned the cost of the tunnel.")),
+      (21L, "Orchestra season opens with a premiere", "p21", "bbc", 2,
+        page(bbc, "Violins soared during the premiere.")),
+      (22L, "Local bakery wins national bread award", "p22", "cnbc", 2,
+        page(cnbc, "Sourdough loaves impressed judges.")),
+      (23L, "Volcano monitoring network gets upgrade", "p23", "bbc", 2,
+        page(bbc, "Seismometers were installed near craters.")),
+      (31L, "Stadium vote splits the council", "p31", "bbc", 3,
+        page(bbc, "The council voted on the stadium. The stadium vote was close.")),
+      (32L, "Fans rally outside city hall", "p32", "cnbc", 3,
+        page(cnbc, "Fans rallied for the stadium outside city hall.")),
+      (33L, "Budget office publishes arena costs", "p33", "bbc", 3,
+        page(bbc, "The budget office priced the stadium and the arena.")),
+      (34L, "Neighbors worry about match day parking", "p34", "cnbc", 3,
+        page(cnbc, "Parking near the stadium worries neighbors on match day.")),
+      (1L, "General news roundup for the week", "p1", "bbc", 0,
+        page(bbc, "A quiet week in the city.")),
+      (41L, "Out of scope story about gardening", "p41", "bbc", 9,
+        page(bbc, "Tomatoes grew well this summer.")))
+    val articles = arts.map(a => (a._1, a._2, a._3, a._4, a._5))
+      .toDF("id", "title", "url", "source", "section_id")
+    val pages = arts.map(a => a._3 -> a._6).toMap
+    def run(p: SearchFn) =
+      p(sections, articles, "Test Topic", html.redditSelectors, pages.get).collect().toSeq
+    val fused = run(ServerFlow.searchPipeline)
+    assert(fused == run(SearchReference.searchPipeline))
+    assert(fused.map(r => r.getInt(0) -> r.getInt(1)) == Seq(0 -> 1, 1 -> 3, 2 -> 3, 3 -> 4))
+    // an all-tied section ranks by id
+    assert(fused(2).getString(3) == "Violins soared during the premiere. " +
+      "Sourdough loaves impressed judges. Seismometers were installed near craters.")
+  }
+
+  test("one searchPipeline collect fires at most 5 Spark jobs") {
+    val group = "search-pipeline-jobs"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          jobs.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "searchPipeline")
+    try assert(runFixture(pages => pages.get).length == 3)
+    finally {
+      sc.clearJobGroup()
+      ListenerBusDrain(sc)
+      sc.removeSparkListener(listener)
+    }
+    // the staged composition this pass replaced fired 18 here
+    assert(jobs.get > 0 && jobs.get <= 5, s"${jobs.get} jobs")
   }
 }
