@@ -2,7 +2,8 @@ package graft.ops
 
 import graft.{Shared, Tables}
 import graft.functions.{fasthash, text}
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.TaskContext
+import org.apache.spark.sql.{Column, DataFrame, Encoders}
 import org.apache.spark.sql.functions._
 
 /** Near-duplicate detection (SURVEY.md §2.2 P4, §2.3 J2, §2.9 M7, and the
@@ -152,37 +153,61 @@ object Dedup {
       .select(col("id_a"), col("id_b")).distinct()
   }
 
-  /** Band-bucket audit for the production minhash family — the q185
-    * pricing applied to `lshCandidatePairs`' own bucket population:
-    * bucket count, the governed tail above `cap`, the max bucket, and
-    * the exact pair populations with and without the cap. One map-side-
-    * combinable aggregate + a 1-row reduce — strictly cheaper than the
-    * banded join it governs. */
-  private[graft] def lshBandAudit(banded: DataFrame, cap: Int): DataFrame =
-    banded.groupBy(col("bk")).agg(count(lit(1)).as("c"))
-      .agg(
-        count(lit(1)).as("n_buckets"),
-        sum(when(col("c") > cap, 1L).otherwise(0L)).as("n_governed"),
-        sum(when(col("c") > cap, col("c")).otherwise(0L)).as("governed_docs"),
-        coalesce(max(col("c")), lit(0L)).as("max_bucket"),
-        sum(expr("c * (c - 1) div 2")).as("pairs_raw"),
-        sum(when(col("c") <= cap, expr("c * (c - 1) div 2"))
-          .otherwise(0L)).as("pairs_capped"))
+  /** The bucket-cap governor of every banded self-join (q186's simhash
+    * chunks, `governedLshCandidatePairs`' band keys, `governedFuzzyPairs`'
+    * prefix blocks). A banded self-join costs Σ c·(c−1)/2 over bucket
+    * sizes c, so one pathological bucket makes one task quadratic; this
+    * drops every bucket of more than `cap` ids and self-joins the rest.
+    * `rows` holds the bucket `keys`, an `id` and payload columns; the
+    * result is (keys, id_a, id_b, <payload>_a, <payload>_b) with
+    * id_a < id_b.
+    *
+    * Bucket sizes come from an aggregate + equi-join, NOT a count window:
+    * a window partitioned by bucket sorts a degenerate mega-bucket in one
+    * task, while the hash join streams it and the filter drops it (and
+    * AQE can skew-split the join if it must). The rows are shuffled by
+    * key once: the size aggregate reads (keys, id), so without payload
+    * columns it shares that exchange with the join, and whatever computes
+    * the rows (LSH's signature kernel) runs once per row with no barrier.
+    * The cap is always in the plan — under it the filter keeps every
+    * bucket — so building the frame fires no job. A task that drops
+    * buckets writes one `[dedup-governor]` stderr line: the buckets, docs
+    * and pairs it dropped. */
+  private def cappedSelfJoin(rows: DataFrame, keys: Seq[String], cap: Int,
+      family: String): DataFrame = {
+    val keyed = rows.repartition(keys.map(col): _*)
+    // count(distinct id), not count(1): ids are unique within a bucket in
+    // every caller, and a count that never reads id would prune it from
+    // its copy of the exchange, so the join could not reuse that exchange
+    val sizes = keyed.groupBy(keys.map(col): _*)
+      .agg(count_distinct(col("id")).as("bucket_n"))
+    val n = sizes.schema.fieldIndex("bucket_n")
+    val keep = sizes.mapPartitions { it =>
+      var buckets, docs, pairs = 0L
+      Option(TaskContext.get()).foreach(_.addTaskCompletionListener[Unit] { _ =>
+        if (buckets > 0)
+          System.err.println(s"[dedup-governor] $family over cap=$cap: " +
+            s"dropped buckets=$buckets docs=$docs pairs=$pairs")
+      })
+      it.filter { r =>
+        val c = r.getLong(n)
+        if (c > cap) { buckets += 1; docs += c; pairs += c * (c - 1) / 2 }
+        c <= cap
+      }
+    }(Encoders.row(sizes.schema)).drop("bucket_n")
+    val small = keyed.join(keep, keys)
+    val cols = "id" +: rows.columns.filterNot(c => c == "id" || keys.contains(c)).toSeq
+    def side(tag: String): DataFrame =
+      small.select(keys.map(col) ++ cols.map(c => col(c).as(s"${c}_$tag")): _*)
+    side("a").join(side("b"), keys).filter(col("id_a") < col("id_b"))
+  }
 
-  /** Governed LSH candidate generation — the q185/q186 bucket-cap recipe
-    * wired into the PRODUCTION minhash path (VERDICT r10: the gated
-    * queries proved the recipe; this is the entry point using it). The
-    * band-bucket population is priced first with `lshBandAudit` (one
-    * bounded 1-row fetch, which doubles as the materialization action
-    * for the checkpointed band table so the signature kernel runs
-    * exactly once). When every bucket is at or under `cap` the plain
-    * banded self-join runs — bit-identical to `lshCandidatePairs`.
-    * Above the cap, the join is restricted to buckets ≤ cap (bucket
-    * sizes via aggregate + equi-join, never a count window), so no task
-    * is quadratic in one pathological band key; the dropped population
-    * is exactly the audit's `pairs_raw − pairs_capped`, logged so the
-    * cap decision is driver-visible. Recall contract as q186: a pair is
-    * lost only if ALL of its agreeing buckets are governed. */
+  /** Governed LSH candidate generation — the q185/q186 bucket cap wired
+    * into the PRODUCTION minhash path (q34, q95): `lshCandidatePairs`'
+    * banded self-join run through `cappedSelfJoin`, so no task is
+    * quadratic in one pathological band key. Under the cap the output
+    * equals `lshCandidatePairs`. Recall contract as q186: a pair is lost
+    * only if ALL of its agreeing buckets are over the cap. */
   def governedLshCandidatePairs(df: DataFrame, textCol: String, idCol: String,
       numHashes: Int = 64, bands: Int = 16, shingleLen: Int = 8,
       cap: Int = 64): DataFrame = {
@@ -190,28 +215,14 @@ object Dedup {
     val fanned = df.repartition(df.sparkSession.sparkContext.defaultParallelism)
     val banded = fanned.select(col(idCol).as("id"),
       explode(keysUdf(col(textCol))).as("bk"))
-      .localCheckpoint(eager = false)
-    val a = lshBandAudit(banded, cap).head()
-    val src =
-      if (a.getLong(3) <= cap) banded
-      else {
-        System.err.println(s"[dedup-governor] lsh bands over cap=$cap: " +
-          s"n_governed=${a.getLong(1)} governed_docs=${a.getLong(2)} " +
-          s"max_bucket=${a.getLong(3)} pairs_raw=${a.getLong(4)} " +
-          s"pairs_capped=${a.getLong(5)}")
-        val keep = banded.groupBy(col("bk")).agg(count(lit(1)).as("bucket_n"))
-          .filter(col("bucket_n") <= cap)
-          .select(col("bk"))
-        banded.join(keep, Seq("bk"))
-      }
-    src.select(col("bk"), col("id").as("id_a"))
-      .join(src.select(col("bk"), col("id").as("id_b")), Seq("bk"))
-      .filter(col("id_a") < col("id_b"))
+    cappedSelfJoin(banded, Seq("bk"), cap, "lsh bands")
       .select(col("id_a"), col("id_b")).distinct()
   }
 
   /** MinHash-LSH near-dup detection with exact verify — the 100 TB dedup.
-    * Emits verified pairs with exact character-shingle Jaccard. */
+    * Emits verified pairs with exact character-shingle Jaccard. The
+    * candidates are `governedLshCandidatePairs`' (band buckets of more
+    * than 64 docs are dropped in the plan). */
   def qDedupMinhashLsh(t: Tables): DataFrame =
     minhashVerifiedPairs(t, t.documents)
 
@@ -620,34 +631,21 @@ object Dedup {
     * tail is small and recall is near-total). `n_chunks` counts only
     * ungoverned matches — the pair's surviving evidence.
     *
-    * Scale shape: the bucket-count aggregate is O(n·4); the join cost is
-    * exactly q185's `pairs_capped` — bounded by cap²/2 per bucket, so no
-    * task can be dominated by one pathological key (the AQE-proof way to
-    * run banded LSH on skewed corpora). */
-  def qGovernedPairs(t: Tables, cap: Int = 16, maxHamming: Int = 3): DataFrame = {
-    val bands = simhashBands(t)
-    // bucket sizes via aggregate + equi-join, NOT a count window: a window
-    // partitioned by bucket sorts a degenerate mega-bucket in one task,
-    // while the hash join streams it and the filter drops it immediately
-    // (and AQE can skew-split the join if it must)
-    val keep = bands.groupBy(col("chunk"), col("cv"))
-      .agg(count(lit(1)).as("bucket_n"))
-      .filter(col("bucket_n") <= cap)
-      .select(col("chunk"), col("cv"))
-    val small = bands.join(keep, Seq("chunk", "cv"))
-    def side(tag: String): DataFrame =
-      small.select(Seq(col("chunk"), col("cv"), col("doc_id").as(s"id_$tag")) ++
-        (0 until 4).map(c => col(s"cv$c").as(s"$tag$c")): _*)
-    side("a").join(side("b"), Seq("chunk", "cv"))
-      .filter(col("id_a") < col("id_b"))
+    * Scale shape: `cappedSelfJoin` over the q131 bands — the bucket-count
+    * aggregate is O(n·4); the join cost is exactly q185's `pairs_capped`,
+    * bounded by cap²/2 per bucket, so no task can be dominated by one
+    * pathological key (the AQE-proof way to run banded LSH on skewed
+    * corpora). */
+  def qGovernedPairs(t: Tables, cap: Int = 16, maxHamming: Int = 3): DataFrame =
+    cappedSelfJoin(simhashBands(t).withColumnRenamed("doc_id", "id"),
+        Seq("chunk", "cv"), cap, "simhash chunks")
       .withColumn("hamming", (0 until 4)
-        .map(c => bit_count(col(s"a$c").bitwiseXOR(col(s"b$c"))))
+        .map(c => bit_count(col(s"cv${c}_a").bitwiseXOR(col(s"cv${c}_b"))))
         .reduce(_ + _).cast("long"))
       .groupBy(col("id_a"), col("id_b"))
       .agg(max(col("hamming")).as("hamming"), count(lit(1)).as("n_chunks"))
       .filter(col("hamming") <= maxHamming)
       .orderBy(col("id_a"), col("id_b"))
-  }
 
   /** q186 oracle: band CTEs + the same windowed bucket-size filter and
     * join. */
@@ -716,36 +714,15 @@ object Dedup {
 
   /** Q202: governed fuzzy pairs — q201's cap ENFORCED on q32's blocked
     * edit-distance join (the q186 enforcement recipe on the prefix-block
-    * family). The join runs over blocks of size ≤ cap only, so its cost
-    * is exactly q201's `pairs_capped` — bounded by cap²/2 per block, no
-    * task dominated by one degenerate prefix. The recall contract is
+    * family): the production front door `governedFuzzyPairs` at the
+    * audit's cap. The join runs over blocks of size ≤ cap only, so its
+    * cost is exactly q201's `pairs_capped` — bounded by cap²/2 per block,
+    * no task dominated by one degenerate prefix. The recall contract is
     * exact: away from the governed tail the output EQUALS q32
     * (DedupSpec asserts the parity), and the loss inside the tail is the
-    * pair population q201 already priced.
-    *
-    * Scale shape: bucket sizes via aggregate + equi-join, NOT a count
-    * window (q186's lesson — a window partitioned by block sorts the
-    * degenerate mega-block in one task; the hash join streams and drops
-    * it, and AQE can skew-split if it must). */
-  def qGovernedFuzzy(t: Tables, cap: Int = 16): DataFrame = {
-    val d = t.documents.select(col("doc_id"),
-      substring(col("text"), 1, 40).as("p"),
-      substring(col("text"), 1, 10).as("blk"))
-    val keep = d.groupBy(col("blk")).agg(count(lit(1)).as("c"))
-      .filter(col("c") <= cap).select(col("blk"))
-    val small = d.join(keep, Seq("blk"))
-    val a = small.select(col("blk"), col("doc_id").as("id_a"), col("p").as("p_a"))
-    val b = small.select(col("blk"), col("doc_id").as("id_b"), col("p").as("p_b"))
-    a.join(b, Seq("blk"))
-      .filter(col("id_a") < col("id_b"))
-      .withColumn("sim", round(text.levenshteinSim(col("p_a"), col("p_b")), 6))
-      .select(col("id_a"), col("id_b"), col("sim"))
-      // q32's barrier discipline: no UDF here, but the barrier still pins
-      // the blocked-join result before the range-partitioner sampling
-      .localCheckpoint()
-      .filter(col("sim") > 0.8)
-      .orderBy(col("id_a"), col("id_b"))
-  }
+    * pair population q201 already priced. */
+  def qGovernedFuzzy(t: Tables, cap: Int = 16): DataFrame =
+    governedFuzzyPairs(t.documents, "text", "doc_id", cap)
 
   /** q202 oracle: the windowed bucket-size filter (fine in DuckDB) +
     * q32's comparator, filtering on the ROUNDED sim on both sides. */
@@ -765,12 +742,10 @@ object Dedup {
       |WHERE sim > 0.8::DOUBLE ORDER BY id_a, id_b""".stripMargin
 
   /** Governed prefix-blocked fuzzy pairs — the PRODUCTION front door for
-    * the substr-10 family, the `governedLshCandidatePairs` recipe applied
-    * to q32's generator: price the block population with ONE bounded
-    * 1-row audit fetch, join only blocks ≤ cap when skew exists (the
-    * q201/q202 enforcement), and fall back to the plain blocked join —
-    * bit-identical to `qFuzzyPairs`' shape — when every block prices
-    * under the cap. The ORACLED queries (q32/q37/q141/q150/q151/q227)
+    * the substr-10 family (q202, q242): q32's blocked edit-distance join
+    * run through `cappedSelfJoin`, so blocks over `cap` are dropped (the
+    * q201/q202 enforcement) and, under the cap, the pairs equal
+    * `qFuzzyPairs`'. The ORACLED queries (q32/q37/q141/q150/q151/q227)
     * keep the ungoverned generator by oracle semantics (their DuckDB
     * replays close the exact pair graph); this is the entry point a
     * production caller composes at scale, where the blocked-pair
@@ -778,46 +753,18 @@ object Dedup {
     * the 10× point: 12,075 → 1,202,865 pairs for 5k → 50k docs, q32 wall
     * 44× vs the governed arm's 1.6× — BENCH_NOTES r11). */
   def governedFuzzyPairs(df: DataFrame, textCol: String, idCol: String,
-      cap: Int = 64): DataFrame =
-    governedFuzzyCandidates(df, textCol, idCol, cap)
-      .localCheckpoint() // q32's barrier discipline (sort-sampling re-run)
-      .filter(col("sim") > 0.8)
-      .orderBy(col("id_a"), col("id_b"))
-
-  /** The pre-barrier candidate generator behind [[governedFuzzyPairs]] —
-    * exposed so DedupSpec can assert the governed/fallback PLANS (the
-    * final localCheckpoint barrier hides the join from the public
-    * frame's plan). */
-  private[graft] def governedFuzzyCandidates(df: DataFrame, textCol: String,
-      idCol: String, cap: Int): DataFrame = {
+      cap: Int = 64): DataFrame = {
     val d = df.select(col(idCol).as("id"),
       substring(col(textCol), 1, 40).as("p"),
       substring(col(textCol), 1, 10).as("blk"))
-      .localCheckpoint(eager = false)
-    val blocks = d.groupBy(col("blk")).agg(count(lit(1)).as("block_n"))
-    val a = blocks.agg(
-      coalesce(max(col("block_n")), lit(0L)).as("max_block"),
-      sum(when(col("block_n") > cap, 1L).otherwise(0L)).as("n_governed"),
-      sum(when(col("block_n") > cap, col("block_n")).otherwise(0L)).as("governed_docs"),
-      sum(expr("block_n * (block_n - 1) div 2")).as("pairs_raw"),
-      sum(when(col("block_n") <= cap, expr("block_n * (block_n - 1) div 2"))
-        .otherwise(0L)).as("pairs_capped")).head()
-    val src =
-      if (a.getLong(0) <= cap) d
-      else {
-        System.err.println(s"[dedup-governor] prefix blocks over cap=$cap: " +
-          s"n_governed=${a.getLong(1)} governed_docs=${a.getLong(2)} " +
-          s"max_block=${a.getLong(0)} pairs_raw=${a.getLong(3)} " +
-          s"pairs_capped=${a.getLong(4)}")
-        val keep = blocks.filter(col("block_n") <= cap).select(col("blk"))
-        d.join(keep, Seq("blk"))
-      }
-    src.select(col("blk"), col("id").as("id_a"), col("p").as("p_a"))
-      .join(src.select(col("blk"), col("id").as("id_b"), col("p").as("p_b")),
-        Seq("blk"))
-      .filter(col("id_a") < col("id_b"))
+    cappedSelfJoin(d, Seq("blk"), cap, "prefix blocks")
       .withColumn("sim", round(text.levenshteinSim(col("p_a"), col("p_b")), 6))
       .select(col("id_a"), col("id_b"), col("sim"))
+      // q32's barrier discipline: pins the blocked-join result before the
+      // range-partitioner sampling of the sort
+      .localCheckpoint()
+      .filter(col("sim") > 0.8)
+      .orderBy(col("id_a"), col("id_b"))
   }
 
   /** Q191: prefix-filtering containment join (the SSJoin/PPJoin family,
@@ -901,9 +848,9 @@ object Dedup {
       .localCheckpoint()
     // The gram-hash table is CORPUS-proportional (one row per document,
     // ~800 B at ~100 grams/doc): an unconditional broadcast OOMs the
-    // driver at billions of docs (the r9 judge's one scale-killer). The
-    // nearDupKeepIds strategy-chooser shape applies: broadcast below a
-    // priced row threshold (100k rows ≈ 80 MB), otherwise let the
+    // driver at billions of docs (the r9 judge's one scale-killer). So
+    // the strategy is chosen by size: broadcast below a priced row
+    // threshold (100k rows ≈ 80 MB), otherwise let the
     // id-keyed candidate table co-partition with gh in a shuffle hash
     // join. The count is near-free — gh is an eager localCheckpoint.
     val nDocs = gh.count()
@@ -1434,40 +1381,6 @@ object Dedup {
       .groupBy(col("label")).agg(min(col("id")).as("keep_id"),
         collect_list(col("id")).as("member_ids"))
 
-  /** Strategy-choosing near-dup front door (SURVEY §4 custom-concern 1:
-    * similarity-join planning is an operator-level choice by input
-    * estimate, NOT a Catalyst rule). Picks:
-    *  - n ≤ exactThreshold: exact all-pairs (distributed ratio + greedy
-    *    walk) — reference-faithful, O(n²) bounded by the threshold;
-    *  - larger: governed MinHash-LSH candidates + exact verify —
-    *    O(n·bands) shuffle with the q185/q186 bucket cap enforced
-    *    (governedLshCandidatePairs), the 100 TB plan: a boilerplate
-    *    corpus whose docs share one band key can no longer make a
-    *    single join task quadratic.
-    * Returns kept representative ids either way. */
-  def nearDupKeepIds(df: DataFrame, textCol: String, idCol: String,
-      exactThreshold: Long = 10000): DataFrame = {
-    val n = df.count()
-    if (n <= exactThreshold) {
-      greedyFuzzyDedup(
-        df.select(col(idCol), substring(col(textCol), 1, 40).as("key")),
-        "key", idCol)
-    } else {
-      val pairs = governedLshCandidatePairs(df, textCol, idCol)
-      val sh = df.repartition(df.sparkSession.sparkContext.defaultParallelism)
-        .select(col(idCol).as("sid"),
-          fasthash.shingleSetUdf(8)(col(textCol)).as("sh"))
-      val verified = pairs
-        .join(sh.select(col("sid").as("id_a"), col("sh").as("sh_a")), Seq("id_a"))
-        .join(sh.select(col("sid").as("id_b"), col("sh").as("sh_b")), Seq("id_b"))
-        .filter(size(array_intersect(col("sh_a"), col("sh_b"))).cast("double") /
-          greatest(size(array_union(col("sh_a"), col("sh_b"))), lit(1)) >= 0.5)
-        .select(col("id_a"), col("id_b"))
-      componentsMinId(verified, df.select(col(idCol).as("id")))
-        .select(col("keep_id").as(idCol))
-    }
-  }
-
   /** Q242: the fuzzy-family production composition under the HASH GATE —
     * ONE governed pair graph (governedFuzzyPairs, the q202 front door)
     * feeding all three consumers at once: star-contraction component
@@ -1483,8 +1396,8 @@ object Dedup {
     * q227 one-id-per-step recursive walk over the same pair CTE. Where
     * the governor engages (sf1.0: blocks up to ~320), results diverge
     * from the exact graph by the priced capped-block pairs — the audit
-    * query q201 is the driver-visible price, and the stderr governor log
-    * names the engaged blocks.
+    * query q201 is the driver-visible price, and each task that drops
+    * blocks writes a `[dedup-governor]` stderr line.
     *
     * Scale shape: the pair graph is ONE governed blocked join
     * (localCheckpointed inside governedFuzzyPairs — consumed here by the
@@ -1949,8 +1862,7 @@ object Dedup {
     * from the fanned scan and localCheckpointed (the q191 anti-re-eval
     * shape); the pair kernel is a primitive merge-intersect + 64-lane
     * compare (~1 µs); the population is the governed family's — q201
-    * prices it, and a capped caller can run the same audit through
-    * `governedFuzzyCandidates`. */
+    * prices it, and `governedFuzzyPairs` is its capped generator. */
   def qMinhashCalibration(t: Tables, numHashes: Int = 64,
       shingleLen: Int = 8, meanCapMicro: Long = 100000L,
       maxCapMicro: Long = 450000L): DataFrame = {

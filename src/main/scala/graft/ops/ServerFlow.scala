@@ -69,12 +69,6 @@ object ServerFlow {
   def withRegisteredParser(articles: DataFrame, registry: Map[String, String]): DataFrame =
     articles.filter(col("source").isInCollection(registry.keys.toSeq))
 
-  /** S7: CSS text extraction over (html, source) with the registry
-    * broadcast in the UDF closure; exactly-one-match-or-null contract. */
-  def extractBody(registry: Map[String, String]) =
-    udf((doc: String, source: String) =>
-      registry.get(source).flatMap(sel => html.extractText(doc, sel)).orNull)
-
   /** S5 + P11: content fetch via a pluggable fetcher inside mapPartitions
     * (executor-side I/O stage), then error-row filtering. The fetcher maps
     * a URL to Some(body) or None (4xx/parse failure — reddit_api.py:39-40).
@@ -114,11 +108,16 @@ object ServerFlow {
     val rows = inScope.select(col("id"), col("title")).as[(Long, String)].collect().toSeq
     val keptIds = Dedup.greedyFuzzyKeepIds(rows)
     val kept = inScope.filter(col("id").isInCollection(keptIds))
-    val extract = extractBody(registry)
     withRegisteredParser(fetchContent(kept, fetcher), registry)
       .select(col("section_id").cast("int"), col("id").cast("long"),
-        extract(col("body"), col("source")).as("text"))
-      .filter(col("text").isNotNull)
+        col("body"), col("source"))
+      .as[(Int, Long, String, String)]
+      // S7, CSS extraction (exactly one match, else the article is
+      // dropped) in one typed step: a null filter on an extraction column
+      // is pushed below its projection, parsing every page twice
+      .flatMap { case (section, id, body, source) =>
+        registry.get(source).flatMap(html.extractText(body, _)).map((section, id, _)) }
+      .toDF("section_id", "id", "text")
       .select(col("section_id"), col("id"), col("text"), Summarize.lexTokens(col("text")))
       .as[(Int, Long, String, Seq[String])]
       .groupByKey(_._1)

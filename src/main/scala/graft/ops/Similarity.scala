@@ -216,7 +216,7 @@ object Similarity {
       .select(col("id_a"), col("id_b"), col("sim"))
   }
 
-  /** Pair-mining front door — the size ladder (mirrors Dedup.nearDupKeepIds):
+  /** Pair-mining front door — the size ladder:
     *  - n ≤ kernelLimit: broadcast kernel (cosinePairsExact) — the
     *    per-bucket / small-corpus shape;
     *  - n ≤ exactLimit: blocked distributed exact — still exact (so oracle

@@ -1,6 +1,7 @@
 package graft
 
 import graft.ops.Dedup
+import org.apache.spark.JobCounter
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -225,6 +226,9 @@ class DedupSpec extends SparkSpec {
     // with the cap above any block size, enforcement is a no-op
     assert(pairSet(Dedup.qGovernedFuzzy(t, cap = Int.MaxValue)) == full,
       "infinite cap must reproduce q32 exactly")
+    // q202 is the production front door at the audit's cap
+    assert(Dedup.qGovernedFuzzy(t).collect().toSeq ==
+      Dedup.governedFuzzyPairs(t.documents, "text", "doc_id", 16).collect().toSeq)
   }
 
   test("q191: gram-hash join drops the broadcast hint above the row threshold") {
@@ -316,62 +320,81 @@ class DedupSpec extends SparkSpec {
       s"only-in-components=${(comps -- greedy).take(5)} only-in-greedy=${(greedy -- comps).take(5)}")
   }
 
-  test("auto strategy: small input takes the exact path, big the LSH path") {
-    // exact path (n=500 ≤ threshold): identical to qDedupGreedy
-    val auto = Dedup.nearDupKeepIds(sf0001.documents, "text", "doc_id")
-      .collect().map(_.getLong(0)).toSet
-    val greedy = Dedup.qDedupGreedy(sf0001).collect().map(_.getLong(0)).toSet
-    assert(auto == greedy)
-    // LSH path (force with a tiny threshold): keeps one id per near-dup
-    // component, ids form a subset, dups collapse
-    val lsh = Dedup.nearDupKeepIds(sf0001.documents, "text", "doc_id",
-      exactThreshold = 10).collect().map(_.getLong(0)).toSet
-    val n = sf0001.documents.count()
-    assert(lsh.size < n) // the planted dups collapsed
-    assert(lsh.subsetOf((0L until n).toSet))
+  /** Runs `body` with System.err captured and returns its result and the
+    * `[dedup-governor] <what>` lines its tasks wrote (local mode: the tasks
+    * run in this JVM). */
+  private def governorLines[T](what: String)(body: => T): (T, Seq[String]) = {
+    val buf = new java.io.ByteArrayOutputStream()
+    val prev = System.err
+    System.setErr(new java.io.PrintStream(buf, true, "UTF-8"))
+    val out = try body finally System.setErr(prev)
+    (out, buf.toString("UTF-8").linesIterator
+      .filter(_.startsWith(s"[dedup-governor] $what")).toSeq)
   }
 
-  test("governed LSH: mega-bucket is capped in the plan; parity away from it") {
-    // VERDICT r10 item 1: the production LSH arm must route through the
-    // bucket cap. Fixture: a synthetic mega-bucket (40 identical docs —
-    // they share EVERY band key) alongside the q201-style distinct tail.
+  /** Σ of one `key=<n>` field over governor lines (one line per task). */
+  private def dropped(lines: Seq[String], key: String): Long =
+    lines.map(l => s"$key=(\\d+)".r.findFirstMatchIn(l).get.group(1).toLong).sum
+
+  /** 40 identical docs (they share EVERY band key) alongside genuinely
+    * dissimilar singletons (every shingle embeds the id, so no cross-doc
+    * bucket collisions) and two small planted dup pairs that any governed
+    * run must keep. */
+  private def megaBucketDocs: DataFrame = {
     import spark.implicits._
     val mega = (0L until 40L).map(i => (i, "breaking news identical boilerplate body"))
-    // genuinely dissimilar singletons (every shingle embeds the id, so no
-    // cross-doc bucket collisions) + two small planted dup pairs that any
-    // governed run must keep
     val singles = (100L until 120L).map(i =>
       (i, s"w${i}a x${i}b y${i}c z${i}d v${i}e u${i}f t${i}g s${i}h r${i}j"))
     val dupA = Seq((200L, "alpha pair survives the governor unchanged"),
       (201L, "alpha pair survives the governor unchanged"))
     val dupB = Seq((202L, "beta couple also stays below the bucket cap"),
       (203L, "beta couple also stays below the bucket cap"))
-    val df = (mega ++ singles ++ dupA ++ dupB).toDF("doc_id", "text")
+    (mega ++ singles ++ dupA ++ dupB).toDF("doc_id", "text")
+  }
 
+  test("governed LSH: mega-bucket is capped in the plan; parity away from it") {
+    // the production LSH arm routes through the bucket cap
+    val df = megaBucketDocs
     val governed = Dedup.governedLshCandidatePairs(df, "text", "doc_id", cap = 8)
-    // plan assert: above the cap the bucket-size filter join is IN the plan
+    // plan assert: the bucket-size filter join is IN the plan
     val plan = governed.queryExecution.optimizedPlan.toString
     assert(plan.contains("bucket_n"),
       "governed path above a mega-bucket must join through the bucket-size filter")
-    val gPairs = governed.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val (rows, lines) = governorLines("lsh bands over cap=8")(governed.collect())
+    val gPairs = rows.map(r => (r.getLong(0), r.getLong(1))).toSet
     // the mega-bucket's quadratic population is dropped (every one of its
-    // buckets exceeds cap=8); the small dup blocks are untouched
+    // 16 band buckets exceeds cap=8); the small dup blocks are untouched
     assert(!gPairs.exists { case (a, b) => a < 40 && b < 40 },
       "mega-bucket pairs must be governed away")
     assert(gPairs == Set((200L, 201L), (202L, 203L)),
       s"parity away from governed blocks, got $gPairs")
+    // the tasks that dropped the buckets say so, one line each at most
+    assert(lines.nonEmpty, "no governor line")
+    assert(dropped(lines, "buckets") == 16 && dropped(lines, "docs") == 16 * 40 &&
+      dropped(lines, "pairs") == 16 * (40 * 39 / 2), s"$lines")
     val unGoverned = Dedup.lshCandidatePairs(df, "text", "doc_id")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(unGoverned.count { case (a, b) => a < 40 && b < 40 } == 40 * 39 / 2,
       "ungoverned generator must emit the full quadratic mega-bucket")
 
-    // under the cap the generator falls back to the plain join:
-    // bit-identical pairs and NO bucket filter in the plan
-    val relaxed = Dedup.governedLshCandidatePairs(df, "text", "doc_id", cap = 64)
-    assert(!relaxed.queryExecution.optimizedPlan.toString.contains("bucket_n"),
-      "under-cap fallback must be the plain banded join")
-    val rPairs = relaxed.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(rPairs == unGoverned, "under-cap fallback must equal lshCandidatePairs")
+    // under the cap the filter keeps every bucket: identical pairs, no log
+    val (relaxed, quiet) = governorLines("lsh bands")(
+      Dedup.governedLshCandidatePairs(df, "text", "doc_id", cap = 64).collect())
+    val rPairs = relaxed.map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(rPairs == unGoverned, "under the cap the pairs must equal lshCandidatePairs")
+    assert(quiet.isEmpty, s"no bucket dropped, yet: $quiet")
+  }
+
+  test("governed LSH: no job at construction; the signature kernel runs once") {
+    val (governed, jobs) = JobCounter(spark.sparkContext)(
+      Dedup.governedLshCandidatePairs(megaBucketDocs, "text", "doc_id", cap = 8))
+    assert(jobs == 0, s"$jobs jobs at construction")
+    // the bucket count and both join sides read one exchange of the band
+    // rows, so the final plan evaluates the band-key kernel once
+    governed.collect()
+    val finalPlan = governed.queryExecution.executedPlan.toString
+      .split("== Initial Plan ==").head
+    assert("explode\\(UDF\\(".r.findAllIn(finalPlan).size == 1, finalPlan)
   }
 
   test("q227 greedy gate: walk matches an in-memory recompute; greedy invariants hold") {
@@ -401,7 +424,7 @@ class DedupSpec extends SparkSpec {
     }
   }
 
-  test("governed prefix pairs: mega-block capped in the plan; under-cap fallback exact") {
+  test("governed prefix pairs: mega-block capped; under the cap exact") {
     // the production front door for the substr-10 family (the LSH
     // governor's sibling): fixture = one 40-doc common-prefix mega-block
     // + two small dup pairs with distinct prefixes
@@ -414,24 +437,24 @@ class DedupSpec extends SparkSpec {
       (203L, "beta prefix couple stays below the cap ab"))
     val df = (mega ++ dupA ++ dupB).toDF("doc_id", "text")
 
-    val gCand = Dedup.governedFuzzyCandidates(df, "text", "doc_id", cap = 8)
-    assert(gCand.queryExecution.optimizedPlan.toString.contains("block_n"),
-      "governed path above a mega-block must join through the block-size filter")
-    val governed = Dedup.governedFuzzyPairs(df, "text", "doc_id", cap = 8)
+    // the result barrier runs the blocked join while the frame is built
+    val (governed, lines) = governorLines("prefix blocks")(
+      Dedup.governedFuzzyPairs(df, "text", "doc_id", cap = 8))
+    assert(lines == Seq("[dedup-governor] prefix blocks over cap=8: " +
+      s"dropped buckets=1 docs=40 pairs=${40 * 39 / 2}"), s"$lines")
     val gPairs = governed.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(!gPairs.exists { case (a, b) => a < 40 && b < 40 },
       "mega-block pairs must be governed away")
     assert(gPairs == Set((200L, 201L), (202L, 203L)), s"got $gPairs")
 
-    assert(!Dedup.governedFuzzyCandidates(df, "text", "doc_id", cap = 64)
-      .queryExecution.optimizedPlan.toString.contains("block_n"),
-      "under-cap fallback must be the plain blocked join")
-    val relaxed = Dedup.governedFuzzyPairs(df, "text", "doc_id", cap = 64)
+    val (relaxed, quiet) = governorLines("prefix blocks")(
+      Dedup.governedFuzzyPairs(df, "text", "doc_id", cap = 64))
+    assert(quiet.isEmpty, s"no block dropped, yet: $quiet")
     val rPairs = relaxed.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     // under the cap the generator equals the ungoverned q32 shape
     val unGov = Dedup.qFuzzyPairs(Tables(spark, "/root/testdata/sf0.001"))
     assert(rPairs.count { case (a, b) => a < 40 && b < 40 } == 40 * 39 / 2,
-      "fallback must emit the full mega-block (all variants are near-dups)")
+      "under the cap the full mega-block is emitted (all variants are near-dups)")
     assert(rPairs.contains((200L, 201L)) && rPairs.contains((202L, 203L)))
     assert(unGov.columns.toSeq == governed.columns.toSeq, "schema parity with q32")
   }

@@ -1,5 +1,6 @@
 package graft
 
+import graft.functions.html
 import graft.ops.{Dedup, ServerFlow, Summarize}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -15,7 +16,9 @@ object SearchReference {
   /** Registry filter → CSS extraction → one row per section with its
     * extracted articles (J1/P8). */
   def articlesToClusters(articles: DataFrame, registry: Map[String, String]): DataFrame = {
-    val extract = ServerFlow.extractBody(registry)
+    // S7 as a UDF: exactly one selector match, else null
+    val extract = udf((doc: String, source: String) =>
+      registry.get(source).flatMap(html.extractText(doc, _)).orNull)
     ServerFlow.withRegisteredParser(articles, registry)
       .withColumn("text", extract(col("html"), col("source")))
       .filter(col("text").isNotNull)

@@ -4,8 +4,7 @@ import graft.functions.html
 import graft.ops.ServerFlow
 import graft.sources.FeedSource
 import graft.sources.FeedSource.FeedRow
-import org.apache.spark.ListenerBusDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.JobCounter
 import org.apache.spark.sql.{DataFrame, Row}
 import scala.jdk.CollectionConverters._
 
@@ -145,23 +144,38 @@ class ServerPipelineSpec extends SparkSpec {
   }
 
   test("one searchPipeline collect fires at most 5 Spark jobs") {
-    val group = "search-pipeline-jobs"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
-          jobs.incrementAndGet()
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    sc.setJobGroup(group, "searchPipeline")
-    try assert(runFixture(pages => pages.get).length == 3)
-    finally {
-      sc.clearJobGroup()
-      ListenerBusDrain(sc)
-      sc.removeSparkListener(listener)
-    }
+    val (out, jobs) = JobCounter(spark.sparkContext)(runFixture(pages => pages.get))
+    assert(out.length == 3)
     // the staged composition this pass replaced fired 18 here
-    assert(jobs.get > 0 && jobs.get <= 5, s"${jobs.get} jobs")
+    assert(jobs > 0 && jobs <= 5, s"$jobs jobs")
   }
+
+  test("the pipeline extracts each fetched, registered article exactly once") {
+    ExtractCounter.calls.set(0)
+    val out = runFixture(pages => pages.get, (s, a, title, registry, fetcher) =>
+      ServerFlow.searchPipeline(s, a, title, new ExtractCounter(registry), fetcher))
+    assert(out.length == 3)
+    // u1, u3, u4 and u6 are fetched and have a parser; u5 has none, u7's
+    // fetch fails
+    assert(ExtractCounter.calls.get == 4, s"${ExtractCounter.calls.get} extractions")
+  }
+}
+
+/** A parser registry that counts its selector lookups: the extraction looks
+  * up the article's source once per call, so the count is the number of
+  * extractions. The counter is JVM-global, as in FetchCounter. */
+class ExtractCounter(registry: Map[String, String])
+    extends scala.collection.immutable.AbstractMap[String, String] with Serializable {
+  def get(key: String): Option[String] = {
+    ExtractCounter.calls.incrementAndGet()
+    registry.get(key)
+  }
+  def iterator: Iterator[(String, String)] = registry.iterator
+  def removed(key: String): Map[String, String] = registry.removed(key)
+  def updated[V >: String](key: String, value: V): Map[String, V] =
+    registry.updated(key, value)
+}
+
+object ExtractCounter {
+  val calls = new java.util.concurrent.atomic.AtomicInteger()
 }
