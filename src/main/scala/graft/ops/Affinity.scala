@@ -172,11 +172,20 @@ object Affinity {
   // only the n==1 AP fast path remains kernel-only (its SQL replay
   // degenerates: m2 is NULL with a single candidate), spec-covered.
 
+  /** The AP program of q179/q183 and the grouped kernel's defaults:
+    * self-similarity preference, message damping and fixed rounds. */
+  final val ApPreference = -4.0
+  final val ApDamping = 0.7
+  final val ApRounds = 15
+
+  /** The embedding width the AP and agglomerative oracles unroll. */
+  final val EmbDim = 64
+
   /** AP per bounded group — the scale face. One shuffle (groupByKey),
     * each group runs the kernel in its task. */
   def apGrouped(df: DataFrame, groupCol: String, idCol: String,
-      vecCol: String, preference: Double = -4.0, damping: Double = 0.7,
-      rounds: Int = 15): DataFrame = {
+      vecCol: String, preference: Double = ApPreference,
+      damping: Double = ApDamping, rounds: Int = ApRounds): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
     df.select(col(groupCol).cast("string"), col(idCol).cast("long"), col(vecCol))
@@ -198,8 +207,8 @@ object Affinity {
     * similarity-ordered cluster view the ref serves. One window over the
     * bounded AP output. */
   def apClusters(df: DataFrame, groupCol: String, idCol: String,
-      vecCol: String, preference: Double = -4.0, damping: Double = 0.7,
-      rounds: Int = 15, simThreshold: Double = 0.55,
+      vecCol: String, preference: Double = ApPreference,
+      damping: Double = ApDamping, rounds: Int = ApRounds, simThreshold: Double = 0.55,
       minMembers: Int = 3): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val ap = apGrouped(df, groupCol, idCol, vecCol, preference, damping, rounds)
@@ -214,12 +223,14 @@ object Affinity {
         col("exemplar_cos"))
   }
 
+  /** q179's subset: the `ApN` lowest vec_ids. */
+  final val ApN = 20
+
   /** Q179: M3 under the hash gate — AP over the `n` lowest vec_ids. */
-  def qAffinityProp(t: Tables, n: Int = 20, preference: Double = -4.0,
-      damping: Double = 0.7, rounds: Int = 15): DataFrame = {
+  def qAffinityProp(t: Tables, n: Int = ApN): DataFrame = {
     val sub = t.embeddings.orderBy(col("vec_id")).limit(n)
       .select(lit("all").as("g"), col("vec_id"), col("embedding"))
-    apGrouped(sub, "g", "vec_id", "embedding", preference, damping, rounds)
+    apGrouped(sub, "g", "vec_id", "embedding")
       .select(col("vec_id"), col("crit"), col("cluster"), col("n_exemplars"),
         col("exemplar_cos"))
       .orderBy(col("vec_id"))
@@ -230,13 +241,12 @@ object Affinity {
     * computes 1.0−0.7 in exact DECIMAL (0.3, a DIFFERENT double than the
     * binary subtraction the kernel performs). The availability mass is a
     * BIGINT micro sum (order-independent), mirroring the kernel. */
-  def qAffinityPropSql(n: Int = 20, preference: Double = -4.0,
-      damping: Double = 0.7, rounds: Int = 15, dim: Int = 64): String = {
-    val nrm = (1 to dim).map(j => s"e[$j] * e[$j]").mkString(" + ")
-    val dotE = (1 to dim).map(j => s"a.u[$j] * b.u[$j]").mkString(" + ")
-    val ulist = "[" + (1 to dim).map(j => s"e[$j] / nv").mkString(", ") + "]"
-    val lam = s"$damping::DOUBLE"
-    val oneMinusLam = s"(1.0::DOUBLE - $damping::DOUBLE)"
+  def qAffinityPropSql(n: Int = ApN): String = {
+    val nrm = (1 to EmbDim).map(j => s"e[$j] * e[$j]").mkString(" + ")
+    val dotE = (1 to EmbDim).map(j => s"a.u[$j] * b.u[$j]").mkString(" + ")
+    val ulist = "[" + (1 to EmbDim).map(j => s"e[$j] / nv").mkString(", ") + "]"
+    val lam = s"$ApDamping::DOUBLE"
+    val oneMinusLam = s"(1.0::DOUBLE - $ApDamping::DOUBLE)"
     val ctes = new scala.collection.mutable.ArrayBuffer[String]
     ctes += s"""sub AS MATERIALIZED (
        |  SELECT vec_id, $ulist AS u
@@ -245,11 +255,11 @@ object Affinity {
        |              FROM embeddings ORDER BY vec_id LIMIT $n)))""".stripMargin
     ctes += s"""m0 AS MATERIALIZED (
        |  SELECT a.vec_id AS i, b.vec_id AS k,
-       |         CASE WHEN a.vec_id = b.vec_id THEN $preference::DOUBLE
+       |         CASE WHEN a.vec_id = b.vec_id THEN $ApPreference::DOUBLE
        |              ELSE round(2.0::DOUBLE * ($dotE) - 2.0::DOUBLE, 6) END AS s,
        |         0.0::DOUBLE AS r, 0.0::DOUBLE AS a
        |  FROM sub a CROSS JOIN sub b)""".stripMargin
-    for (t <- 1 to rounds) {
+    for (t <- 1 to ApRounds) {
       val p = t - 1
       ctes += s"v$t AS MATERIALIZED (SELECT i, k, s, r, a, a + s AS v FROM m$p)"
       ctes += s"w$t AS MATERIALIZED (SELECT i, max(v) AS m1 FROM v$t GROUP BY i)"
@@ -280,20 +290,20 @@ object Affinity {
          |  FROM rr$t r JOIN pk$t p ON r.k = p.k)""".stripMargin
     }
     s"""WITH ${ctes.mkString(",\n")},
-       |diag AS (SELECT i AS k, r + a AS crit FROM m$rounds WHERE i = k),
+       |diag AS (SELECT i AS k, r + a AS crit FROM m$ApRounds WHERE i = k),
        |ex AS (SELECT k FROM diag WHERE crit > 0.0::DOUBLE),
        |nex AS (SELECT COUNT(*) AS n FROM ex),
        |assign AS (
        |  SELECT d.k AS vec_id, d.crit,
        |    CASE WHEN (SELECT n FROM nex) = 0 OR d.crit > 0.0::DOUBLE THEN d.k
-       |         ELSE (SELECT m.k FROM m$rounds m JOIN ex e ON m.k = e.k
+       |         ELSE (SELECT m.k FROM m$ApRounds m JOIN ex e ON m.k = e.k
        |               WHERE m.i = d.k ORDER BY m.s DESC, m.k LIMIT 1) END AS cluster,
        |    CAST((SELECT n FROM nex) AS BIGINT) AS n_exemplars
        |  FROM diag d)
        |SELECT a.vec_id, a.crit, a.cluster, a.n_exemplars,
        |  CASE WHEN a.cluster = a.vec_id THEN 1.0::DOUBLE
        |       ELSE (s.s + 2.0::DOUBLE) / 2.0::DOUBLE END AS exemplar_cos
-       |FROM assign a JOIN m$rounds s ON s.i = a.vec_id AND s.k = a.cluster
+       |FROM assign a JOIN m$ApRounds s ON s.i = a.vec_id AND s.k = a.cluster
        |ORDER BY a.vec_id""".stripMargin
   }
 
@@ -361,10 +371,14 @@ object Affinity {
     Array.tabulate(n)(i => (ids(i), lbl(i), sizes(lbl(i))))
   }
 
+  /** q180's subset size and target cluster count (the kernel's default). */
+  final val AggloN = 24
+  final val AggloK = 5
+
   /** Agglomerative per bounded group — the scale face (same shuffle shape
     * as apGrouped). */
   def agglomerativeGrouped(df: DataFrame, groupCol: String, idCol: String,
-      vecCol: String, nClusters: Int = 5): DataFrame = {
+      vecCol: String, nClusters: Int = AggloK): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
     df.select(col(groupCol).cast("string"), col(idCol).cast("long"), col(vecCol))
@@ -380,7 +394,7 @@ object Affinity {
 
   /** Q180: M4 under the hash gate — complete-linkage cosine clustering of
     * the `n` lowest vec_ids down to `k` clusters. */
-  def qAgglomerative(t: Tables, n: Int = 24, k: Int = 5): DataFrame = {
+  def qAgglomerative(t: Tables, n: Int = AggloN, k: Int = AggloK): DataFrame = {
     val sub = t.embeddings.orderBy(col("vec_id")).limit(n)
       .select(lit("all").as("g"), col("vec_id"), col("embedding"))
     agglomerativeGrouped(sub, "g", "vec_id", "embedding", k)
@@ -397,9 +411,9 @@ object Affinity {
     * pair-distance matrix to the live labels, takes the min
     * (complete-linkage, labelA, labelB) pair, and relabels. All
     * comparisons are on round(·,6) grid values — exact. */
-  def qAgglomerativeSql(n: Int = 24, k: Int = 5, dim: Int = 64): String = {
-    val nrm = (1 to dim).map(j => s"e[$j] * e[$j]").mkString(" + ")
-    val dotE = (1 to dim).map(j => s"a.e[$j] * b.e[$j]").mkString(" + ")
+  def qAgglomerativeSql(n: Int = AggloN, k: Int = AggloK): String = {
+    val nrm = (1 to EmbDim).map(j => s"e[$j] * e[$j]").mkString(" + ")
+    val dotE = (1 to EmbDim).map(j => s"a.e[$j] * b.e[$j]").mkString(" + ")
     val ctes = new scala.collection.mutable.ArrayBuffer[String]
     ctes += s"""sub AS MATERIALIZED (
        |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e, sqrt($nrm) AS nv

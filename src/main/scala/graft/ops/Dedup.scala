@@ -129,29 +129,8 @@ object Dedup {
 
   // --------------------------------------------------------- MinHash+LSH
 
-  /** LSH candidate pairs: minhash signature (64 perms over character
-    * shingles, computed by the fasthash kernel — see functions/fasthash
-    * scaladoc for why the inner loop is a UDF) banded into 16 keys per doc;
-    * docs sharing any band key are candidates.
-    *
-    * Scale shape: explode(bands) is n·b rows, the join shuffles by band
-    * key — never a cross join. At 100 TB, tune bands×rows so bucket sizes
-    * stay bounded; the within-bucket self-join is bounded by the skew of
-    * true duplicates. */
-  def lshCandidatePairs(df: DataFrame, textCol: String, idCol: String,
-      numHashes: Int = 64, bands: Int = 16, shingleLen: Int = 8): DataFrame = {
-    val keysUdf = fasthash.minhashBandKeysUdf(numHashes, bands, shingleLen)
-    // signature kernel is the per-row hot loop — fan the (unsplittable
-    // single-row-group) scan out before it, not after
-    val fanned = df.repartition(df.sparkSession.sparkContext.defaultParallelism)
-    val banded = fanned.select(col(idCol).as("id"),
-      explode(keysUdf(col(textCol))).as("bk"))
-    val l = banded.select(col("bk"), col("id").as("id_a"))
-    val r = banded.select(col("bk"), col("id").as("id_b"))
-    l.join(r, Seq("bk"))
-      .filter(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b")).distinct()
-  }
+  /** The character-shingle length of the MinHash and Jaccard family. */
+  final val ShingleLen = 8
 
   /** The bucket-cap governor of every banded self-join (q186's simhash
     * chunks, `governedLshCandidatePairs`' band keys, `governedFuzzyPairs`'
@@ -203,13 +182,18 @@ object Dedup {
   }
 
   /** Governed LSH candidate generation — the q185/q186 bucket cap wired
-    * into the PRODUCTION minhash path (q34, q95): `lshCandidatePairs`'
-    * banded self-join run through `cappedSelfJoin`, so no task is
-    * quadratic in one pathological band key. Under the cap the output
-    * equals `lshCandidatePairs`. Recall contract as q186: a pair is lost
-    * only if ALL of its agreeing buckets are over the cap. */
+    * into the PRODUCTION minhash path (q34, q95): a minhash signature (64
+    * perms over character shingles, computed by the fasthash kernel — see
+    * functions/fasthash scaladoc for why the inner loop is a UDF) banded
+    * into 16 keys per doc; docs sharing any band key are candidates. The
+    * banded self-join runs through `cappedSelfJoin`, so no task is
+    * quadratic in one pathological band key, and it never cross-joins:
+    * explode(bands) is n·b rows and the join shuffles by band key. Under
+    * the cap the output is every pair sharing a band key. Recall contract
+    * as q186: a pair is lost only if ALL of its agreeing buckets are over
+    * the cap. */
   def governedLshCandidatePairs(df: DataFrame, textCol: String, idCol: String,
-      numHashes: Int = 64, bands: Int = 16, shingleLen: Int = 8,
+      numHashes: Int = 64, bands: Int = 16, shingleLen: Int = ShingleLen,
       cap: Int = 64): DataFrame = {
     val keysUdf = fasthash.minhashBandKeysUdf(numHashes, bands, shingleLen)
     val fanned = df.repartition(df.sparkSession.sparkContext.defaultParallelism)
@@ -247,10 +231,10 @@ object Dedup {
     * search O(n·bands) instead of n². Everything is declarative
     * (md5/conv/min/lead/concat) — no kernel, so the DuckDB replay is
     * line-for-line the same relational program. */
-  def qLshCandidatesGate(t: Tables, shingleLen: Int = 8): DataFrame = {
+  def qLshCandidatesGate(t: Tables): DataFrame = {
     // barrier: both sides of the band self-join — un-barriered the
     // shingle+minhash window kernel ran twice. docs × nBands rows.
-    val bands = lshGateBands(t, shingleLen).localCheckpoint()
+    val bands = lshGateBands(t).localCheckpoint()
     bands.select(col("band"), col("bkey"), col("doc_id").as("id_a"))
       .join(bands.select(col("band"), col("bkey"), col("doc_id").as("id_b")),
         Seq("band", "bkey"))
@@ -263,7 +247,8 @@ object Dedup {
   /** The q128 engine-neutral band table (doc_id, band, bkey) — md5-based
     * minhash signatures banded 4 × 2 rows; shared by the q128 candidate
     * gate and the q243 band-population audit. */
-  private def lshGateBands(t: Tables, shingleLen: Int = 8): DataFrame = {
+  private def lshGateBands(t: Tables): DataFrame = {
+    val shingleLen = 8
     import org.apache.spark.sql.expressions.Window
     val P = 2147483647L // 2^31 − 1
     // fixed odd multipliers/offsets (any a_i ∈ [1, P) works; these are
@@ -298,6 +283,9 @@ object Dedup {
       .select(col("doc_id"), col("bk.band").as("band"), col("bk.bkey").as("bkey"))
   }
 
+  /** The band-bucket size above which q243 counts a bucket as governed. */
+  final val BandAuditCap = 64
+
   /** Q243: MinHash band-population audit — the q201 governor-audit shape
     * applied to LSH band buckets, promoted from BENCH_NOTES prose to a
     * driver-visible oracled row (VERDICT r11 item 7). q34's production
@@ -305,7 +293,7 @@ object Dedup {
     * 10× data is the TRUE candidate population growing, not a plan
     * defect; this audit makes that claim checkable at every SF: per
     * band, the bucket count, the biggest bucket, the governed tail above
-    * `cap`, and the exact pair population with and without the cap —
+    * `BandAuditCap`, and the exact pair population with and without the cap —
     * all integers over the engine-neutral md5 band keys (the q128
     * construction), so DuckDB replays it line for line. The fasthash
     * production signatures bucket the same corpus shape; the md5 face is
@@ -314,23 +302,23 @@ object Dedup {
     * Scale shape: the band table is q128's one-aggregate signature pass;
     * the audit adds one map-side-combinable (band,bkey) count and a
     * 4-row reduce — strictly cheaper than the candidate join it prices. */
-  def qMinhashBandAudit(t: Tables, cap: Int = 64): DataFrame = {
+  def qMinhashBandAudit(t: Tables): DataFrame = {
     val buckets = lshGateBands(t)
       .groupBy(col("band"), col("bkey")).agg(count(lit(1)).as("c"))
     buckets.groupBy(col("band")).agg(
       count(lit(1)).as("n_buckets"),
       sum(when(col("c") >= 2, 1L).otherwise(0L)).as("n_pair_buckets"),
-      sum(when(col("c") > cap, 1L).otherwise(0L)).as("n_governed"),
+      sum(when(col("c") > BandAuditCap, 1L).otherwise(0L)).as("n_governed"),
       max(col("c")).as("max_bucket"),
       sum(expr("c * (c - 1) div 2")).as("pairs_raw"),
-      sum(when(col("c") <= cap, expr("c * (c - 1) div 2"))
+      sum(when(col("c") <= BandAuditCap, expr("c * (c - 1) div 2"))
         .otherwise(0L)).as("pairs_capped"))
       .orderBy(col("band"))
   }
 
   /** q243 oracle: q128's CTE chain up to `bands`, then the q201 two-level
     * integer aggregate per band. */
-  def qMinhashBandAuditSql(cap: Int = 64): String =
+  def qMinhashBandAuditSql: String =
     // concatenation, not an outer stripMargin: the CTE fragment is already
     // margin-stripped and contains `||` at line starts that a second
     // stripMargin would mangle
@@ -341,10 +329,10 @@ object Dedup {
        |SELECT band,
        |  COUNT(*)::BIGINT AS n_buckets,
        |  CAST(SUM(CASE WHEN c >= 2 THEN 1 ELSE 0 END) AS BIGINT) AS n_pair_buckets,
-       |  CAST(SUM(CASE WHEN c > $cap THEN 1 ELSE 0 END) AS BIGINT) AS n_governed,
+       |  CAST(SUM(CASE WHEN c > $BandAuditCap THEN 1 ELSE 0 END) AS BIGINT) AS n_governed,
        |  CAST(MAX(c) AS BIGINT) AS max_bucket,
        |  CAST(SUM(c * (c - 1) // 2) AS BIGINT) AS pairs_raw,
-       |  CAST(SUM(CASE WHEN c <= $cap THEN c * (c - 1) // 2 ELSE 0 END) AS BIGINT) AS pairs_capped
+       |  CAST(SUM(CASE WHEN c <= $BandAuditCap THEN c * (c - 1) // 2 ELSE 0 END) AS BIGINT) AS pairs_capped
        |FROM buckets GROUP BY band ORDER BY band""".stripMargin
 
   /** q128's CTE chain (toks → shingles → hashed md5 minhash → sigs →
@@ -400,7 +388,7 @@ object Dedup {
   private def minhashVerifiedPairs(t: Tables, docs: DataFrame): DataFrame = {
     val cands = governedLshCandidatePairs(docs, "text", "doc_id")
     val sh = t.fanout(docs).select(col("doc_id"),
-      fasthash.shingleSetUdf(8)(col("text")).as("sh"))
+      fasthash.shingleSetUdf(ShingleLen)(col("text")).as("sh"))
     cands
       .join(sh.select(col("doc_id").as("id_a"), col("sh").as("sh_a")), Seq("id_a"))
       .join(sh.select(col("doc_id").as("id_b"), col("sh").as("sh_b")), Seq("id_b"))
@@ -475,6 +463,9 @@ object Dedup {
       .select(bandCols: _*)
   }
 
+  /** The largest SimHash Hamming distance q131 and q186 keep. */
+  final val SimhashMaxHamming = 3
+
   /** Q131: SimHash near-dup detection under the HASH GATE — the
     * oracle-replayable face of q35 (whose splitmix sketch is
     * engine-specific and stays the fast rows-only path). Same Charikar
@@ -494,7 +485,7 @@ object Dedup {
     * never n². The pigeonhole guarantee (hamming ≤ 3 over 4 chunks ⇒
     * some chunk equal) makes the equi-join lossless for the emitted
     * distance, so this IS the exact hamming-≤3 pair set. */
-  def qSimhashGate(t: Tables, maxHamming: Int = 3): DataFrame = {
+  def qSimhashGate(t: Tables, maxHamming: Int = SimhashMaxHamming): DataFrame = {
     val bands = simhashBands(t)
     def side(tag: String): DataFrame =
       bands.select(Seq(col("chunk"), col("cv"), col("doc_id").as(s"id_$tag")) ++
@@ -551,7 +542,7 @@ object Dedup {
   /** q131 oracle: the identical relational program — DuckDB's >>, &,
     * xor() and bit_count are exact on BIGINT, and the md5-nibble chunk
     * hashes replay via CAST('0x…' AS BIGINT). */
-  def qSimhashGateSql(maxHamming: Int = 3): String = {
+  def qSimhashGateSql: String = {
     s"""WITH $simhashBandsCtes,
       |pairs AS (
       |  SELECT a.doc_id AS id_a, b.doc_id AS id_b,
@@ -563,8 +554,11 @@ object Dedup {
       |    AND a.doc_id < b.doc_id
       |  GROUP BY a.doc_id, b.doc_id)
       |SELECT id_a, id_b, hamming, n_chunks FROM pairs
-      |WHERE hamming <= $maxHamming ORDER BY id_a, id_b""".stripMargin
+      |WHERE hamming <= $SimhashMaxHamming ORDER BY id_a, id_b""".stripMargin
   }
+
+  /** The bucket cap of the q185/q186/q201/q202 governor gates. */
+  final val GovernorCap = 16
 
   /** Q185: LSH bucket-size governor — the skew audit a banded candidate
     * generator runs BEFORE its bucket self-join at scale. A banded join's
@@ -583,7 +577,7 @@ object Dedup {
     * one per-chunk aggregate. No join at all — the audit costs less than
     * the stage it governs by construction; the bands are 4 longs per doc
     * on the exchange. */
-  def qBucketGovernor(t: Tables, cap: Int = 16): DataFrame = {
+  def qBucketGovernor(t: Tables, cap: Int = GovernorCap): DataFrame = {
     val buckets = simhashBands(t)
       .groupBy(col("chunk"), col("cv"))
       .agg(count(lit(1)).as("c"))
@@ -604,7 +598,7 @@ object Dedup {
 
   /** q185 oracle: the q131 band CTEs + the same two-level integer
     * aggregate. c·(c−1)/2 on BIGINT is exact in both engines. */
-  def qBucketGovernorSql(cap: Int = 16): String =
+  def qBucketGovernorSql: String =
     s"""WITH $simhashBandsCtes,
       |buckets AS (
       |  SELECT chunk, cv, COUNT(*)::BIGINT AS c
@@ -612,11 +606,11 @@ object Dedup {
       |SELECT CAST(chunk AS BIGINT) AS chunk,
       |  COUNT(*)::BIGINT AS n_buckets,
       |  CAST(SUM(CASE WHEN c >= 2 THEN 1 ELSE 0 END) AS BIGINT) AS n_pair_buckets,
-      |  CAST(SUM(CASE WHEN c > $cap THEN 1 ELSE 0 END) AS BIGINT) AS n_governed,
-      |  CAST(SUM(CASE WHEN c > $cap THEN c ELSE 0 END) AS BIGINT) AS governed_docs,
+      |  CAST(SUM(CASE WHEN c > $GovernorCap THEN 1 ELSE 0 END) AS BIGINT) AS n_governed,
+      |  CAST(SUM(CASE WHEN c > $GovernorCap THEN c ELSE 0 END) AS BIGINT) AS governed_docs,
       |  CAST(MAX(c) AS BIGINT) AS max_bucket,
       |  CAST(SUM(c * (c - 1) // 2) AS BIGINT) AS pairs_raw,
-      |  CAST(SUM(CASE WHEN c <= $cap THEN c * (c - 1) // 2 ELSE 0 END) AS BIGINT) AS pairs_capped
+      |  CAST(SUM(CASE WHEN c <= $GovernorCap THEN c * (c - 1) // 2 ELSE 0 END) AS BIGINT) AS pairs_capped
       |FROM buckets GROUP BY chunk ORDER BY chunk""".stripMargin
 
   /** Q186: governed candidate generation — q185's cap ENFORCED. The
@@ -636,7 +630,7 @@ object Dedup {
     * bounded by cap²/2 per bucket, so no task can be dominated by one
     * pathological key (the AQE-proof way to run banded LSH on skewed
     * corpora). */
-  def qGovernedPairs(t: Tables, cap: Int = 16, maxHamming: Int = 3): DataFrame =
+  def qGovernedPairs(t: Tables, cap: Int = GovernorCap): DataFrame =
     cappedSelfJoin(simhashBands(t).withColumnRenamed("doc_id", "id"),
         Seq("chunk", "cv"), cap, "simhash chunks")
       .withColumn("hamming", (0 until 4)
@@ -644,18 +638,18 @@ object Dedup {
         .reduce(_ + _).cast("long"))
       .groupBy(col("id_a"), col("id_b"))
       .agg(max(col("hamming")).as("hamming"), count(lit(1)).as("n_chunks"))
-      .filter(col("hamming") <= maxHamming)
+      .filter(col("hamming") <= SimhashMaxHamming)
       .orderBy(col("id_a"), col("id_b"))
 
   /** q186 oracle: band CTEs + the same windowed bucket-size filter and
     * join. */
-  def qGovernedPairsSql(cap: Int = 16, maxHamming: Int = 3): String =
+  def qGovernedPairsSql: String =
     s"""WITH $simhashBandsCtes,
       |small AS (
       |  SELECT * FROM (
       |    SELECT bands.*, COUNT(*) OVER (PARTITION BY chunk, cv) AS bucket_n
       |    FROM bands)
-      |  WHERE bucket_n <= $cap),
+      |  WHERE bucket_n <= $GovernorCap),
       |pairs AS (
       |  SELECT a.doc_id AS id_a, b.doc_id AS id_b,
       |    CAST(MAX(bit_count(xor(a.cv0, b.cv0)) + bit_count(xor(a.cv1, b.cv1))
@@ -666,7 +660,7 @@ object Dedup {
       |    AND a.doc_id < b.doc_id
       |  GROUP BY a.doc_id, b.doc_id)
       |SELECT id_a, id_b, hamming, n_chunks FROM pairs
-      |WHERE hamming <= $maxHamming ORDER BY id_a, id_b""".stripMargin
+      |WHERE hamming <= $SimhashMaxHamming ORDER BY id_a, id_b""".stripMargin
 
   /** Q201: prefix-block governor — q185's audit recipe extended to the
     * OTHER candidate-generation family (the r9 judge's second-order gap):
@@ -682,7 +676,7 @@ object Dedup {
     * Scale shape: one map-side-combinable count aggregate over the
     * corpus plus a 1-row reduce — strictly cheaper than any of the four
     * joins it governs. */
-  def qPrefixGovernor(t: Tables, cap: Int = 16): DataFrame = {
+  def qPrefixGovernor(t: Tables, cap: Int = GovernorCap): DataFrame = {
     val blocks = t.documents
       .groupBy(substring(col("text"), 1, 10).as("blk"))
       .agg(count(lit(1)).as("c"))
@@ -699,17 +693,17 @@ object Dedup {
 
   /** q201 oracle: same two-level integer aggregate; c·(c−1)/2 on BIGINT
     * is exact in both engines. Single-row output — no ORDER BY needed. */
-  def qPrefixGovernorSql(cap: Int = 16): String =
+  def qPrefixGovernorSql: String =
     s"""WITH b AS (
       |  SELECT substr(text, 1, 10) AS blk, COUNT(*)::BIGINT AS c
       |  FROM documents GROUP BY 1)
       |SELECT COUNT(*)::BIGINT AS n_blocks,
       |  CAST(SUM(CASE WHEN c >= 2 THEN 1 ELSE 0 END) AS BIGINT) AS n_pair_blocks,
-      |  CAST(SUM(CASE WHEN c > $cap THEN 1 ELSE 0 END) AS BIGINT) AS n_governed,
-      |  CAST(SUM(CASE WHEN c > $cap THEN c ELSE 0 END) AS BIGINT) AS governed_docs,
+      |  CAST(SUM(CASE WHEN c > $GovernorCap THEN 1 ELSE 0 END) AS BIGINT) AS n_governed,
+      |  CAST(SUM(CASE WHEN c > $GovernorCap THEN c ELSE 0 END) AS BIGINT) AS governed_docs,
       |  CAST(MAX(c) AS BIGINT) AS max_block,
       |  CAST(SUM(c * (c - 1) // 2) AS BIGINT) AS pairs_raw,
-      |  CAST(SUM(CASE WHEN c <= $cap THEN c * (c - 1) // 2 ELSE 0 END) AS BIGINT) AS pairs_capped
+      |  CAST(SUM(CASE WHEN c <= $GovernorCap THEN c * (c - 1) // 2 ELSE 0 END) AS BIGINT) AS pairs_capped
       |FROM b""".stripMargin
 
   /** Q202: governed fuzzy pairs — q201's cap ENFORCED on q32's blocked
@@ -721,19 +715,19 @@ object Dedup {
     * exact: away from the governed tail the output EQUALS q32
     * (DedupSpec asserts the parity), and the loss inside the tail is the
     * pair population q201 already priced. */
-  def qGovernedFuzzy(t: Tables, cap: Int = 16): DataFrame =
+  def qGovernedFuzzy(t: Tables, cap: Int = GovernorCap): DataFrame =
     governedFuzzyPairs(t.documents, "text", "doc_id", cap)
 
   /** q202 oracle: the windowed bucket-size filter (fine in DuckDB) +
     * q32's comparator, filtering on the ROUNDED sim on both sides. */
-  def qGovernedFuzzySql(cap: Int = 16): String =
+  def qGovernedFuzzySql: String =
     s"""WITH d AS (
       |  SELECT doc_id, substr(text, 1, 40) AS p, substr(text, 1, 10) AS blk
       |  FROM documents),
       |small AS (
       |  SELECT * FROM (
       |    SELECT d.*, COUNT(*) OVER (PARTITION BY blk) AS c FROM d)
-      |  WHERE c <= $cap)
+      |  WHERE c <= $GovernorCap)
       |SELECT id_a, id_b, sim FROM (
       |  SELECT a.doc_id AS id_a, b.doc_id AS id_b,
       |    round(1.0::DOUBLE - levenshtein(a.p, b.p)::DOUBLE
@@ -797,8 +791,8 @@ object Dedup {
     * kills naive inverted-index joins; the indexed side's long postings
     * for common grams never match a probe row. A q185-style governor
     * caps residual skew at 100 TB. */
-  def qContainmentJoin(t: Tables, broadcastRows: Long = 100000L): DataFrame =
-    containmentScored(t, broadcastRows)
+  def qContainmentJoin(t: Tables): DataFrame =
+    containmentScored(t, 100000L)
       .filter(col("n_common") * 2 >= col("size_a") && col("size_a") > 0)
       // one IEEE division of exact integers — raw, per the q27 discipline
       .withColumn("containment",
@@ -1390,7 +1384,7 @@ object Dedup {
     * representative, and whether the greedy walk keeps it.
     *
     * Gate contract (the q186 pattern): at every shipped SF the prefix
-    * blocks price under the default cap (sf0.1 max block = 32 < 64), so
+    * blocks price under the cap (sf0.1 max block = 32 < 64), so
     * the governed generator IS the exact q32 graph and the oracle replays
     * the whole composition — the q37 recursive component closure + the
     * q227 one-id-per-step recursive walk over the same pair CTE. Where
@@ -1405,13 +1399,13 @@ object Dedup {
     * contraction is O(log n) shuffle rounds; the walk's collect is the
     * documented bounded-sparse-graph contract; everything downstream is
     * equi-joins on id/label. */
-  def qFuzzyGovernedDedup(t: Tables, cap: Int = 64): DataFrame = {
+  def qFuzzyGovernedDedup(t: Tables): DataFrame = {
     val spark = t.documents.sparkSession
     import spark.implicits._
     val ids = t.documents.select(col("doc_id").as("id"))
     // governedFuzzyPairs localCheckpoints its result — both consumers
     // below share the materialized pair graph, kernel runs once
-    val pairs = governedFuzzyPairs(t.documents, "text", "doc_id", cap)
+    val pairs = governedFuzzyPairs(t.documents, "text", "doc_id", 64)
       .select(col("id_a"), col("id_b"))
     val labels = componentLabels(pairs, ids)
     val sizes = labels.groupBy(col("label")).agg(count(lit(1)).as("comp_size"))
@@ -1863,16 +1857,16 @@ object Dedup {
     * shape); the pair kernel is a primitive merge-intersect + 64-lane
     * compare (~1 µs); the population is the governed family's — q201
     * prices it, and `governedFuzzyPairs` is its capped generator. */
-  def qMinhashCalibration(t: Tables, numHashes: Int = 64,
-      shingleLen: Int = 8, meanCapMicro: Long = 100000L,
-      maxCapMicro: Long = 450000L): DataFrame = {
-    require(1000000 % numHashes == 0, "numHashes must divide 1e6 (exact micro est)")
+  def qMinhashCalibration(t: Tables): DataFrame = {
+    val numHashes = 64
+    val meanCapMicro = 100000L
+    val maxCapMicro = 450000L
     val spark = t.documents.sparkSession
     import spark.implicits._
     val d = t.fanout(t.documents).select(col("doc_id"),
         substring(col("text"), 1, 10).as("blk"),
-        fasthash.sortedShingleHashesUdf(shingleLen)(col("text")).as("sh"),
-        fasthash.minhashSignatureUdf(numHashes, shingleLen)(col("text")).as("sig"))
+        fasthash.sortedShingleHashesUdf(ShingleLen)(col("text")).as("sh"),
+        fasthash.minhashSignatureUdf(numHashes, ShingleLen)(col("text")).as("sig"))
       .localCheckpoint()
     val a = d.select(col("blk"), col("doc_id").as("id_a"),
       col("sh").as("sha"), col("sig").as("siga"))
@@ -1917,10 +1911,10 @@ object Dedup {
     * (list_intersect/list_distinct — integer counts), same decile and
     * micro-sum arithmetic; the envelope booleans are asserted TRUE. */
   val qMinhashCalibrationSql: String =
-    """WITH sh AS (
+    s"""WITH sh AS (
       |  SELECT doc_id, substr(text, 1, 10) AS blk,
-      |    list_distinct(CASE WHEN len(t) < 8 THEN [t]
-      |      ELSE [substr(t, i, 8) FOR i IN range(1, len(t) - 6)] END) AS s
+      |    list_distinct(CASE WHEN len(t) < $ShingleLen THEN [t]
+      |      ELSE [substr(t, i, $ShingleLen) FOR i IN range(1, len(t) - ${ShingleLen - 2})] END) AS s
       |  FROM (SELECT doc_id, text, lower(text) AS t FROM documents)),
       |pairs AS (
       |  SELECT a.doc_id AS id_a, b.doc_id AS id_b,
@@ -2062,6 +2056,9 @@ object Dedup {
       |FROM rows_ ORDER BY method_a, method_b""".stripMargin
   }
 
+  /** Rows per training batch in q258's duplicate-exposure audit. */
+  final val ExposureBlock = 100
+
   /** Q258: batch duplicate-exposure audit — near-duplicates that land in
     * the SAME training batch correlate gradients and waste step budget
     * (the within-batch face of the Lee 2022 repetition cost); this
@@ -2075,14 +2072,14 @@ object Dedup {
     *
     * Scale: the permutation is bucketRank, the labels are the q37
     * contraction, the audit is two keyed aggregates — nothing global. */
-  def qBatchDupExposure(t: Tables, block: Int = 100): DataFrame = {
+  def qBatchDupExposure(t: Tables): DataFrame = {
     val docs = t.fanout(t.documents).select(col("doc_id"))
       .withColumn("h",
         conv(substring(md5(col("doc_id").cast("string")), 1, 13), 16, 10)
           .cast("long"))
     val ranked = TextAnalysis.bucketRank(docs, "h", 1L << 52,
       Seq(col("h"), col("doc_id")), "pos")
-      .withColumn("blk", expr(s"(pos - 1) div $block"))
+      .withColumn("blk", expr(s"(pos - 1) div $ExposureBlock"))
       .select(col("doc_id").as("id"), col("blk"))
     val labels = fuzzyLabelsCached(t)
     val cells = ranked.join(labels, Seq("id"))
@@ -2100,13 +2097,13 @@ object Dedup {
   /** q258 oracle: the q253 ROW_NUMBER permutation + the shared q37
     * closure, two grouped aggregates. (def: componentsRepCtes init-order
     * rule.) */
-  def qBatchDupExposureSql(block: Int = 100): String =
+  def qBatchDupExposureSql: String =
     s"""WITH RECURSIVE $componentsRepCtes,
       |ranked AS (
       |  SELECT doc_id,
       |    (ROW_NUMBER() OVER (ORDER BY
       |       CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 13) AS BIGINT),
-      |       doc_id) - 1) // $block AS blk
+      |       doc_id) - 1) // $ExposureBlock AS blk
       |  FROM documents),
       |cells AS (
       |  SELECT r.blk, p.keep_id, COUNT(*)::BIGINT AS c
@@ -2383,8 +2380,8 @@ object Dedup {
     * and broadcasts; the corpus side streams through the blocked join.
     * Blocking here is the q32 prefix block for oracle parity; a real
     * deployment keys the corpus by precomputed LSH bands
-    * (lshCandidatePairs machinery) so each batch probes an inverted
-    * index. Emits the new ids that are NOT near-dups of any old doc. */
+    * (governedLshCandidatePairs machinery) so each batch probes an
+    * inverted index. Emits the new ids that are NOT near-dups of any old doc. */
   def qIncrementalDedup(t: Tables): DataFrame = {
     val docs = t.documents
     val newB = docs.filter(col("doc_id") % 10 === 0)
@@ -2452,6 +2449,9 @@ object Dedup {
 
   // --------------------------------------------------- semantic dedup
 
+  /** The within-cluster cosine at or above which q134 drops a vector. */
+  final val SemDedupTau = 0.25
+
   /** Q134: SemDeDup (Abbas et al. 2023, "SemDeDup: Data-efficient
     * learning at web-scale through semantic deduplication") under the
     * HASH GATE — the cluster-then-prune semantic dedup a 100 TB embedding
@@ -2473,9 +2473,8 @@ object Dedup {
     * the q119 broadcast-centroid scan. localCheckpoint pins the (tiny:
     * n×(dims+2)) assignment result so the self-join does not re-run the
     * Lloyd rounds twice. */
-  def qDedupSemantic(t: Tables, k: Int = 8, updates: Int = 2,
-      tau: Double = 0.25): DataFrame = {
-    val asg = Clustering.kmeansAssignmentsCached(t, k, updates)
+  def qDedupSemantic(t: Tables): DataFrame = {
+    val asg = Clustering.kmeansAssignmentsCached(t)
       .select(col("vec_id"), col("e"), col("cid"))
       .localCheckpoint()
     val a = asg.select(col("cid"), col("vec_id").as("ida"), col("e").as("ea"))
@@ -2483,7 +2482,7 @@ object Dedup {
     val pairs = a.join(b, Seq("cid"))
       .filter(col("ida") < col("idb"))
       .withColumn("ps", round(graft.plans.CosineSim.cosineD(col("ea"), col("eb")), 6))
-      .filter(col("ps") >= tau)
+      .filter(col("ps") >= SemDedupTau)
     val dropped = pairs.groupBy(col("idb").as("vec_id"))
       .agg(count(lit(1)).as("n_dups"), max(col("ps")).as("max_dup_sim"))
     asg.select(col("vec_id"), col("cid").as("cluster"))
@@ -2497,15 +2496,14 @@ object Dedup {
 
   /** q134 oracle: the q119 CTE chain (Clustering.kmeansCtes) + the same
     * within-cluster pair prune. */
-  def qDedupSemanticSql(k: Int = 8, updates: Int = 2,
-      tau: Double = 0.25): String =
-    s"""WITH ${Clustering.kmeansCtes(k, updates)},
-       |asg AS (SELECT vec_id, e, cid FROM a$updates),
+  def qDedupSemanticSql: String =
+    s"""WITH ${Clustering.kmeansCtes},
+       |asg AS (SELECT vec_id, e, cid FROM a${Clustering.KmeansUpdates}),
        |pairs AS (
        |  SELECT b.vec_id AS vid,
        |         round(list_cosine_similarity(a.e, b.e), 6) AS ps
        |  FROM asg a JOIN asg b ON a.cid = b.cid AND a.vec_id < b.vec_id
-       |  WHERE round(list_cosine_similarity(a.e, b.e), 6) >= $tau),
+       |  WHERE round(list_cosine_similarity(a.e, b.e), 6) >= $SemDedupTau),
        |drops AS (
        |  SELECT vid, CAST(COUNT(*) AS BIGINT) AS n_dups,
        |         max(ps) AS max_dup_sim
@@ -2527,7 +2525,7 @@ object Dedup {
     * (dedup'd shingle arrays, ROUND_HALF_UP to 6). O(n²/B) work per cell —
     * the EXACT kernel, so callers bound n (audit slice), not the engine. */
   private[graft] def jaccardPairsBlocked(df: DataFrame, textCol: String,
-      idCol: String, threshold: Double, shingleLen: Int = 8,
+      idCol: String, threshold: Double, shingleLen: Int = ShingleLen,
       nBlocks: Int = 8): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
@@ -2593,7 +2591,7 @@ object Dedup {
     * corpus size. Jaccard arithmetic matches the LSH verify bit-for-bit
     * (dedup'd shingles, HALF_UP round 6). */
   private[graft] def auditTruePairs(t: Tables, sliceN: Long,
-      threshold: Double, shingleLen: Int = 8): DataFrame = {
+      threshold: Double, shingleLen: Int = ShingleLen): DataFrame = {
     val spark = t.documents.sparkSession
     import spark.implicits._
     val slice: Array[(Long, Array[String])] = t.documents
@@ -2629,6 +2627,10 @@ object Dedup {
       }.toDF("id_a", "id_b")
   }
 
+  /** q95's audit slice (doc_id < `AuditSliceN`) and Jaccard threshold. */
+  final val AuditSliceN = 500L
+  final val AuditThreshold = 0.5
+
   /** Q95: dedup-quality audit — near-dup LSH recall made driver-visible
     * (the q40/q56 recall_at_k pattern applied to the dedup block). Ground
     * truth: the EXACT pair population incident to a fixed 500-id audit
@@ -2652,15 +2654,14 @@ object Dedup {
     * `recall_ge_floor` (the DedupSpec 0.8 floor, now driver-checked).
     * The per-seed recall VALUES stay visible in the rows-only ANN/LSH
     * family (q34/q40/q56); this row is the gate. */
-  def qDedupQuality(t: Tables, sliceN: Long = 500,
-      threshold: Double = 0.5, recallFloor: Double = 0.8): DataFrame = {
+  def qDedupQuality(t: Tables): DataFrame = {
     // barriers: both pair lists are referenced twice (their union arm +
     // the semi join) and each reference re-ran the full shingle/minhash
     // kernels — 6 corpus scans total (r13 opt). Checkpointed frames are
     // slice-incident id pairs (2 longs/row).
-    val truePairs = auditTruePairs(t, sliceN, threshold).localCheckpoint()
+    val truePairs = auditTruePairs(t, AuditSliceN, AuditThreshold).localCheckpoint()
     val lshPairs = minhashVerifiedPairs(t, t.documents)
-      .filter(col("id_a") < sliceN)
+      .filter(col("id_a") < AuditSliceN)
       .select(col("id_a"), col("id_b"))
       .localCheckpoint()
     val hits = truePairs.join(lshPairs, Seq("id_a", "id_b"), "left_semi")
@@ -2676,7 +2677,7 @@ object Dedup {
         (col("n_hit_pairs") === col("n_lsh_pairs")).as("lsh_within_truth"),
         (when(col("n_true_pairs") === 0, lit(1.0))
           .otherwise(round(col("n_hit_pairs").cast("double") /
-            col("n_true_pairs").cast("double"), 6)) >= recallFloor)
+            col("n_true_pairs").cast("double"), 6)) >= 0.8)
           .as("recall_ge_floor"))
   }
 
@@ -2686,23 +2687,22 @@ object Dedup {
     * intersections via one shingle equi self-join restricted to the
     * audit slice, and the integer-form threshold predicate (see
     * qDedupQuality scaladoc). The envelope booleans are asserted TRUE. */
-  def qDedupQualitySql(sliceN: Long = 500, threshold: Double = 0.5,
-      shingleLen: Int = 8): String = {
-    val thrCoef = 2L * math.round(threshold * 1000000.0) - 1L
+  def qDedupQualitySql: String = {
+    val thrCoef = 2L * math.round(AuditThreshold * 1000000.0) - 1L
     s"""WITH docs AS MATERIALIZED (
        |  SELECT doc_id, lower(text) AS s FROM documents WHERE text IS NOT NULL),
        |sh AS MATERIALIZED (
-       |  SELECT doc_id, s AS g FROM docs WHERE length(s) < $shingleLen
+       |  SELECT doc_id, s AS g FROM docs WHERE length(s) < $ShingleLen
        |  UNION ALL
-       |  SELECT DISTINCT doc_id, substring(s, CAST(p AS INTEGER), $shingleLen) AS g
-       |  FROM (SELECT doc_id, s, unnest(range(1, length(s) - ${shingleLen - 2})) AS p
-       |        FROM docs WHERE length(s) >= $shingleLen)),
+       |  SELECT DISTINCT doc_id, substring(s, CAST(p AS INTEGER), $ShingleLen) AS g
+       |  FROM (SELECT doc_id, s, unnest(range(1, length(s) - ${ShingleLen - 2})) AS p
+       |        FROM docs WHERE length(s) >= $ShingleLen)),
        |sz AS MATERIALIZED (
        |  SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n FROM sh GROUP BY doc_id),
        |inter AS (
        |  SELECT a.doc_id AS ia, b.doc_id AS ib, CAST(COUNT(*) AS BIGINT) AS m
        |  FROM sh a JOIN sh b ON a.g = b.g
-       |  WHERE a.doc_id < b.doc_id AND a.doc_id < $sliceN
+       |  WHERE a.doc_id < b.doc_id AND a.doc_id < $AuditSliceN
        |  GROUP BY 1, 2)
        |SELECT CAST(COUNT(*) AS BIGINT) AS n_true_pairs,
        |  TRUE AS lsh_within_truth, TRUE AS recall_ge_floor
@@ -2984,6 +2984,10 @@ object Dedup {
       |LEFT JOIN ln lb ON lb.doc_id = p.b
       |ORDER BY id_a, id_b""".stripMargin
 
+  /** q295's core order and peeling rounds. */
+  final val KCoreK = 2
+  final val KCoreRounds = 8
+
   /** Q295: k-core decomposition of the near-dup graph (Seidman 1983) by
     * iterative peeling — round r removes every still-alive node whose
     * current degree is < k, then drops its edges; survivors after
@@ -2995,7 +2999,7 @@ object Dedup {
     * Determinism: peeling is confluent — the set removed per round is a
     * pure function of the previous round's graph, no ordering anywhere;
     * all arithmetic is integer degrees. The round count is FIXED
-    * (`rounds`, oracle-unrolled as chained MATERIALIZED CTEs, the
+    * (`KCoreRounds`, oracle-unrolled as chained MATERIALIZED CTEs, the
     * q119/q139 shape) and the emitted `converged` flag (computed
     * identically both engines: no removal in the final round) lets the
     * spec assert the fixpoint was actually reached at shipped SFs.
@@ -3005,23 +3009,23 @@ object Dedup {
     * (the star-contraction lineage rule, Dedup.starContract) — never a
     * driver union-find. At 100 TB the same loop runs on the governed
     * pair generator (governedFuzzyPairs). */
-  def qKCore(t: Tables, k: Int = 2, rounds: Int = 8): DataFrame = {
+  def qKCore(t: Tables): DataFrame = {
     val pairs = fuzzyPairsCached(t)
     var alive = pairs.select(col("id_a").as("id"))
       .unionAll(pairs.select(col("id_b").as("id"))).distinct().localCheckpoint()
     var edges = pairs
     val removed = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     var r = 1
-    while (r <= rounds) {
+    while (r <= KCoreRounds) {
       val degs = edges.select(col("id_a").as("id"))
         .unionAll(edges.select(col("id_b").as("id")))
         .groupBy(col("id")).agg(count(lit(1)).as("d"))
       val withDeg = alive.join(degs, Seq("id"), "left")
         .select(col("id"), coalesce(col("d"), lit(0L)).as("d"))
         .localCheckpoint()
-      removed += withDeg.filter(col("d") < k)
+      removed += withDeg.filter(col("d") < KCoreK)
         .select(col("id"), lit(r.toLong).as("removed_round"))
-      alive = withDeg.filter(col("d") >= k).select(col("id")).localCheckpoint()
+      alive = withDeg.filter(col("d") >= KCoreK).select(col("id")).localCheckpoint()
       edges = edges
         .join(alive.select(col("id").as("id_a")), Seq("id_a"), "left_semi")
         .join(alive.select(col("id").as("id_b")), Seq("id_b"), "left_semi")
@@ -3040,7 +3044,7 @@ object Dedup {
     kept.unionAll(gone)
       .withColumn("in_core", col("removed_round").isNull)
       .withColumn("converged",
-        coalesce(max(col("removed_round")).over(w), lit(0L)) < lit(rounds.toLong))
+        coalesce(max(col("removed_round")).over(w), lit(0L)) < lit(KCoreRounds.toLong))
       .select(col("id").as("doc_id"), col("removed_round"), col("deg_final"),
         col("in_core"), col("converged"))
       .orderBy(col("doc_id"))
@@ -3049,21 +3053,21 @@ object Dedup {
   /** q295 oracle: the peel rounds unrolled as chained MATERIALIZED CTEs
     * over the shared q32 pair graph (ed0..edR renamed away from the
     * closure CTEs' `e` — the q228 no-shadowing rule). */
-  def qKCoreSql(k: Int = 2, rounds: Int = 8): String = {
-    val steps = (1 to rounds).map { r =>
+  def qKCoreSql: String = {
+    val steps = (1 to KCoreRounds).map { r =>
       s"""dg$r AS MATERIALIZED (
          |  SELECT n.id, COALESCE(c.d, 0) AS d FROM al${r - 1} n
          |  LEFT JOIN (SELECT v AS id, COUNT(*)::BIGINT AS d FROM (
          |      SELECT a AS v FROM ed${r - 1} UNION ALL SELECT b FROM ed${r - 1})
          |    GROUP BY v) c ON c.id = n.id),
          |vic$r AS MATERIALIZED (
-         |  SELECT id, CAST($r AS BIGINT) AS removed_round FROM dg$r WHERE d < $k),
-         |al$r AS MATERIALIZED (SELECT id FROM dg$r WHERE d >= $k),
+         |  SELECT id, CAST($r AS BIGINT) AS removed_round FROM dg$r WHERE d < $KCoreK),
+         |al$r AS MATERIALIZED (SELECT id FROM dg$r WHERE d >= $KCoreK),
          |ed$r AS MATERIALIZED (
          |  SELECT a, b FROM ed${r - 1}
          |  WHERE a IN (SELECT id FROM al$r) AND b IN (SELECT id FROM al$r))""".stripMargin
     }.mkString(",\n")
-    val vicUnion = (1 to rounds).map(r => s"SELECT * FROM vic$r").mkString("\n  UNION ALL ")
+    val vicUnion = (1 to KCoreRounds).map(r => s"SELECT * FROM vic$r").mkString("\n  UNION ALL ")
     s"""WITH RECURSIVE $componentsRepCtes,
        |ed0 AS MATERIALIZED (SELECT a, b FROM pairs),
        |al0 AS MATERIALIZED (
@@ -3072,20 +3076,20 @@ object Dedup {
        |$steps,
        |fdeg AS (
        |  SELECT v AS id, COUNT(*)::BIGINT AS deg_final FROM (
-       |    SELECT a AS v FROM ed$rounds UNION ALL SELECT b FROM ed$rounds)
+       |    SELECT a AS v FROM ed$KCoreRounds UNION ALL SELECT b FROM ed$KCoreRounds)
        |  GROUP BY v),
        |gone AS (
        |  $vicUnion),
        |uni AS (
        |  SELECT n.id, CAST(NULL AS BIGINT) AS removed_round,
        |    CAST(COALESCE(f.deg_final, 0) AS BIGINT) AS deg_final
-       |  FROM al$rounds n LEFT JOIN fdeg f ON f.id = n.id
+       |  FROM al$KCoreRounds n LEFT JOIN fdeg f ON f.id = n.id
        |  UNION ALL
        |  SELECT id, CAST(removed_round AS BIGINT), CAST(NULL AS BIGINT)
        |  FROM gone)
        |SELECT id AS doc_id, removed_round, deg_final,
        |  removed_round IS NULL AS in_core,
-       |  COALESCE(MAX(removed_round) OVER (), 0) < $rounds AS converged
+       |  COALESCE(MAX(removed_round) OVER (), 0) < $KCoreRounds AS converged
        |FROM uni ORDER BY doc_id""".stripMargin
   }
 
@@ -3106,6 +3110,10 @@ object Dedup {
       .select(col("id_a"), col("id_b"), coalesce(col("sup"), lit(0L)).as("sup"))
   }
 
+  /** q302's truss order and peeling rounds. */
+  final val KTrussK = 4
+  final val KTrussRounds = 4
+
   /** Q302: k-truss decomposition of the near-dup graph (Cohen 2008) —
     * the EDGE-level sibling of q295's k-core: round r removes every
     * surviving edge supported by fewer than k−2 triangles, until the
@@ -3123,16 +3131,16 @@ object Dedup {
     * Scale shape: support is the q281 wedge plan (adjacency self-join,
     * never per-edge subqueries); each round localCheckpoints the
     * bounded surviving edge set. */
-  def qKTruss(t: Tables, k: Int = 4, rounds: Int = 4): DataFrame = {
+  def qKTruss(t: Tables): DataFrame = {
     val pairs = fuzzyPairsCached(t)
     var edges = pairs
     val removed = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     var r = 1
-    while (r <= rounds) {
+    while (r <= KTrussRounds) {
       val sup = edgeSupport(edges).localCheckpoint()
-      removed += sup.filter(col("sup") < (k - 2).toLong)
+      removed += sup.filter(col("sup") < (KTrussK - 2).toLong)
         .select(col("id_a"), col("id_b"), lit(r.toLong).as("removed_round"))
-      edges = sup.filter(col("sup") >= (k - 2).toLong)
+      edges = sup.filter(col("sup") >= (KTrussK - 2).toLong)
         .select(col("id_a"), col("id_b")).localCheckpoint()
       r += 1
     }
@@ -3146,7 +3154,7 @@ object Dedup {
     kept.unionAll(gone)
       .withColumn("in_truss", col("removed_round").isNull)
       .withColumn("converged",
-        coalesce(max(col("removed_round")).over(w), lit(0L)) < lit(rounds.toLong))
+        coalesce(max(col("removed_round")).over(w), lit(0L)) < lit(KTrussRounds.toLong))
       .select(col("id_a"), col("id_b"), col("removed_round"),
         col("support_final"), col("in_truss"), col("converged"))
       .orderBy(col("id_a"), col("id_b"))
@@ -3155,7 +3163,7 @@ object Dedup {
   /** q302 oracle: peel rounds unrolled over the shared q32 pair graph;
     * per-round support via the same wedge join (LEFT-join-back keeps
     * support-0 edges; COUNT(s2.x) counts only closed wedges). */
-  def qKTrussSql(k: Int = 4, rounds: Int = 4): String = {
+  def qKTrussSql: String = {
     def supCte(name: String, from: String): String =
       s"""$name AS MATERIALIZED (
          |  SELECT e.a, e.b, CAST(COUNT(s2.x) AS BIGINT) AS sup
@@ -3166,18 +3174,18 @@ object Dedup {
          |             UNION ALL SELECT b, a FROM $from) s2
          |    ON s2.s = e.b AND s2.x = s1.x
          |  GROUP BY e.a, e.b)""".stripMargin
-    val steps = (1 to rounds).map { r =>
+    val steps = (1 to KTrussRounds).map { r =>
       s"""${supCte(s"sup$r", s"te${r - 1}")},
          |tvic$r AS MATERIALIZED (
          |  SELECT a, b, CAST($r AS BIGINT) AS removed_round
-         |  FROM sup$r WHERE sup < ${k - 2}),
-         |te$r AS MATERIALIZED (SELECT a, b FROM sup$r WHERE sup >= ${k - 2})""".stripMargin
+         |  FROM sup$r WHERE sup < ${KTrussK - 2}),
+         |te$r AS MATERIALIZED (SELECT a, b FROM sup$r WHERE sup >= ${KTrussK - 2})""".stripMargin
     }.mkString(",\n")
-    val vicUnion = (1 to rounds).map(r => s"SELECT * FROM tvic$r").mkString("\n  UNION ALL ")
+    val vicUnion = (1 to KTrussRounds).map(r => s"SELECT * FROM tvic$r").mkString("\n  UNION ALL ")
     s"""WITH RECURSIVE $componentsRepCtes,
        |te0 AS MATERIALIZED (SELECT a, b FROM pairs),
        |$steps,
-       |${supCte("supf", s"te$rounds")},
+       |${supCte("supf", s"te$KTrussRounds")},
        |tgone AS (
        |  $vicUnion),
        |tuni AS (
@@ -3187,9 +3195,12 @@ object Dedup {
        |  SELECT a, b, removed_round, CAST(NULL AS BIGINT) FROM tgone)
        |SELECT a AS id_a, b AS id_b, removed_round, support_final,
        |  removed_round IS NULL AS in_truss,
-       |  COALESCE(MAX(removed_round) OVER (), 0) < $rounds AS converged
+       |  COALESCE(MAX(removed_round) OVER (), 0) < $KTrussRounds AS converged
        |FROM tuni ORDER BY id_a, id_b""".stripMargin
   }
+
+  /** MM rounds q310's Bradley–Terry fit runs. */
+  final val BradleyTerryRounds = 8
 
   /** Q310: Bradley–Terry strength ranking of sources (Bradley & Terry
     * 1952) from near-dup-pair "contests" — for every cross-source
@@ -3207,7 +3218,7 @@ object Dedup {
     * Affinity.roundMicro (DuckDB round(x,6) bit-for-bit); the oracle
     * unrolls the rounds as chained MATERIALIZED CTEs over the shared
     * pair CTE. */
-  def qBradleyTerry(t: Tables, rounds: Int = 8): DataFrame = {
+  def qBradleyTerry(t: Tables): DataFrame = {
     val meta = t.documents.select(col("doc_id"), col("source"), col("n_chars"))
     val contests = fuzzyPairsCached(t)
       .join(meta.select(col("doc_id").as("id_a"), col("source").as("sa"),
@@ -3232,7 +3243,7 @@ object Dedup {
       i -> srcs.filter(_ != i).map(j => g(i, j)).sum).toMap
     var pi = srcs.map(_ -> 1.0).toMap
     var r = 1
-    while (r <= rounds) {
+    while (r <= BradleyTerryRounds) {
       pi = srcs.map { i =>
         val dMicro = srcs.filter(j => j != i && g(i, j) > 0L).map { j =>
           val m = g(i, j).toDouble / (pi(i) + pi(j)) * 1000000.0
@@ -3257,8 +3268,8 @@ object Dedup {
   /** q310 oracle: shared pair CTE → contests → win matrix, MM rounds
     * unrolled (per-opponent terms as BIGINT micros; round(x, 6) re-entry;
     * no-games sources carry their π forward). */
-  def qBradleyTerrySql(rounds: Int = 8): String = {
-    val steps = (1 to rounds).map { r =>
+  def qBradleyTerrySql: String = {
+    val steps = (1 to BradleyTerryRounds).map { r =>
       s"""bd$r AS (
          |  SELECT gm.i,
          |    CAST(SUM(CAST(round(CAST(gm.g AS DOUBLE) / (pa.pi + pb.pi)
@@ -3301,9 +3312,12 @@ object Dedup {
        |$steps
        |SELECT w.source, w.wins, w.games, p.pi,
        |  CAST(ROW_NUMBER() OVER (ORDER BY p.pi DESC, w.source) AS BIGINT) AS rank
-       |FROM wt w JOIN bp$rounds p ON p.source = w.source
+       |FROM wt w JOIN bp$BradleyTerryRounds p ON p.source = w.source
        |ORDER BY w.source""".stripMargin
   }
+
+  /** Propagation rounds q317 runs. */
+  final val LabelPropRounds = 8
 
   /** Q317: semi-supervised label propagation with clamping (Zhu &
     * Ghahramani 2002, hard-label form) on the near-dup graph — a 25%
@@ -3322,7 +3336,7 @@ object Dedup {
     *
     * Scale shape: each round is one edge-label equi join + one vote
     * aggregate over the bounded graph, localCheckpointed. */
-  def qLabelPropagation(t: Tables, rounds: Int = 8): DataFrame = {
+  def qLabelPropagation(t: Tables): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val pairs = fuzzyPairsCached(t)
     val nodes = pairs.select(col("id_a").as("id"))
@@ -3339,7 +3353,7 @@ object Dedup {
       .select(col("id"), col("source").as("label"), lit(0L).as("round_labeled"))
       .localCheckpoint()
     var r = 1
-    while (r <= rounds) {
+    while (r <= LabelPropRounds) {
       val votes = sym
         .join(labeled.select(col("id").as("nb"), col("label")), Seq("nb"))
         .join(labeled.select(col("id"), lit(1).as("_is_lab")), Seq("id"), "left_anti")
@@ -3358,7 +3372,7 @@ object Dedup {
       .withColumn("correct",
         when(col("label").isNotNull, col("label") === col("source")))
       .withColumn("converged",
-        coalesce(max(col("round_labeled")).over(w0), lit(0L)) < lit(rounds.toLong))
+        coalesce(max(col("round_labeled")).over(w0), lit(0L)) < lit(LabelPropRounds.toLong))
       .select(col("id").as("doc_id"), col("source"), col("seeded"),
         col("label"), col("round_labeled"), col("correct"), col("converged"))
       .orderBy(col("doc_id"))
@@ -3366,8 +3380,8 @@ object Dedup {
 
   /** q317 oracle: rounds unrolled as chained MATERIALIZED CTEs over the
     * shared pair graph (lb0..lbR; votes argmax via ROW_NUMBER). */
-  def qLabelPropagationSql(rounds: Int = 8): String = {
-    val steps = (1 to rounds).map { r =>
+  def qLabelPropagationSql: String = {
+    val steps = (1 to LabelPropRounds).map { r =>
       s"""vt$r AS (
          |  SELECT s.id, l.label, COUNT(*)::BIGINT AS votes
          |  FROM lsym s JOIN lb${r - 1} l ON l.id = s.nb
@@ -3397,10 +3411,13 @@ object Dedup {
        |$steps
        |SELECT n.id AS doc_id, n.source, n.seeded, l.label, l.round_labeled,
        |  CASE WHEN l.label IS NOT NULL THEN l.label = n.source END AS correct,
-       |  COALESCE(MAX(l.round_labeled) OVER (), 0) < $rounds AS converged
-       |FROM lnodes n LEFT JOIN lb$rounds l ON l.id = n.id
+       |  COALESCE(MAX(l.round_labeled) OVER (), 0) < $LabelPropRounds AS converged
+       |FROM lnodes n LEFT JOIN lb$LabelPropRounds l ON l.id = n.id
        |ORDER BY doc_id""".stripMargin
   }
+
+  /** Power rounds q320's HITS runs. */
+  final val HitsRounds = 8
 
   /** Q320: HITS hubs and authorities (Kleinberg 1999) on the directed
     * source contest graph (q310's winner→loser edges, weighted by win
@@ -3415,7 +3432,7 @@ object Dedup {
     * a ← Σ w·h and h ← Σ w·a terms are micro-rounded BIGINT sums,
     * sum-normalized and re-entered through Affinity.roundMicro; the
     * oracle unrolls the rounds as chained MATERIALIZED CTEs. */
-  def qHits(t: Tables, rounds: Int = 8): DataFrame = {
+  def qHits(t: Tables): DataFrame = {
     val meta = t.documents.select(col("doc_id"), col("source"), col("n_chars"))
     val contests = fuzzyPairsCached(t)
       .join(meta.select(col("doc_id").as("id_a"), col("source").as("sa"),
@@ -3439,7 +3456,7 @@ object Dedup {
       math.floor(m + 0.5).toLong // non-negative: std::round parity
     }
     var r = 1
-    while (r <= rounds) {
+    while (r <= HitsRounds) {
       // authorities from hubs pointing at them (winner → loser: the
       // LOSER endorses the winner's copy as canonical)
       val aMicro = srcs.map(i =>
@@ -3467,8 +3484,8 @@ object Dedup {
 
   /** q320 oracle: the q310 contest CTEs + unrolled a/h rounds (micro
     * terms, sum normalization, round(x,6) re-entry). */
-  def qHitsSql(rounds: Int = 8): String = {
-    val steps = (1 to rounds).map { r =>
+  def qHitsSql: String = {
+    val steps = (1 to HitsRounds).map { r =>
       s"""am$r AS (
          |  SELECT s.source,
          |    CAST(COALESCE(SUM(CAST(round(CAST(wm.w AS DOUBLE) * hp.h
@@ -3517,6 +3534,6 @@ object Dedup {
        |SELECT f.source, f.a AS authority, f.h AS hub,
        |  CAST(ROW_NUMBER() OVER (ORDER BY f.a DESC, f.source) AS BIGINT)
        |    AS auth_rank
-       |FROM ha$rounds f ORDER BY f.source""".stripMargin
+       |FROM ha$HitsRounds f ORDER BY f.source""".stripMargin
   }
 }

@@ -288,6 +288,11 @@ object EventAnalytics {
       |      FROM ev JOIN first f ON ev.user_id = f.user_id)
       |GROUP BY cohort, day_offset ORDER BY cohort, day_offset""".stripMargin
 
+  /** q156's count-min sketch: depth, width and heavy hitters reported. */
+  final val CmsD = 4
+  final val CmsW = 64
+  final val CmsTopK = 10
+
   /** Q156: count-min sketch frequency estimation (Cormode & Muthukrishnan
     * 2005) — the streaming frequency-summary every event pipeline keeps
     * when the key domain is too wide for an exact groupBy. Unlike the HLL
@@ -304,7 +309,7 @@ object EventAnalytics {
     * top-k probe side is bounded (k keys × d lookups against the ≤ d·w
     * cell table). The exact counts ride along as ground truth, making
     * the CMS guarantee est ≥ exact a driver-checked column. */
-  def qCmsFreq(t: Tables, d: Int = 4, w: Int = 64, topK: Int = 10): DataFrame = {
+  def qCmsFreq(t: Tables, d: Int = CmsD, w: Int = CmsW, topK: Int = CmsTopK): DataFrame = {
     val ev = t.events.select(col("user_id"))
     val js = array((0 until d).map(lit): _*)
     def bucket(j: org.apache.spark.sql.Column, key: org.apache.spark.sql.Column) =
@@ -469,16 +474,26 @@ object EventAnalytics {
       |       ELSE y * 1000000 - fm END AS err_micro
       |FROM walk ORDER BY event_type, x""".stripMargin
 
+  /** The experiment every A/B query reads (q170, q239, q240, q276): the
+    * md5 arm-assignment salt and the pre/post period cutoff date. */
+  final val ExperimentSalt = "exp1"
+  final val ExperimentCutoff = "2024-01-03"
+
+  /** q276's SPRT hypotheses (baseline and lifted rates) and error rates. */
+  final val SprtP0 = 0.02
+  final val SprtP1 = 0.04
+  final val SprtAlpha = 0.05
+  final val SprtBeta = 0.05
+
   /** The q276 SPRT constants: micro-grid log-likelihood terms and Wald
     * boundaries, computed ONCE on the driver and interpolated as integer
     * literals into BOTH the Spark plan and the oracle SQL — no
     * cross-engine libm exposure at all. */
-  private def sprtConsts(p0: Double, p1: Double, alpha: Double,
-      beta: Double): (Long, Long, Long, Long) = (
-    Math.round(1e6 * math.log(p1 / p0)),
-    Math.round(1e6 * math.log((1.0 - p1) / (1.0 - p0))),
-    Math.round(1e6 * math.log((1.0 - beta) / alpha)),
-    Math.round(1e6 * math.log(beta / (1.0 - alpha))))
+  private def sprtConsts: (Long, Long, Long, Long) = (
+    Math.round(1e6 * math.log(SprtP1 / SprtP0)),
+    Math.round(1e6 * math.log((1.0 - SprtP1) / (1.0 - SprtP0))),
+    Math.round(1e6 * math.log((1.0 - SprtBeta) / SprtAlpha)),
+    Math.round(1e6 * math.log(SprtBeta / (1.0 - SprtAlpha))))
 
   /** Q276: sequential probability ratio test (Wald 1945) on the A/B
     * conversion stream — the EARLY-STOPPING decision rule an
@@ -499,19 +514,18 @@ object EventAnalytics {
     * never a per-arm single-partition sort); the crossing fetch-back is
     * a 2-row broadcast join. The oracle replays the walk with plain
     * per-arm cumulative windows (an execution detail, not semantics). */
-  def qSprt(t: Tables, salt: String = "exp1", p0: Double = 0.02,
-      p1: Double = 0.04, alpha: Double = 0.05, beta: Double = 0.05): DataFrame = {
+  def qSprt(t: Tables): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val spark = t.events.sparkSession
     import spark.implicits._
-    val (c1m, c0m, upM, downM) = sprtConsts(p0, p1, alpha, beta)
+    val (c1m, c0m, upM, downM) = sprtConsts
     val users = t.events
       .groupBy(col("user_id"))
       .agg(max(when(col("event_type") === "purchase" &&
           col("ts").cast("date") < lit("2024-01-03").cast("date"), 1L)
         .otherwise(0L)).as("x"))
       .withColumn("arm",
-        conv(substring(md5(concat(lit(salt), lit(":"),
+        conv(substring(md5(concat(lit(ExperimentSalt), lit(":"),
           col("user_id").cast("string"))), 1, 8), 16, 10).cast("long") % 2)
       .localCheckpoint() // feeds the max fetch, bucket sums, and the walk
     val maxUidRow = users.agg(max(col("user_id"))).head()
@@ -566,15 +580,14 @@ object EventAnalytics {
 
   /** q276 oracle: the same users CTE and integer constants, the walk as
     * plain per-arm cumulative windows. */
-  def qSprtSql(salt: String = "exp1", p0: Double = 0.02, p1: Double = 0.04,
-      alpha: Double = 0.05, beta: Double = 0.05): String = {
-    val (c1m, c0m, upM, downM) = sprtConsts(p0, p1, alpha, beta)
+  def qSprtSql: String = {
+    val (c1m, c0m, upM, downM) = sprtConsts
     s"""WITH users AS (
        |  SELECT user_id,
        |    MAX(CASE WHEN event_type = 'purchase'
        |             AND CAST(CAST(ts AS TIMESTAMP) AS DATE) < DATE '2024-01-03'
        |             THEN 1 ELSE 0 END)::BIGINT AS x,
-       |    CAST(('0x' || substr(md5('$salt' || ':' || CAST(user_id AS VARCHAR)), 1, 8))
+       |    CAST(('0x' || substr(md5('$ExperimentSalt' || ':' || CAST(user_id AS VARCHAR)), 1, 8))
        |      AS BIGINT) % 2 AS arm
        |  FROM events GROUP BY user_id),
        |walk AS (
@@ -613,7 +626,7 @@ object EventAnalytics {
     * arm aggregate, one 1-row readout aggregate ON TOP of the 2-row
     * frame (aggregate-of-aggregate — never the q114 1-row scalar
     * join). */
-  def qAbTest(t: Tables, salt: String = "exp1"): DataFrame = {
+  def qAbTest(t: Tables): DataFrame = {
     // conversion = purchased within the first two days — "ever purchased"
     // saturates to 1.0 on a month of synthetic activity, which degenerates
     // the z denominator to 0 (ANSI double-divide throws; also guarded
@@ -624,7 +637,7 @@ object EventAnalytics {
           col("ts").cast("date") < lit("2024-01-03").cast("date"), 1L)
         .otherwise(0L)).as("converted"))
       .withColumn("arm",
-        conv(substring(md5(concat(lit(salt), lit(":"),
+        conv(substring(md5(concat(lit(ExperimentSalt), lit(":"),
           col("user_id").cast("string"))), 1, 8), 16, 10).cast("long") % 2)
     val arms = users.groupBy(col("arm"))
       .agg(count(lit(1)).as("n"), sum(col("converted")).as("c"))
@@ -645,13 +658,13 @@ object EventAnalytics {
         col("rate_a"), col("rate_b"), col("z"))
   }
 
-  def qAbTestSql(salt: String = "exp1"): String =
+  def qAbTestSql: String =
     s"""WITH users AS (
        |  SELECT user_id,
        |    MAX(CASE WHEN event_type = 'purchase'
        |             AND CAST(CAST(ts AS TIMESTAMP) AS DATE) < DATE '2024-01-03'
        |             THEN 1 ELSE 0 END)::BIGINT AS converted,
-       |    CAST('0x' || substr(md5('$salt' || ':' ||
+       |    CAST('0x' || substr(md5('$ExperimentSalt' || ':' ||
        |      CAST(user_id AS VARCHAR)), 1, 8) AS BIGINT) % 2 AS arm
        |  FROM events GROUP BY user_id),
        |arms AS (
@@ -676,6 +689,9 @@ object EventAnalytics {
        |      * (1.0 / CAST(n_a AS DOUBLE) + 1.0 / CAST(n_b AS DOUBLE))), 0.0) AS z
        |FROM rates""".stripMargin
 
+  /** The trailing window, in days, of q177's rolling actives. */
+  final val RollingDays = 7
+
   /** Q177: rolling 7-day active users per event type — the WAU/rolling-
     * retention monitor. An EXACT sliding distinct cannot ride a window
     * frame (distinct isn't frame-mergeable); the scalable relational
@@ -687,21 +703,21 @@ object EventAnalytics {
     *
     * At 100 TB this beats 7 self-joins (the naive form) and is the shape
     * a metrics store materializes daily. */
-  def qRollingActive(t: Tables, windowDays: Int = 7): DataFrame = {
+  def qRollingActive(t: Tables): DataFrame = {
     val days = t.events
       .select(col("event_type"), col("user_id"), col("ts").cast("date").as("d"))
       .distinct()
     val ends = days.select(col("event_type"), col("d").as("window_end")).distinct()
     days
       .select(col("event_type"), col("user_id"),
-        explode(expr(s"sequence(d, date_add(d, ${windowDays - 1}))")).as("window_end"))
+        explode(expr(s"sequence(d, date_add(d, ${RollingDays - 1}))")).as("window_end"))
       .join(ends, Seq("event_type", "window_end")) // only ends that exist
       .groupBy(col("event_type"), col("window_end"))
       .agg(countDistinct(col("user_id")).as("active_users"))
       .orderBy(col("event_type"), col("window_end"))
   }
 
-  def qRollingActiveSql(windowDays: Int = 7): String =
+  def qRollingActiveSql: String =
     s"""WITH days AS (
        |  SELECT DISTINCT event_type, user_id,
        |    CAST(CAST(ts AS TIMESTAMP) AS DATE) AS d
@@ -709,7 +725,7 @@ object EventAnalytics {
        |ends AS (SELECT DISTINCT event_type, d AS window_end FROM days),
        |contrib AS (
        |  SELECT days.event_type, days.user_id,
-       |    unnest(generate_series(d, d + INTERVAL ${windowDays - 1} DAY,
+       |    unnest(generate_series(d, d + INTERVAL ${RollingDays - 1} DAY,
        |      INTERVAL 1 DAY))::DATE AS window_end
        |  FROM days)
        |SELECT c.event_type, c.window_end,
@@ -718,6 +734,9 @@ object EventAnalytics {
        |  ON e.event_type = c.event_type AND e.window_end = c.window_end
        |GROUP BY c.event_type, c.window_end
        |ORDER BY c.event_type, c.window_end""".stripMargin
+
+  /** q167's TTL cutoff: events before this date expire. */
+  final val TtlCutoff = "2024-01-15"
 
   /** Q167: TTL retention plan — the data-lifecycle pass a 100 TB lake
     * runs nightly: given a retention cutoff, classify each (type, day)
@@ -731,11 +750,11 @@ object EventAnalytics {
     * Cutoff is a fixed date literal (the deterministic stand-in for
     * `now() - INTERVAL`: wall-clock in a query breaks replay — both
     * engines must see the same constant). */
-  def qTtlPlan(t: Tables, cutoff: String = "2024-01-15"): DataFrame = {
+  def qTtlPlan(t: Tables): DataFrame = {
     val parts = t.events
       .groupBy(col("event_type"), col("ts").cast("date").as("day"))
       .agg(count(lit(1)).as("n"),
-        sum(when(col("ts").cast("date") < lit(cutoff).cast("date"), 1L)
+        sum(when(col("ts").cast("date") < lit(TtlCutoff).cast("date"), 1L)
           .otherwise(0L)).as("n_expired"))
       .withColumn("cls",
         when(col("n_expired") === col("n"), "drop")
@@ -751,12 +770,12 @@ object EventAnalytics {
       .orderBy(col("event_type"))
   }
 
-  def qTtlPlanSql(cutoff: String = "2024-01-15"): String =
+  def qTtlPlanSql: String =
     s"""WITH parts AS (
        |  SELECT event_type, CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day,
        |    COUNT(*)::BIGINT AS n,
        |    CAST(SUM(CASE WHEN CAST(CAST(ts AS TIMESTAMP) AS DATE)
-       |        < DATE '$cutoff' THEN 1 ELSE 0 END) AS BIGINT) AS n_expired
+       |        < DATE '$TtlCutoff' THEN 1 ELSE 0 END) AS BIGINT) AS n_expired
        |  FROM events GROUP BY 1, 2),
        |cls AS (
        |  SELECT *, CASE WHEN n_expired = n THEN 'drop'
@@ -772,6 +791,9 @@ object EventAnalytics {
        |    AS rows_needing_rewrite
        |FROM cls GROUP BY event_type ORDER BY event_type""".stripMargin
 
+  /** q168's pseudonym salt. */
+  final val PseudonymSalt = "graft-v1"
+
   /** Q168: pseudonymization audit — the GDPR/privacy remap a pipeline
     * applies before data leaves the trust boundary: user ids are
     * replaced by a deterministic keyed pseudonym (md5-derived integer —
@@ -784,7 +806,7 @@ object EventAnalytics {
     * The multiset fingerprint is a bit_xor over md5-ints of per-user
     * counts — order-independent and collision-auditable (the q158
     * checksum pattern). */
-  def qPseudonymize(t: Tables, salt: String = "graft-v1"): DataFrame = {
+  def qPseudonymize(t: Tables, salt: String = PseudonymSalt): DataFrame = {
     val ev = t.events.select(col("user_id"), col("event_type"))
     def pseud(c: org.apache.spark.sql.Column) =
       conv(substring(md5(concat(lit(salt), lit(":"), c.cast("string"))), 1, 15),
@@ -808,7 +830,7 @@ object EventAnalytics {
       .orderBy(col("event_type"))
   }
 
-  def qPseudonymizeSql(salt: String = "graft-v1"): String =
+  def qPseudonymizeSql: String =
     s"""WITH ev AS (SELECT user_id, event_type FROM events),
        |before_p AS (
        |  SELECT event_type, COUNT(*)::BIGINT AS n_users,
@@ -824,7 +846,7 @@ object EventAnalytics {
        |    CAST(bit_xor(CAST('0x' || substr(md5(CAST(c AS VARCHAR)), 1, 15)
        |      AS BIGINT)) AS BIGINT) AS fp
        |  FROM (SELECT event_type,
-       |          CAST('0x' || substr(md5('$salt' || ':' ||
+       |          CAST('0x' || substr(md5('$PseudonymSalt' || ':' ||
        |            CAST(user_id AS VARCHAR)), 1, 15) AS BIGINT) AS pid,
        |          COUNT(*)::BIGINT AS c
        |        FROM ev GROUP BY 1, 2)
@@ -885,6 +907,9 @@ object EventAnalytics {
       |  ON h.event_type = s.event_type AND h.hr = s.hr
       |ORDER BY s.event_type, s.hr""".stripMargin
 
+  /** The least pair support q164 reports. */
+  final val CoOccurrenceMinSupport = 2L
+
   /** Q164: event-type co-occurrence mining — frequent-itemset support and
     * lift over (user, day) baskets (the market-basket pass a feature
     * pipeline runs to find behavior bundles). Pair support counts are
@@ -895,7 +920,7 @@ object EventAnalytics {
     *
     * Scale shape: one distinct, one bounded self-join on the basket key,
     * two tiny broadcast joins for the marginals. */
-  def qCoOccurrence(t: Tables, minSupport: Long = 2L): DataFrame = {
+  def qCoOccurrence(t: Tables): DataFrame = {
     // barrier: items feeds the basket count, the margins AND both sides of
     // the pair self-join — un-barriered the events distinct shuffle ran 4x.
     // Bounded (user, day, type) rows; the count() below materializes it.
@@ -915,7 +940,7 @@ object EventAnalytics {
     val r = items.select(col("user_id"), col("day"), col("event_type").as("item_b"))
     l.join(r, Seq("user_id", "day")).filter(col("item_a") < col("item_b"))
       .groupBy(col("item_a"), col("item_b")).agg(count(lit(1)).as("support"))
-      .filter(col("support") >= minSupport)
+      .filter(col("support") >= CoOccurrenceMinSupport)
       .join(broadcast(marg.select(col("event_type").as("item_a"), col("sup").as("sup_a"))), Seq("item_a"))
       .join(broadcast(marg.select(col("event_type").as("item_b"), col("sup").as("sup_b"))), Seq("item_b"))
       .withColumn("lift",
@@ -926,7 +951,7 @@ object EventAnalytics {
       .orderBy(col("item_a"), col("item_b"))
   }
 
-  def qCoOccurrenceSql(minSupport: Long = 2L): String =
+  def qCoOccurrenceSql: String =
     s"""WITH items AS (
        |  SELECT DISTINCT user_id, CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day,
        |    event_type
@@ -941,7 +966,7 @@ object EventAnalytics {
        |  FROM items l JOIN items r
        |    ON l.user_id = r.user_id AND l.day = r.day
        |    AND l.event_type < r.event_type
-       |  GROUP BY 1, 2 HAVING COUNT(*) >= $minSupport)
+       |  GROUP BY 1, 2 HAVING COUNT(*) >= $CoOccurrenceMinSupport)
        |SELECT p.item_a, p.item_b, p.support, ma.sup AS sup_a, mb.sup AS sup_b,
        |  CAST(p.support * nb.n AS DOUBLE)
        |    / CAST(ma.sup * mb.sup AS DOUBLE) AS lift
@@ -949,6 +974,9 @@ object EventAnalytics {
        |JOIN marg ma ON ma.event_type = p.item_a
        |JOIN marg mb ON mb.event_type = p.item_b, nb
        |ORDER BY p.item_a, p.item_b""".stripMargin
+
+  /** q161's robust z threshold, in MAD-sigmas. */
+  final val MadKSigma = 3.0
 
   /** Q161: MAD-based robust anomaly detection on daily volumes — the
     * median-absolute-deviation companion to q107's z-scores (Hampel's
@@ -966,7 +994,7 @@ object EventAnalytics {
     * anomaly count) — without it each consumer re-scans the event lake
     * (the q142 multi-consumer rule). Everything after operates on
     * |types·days| rows with broadcast joins of |types|-row tables. */
-  def qMadAnomaly(t: Tables, kSigma: Double = 3.0): DataFrame = {
+  def qMadAnomaly(t: Tables): DataFrame = {
     val daily = t.events
       .groupBy(col("event_type"), col("ts").cast("date").as("day"))
       .agg(count(lit(1)).as("y"))
@@ -986,13 +1014,13 @@ object EventAnalytics {
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n_days"), min(col("med")).as("med"),
         min(col("mad")).as("mad"),
-        sum(when(col("adev") > lit(kSigma) * lit(1.4826) * col("mad"), 1L)
+        sum(when(col("adev") > lit(MadKSigma) * lit(1.4826) * col("mad"), 1L)
           .otherwise(0L)).as("n_anomalies"))
       .orderBy(col("event_type"))
   }
 
   val qMadAnomalySql: String =
-    """WITH daily AS (
+    s"""WITH daily AS (
       |  SELECT event_type, CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day,
       |    COUNT(*)::BIGINT AS y
       |  FROM events GROUP BY 1, 2),
@@ -1008,28 +1036,28 @@ object EventAnalytics {
       |  FROM dev GROUP BY event_type)
       |SELECT d.event_type, COUNT(*)::BIGINT AS n_days,
       |  min(d.med) AS med, min(m.mad) AS mad,
-      |  CAST(SUM(CASE WHEN d.adev > 3.0 * 1.4826 * m.mad
+      |  CAST(SUM(CASE WHEN d.adev > $MadKSigma * 1.4826 * m.mad
       |                THEN 1 ELSE 0 END) AS BIGINT) AS n_anomalies
       |FROM dev d JOIN mad m USING (event_type)
       |GROUP BY d.event_type ORDER BY d.event_type""".stripMargin
 
-  def qCmsFreqSql(d: Int = 4, w: Int = 64, topK: Int = 10): String =
+  def qCmsFreqSql: String =
     s"""WITH ev AS (SELECT user_id FROM events),
-       |js AS (SELECT unnest(range(0, $d)) AS j),
+       |js AS (SELECT unnest(range(0, $CmsD)) AS j),
        |cnt AS (
        |  SELECT j, CAST('0x' || substr(md5(CAST(j AS VARCHAR) || ':' ||
-       |      CAST(user_id AS VARCHAR)), 1, 8) AS BIGINT) % $w AS b,
+       |      CAST(user_id AS VARCHAR)), 1, 8) AS BIGINT) % $CmsW AS b,
        |    COUNT(*)::BIGINT AS c
        |  FROM ev, js GROUP BY j, b),
        |exact AS (
        |  SELECT user_id, COUNT(*)::BIGINT AS exact FROM ev
-       |  GROUP BY user_id ORDER BY exact DESC, user_id LIMIT $topK),
+       |  GROUP BY user_id ORDER BY exact DESC, user_id LIMIT $CmsTopK),
        |probed AS (
        |  SELECT e.user_id, e.exact, min(c.c) AS cms_est
        |  FROM exact e, js
        |  JOIN cnt c ON c.j = js.j
        |    AND c.b = CAST('0x' || substr(md5(CAST(js.j AS VARCHAR) || ':' ||
-       |      CAST(e.user_id AS VARCHAR)), 1, 8) AS BIGINT) % $w
+       |      CAST(e.user_id AS VARCHAR)), 1, 8) AS BIGINT) % $CmsW
        |  GROUP BY e.user_id, e.exact)
        |SELECT CAST(ROW_NUMBER() OVER (ORDER BY exact DESC, user_id) AS BIGINT) AS rank,
        |  user_id, exact, cms_est, cms_est - exact AS overcount,
@@ -1053,7 +1081,8 @@ object EventAnalytics {
     * sketches broadcast into the pair rows. Output rows = pairs sharing
     * ≥1 user (both engines derive the pair set from the same inner join).
     */
-  def qAudienceOverlap(t: Tables, rsd: Double = 0.02): DataFrame = {
+  def qAudienceOverlap(t: Tables): DataFrame = {
+    val rsd = 0.02
     import org.apache.spark.sql.types._
     val spark = t.events.sparkSession
     // barrier: tu feeds the type list, the tagged HLL pass, the per-type
@@ -1183,6 +1212,9 @@ object EventAnalytics {
       .orderBy(col("event_type"), col("day_x"))
   }
 
+  /** q215's CUSUM decision interval, in sigmas. */
+  final val CusumH = 4
+
   /** Q215: CUSUM change-point detection on daily event volumes (Page
     * 1954) — the sequential drift detector that catches slow level
     * shifts q107's per-day z-score misses (a 1σ/day drift never trips a
@@ -1200,7 +1232,7 @@ object EventAnalytics {
     *
     * Scale shape: one daily aggregate, then windows partitioned by
     * event_type over its bounded day range. */
-  def qCusum(t: Tables, hSigma: Int = 4): DataFrame = {
+  def qCusum(t: Tables): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val daily = t.events.groupBy(col("event_type"),
         datediff(col("ts").cast("date"), lit("2024-01-01")).cast("long").as("day_x"))
@@ -1208,7 +1240,7 @@ object EventAnalytics {
     val wType = Window.partitionBy(col("event_type"))
     val wSeq = Window.partitionBy(col("event_type")).orderBy(col("day_x"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val h2 = lit((hSigma.toLong * hSigma).toDouble)
+    val h2 = lit((CusumH.toLong * CusumH).toDouble)
     val varD2 = (col("dd") * col("ssq") - col("tot") * col("tot")).cast("double")
     daily
       .withColumn("dd", count(lit(1)).over(wType))
@@ -1229,7 +1261,7 @@ object EventAnalytics {
   }
 
   /** q215 oracle: the same prefix-identity windows and integer alarm. */
-  def qCusumSql(hSigma: Int = 4): String =
+  def qCusumSql: String =
     s"""WITH daily AS (
       |  SELECT event_type,
       |    CAST(date_diff('day', DATE '2024-01-01',
@@ -1256,10 +1288,10 @@ object EventAnalytics {
       |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW))
       |SELECT event_type, day_x, x, dd, tot, zs, s_pos, s_neg,
       |  CAST(s_pos AS DOUBLE) * CAST(s_pos AS DOUBLE)
-      |    > ${hSigma * hSigma}.0::DOUBLE
+      |    > ${CusumH * CusumH}.0::DOUBLE
       |      * CAST(dd * ssq - tot * tot AS DOUBLE) AS alarm_pos,
       |  CAST(s_neg AS DOUBLE) * CAST(s_neg AS DOUBLE)
-      |    > ${hSigma * hSigma}.0::DOUBLE
+      |    > ${CusumH * CusumH}.0::DOUBLE
       |      * CAST(dd * ssq - tot * tot AS DOUBLE) AS alarm_neg
       |FROM s ORDER BY event_type, day_x""".stripMargin
 
@@ -1466,6 +1498,9 @@ object EventAnalytics {
     * not silently hash-mismatch). */
   private[graft] val markovOracleChannels = Seq("view", "click", "signup", "error")
 
+  /** Absorption rounds q190's Markov attribution iterates. */
+  final val MarkovRounds = 12
+
   /** Q190: Markov removal-effect attribution (Anderl et al. 2014 — the
     * data-driven alternative to last-touch): model the session journey as
     * a first-order Markov chain over channel states with absorbing `conv`
@@ -1489,7 +1524,7 @@ object EventAnalytics {
     * bounded-fetch contract — so the 5 scenario solves ride the driver;
     * at 100 TB the edge aggregate is the same one shuffle and the matrix
     * is still tiny. */
-  def qMarkovAttribution(t: Tables, rounds: Int = 12): DataFrame = {
+  def qMarkovAttribution(t: Tables): DataFrame = {
     val spark = t.events.sparkSession
     import spark.implicits._
     val edges = attributionEdges(t)
@@ -1516,7 +1551,7 @@ object EventAnalytics {
     def solve(es: Array[(String, String, Long, Long)]): Long = {
       val froms = es.map(_._1).distinct
       var v = Map("conv" -> 1000000L, "null" -> 0L) ++ froms.map(_ -> 0L)
-      for (_ <- 1 to rounds) {
+      for (_ <- 1 to MarkovRounds) {
         val next = froms.map { f =>
           var acc = 0L
           es.foreach { case (ef, et, cnt, tot) =>
@@ -1658,6 +1693,9 @@ object EventAnalytics {
       |       ELSE round(exp(CAST(cum AS DOUBLE) / 1000000.0::DOUBLE), 6) END AS s
       |FROM cums WHERE d > 0 ORDER BY t_min""".stripMargin
 
+  /** The chi-square(1) 5% critical value q222's log-rank test rejects at. */
+  final val LogRankCrit = 3.841
+
   /** Q222: log-rank test (Mantel 1966) — does conversion latency differ
     * between users whose FIRST event is a view and everyone else? The
     * hypothesis-test companion to q221's curve: at every death time,
@@ -1676,7 +1714,7 @@ object EventAnalytics {
     * Scale shape: q221's aggregates plus one per-(time, group) grid —
     * two literal groups EXPLODED over the distinct-time table (the
     * q210 no-BNLJ trick); windows partition by group. */
-  def qLogRank(t: Tables, crit: Double = 3.841): DataFrame = {
+  def qLogRank(t: Tables): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val wU = Window.partitionBy(col("user_id"))
       .orderBy(unix_micros(col("ts")), col("event_id"))
@@ -1749,13 +1787,13 @@ object EventAnalytics {
           (col("o1") * lit(1000000L) - col("e1_micro")).cast("double") /
           when(col("v_micro") === 0L, lit(null))
             .otherwise(col("v_micro").cast("double") * lit(1000000.0)))
-      .withColumn("reject", col("chi2") > lit(crit))
+      .withColumn("reject", col("chi2") > lit(LogRankCrit))
       .select(col("n1_users"), col("n2_users"), col("o1"), col("e1_micro"),
         col("v_micro"), col("e1"), col("v"), col("chi2"), col("reject"))
   }
 
   /** q222 oracle: the same grid, risk windows, micro terms and χ². */
-  def qLogRankSql(crit: Double = 3.841): String =
+  def qLogRankSql: String =
     s"""WITH ft AS (
       |  SELECT user_id,
       |    CASE WHEN event_type = 'view' THEN 'view_first' ELSE 'other' END AS g
@@ -1833,7 +1871,7 @@ object EventAnalytics {
       |  CAST(o1 * 1000000 - e1_micro AS DOUBLE)
       |    * CAST(o1 * 1000000 - e1_micro AS DOUBLE)
       |    / nullif(CAST(v_micro AS DOUBLE) * 1000000.0::DOUBLE, 0.0)
-      |    > $crit::DOUBLE AS reject
+      |    > $LogRankCrit::DOUBLE AS reject
       |FROM agg""".stripMargin
 
   /** The q190/q220 shared sessionize→truncate→transition-count oracle
@@ -1934,7 +1972,7 @@ object EventAnalytics {
     * idiom), then the 5 scenario solves unrolled as chained MATERIALIZED
     * CTEs — per round one aggregate over the ≤50-row edge table, BIGINT-
     * micro terms, every literal ::DOUBLE. */
-  def qMarkovAttributionSql(rounds: Int = 12): String = {
+  def qMarkovAttributionSql: String = {
     val head =
       s"""WITH $attributionEdgesCtes,
         |channels AS MATERIALIZED (
@@ -1952,7 +1990,7 @@ object EventAnalytics {
            |  FROM edges WHERE f <> '$c')""".stripMargin
     }
     val roundCtes = scen.flatMap { s =>
-      (1 to rounds).map { k =>
+      (1 to MarkovRounds).map { k =>
         val prev =
           if (k == 1)
             // v0: conv=1e6, everything else 0 — a missing row reads as 0
@@ -1972,7 +2010,7 @@ object EventAnalytics {
     }
     val starts = scen.map { s =>
       s"""s_$s AS (
-         |  SELECT COALESCE((SELECT vm FROM v_${s}_$rounds WHERE s = 'START'), 0) AS vm)""".stripMargin
+         |  SELECT COALESCE((SELECT vm FROM v_${s}_$MarkovRounds WHERE s = 'START'), 0) AS vm)""".stripMargin
     }
     val effects = markovOracleChannels.map { c =>
       s"SELECT (SELECT vm FROM s_base) - (SELECT vm FROM s_$c) AS eff"
@@ -2001,25 +2039,24 @@ object EventAnalytics {
   /** The q239/q240 shared per-user panel: deterministic md5 arm (the
     * q170 assignment discipline), pre-period activity x (events before
     * the cutoff) and post-period activity y — exact BIGINT counts. */
-  private def userPanel(t: Tables, salt: String,
-      cutoff: String): DataFrame =
+  private def userPanel(t: Tables): DataFrame =
     t.events.groupBy(col("user_id")).agg(
-        sum(when(col("ts").cast("date") < lit(cutoff).cast("date"), 1L)
+        sum(when(col("ts").cast("date") < lit(ExperimentCutoff).cast("date"), 1L)
           .otherwise(0L)).as("x"),
-        sum(when(col("ts").cast("date") >= lit(cutoff).cast("date"), 1L)
+        sum(when(col("ts").cast("date") >= lit(ExperimentCutoff).cast("date"), 1L)
           .otherwise(0L)).as("y"))
       .withColumn("arm",
-        conv(substring(md5(concat(lit(salt), lit(":"),
+        conv(substring(md5(concat(lit(ExperimentSalt), lit(":"),
           col("user_id").cast("string"))), 1, 8), 16, 10).cast("long") % 2)
 
-  private def userPanelCte(salt: String, cutoff: String): String =
+  private def userPanelCte: String =
     s"""users AS (
        |  SELECT user_id,
-       |    CAST(SUM(CASE WHEN CAST(CAST(ts AS TIMESTAMP) AS DATE) < DATE '$cutoff'
+       |    CAST(SUM(CASE WHEN CAST(CAST(ts AS TIMESTAMP) AS DATE) < DATE '$ExperimentCutoff'
        |             THEN 1 ELSE 0 END) AS BIGINT) AS x,
-       |    CAST(SUM(CASE WHEN CAST(CAST(ts AS TIMESTAMP) AS DATE) >= DATE '$cutoff'
+       |    CAST(SUM(CASE WHEN CAST(CAST(ts AS TIMESTAMP) AS DATE) >= DATE '$ExperimentCutoff'
        |             THEN 1 ELSE 0 END) AS BIGINT) AS y,
-       |    CAST('0x' || substr(md5('$salt' || ':' ||
+       |    CAST('0x' || substr(md5('$ExperimentSalt' || ':' ||
        |      CAST(user_id AS VARCHAR)), 1, 8) AS BIGINT) % 2 AS arm
        |  FROM events GROUP BY user_id)""".stripMargin
 
@@ -2040,9 +2077,8 @@ object EventAnalytics {
     *
     * Scale shape: one per-user aggregate, one 2-row arm aggregate with
     * the moments, one 1-row readout. */
-  def qCuped(t: Tables, salt: String = "exp1",
-      cutoff: String = "2024-01-03"): DataFrame = {
-    val users = userPanel(t, salt, cutoff)
+  def qCuped(t: Tables): DataFrame = {
+    val users = userPanel(t)
     val arms = users.groupBy(col("arm")).agg(
       count(lit(1)).as("n"), sum(col("x")).as("sx"), sum(col("y")).as("sy"),
       sum(col("x") * col("y")).as("sxy"),
@@ -2080,8 +2116,8 @@ object EventAnalytics {
   }
 
   /** q239 oracle: the same panel CTE, moments and IEEE sequences. */
-  def qCupedSql(salt: String = "exp1", cutoff: String = "2024-01-03"): String =
-    s"""WITH ${userPanelCte(salt, cutoff)},
+  def qCupedSql: String =
+    s"""WITH ${userPanelCte},
        |arms AS (
        |  SELECT arm, COUNT(*)::BIGINT AS n,
        |    CAST(SUM(x) AS BIGINT) AS sx, CAST(SUM(y) AS BIGINT) AS sy,
@@ -2141,9 +2177,8 @@ object EventAnalytics {
     *
     * Scale shape: identical to q239 — per-user aggregate, 2-row arm
     * frame, 1-row readout. */
-  def qDiffInDiff(t: Tables, salt: String = "exp1",
-      cutoff: String = "2024-01-03"): DataFrame = {
-    val users = userPanel(t, salt, cutoff)
+  def qDiffInDiff(t: Tables): DataFrame = {
+    val users = userPanel(t)
       .withColumn("d", col("y") - col("x"))
     val arms = users.groupBy(col("arm")).agg(
       count(lit(1)).as("n"), sum(col("x")).as("sx"), sum(col("y")).as("sy"),
@@ -2177,8 +2212,8 @@ object EventAnalytics {
   }
 
   /** q240 oracle: same panel, moments and IEEE sequences. */
-  def qDiffInDiffSql(salt: String = "exp1", cutoff: String = "2024-01-03"): String =
-    s"""WITH ${userPanelCte(salt, cutoff)},
+  def qDiffInDiffSql: String =
+    s"""WITH ${userPanelCte},
        |u AS (SELECT *, y - x AS d FROM users),
        |arms AS (
        |  SELECT arm, COUNT(*)::BIGINT AS n,
@@ -2216,6 +2251,9 @@ object EventAnalytics {
        |      / nullif(CAST(n_b AS DOUBLE), 0.0::DOUBLE)) AS did_se
        |FROM flat""".stripMargin
 
+  /** The allowed-lateness ladder, in minutes, q235 profiles. */
+  val LatenessDelaysMin: Seq[Long] = Seq(0L, 1L, 5L, 15L, 60L)
+
   /** Q235: watermark-lateness profile — for each candidate watermark
     * delay, how many events would a streaming job DROP? An event is late
     * by (running max event-time over everything that arrived before it)
@@ -2239,8 +2277,7 @@ object EventAnalytics {
     * cross-bucket offsets broadcast back, the window runs partitioned BY
     * BUCKET; then one explode over the bounded delay list (never a
     * range-condition nested-loop join) and one aggregate. */
-  def qLatenessProfile(t: Tables,
-      delaysMin: Seq[Long] = Seq(0L, 1L, 5L, 15L, 60L)): DataFrame = {
+  def qLatenessProfile(t: Tables): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.types._
     val spark = t.events.sparkSession
@@ -2269,7 +2306,7 @@ object EventAnalytics {
         when(col("pm") === Long.MinValue, 0L)
           .otherwise(greatest(col("pm") - col("us"), lit(0L))))
     late.select(col("late_us"),
-        explode(typedLit(delaysMin)).as("delay_min"))
+        explode(typedLit(LatenessDelaysMin)).as("delay_min"))
       .groupBy(col("delay_min"))
       .agg(count(lit(1)).as("n_events"),
         sum(when(col("late_us") > col("delay_min") * 60000000L, 1L)
@@ -2285,7 +2322,7 @@ object EventAnalytics {
   /** q235 oracle: the same lateness via the naive single global
     * exclusive-prefix window (plans differ, results hash-equal — the
     * q144/q169 contract) and an unnested delay list. */
-  def qLatenessProfileSql(delaysMin: Seq[Long] = Seq(0L, 1L, 5L, 15L, 60L)): String =
+  def qLatenessProfileSql: String =
     s"""WITH ev AS (
       |  SELECT event_id, epoch_us(CAST(ts AS TIMESTAMP)) AS us FROM events),
       |rm AS (
@@ -2296,13 +2333,16 @@ object EventAnalytics {
       |late AS (
       |  SELECT CASE WHEN pm IS NULL THEN 0
       |         ELSE greatest(pm - us, 0) END AS late_us FROM rm),
-      |d AS (SELECT CAST(unnest([${delaysMin.mkString(", ")}]) AS BIGINT) AS delay_min)
+      |d AS (SELECT CAST(unnest([${LatenessDelaysMin.mkString(", ")}]) AS BIGINT) AS delay_min)
       |SELECT delay_min, COUNT(*)::BIGINT AS n_events,
       |  CAST(SUM(CASE WHEN late_us > delay_min * 60000000 THEN 1 ELSE 0 END) AS BIGINT) AS n_late,
       |  CAST(SUM(CASE WHEN late_us > delay_min * 60000000 THEN 1 ELSE 0 END) AS DOUBLE)
       |    / nullif(CAST(COUNT(*) AS DOUBLE), 0.0::DOUBLE) AS frac_late,
       |  CAST(MAX(late_us) AS BIGINT) AS max_late_us
       |FROM late, d GROUP BY delay_min ORDER BY delay_min""".stripMargin
+
+  /** The largest lag q290's autocorrelation reports. */
+  final val AcfMaxLag = 7
 
   /** Q290: autocorrelation function of the daily event-count series,
     * lags 1..maxLag — the stationarity/seasonality diagnostic that sits
@@ -2319,7 +2359,7 @@ object EventAnalytics {
     * Scale shape: one corpus aggregate to daily counts; everything after
     * runs on the ≤|days|·maxLag bounded table (window + self-join —
     * bounded-table rule). */
-  def qAcf(t: Tables, maxLag: Int = 7): DataFrame = {
+  def qAcf(t: Tables): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val daily = t.events
       .groupBy(datediff(col("ts").cast("date"), lit("2024-01-01"))
@@ -2330,7 +2370,7 @@ object EventAnalytics {
     val st = daily
       .withColumn("x", count(lit(1)).over(w) * col("y") - sum(col("y")).over(w))
       .select(col("day_x"), col("x"))
-    val lags = explode(array((1 to maxLag).map(k => lit(k.toLong)): _*)).as("lag")
+    val lags = explode(array((1 to AcfMaxLag).map(k => lit(k.toLong)): _*)).as("lag")
     val a = st.select(col("day_x"), col("x").as("xa"), lags)
     val b = st.select(col("day_x").as("day_b"), col("x").as("xb"))
     val prods = a.join(b, col("day_b") === col("day_x") + col("lag"))
@@ -2352,7 +2392,7 @@ object EventAnalytics {
 
   /** q290 oracle: same daily census, centered-integer products over a
     * range(1, maxLag+1) lag table. */
-  def qAcfSql(maxLag: Int = 7): String =
+  def qAcfSql: String =
     s"""WITH daily AS MATERIALIZED (
       |  SELECT CAST(date_diff('day', DATE '2024-01-01',
       |      CAST(CAST(ts AS TIMESTAMP) AS DATE)) AS BIGINT) AS day_x,
@@ -2362,7 +2402,7 @@ object EventAnalytics {
       |  SELECT day_x,
       |    CAST(COUNT(*) OVER () * y - SUM(y) OVER () AS BIGINT) AS x
       |  FROM daily),
-      |lags AS (SELECT CAST(unnest(range(1, ${maxLag + 1})) AS BIGINT) AS lag),
+      |lags AS (SELECT CAST(unnest(range(1, ${AcfMaxLag + 1})) AS BIGINT) AS lag),
       |num AS (
       |  SELECT l.lag, COUNT(*)::BIGINT AS n_pairs,
       |    CAST(COALESCE(SUM(a.x * b.x), 0) AS BIGINT) AS num_scaled
@@ -2379,8 +2419,11 @@ object EventAnalytics {
       |FROM lags l LEFT JOIN num n ON n.lag = l.lag
       |JOIN den d ON d.lag = l.lag ORDER BY l.lag""".stripMargin
 
+  /** The highest harmonic q296's periodogram evaluates. */
+  final val PeriodogramMaxK = 10
+
   /** Q296: periodogram of the daily event-count series — the DFT power
-    * at harmonics k = 1..maxK (up to Nyquist, 2k ≤ N), the frequency-
+    * at harmonics k = 1..PeriodogramMaxK (up to Nyquist, 2k ≤ N), the frequency-
     * domain face of the q290 ACF / q192 seasonal pair: a lag-7 ACF spike
     * and a k = N/7 periodogram peak are the same weekly season seen from
     * the two sides of the Wiener–Khinchin identity.
@@ -2396,7 +2439,7 @@ object EventAnalytics {
     *
     * Scale shape: one corpus aggregate to daily counts; the k × days
     * grid (≤ 10·|days|) rides the bounded-table window rule. */
-  def qPeriodogram(t: Tables, maxK: Int = 10): DataFrame = {
+  def qPeriodogram(t: Tables): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy(lit(0))
     val daily = t.events
@@ -2407,7 +2450,7 @@ object EventAnalytics {
       .withColumn("tt",
         row_number().over(w.orderBy(col("day_x"))).cast("long") - lit(1L))
       .withColumn("n", count(lit(1)).over(w))
-    val ks = explode(array((1 to maxK).map(k => lit(k.toLong)): _*)).as("k")
+    val ks = explode(array((1 to PeriodogramMaxK).map(k => lit(k.toLong)): _*)).as("k")
     idx.select(col("tt"), col("n"), col("y"), ks)
       .filter(col("k") * lit(2L) <= col("n"))
       .withColumn("theta",
@@ -2427,7 +2470,7 @@ object EventAnalytics {
 
   /** q296 oracle: same dense day index, mod-reduced angle, micro trig
     * terms, BIGINT DFT sums. */
-  def qPeriodogramSql(maxK: Int = 10): String =
+  def qPeriodogramSql: String =
     s"""WITH daily AS MATERIALIZED (
       |  SELECT CAST(date_diff('day', DATE '2024-01-01',
       |      CAST(CAST(ts AS TIMESTAMP) AS DATE)) AS BIGINT) AS day_x,
@@ -2438,7 +2481,7 @@ object EventAnalytics {
       |    CAST(ROW_NUMBER() OVER (ORDER BY day_x) - 1 AS BIGINT) AS tt,
       |    CAST(COUNT(*) OVER () AS BIGINT) AS n
       |  FROM daily),
-      |ks AS (SELECT CAST(unnest(range(1, ${maxK + 1})) AS BIGINT) AS k),
+      |ks AS (SELECT CAST(unnest(range(1, ${PeriodogramMaxK + 1})) AS BIGINT) AS k),
       |terms AS (
       |  SELECT k.k, i.n, i.y,
       |    CAST(round(cos(2.0::DOUBLE * pi() * CAST((k.k * i.tt) % i.n AS DOUBLE)
@@ -2596,6 +2639,9 @@ object EventAnalytics {
       .select(col("i"), col("j"), col("day_j"), col("sse_micro"))
   }
 
+  /** Segments q304's optimal segmentation fits. */
+  final val SegmentsK = 4
+
   /** Q304: optimal k-segmentation of the daily event-count series by
     * exact dynamic programming (Bellman 1961) — the best piecewise-
     * constant fit with m = 1..k segments, the offline gold standard that
@@ -2613,7 +2659,7 @@ object EventAnalytics {
     * Scale shape: one corpus aggregate to daily counts; the DP runs on
     * the ≤|days|² bounded SSE table (sequence() explode, no range
     * join). */
-  def qSegmentationDp(t: Tables, k: Int = 4): DataFrame = {
+  def qSegmentationDp(t: Tables): DataFrame = {
     val sse = segmentSse(t).localCheckpoint() // feeds every DP round
     var dp = sse.filter(col("i") === 1L)
       .select(lit(1L).as("m"), col("j"), col("day_j"),
@@ -2621,7 +2667,7 @@ object EventAnalytics {
       .localCheckpoint()
     var out = dp
     var m = 2
-    while (m <= k) {
+    while (m <= SegmentsK) {
       val prev = dp.select((col("j") + lit(1L)).as("i"),
         col("dp_micro").as("prev_micro"))
       val cand = sse.join(prev, Seq("i"))
@@ -2643,8 +2689,8 @@ object EventAnalytics {
 
   /** q304 oracle: the same prefix/SSE scaffold + the DP rounds unrolled
     * as chained MATERIALIZED CTEs. */
-  def qSegmentationDpSql(k: Int = 4): String = {
-    val steps = (2 to k).map { m =>
+  def qSegmentationDpSql: String = {
+    val steps = (2 to SegmentsK).map { m =>
       s"""cand$m AS (
          |  SELECT s.j, s.day_j,
          |    MIN((p.dp_micro + s.sse_micro) * 64 + s.i) AS enc_min
@@ -2656,7 +2702,7 @@ object EventAnalytics {
          |    CAST(enc_min % 64 AS BIGINT) AS split_i
          |  FROM cand$m)""".stripMargin
     }.mkString(",\n")
-    val union = (1 to k).map(m => s"SELECT * FROM dp$m").mkString("\n  UNION ALL ")
+    val union = (1 to SegmentsK).map(m => s"SELECT * FROM dp$m").mkString("\n  UNION ALL ")
     s"""WITH daily AS MATERIALIZED (
        |  SELECT CAST(date_diff('day', DATE '2024-01-01',
        |      CAST(CAST(ts AS TIMESTAMP) AS DATE)) AS BIGINT) AS day_x,

@@ -215,6 +215,9 @@ object Layout {
       .orderBy(col("layout"))
   }
 
+  /** q155's target bytes per output file. */
+  final val CompactionTarget = 65536L
+
   /** Q155: compaction planner — the small-files fix every 100 TB lake
     * runs nightly (Delta OPTIMIZE / Iceberg rewrite_data_files): pack
     * documents in doc_id (write) order into target-size output files of
@@ -231,7 +234,7 @@ object Layout {
     * doc_id order, so the prefix — and every file boundary — is exact.
     * All-BIGINT arithmetic; the oracle replays it with a naive global
     * window (plans differ, results hash-equal — the q144 contract). */
-  def q155CompactionPlan(t: Tables, target: Long = 65536L): DataFrame = {
+  def q155CompactionPlan(t: Tables, target: Long = CompactionTarget): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.types._
     val spark = t.spark
@@ -261,14 +264,14 @@ object Layout {
       .orderBy(col("file_id"))
   }
 
-  def q155Sql(target: Long = 65536L): String =
+  def q155Sql: String =
     s"""WITH d AS (
        |  SELECT doc_id, CAST(n_chars AS BIGINT) AS nc,
        |    COALESCE(CAST(SUM(n_chars) OVER (ORDER BY doc_id
        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS BIGINT),
        |      0) AS cum_before
        |  FROM documents)
-       |SELECT cum_before // $target AS file_id,
+       |SELECT cum_before // $CompactionTarget AS file_id,
        |  COUNT(*)::BIGINT AS n_docs, CAST(SUM(nc) AS BIGINT) AS sum_chars,
        |  min(doc_id) AS first_doc, max(doc_id) AS last_doc
        |FROM d GROUP BY file_id ORDER BY file_id""".stripMargin

@@ -780,8 +780,11 @@ object Multimodal {
       crcs.map { case (i, len, _) => (i, len, ok) }
     })
 
+  /** Frames q146 samples per video (evenly strided). */
+  final val FrameSampleK = 4
+
   /** Q146: video frame sampling — the frame-sample step of a multimodal
-    * pipeline (every k-th frame up to `k` frames per video), against REAL
+    * pipeline (every k-th frame up to `FrameSampleK` frames per video), against REAL
     * container payloads: per-row AVI synthesis (frame count 3..8 derived
     * from doc fields), movi chunk walk (Codecs.aviFrameChunks), CRC32 per
     * sampled frame. Emits (media_id, frame_idx, frame_len, crc_ok).
@@ -797,7 +800,7 @@ object Multimodal {
     * work (≤8 frames × small DIBs), explode factor ≤ k — linear; payloads
     * never shuffle (synthesized and parsed inside one task, the q72
     * fanout-first invariant). */
-  def qFrameSample(t: Tables, k: Int = 4): DataFrame =
+  def qFrameSample(t: Tables): DataFrame =
     t.fanout(t.documents).filter(col("doc_id") % 3 === 2)
       .select(col("doc_id").as("media_id"),
         ((col("n_chars") % 128 + 32) % 32 + 8).cast("int").as("vw"),
@@ -805,7 +808,7 @@ object Multimodal {
         (col("doc_id") % 6 + 3).cast("int").as("nf"))
       .select(col("media_id"),
         explode(frameSampleUdf(col("media_id"), col("vw"), col("vh"),
-          col("nf"), lit(k))).as("fr"))
+          col("nf"), lit(FrameSampleK))).as("fr"))
       .select(col("media_id"), col("fr._1").as("frame_idx"),
         col("fr._2").as("frame_len"), col("fr._3").as("crc_ok"))
       .orderBy(col("media_id"), col("frame_idx"))
@@ -846,11 +849,10 @@ object Multimodal {
     * Scale shape: per-row bounded codec work on the fanned-out scan
     * (q72's fanout-first invariant), ONE chunk equi-join (never
     * all-pairs), one aggregate per side. */
-  def qImageDedup(t: Tables, maxHamming: Int = 3): DataFrame =
+  def qImageDedup(t: Tables): DataFrame =
     selfRediscovery(
       t.fanout(t.documents)
-        .select(col("doc_id").as("media_id"), dhashPairUdf(col("doc_id")).as("c")),
-      maxHamming)
+        .select(col("doc_id").as("media_id"), dhashPairUdf(col("doc_id")).as("c")))
 
   /** The shared q236/q237 search: chunk-blocked self-join between the
     * original and variant code columns, exact hamming verify, and the
@@ -858,7 +860,8 @@ object Multimodal {
     * code_t)); the localCheckpoint gives one codec-pipeline eval per row
     * (the q191 anti-re-evaluation barrier — the struct is referenced
     * per join side otherwise). */
-  private def selfRediscovery(pairs: DataFrame, maxHamming: Int): DataFrame = {
+  private def selfRediscovery(pairs: DataFrame): DataFrame = {
+    val maxHamming = 3
     val codes = pairs
       .select(col("media_id"), col("c._1").as("code_o"), col("c._2").as("code_t"))
       .localCheckpoint()
@@ -909,11 +912,10 @@ object Multimodal {
     * clip must rediscover its resampled copy at hamming 0; the oracle
     * replays the id set and asserts the booleans TRUE — a codec,
     * resample, or fingerprint regression fails the driver compare. */
-  def qAudioDedup(t: Tables, maxHamming: Int = 3): DataFrame =
+  def qAudioDedup(t: Tables): DataFrame =
     selfRediscovery(
       t.fanout(t.documents)
-        .select(col("doc_id").as("media_id"), audioHashPairUdf(col("doc_id")).as("c")),
-      maxHamming)
+        .select(col("doc_id").as("media_id"), audioHashPairUdf(col("doc_id")).as("c")))
 
   /** The q267 per-row codec pipeline: synthesize a cell-painted AVI,
     * demux every frame back out of the container, dHash each; build the
@@ -1004,7 +1006,7 @@ object Multimodal {
 
   /** q146 oracle: stride sampling replayed as list_slice(range(0, nf,
     * step)); frame_len = padded DIB row length × height. */
-  def qFrameSampleSql(k: Int = 4): String =
+  def qFrameSampleSql: String =
     s"""WITH v AS (
        |  SELECT doc_id AS media_id,
        |    (n_chars % 128 + 32) % 32 + 8 AS vw,
@@ -1015,7 +1017,7 @@ object Multimodal {
        |  CAST(((vw * 3 + 3) // 4) * 4 * vh AS INT) AS frame_len,
        |  TRUE AS crc_ok
        |FROM (SELECT media_id, vw, vh,
-       |        unnest(list_slice(range(0, CAST(nf AS INT), greatest(CAST(nf // $k AS INT), 1)), 1, $k)) AS frame_idx
+       |        unnest(list_slice(range(0, CAST(nf AS INT), greatest(CAST(nf // $FrameSampleK AS INT), 1)), 1, $FrameSampleK)) AS frame_idx
        |      FROM v)
        |ORDER BY media_id, frame_idx""".stripMargin
 }

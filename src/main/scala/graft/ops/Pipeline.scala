@@ -99,12 +99,12 @@ object Pipeline {
     *  1. dedup: the q32 fuzzy-pair graph closed into components (q37's
     *     star contraction), min-id representative kept per component;
     *  2. cluster: the q119 Lloyd rounds (first-k-surviving-ids init,
-    *     `updates` round(6)-mean updates, argmax-cosine assignment) over
+    *     `Clustering.KmeansUpdates` round(6)-mean updates, argmax-cosine assignment) over
     *     the kept documents' embeddings — the deterministic face of the
     *     reference's k-means stage (cluster.py:51-53 intent);
     *  3. summarize: the q120 LexRank power iteration per CLUSTER (grp =
     *     cid instead of source) — tf·idf weights (the q102 math as the
-    *     LexRank weight sub-stage), thresholded cosine graph, `iterations`
+    *     LexRank weight sub-stage), thresholded cosine graph, `LexrankIterations`
     *     damped rounds — top-1 doc per cluster (summarize.py head-1
     *     intent).
     *
@@ -119,9 +119,7 @@ object Pipeline {
     * shuffle into bounded per-cluster kernels. The kept set is
     * localCheckpointed once (doc_id + text, small rows) because three
     * branches and a bounded count consume it — the r9 barrier rule. */
-  def qNewsPipelineGate(t: Tables, k: Int = 8, updates: Int = 2,
-      threshold: Double = 0.1, damping: Double = 0.85,
-      iterations: Int = 10): DataFrame = {
+  def qNewsPipelineGate(t: Tables): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val reps = Dedup.fuzzyLabelsCached(t)
       .select(col("label").as("doc_id")).distinct()
@@ -137,15 +135,16 @@ object Pipeline {
     // rounds); unpersist before returning — the ADVICE r11 leak fix,
     // matching the qRankOverlap/qCohensKappa try/finally pattern
     val assigned = try {
-      val init = emb.orderBy(col("vec_id")).limit(k)
+      val init = emb.orderBy(col("vec_id")).limit(Clustering.KmeansK)
         .collect().map(r => (r.getLong(0), r.getSeq[Double](1))).toSeq
-      Clustering.lloydRounds(emb, init, updates).localCheckpoint()
+      Clustering.lloydRounds(emb, init, Clustering.KmeansUpdates).localCheckpoint()
     } finally emb.unpersist()
     val members = assigned.select(col("vec_id").as("doc_id"), col("cid"))
       .join(kept, Seq("doc_id"))
     val scored = Summarize.lexrankGrouped(
       members.select(col("cid"), col("doc_id"), col("text")),
-      "cid", "doc_id", "text", threshold, damping, iterations, stem = false)
+      "cid", "doc_id", "text", iterations = Summarize.LexrankIterations,
+      stem = false)
     val w = Window.partitionBy(col("cid"))
       .orderBy(round(col("score"), 6).desc, col("doc_id"))
     val tops = scored.withColumn("rn", row_number().over(w))
@@ -165,17 +164,14 @@ object Pipeline {
     * CTEs (kept-subset emb, first-k-surviving init) + the q120 LexRank
     * chain with grp = cluster, all `AS MATERIALIZED` per the r6 long-chain
     * rule, composed into one program. */
-  def qNewsPipelineGateSql(k: Int = 8, updates: Int = 2,
-      threshold: Double = 0.1, damping: Double = 0.85,
-      iterations: Int = 10): String = {
-    val kmeans = Clustering.kmeansRoundCtes(updates,
+  def qNewsPipelineGateSql: String = {
+    val kmeans = Clustering.kmeansRoundCtes(Clustering.KmeansUpdates,
       """emb AS MATERIALIZED (
         |  SELECT e0.vec_id, CAST(e0.embedding AS DOUBLE[]) AS e
         |  FROM embeddings e0 JOIN kept ON e0.vec_id = kept.doc_id)""".stripMargin,
-      s"c0 AS MATERIALIZED (SELECT vec_id AS cid, e AS c FROM emb ORDER BY vec_id LIMIT $k)",
+      s"c0 AS MATERIALIZED (SELECT vec_id AS cid, e AS c FROM emb ORDER BY vec_id LIMIT ${Clustering.KmeansK})",
       materialized = true)
-    val lexrank = Summarize.lexrankPowerCtes(threshold, damping, iterations,
-      materialized = true)
+    val lexrank = Summarize.lexrankPowerCtes(materialized = true)
     s"""WITH RECURSIVE ${Dedup.componentsRepCtes},
        |kept AS MATERIALIZED (SELECT DISTINCT keep_id AS doc_id FROM rep),
        |kdocs AS MATERIALIZED (
@@ -183,7 +179,7 @@ object Pipeline {
        |$kmeans,
        |nodes AS MATERIALIZED (
        |  SELECT a.cid AS grp, a.vec_id AS sid, kd.text AS txt
-       |  FROM a$updates a JOIN kdocs kd ON kd.doc_id = a.vec_id),
+       |  FROM a${Clustering.KmeansUpdates} a JOIN kdocs kd ON kd.doc_id = a.vec_id),
        |$lexrank,
        |sizes AS (SELECT grp, CAST(COUNT(*) AS BIGINT) AS n_members
        |          FROM nodes GROUP BY grp),
@@ -192,7 +188,7 @@ object Pipeline {
        |    SELECT grp, sid, round(score, 6) AS score,
        |      ROW_NUMBER() OVER (PARTITION BY grp
        |        ORDER BY round(score, 6) DESC, sid) AS rnk
-       |    FROM s$iterations) WHERE rnk = 1)
+       |    FROM s${Summarize.LexrankIterations}) WHERE rnk = 1)
        |SELECT CAST(s.grp AS BIGINT) AS cluster, s.n_members,
        |  (SELECT CAST(COUNT(*) AS BIGINT) FROM kept) AS n_kept,
        |  CAST(SUM(s.n_members) OVER () AS BIGINT) AS n_clustered,

@@ -2,7 +2,6 @@ package graft.ops
 
 import graft.functions.html
 import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StringType
 
@@ -27,8 +26,8 @@ object ServerFlow {
 
   /** P7: the reference's query_heuristic (reddit_api.py:55-66) — 0 for
     * reserved section names, 1 otherwise. */
-  def sectionScore(line: Column): Column =
-    when(line.isin(ReservedSections: _*), 0).otherwise(1)
+  def sectionScore(line: String): Int =
+    if (ReservedSections.contains(line)) 0 else 1
 
   /** W3 + F8, reddit_api flavor (reddit_api.py:94-103): stable-sort
     * sections by score desc (original order preserved within ties — Python
@@ -37,24 +36,29 @@ object ServerFlow {
     * `"title" +"section"` from realtimeapi.py's construct_query
     * (realtimeapi.py:98-101). With `sortByTocLevel`, realtimeapi.py:121-123's
     * pre-sort by toclevel desc makes the order (score desc, toclevel desc,
-    * pos). */
+    * pos). A table of contents is a few dozen rows, so it is collected once
+    * and ranked on the driver, as the reference does with `sorted`; the
+    * result is a local frame of (section_id, line, query) by section_id. */
   def sectionsToQueries(sections: DataFrame, pageTitle: String,
-      numQueries: Int = 10, sortByTocLevel: Boolean = false): DataFrame = {
-    val order = Seq(col("score").desc) ++
-      (if (sortByTocLevel) Seq(col("toclevel").desc) else Nil) :+ col("pos")
-    val top = sections
-      .withColumn("score", sectionScore(col("line")))
-      .withColumn("rank", row_number().over(Window.orderBy(order: _*)))
-      .filter(col("rank") <= numQueries)
-      .select(col("rank").cast("int").as("section_id"), col("line"))
-    val uncategorized = sections.sparkSession.range(1)
-      .select(lit(0).as("section_id"), lit("Uncategorized").as("line"))
-    uncategorized.unionByName(top)
+      sortByTocLevel: Boolean = false): DataFrame = {
+    val spark = sections.sparkSession
+    import spark.implicits._
+    // null toclevel sorts last under desc, null pos first under asc, as in
+    // a Spark sort
+    val toc = sections
+      .select(col("line"), col("toclevel").cast("int"), col("pos").cast("long"))
+      .collect().toSeq.map { r =>
+        (r.getString(0), if (r.isNullAt(1)) Int.MinValue else r.getInt(1),
+          if (r.isNullAt(2)) Long.MinValue else r.getLong(2))
+      }
+    val top = toc
+      .sortBy { case (line, level, pos) =>
+        (-sectionScore(line), if (sortByTocLevel) -level.toLong else 0L, pos) }
+      .take(10).map(_._1)
+    ((0, "Uncategorized") +: top.zipWithIndex.map { case (line, i) => (i + 1, line) })
+      .toDF("section_id", "line")
       .withColumn("query",
         concat(lit("\"" + pageTitle + "\" +\""), col("line"), lit("\"")))
-      // at most numQueries + 1 rows: one task sorts them, where orderBy
-      // would add a sampling job and a range shuffle
-      .coalesce(1).sortWithinPartitions(col("section_id"))
   }
 
   /** P3: source domain derivation (reddit.py:50-53) — drop the TLD, take

@@ -51,6 +51,10 @@ object Similarity {
       .select(col("probe_id"), col("rank"), col("neighbor_id"), round(col("sim"), 6).as("sim"))
   }
 
+  /** The ANN rungs' k: every audit scores its top-`AnnK` neighbors of the
+    * standard probes against the exact top-`AnnK` (`exactTopKCached`). */
+  final val AnnK = 10
+
   /** Exact-cosine top-k baseline for the STANDARD probes (vec_id < 10)
     * over the full embeddings corpus, a `graft.Shared` entry: q38 plus
     * every ANN rung's in-plan recall join (q40/q56/q81/q137/q323) and the q165/q166
@@ -58,10 +62,13 @@ object Similarity {
     * deterministic, so a hit is bit-identical and every downstream oracle
     * is unaffected; Bench's prewarm builds it once so no timed query pays
     * another's baseline. */
-  private[graft] def exactTopKCached(t: Tables, k: Int): DataFrame =
-    Shared(t, s"exact_topk#$k")(
-      bruteForceTopK(t.embeddings, t.embeddings.filter(col("vec_id") < 10), k)
+  private[graft] def exactTopKCached(t: Tables): DataFrame =
+    Shared(t, "exact_topk")(
+      bruteForceTopK(t.embeddings, t.embeddings.filter(col("vec_id") < 10), AnnK)
         .localCheckpoint())
+
+  /** The cosine threshold of the shared pair graph (q39, q64, q313). */
+  final val PairThreshold = 0.4
 
   /** Exact 0.4-cosine pair graph over the embeddings corpus, a
     * `graft.Shared` entry like exactTopKCached: q39 (qCosinePairs), q64
@@ -71,17 +78,17 @@ object Similarity {
     * and every downstream oracle is unaffected; Bench's prewarm builds
     * it once so no timed query pays another's graph. */
   private[graft] def cosinePairs04Cached(t: Tables): DataFrame =
-    Shared(t, "cosine_pairs#0.4")(
-      cosinePairs(t.embeddings, 0.4, exactOnly = true).localCheckpoint())
+    Shared(t, "cosine_pairs")(
+      cosinePairs(t.embeddings, PairThreshold, exactOnly = true).localCheckpoint())
 
   /** Oracle-checked ANN baseline: top-10 cosine neighbors for probes
     * vec_id < 10. */
   def qKnnBruteForce(t: Tables): DataFrame =
-    exactTopKCached(t, 10)
+    exactTopKCached(t)
       .orderBy(col("probe_id"), col("rank"))
 
   val qKnnBruteForceSql: String =
-    """WITH sims AS (
+    s"""WITH sims AS (
       |  SELECT p.vec_id AS probe_id, n.vec_id AS neighbor_id,
       |    list_cosine_similarity(CAST(p.embedding AS DOUBLE[]), CAST(n.embedding AS DOUBLE[])) AS s
       |  FROM (SELECT * FROM embeddings WHERE vec_id < 10) p
@@ -91,7 +98,7 @@ object Similarity {
       |    ROW_NUMBER() OVER (PARTITION BY probe_id ORDER BY s DESC, neighbor_id) AS rank
       |  FROM sims)
       |SELECT probe_id, CAST(rank AS INT) AS rank, neighbor_id, round(s, 6) AS sim
-      |FROM ranked WHERE rank <= 10 ORDER BY probe_id, rank""".stripMargin
+      |FROM ranked WHERE rank <= $AnnK ORDER BY probe_id, rank""".stripMargin
 
   /** Exact all-pairs cosine scoring: one side broadcast as primitive
     * arrays, the other streamed through mapPartitions — the dense-scoring
@@ -101,7 +108,7 @@ object Similarity {
     *
     * Scale note: exact all-pairs is inherently O(n²·d) — this operator is
     * the small-corpus / per-bucket kernel; the corpus-scale near-dup path
-    * is LSH (lshTopK / Dedup.lshCandidatePairs) which bounds candidates
+    * is LSH (lshTopK / Dedup.governedLshCandidatePairs) which bounds candidates
     * before exact scoring. */
   def cosinePairsExact(vectors: DataFrame, threshold: Double): DataFrame = {
     val spark = vectors.sparkSession
@@ -253,11 +260,14 @@ object Similarity {
       .orderBy(col("id_a"), col("id_b"))
 
   val qCosinePairsSql: String =
-    """SELECT a.vec_id AS id_a, b.vec_id AS id_b,
+    s"""SELECT a.vec_id AS id_a, b.vec_id AS id_b,
       |  round(list_cosine_similarity(CAST(a.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[])), 6) AS sim
       |FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
-      |WHERE list_cosine_similarity(CAST(a.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[])) > 0.4
+      |WHERE list_cosine_similarity(CAST(a.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[])) > $PairThreshold
       |ORDER BY id_a, id_b""".stripMargin
+
+  /** The max-cosine-to-eval above which q251 flags a train vector. */
+  final val SemanticDecontamThreshold = 0.4
 
   /** Q251: semantic decontamination audit — the embedding-space complement
     * of q79's gram-overlap decontamination (the OpenAI / Llama "semantic
@@ -273,7 +283,7 @@ object Similarity {
     * a growing corpus), so eval×corpus is a broadcast scan — linear in
     * train size, one shuffle for the per-label aggregate. The same shape
     * q38/q153 use (PlanAuditSpec-allowlisted semantics). */
-  def qSemanticDecontamination(t: Tables, threshold: Double = 0.4): DataFrame = {
+  def qSemanticDecontamination(t: Tables): DataFrame = {
     val bucket =
       conv(substring(md5(col("vec_id").cast("string")), 1, 4), 16, 10)
         .cast("long") % 10
@@ -288,7 +298,7 @@ object Similarity {
       .agg(max(col("s")).as("max_sim"))
       .groupBy(col("label"))
       .agg(count(lit(1)).as("n_train"),
-        sum(when(col("max_sim") > lit(threshold), 1L).otherwise(0L))
+        sum(when(col("max_sim") > lit(SemanticDecontamThreshold), 1L).otherwise(0L))
           .as("n_flagged"),
         sum(round(col("max_sim") * lit(1000000.0)).cast("long"))
           .as("sum_max_sim_micro"),
@@ -302,7 +312,7 @@ object Similarity {
 
   /** q251 oracle: same md5 eval carve-out, max list_cosine_similarity per
     * train vector (q38 float parity), micro-BIGINT mean. */
-  def qSemanticDecontaminationSql(threshold: Double = 0.4): String =
+  def qSemanticDecontaminationSql: String =
     s"""WITH e AS (
       |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v, label,
       |    CAST('0x' || substr(md5(CAST(vec_id AS VARCHAR)), 1, 4) AS BIGINT)
@@ -315,7 +325,7 @@ object Similarity {
       |  CROSS JOIN (SELECT * FROM e WHERE is_eval) s
       |  GROUP BY t.vec_id, t.label)
       |SELECT label, COUNT(*)::BIGINT AS n_train,
-      |  CAST(SUM(CASE WHEN max_sim > $threshold::DOUBLE THEN 1 ELSE 0 END)
+      |  CAST(SUM(CASE WHEN max_sim > $SemanticDecontamThreshold::DOUBLE THEN 1 ELSE 0 END)
       |    AS BIGINT) AS n_flagged,
       |  CAST(SUM(CAST(round(max_sim * 1000000.0::DOUBLE) AS BIGINT)) AS DOUBLE)
       |    / 1000000.0::DOUBLE / CAST(COUNT(*) AS DOUBLE) AS mean_max_sim,
@@ -425,7 +435,7 @@ object Similarity {
     * recall_at_k column for the driver). */
   def qKnnLsh(t: Tables): DataFrame = {
     val probes = t.embeddings.filter(col("vec_id") < 10)
-    withRecallAtK(lshTopK(t.embeddings, probes, 10), exactTopKCached(t, 10), 10)
+    withRecallAtK(lshTopK(t.embeddings, probes, AnnK), exactTopKCached(t), AnnK)
       .orderBy(col("probe_id"), col("rank"))
   }
 
@@ -489,8 +499,8 @@ object Similarity {
     * floor asserted in SimilaritySpec AND emitted as recall_at_k). */
   def qKnnIvf(t: Tables): DataFrame = {
     val probes = t.embeddings.filter(col("vec_id") < 10)
-    withRecallAtK(ivfTopK(t.embeddings, probes, 10, index = Some(t)),
-      exactTopKCached(t, 10), 10)
+    withRecallAtK(ivfTopK(t.embeddings, probes, AnnK, index = Some(t)),
+      exactTopKCached(t), AnnK)
       .orderBy(col("probe_id"), col("rank"))
   }
 
@@ -515,7 +525,7 @@ object Similarity {
   private[graft] def prewarmShared(t: Tables): Seq[(String, Double)] = Seq(
     Shared.timed("ivf_index")(qKnnIvf(t)),
     Shared.timed("pq_index")(qKnnPq(t)),
-    Shared.timed("exact_topk")(exactTopKCached(t, 10).count()),
+    Shared.timed("exact_topk")(exactTopKCached(t).count()),
     Shared.timed("cosine_pairs")(cosinePairs04Cached(t)))
 
   // ------------------------------------------------- SQ8 quantized path
@@ -604,7 +614,7 @@ object Similarity {
     * SimilaritySpec, recall_at_k emitted for the driver). */
   def qKnnSq8(t: Tables): DataFrame = {
     val probes = t.embeddings.filter(col("vec_id") < 10)
-    withRecallAtK(sq8TopK(t.embeddings, probes, 10), exactTopKCached(t, 10), 10)
+    withRecallAtK(sq8TopK(t.embeddings, probes, AnnK), exactTopKCached(t), AnnK)
       .orderBy(col("probe_id"), col("rank"))
   }
 
@@ -748,8 +758,8 @@ object Similarity {
     // 8x rerank budget: 8-byte codes on isotropic noise make the ADC
     // ordering the lossiest of the ladder; the rerank set is still
     // k-proportional and the scan still reads only codes
-    withRecallAtK(pqTopK(t.embeddings, probes, 10, rerank = 80, index = Some(t)),
-      exactTopKCached(t, 10), 10)
+    withRecallAtK(pqTopK(t.embeddings, probes, AnnK, rerank = 80, index = Some(t)),
+      exactTopKCached(t), AnnK)
       .orderBy(col("probe_id"), col("rank"))
   }
 
@@ -772,7 +782,7 @@ object Similarity {
     * driver-visible per method in the rows-only ANN ladder queries
     * (q40/q56/q81/q137) — this row set is the gate; AnnAuditSpec still
     * pins the floors in-process. */
-  def qAnnRecallAudit(t: Tables, k: Int = 10): DataFrame = {
+  def qAnnRecallAudit(t: Tables): DataFrame = {
     // pass_floor is vacuously TRUE when the probe set is empty: sf dirs
     // with shifted id spaces (the sf1.0 ScaleUp ids) have no vec_id < 10
     // rows, mean_recall is then NULL and a bare `NULL >= floor` would
@@ -781,7 +791,7 @@ object Similarity {
       ann.select(col("probe_id"), col("recall_at_k")).distinct()
         .agg(count(lit(1)).as("n_probes"),
           round(avg(col("recall_at_k")), 4).as("mean_recall"))
-        .select(lit(name).as("method"), lit(k).as("k"), col("n_probes"),
+        .select(lit(name).as("method"), lit(AnnK).as("k"), col("n_probes"),
           lit(floor).as("floor"),
           coalesce(col("mean_recall") >= floor, col("n_probes") === 0)
             .as("pass_floor"))
@@ -800,7 +810,7 @@ object Similarity {
     val overall = per.agg(
         sum(col("n_probes")).as("n_probes"),
         min(col("pass_floor")).as("pass_floor"))
-      .select(lit("all").as("method"), lit(k).as("k"), col("n_probes"),
+      .select(lit("all").as("method"), lit(AnnK).as("k"), col("n_probes"),
         lit(null).cast("double").as("floor"),
         col("pass_floor"))
     per.unionAll(overall).orderBy(col("method"))
@@ -808,16 +818,19 @@ object Similarity {
 
   /** q121 oracle: probe count exact from the parquet; floors literal;
     * pass_floor asserted TRUE per method and on the "all" AND-row. */
-  def qAnnRecallAuditSql(k: Int = 10): String =
+  def qAnnRecallAuditSql: String =
     s"""WITH np AS (SELECT CAST(COUNT(*) AS BIGINT) AS n
        |            FROM embeddings WHERE vec_id < 10)
-       |SELECT 'all' AS method, $k AS k, CAST(4 * n AS BIGINT) AS n_probes,
+       |SELECT 'all' AS method, $AnnK AS k, CAST(4 * n AS BIGINT) AS n_probes,
        |       CAST(NULL AS DOUBLE) AS floor, TRUE AS pass_floor FROM np
-       |UNION ALL SELECT 'ivf', $k, n, CAST(0.375 AS DOUBLE), TRUE FROM np
-       |UNION ALL SELECT 'pq', $k, n, CAST(0.3 AS DOUBLE), TRUE FROM np
-       |UNION ALL SELECT 'sq8', $k, n, CAST(0.9 AS DOUBLE), TRUE FROM np
-       |UNION ALL SELECT 'srp_lsh', $k, n, CAST(0.5 AS DOUBLE), TRUE FROM np
+       |UNION ALL SELECT 'ivf', $AnnK, n, CAST(0.375 AS DOUBLE), TRUE FROM np
+       |UNION ALL SELECT 'pq', $AnnK, n, CAST(0.3 AS DOUBLE), TRUE FROM np
+       |UNION ALL SELECT 'sq8', $AnnK, n, CAST(0.9 AS DOUBLE), TRUE FROM np
+       |UNION ALL SELECT 'srp_lsh', $AnnK, n, CAST(0.5 AS DOUBLE), TRUE FROM np
        |ORDER BY method""".stripMargin
+
+  /** Hamming candidates q166 reranks exactly per probe. */
+  final val KnnRerank = 80
 
   /** Q166: binary sign-hash ANN — the 5th rung of the ANN ladder
     * (SRP-LSH / IVF / SQ8 / PQ / binary codes) and the only one FULLY
@@ -835,11 +848,11 @@ object Similarity {
     * order-independent integer SUM over the exploded (vec, dim) stream —
     * no driver fetch, no UDF; the scan side stores 8 bytes/vector and the
     * probe side broadcasts (q38 contract). The Hamming first pass keeps
-    * `rerank` candidates per probe and only THOSE rows touch raw floats
+    * `KnnRerank` candidates per probe and only THOSE rows touch raw floats
     * for the exact-cosine rerank (the PQ/SQ8 discipline — but here even
     * the rerank ordering is the gated q38 program, so recall stays under
     * the hash compare; measured ≈0.5 vs 0.12 without rerank). */
-  def qKnnBinary(t: Tables, k: Int = 10, rerank: Int = 80): DataFrame = {
+  def qKnnBinary(t: Tables): DataFrame = {
     import org.apache.spark.sql.types._
     val spark = t.spark
     if (t.embeddings.isEmpty)
@@ -875,7 +888,7 @@ object Similarity {
       .withColumn("hamming",
         expr("bit_count(lo ^ plo) + bit_count(hi ^ phi)").cast("long"))
       .withColumn("hrank", row_number().over(w))
-      .filter(col("hrank") <= rerank)
+      .filter(col("hrank") <= KnnRerank)
       .select(col("probe_id"), col("neighbor_id"), col("hamming"))
     val pemb = t.embeddings.filter(col("vec_id") < 10)
       .select(col("vec_id").as("probe_id"), col("embedding").as("emb_p"))
@@ -887,13 +900,13 @@ object Similarity {
         col("embedding").as("emb_n")), Seq("neighbor_id"))
       .withColumn("sim", graft.plans.CosineSim.cosine(col("emb_p"), col("emb_n")))
       .withColumn("rank", row_number().over(wExact))
-      .filter(col("rank") <= k)
-    val exact = exactTopKCached(t, k)
+      .filter(col("rank") <= AnnK)
+    val exact = exactTopKCached(t)
       .select(col("probe_id"), col("neighbor_id"), lit(1).as("is_hit"))
     val wp = Window.partitionBy(col("probe_id"))
     ann.join(exact, Seq("probe_id", "neighbor_id"), "left")
       .withColumn("recall_at_k",
-        round(sum(coalesce(col("is_hit"), lit(0))).over(wp) / k.toDouble, 2))
+        round(sum(coalesce(col("is_hit"), lit(0))).over(wp) / AnnK.toDouble, 2))
       .select(col("probe_id"), col("rank").cast("int").as("rank"),
         col("neighbor_id"), col("hamming"), round(col("sim"), 6).as("sim"),
         col("recall_at_k"))
@@ -903,7 +916,7 @@ object Similarity {
   /** The q166 pipeline as a reusable WITH-body (shared with the q165
     * metrics oracle): emb → ex → med → codes → ham → cand → reranked →
     * ranked (binary top-k) and truth (exact top-k with rank `xr`). */
-  private def binaryCtes(k: Int, rerank: Int): String =
+  private def binaryCtes: String =
     s"""emb AS (
        |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
        |ex AS (
@@ -928,7 +941,7 @@ object Similarity {
        |    SELECT probe_id, neighbor_id, hamming,
        |      ROW_NUMBER() OVER (PARTITION BY probe_id
        |        ORDER BY hamming ASC, neighbor_id) AS hrank
-       |    FROM ham) WHERE hrank <= $rerank),
+       |    FROM ham) WHERE hrank <= $KnnRerank),
        |reranked AS (
        |  SELECT c.probe_id, c.neighbor_id, c.hamming,
        |    list_cosine_similarity(pe.e, ne.e) AS sim
@@ -947,19 +960,19 @@ object Similarity {
        |        ORDER BY list_cosine_similarity(p.e, n.e) DESC, n.vec_id) AS xr
        |    FROM (SELECT * FROM emb WHERE vec_id < 10) p
        |    JOIN emb n ON p.vec_id != n.vec_id)
-       |  WHERE xr <= $k)""".stripMargin
+       |  WHERE xr <= $AnnK)""".stripMargin
 
-  def qKnnBinarySql(k: Int = 10, rerank: Int = 80): String =
-    s"""WITH ${binaryCtes(k, rerank)},
+  def qKnnBinarySql: String =
+    s"""WITH ${binaryCtes},
        |hits AS (
        |  SELECT r.probe_id, r.rank, r.neighbor_id, r.hamming, r.sim,
        |    CASE WHEN t.neighbor_id IS NULL THEN 0 ELSE 1 END AS is_hit
        |  FROM ranked r LEFT JOIN truth t
        |    ON t.probe_id = r.probe_id AND t.neighbor_id = r.neighbor_id
-       |  WHERE r.rank <= $k)
+       |  WHERE r.rank <= $AnnK)
        |SELECT probe_id, CAST(rank AS INT) AS rank, neighbor_id, hamming,
        |  round(sim, 6) AS sim,
-       |  round(SUM(is_hit) OVER (PARTITION BY probe_id) / ${k}.0, 2)
+       |  round(SUM(is_hit) OVER (PARTITION BY probe_id) / ${AnnK}.0, 2)
        |    AS recall_at_k
        |FROM hits ORDER BY probe_id, rank""".stripMargin
 
@@ -977,20 +990,20 @@ object Similarity {
     * the probe's own rows (ideal rel = k+1 − rank — a function of row
     * rank, so no 1-row scalar join: the q114 hazard); nDCG = one raw
     * division; MRR = max over exact rationals 1/rank. */
-  def qRetrievalMetrics(t: Tables, k: Int = 10): DataFrame = {
+  def qRetrievalMetrics(t: Tables): DataFrame = {
     import org.apache.spark.sql.types._
     val spark = t.spark
     if (t.embeddings.isEmpty)
       return graft.Tables.emptyFrame(spark, "probe_id" -> LongType,
         "n_rel_found" -> LongType, "mrr" -> DoubleType, "ndcg" -> DoubleType)
-    val ann = qKnnBinary(t, k).select(col("probe_id"), col("rank"), col("neighbor_id"))
-    val exact = exactTopKCached(t, k)
+    val ann = qKnnBinary(t).select(col("probe_id"), col("rank"), col("neighbor_id"))
+    val exact = exactTopKCached(t)
       .select(col("probe_id"), col("neighbor_id"), col("rank").as("xr"))
     ann.join(exact, Seq("probe_id", "neighbor_id"), "left")
-      .withColumn("rel", coalesce(lit(k + 1) - col("xr"), lit(0)))
+      .withColumn("rel", coalesce(lit(AnnK + 1) - col("xr"), lit(0)))
       .withColumn("dterm", round(col("rel").cast("double") * log(lit(2.0))
         / log(col("rank").cast("double") + lit(1.0)), 6))
-      .withColumn("iterm", round((lit(k + 1) - col("rank")).cast("double") * log(lit(2.0))
+      .withColumn("iterm", round((lit(AnnK + 1) - col("rank")).cast("double") * log(lit(2.0))
         / log(col("rank").cast("double") + lit(1.0)), 6))
       .withColumn("rr", when(col("rel") > 0,
         lit(1.0) / col("rank").cast("double")).otherwise(lit(0.0)))
@@ -1004,19 +1017,19 @@ object Similarity {
       .orderBy(col("probe_id"))
   }
 
-  def qRetrievalMetricsSql(k: Int = 10): String =
-    s"""WITH ${binaryCtes(k, 80)},
-       |ann AS (SELECT probe_id, rank, neighbor_id FROM ranked WHERE rank <= $k),
+  def qRetrievalMetricsSql: String =
+    s"""WITH ${binaryCtes},
+       |ann AS (SELECT probe_id, rank, neighbor_id FROM ranked WHERE rank <= $AnnK),
        |m AS (
        |  SELECT a.probe_id, a.rank,
-       |    COALESCE(${k + 1} - t.xr, 0) AS rel
+       |    COALESCE(${AnnK + 1} - t.xr, 0) AS rel
        |  FROM ann a LEFT JOIN truth t
        |    ON t.probe_id = a.probe_id AND t.neighbor_id = a.neighbor_id),
        |terms AS (
        |  SELECT probe_id, rank, rel,
        |    round(CAST(rel AS DOUBLE) * ln(2.0)
        |      / ln(CAST(rank AS DOUBLE) + 1.0), 6) AS dterm,
-       |    round(CAST(${k + 1} - rank AS DOUBLE) * ln(2.0)
+       |    round(CAST(${AnnK + 1} - rank AS DOUBLE) * ln(2.0)
        |      / ln(CAST(rank AS DOUBLE) + 1.0), 6) AS iterm,
        |    CASE WHEN rel > 0 THEN 1.0 / CAST(rank AS DOUBLE)
        |         ELSE 0.0 END AS rr
@@ -1087,6 +1100,11 @@ object Similarity {
       }.toDF("x_id", "y_id", "sim")
   }
 
+  /** q142's language pair and its margin neighborhood size. */
+  final val BitextSrcLang = "en"
+  final val BitextTgtLang = "fr"
+  final val BitextK = 4
+
   /** Q142: margin-based bitext mining (Artetxe & Schwenk 2019, "Margin-
     * based Parallel Corpus Mining with Multilingual Sentence Embeddings")
     * — the cross-lingual pair-mining step of a multilingual data pipeline:
@@ -1105,19 +1123,18 @@ object Similarity {
     * have total orders (sim desc, id); the k-element averages are
     * round(6) (aggregation-order floats), the margin re-rounds, and the
     * argmax orders by (rounded margin desc, y). */
-  def qBitextMine(t: Tables, srcLang: String = "en", tgtLang: String = "fr",
-      k: Int = 4): DataFrame = {
+  def qBitextMine(t: Tables): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val langOf = t.documents.select(col("doc_id").as("vec_id"), col("lang"))
     val emb = t.embeddings.join(langOf, Seq("vec_id"))
-    val src = emb.filter(col("lang") === srcLang).select("vec_id", "embedding")
-    val tgt = emb.filter(col("lang") === tgtLang).select("vec_id", "embedding")
+    val src = emb.filter(col("lang") === BitextSrcLang).select("vec_id", "embedding")
+    val tgt = emb.filter(col("lang") === BitextTgtLang).select("vec_id", "embedding")
     val s = cosineBipartiteBlocked(src, tgt).localCheckpoint()
     val wx = Window.partitionBy(col("x_id")).orderBy(col("sim").desc, col("y_id"))
     val wy = Window.partitionBy(col("y_id")).orderBy(col("sim").desc, col("x_id"))
-    val ax = s.withColumn("r", row_number().over(wx)).filter(col("r") <= k)
+    val ax = s.withColumn("r", row_number().over(wx)).filter(col("r") <= BitextK)
       .groupBy(col("x_id")).agg(round(avg(col("sim")), 6).as("ax"))
-    val ay = s.withColumn("r", row_number().over(wy)).filter(col("r") <= k)
+    val ay = s.withColumn("r", row_number().over(wy)).filter(col("r") <= BitextK)
       .groupBy(col("y_id")).agg(round(avg(col("sim")), 6).as("ay"))
     val m = s.join(ax, Seq("x_id")).join(ay, Seq("y_id"))
       .withColumn("margin",
@@ -1132,16 +1149,15 @@ object Similarity {
 
   /** q142 oracle: the pair matrix via list_cosine_similarity (q38 parity),
     * identical window/round discipline. */
-  def qBitextMineSql(srcLang: String = "en", tgtLang: String = "fr",
-      k: Int = 4): String =
+  def qBitextMineSql: String =
     s"""WITH src AS (
       |  SELECT e.vec_id AS id, CAST(e.embedding AS DOUBLE[]) AS v
       |  FROM embeddings e JOIN documents d ON d.doc_id = e.vec_id
-      |  WHERE d.lang = '$srcLang'),
+      |  WHERE d.lang = '$BitextSrcLang'),
       |tgt AS (
       |  SELECT e.vec_id AS id, CAST(e.embedding AS DOUBLE[]) AS v
       |  FROM embeddings e JOIN documents d ON d.doc_id = e.vec_id
-      |  WHERE d.lang = '$tgtLang'),
+      |  WHERE d.lang = '$BitextTgtLang'),
       |s AS MATERIALIZED (
       |  SELECT src.id AS x_id, tgt.id AS y_id,
       |    list_cosine_similarity(src.v, tgt.v) AS sim
@@ -1150,12 +1166,12 @@ object Similarity {
       |  SELECT x_id, round(avg(sim), 6) AS ax FROM (
       |    SELECT x_id, sim,
       |      ROW_NUMBER() OVER (PARTITION BY x_id ORDER BY sim DESC, y_id) AS r
-      |    FROM s) WHERE r <= $k GROUP BY x_id),
+      |    FROM s) WHERE r <= $BitextK GROUP BY x_id),
       |ay AS (
       |  SELECT y_id, round(avg(sim), 6) AS ay FROM (
       |    SELECT y_id, sim,
       |      ROW_NUMBER() OVER (PARTITION BY y_id ORDER BY sim DESC, x_id) AS r
-      |    FROM s) WHERE r <= $k GROUP BY y_id),
+      |    FROM s) WHERE r <= $BitextK GROUP BY y_id),
       |m AS (
       |  SELECT s.x_id, s.y_id, s.sim,
       |    round(s.sim / ((ax.ax + ay.ay) / 2.0::DOUBLE), 6) AS margin
@@ -1249,6 +1265,11 @@ object Similarity {
       |    / nullif(CAST(n AS DOUBLE) * (CAST(n AS DOUBLE) - 1.0::DOUBLE), 0.0) AS mean_cos
       |FROM fin ORDER BY dim""".stripMargin
 
+  /** q274's recall@k, probe count and truncation ladder (widest first). */
+  final val DimBudgetK = 10
+  final val DimBudgetProbes = 8
+  val DimBudgetDims: Seq[Int] = Seq(64, 32, 16, 8)
+
   /** Q274: dimension-budget audit — retrieval overlap of PREFIX-truncated
     * embeddings against the full vectors (the eval behind Matryoshka
     * representations, Kusupati et al. 2022, and every PCA-style storage/
@@ -1269,14 +1290,13 @@ object Similarity {
     * (probe, vector) pair (probes broadcast, the q38 asymmetry — nothing
     * but 8·4·k rows survive the per-probe TakeOrdered windows); the
     * overlap is an equi-join of two ≤8·4·k-row lists. */
-  def qDimBudget(t: Tables, k: Int = 10, nProbes: Int = 8,
-      dims: Seq[Int] = Seq(64, 32, 16, 8)): DataFrame = {
-    val full = dims.max
-    val probes = t.embeddings.filter(col("vec_id") < nProbes)
+  def qDimBudget(t: Tables): DataFrame = {
+    val full = DimBudgetDims.max
+    val probes = t.embeddings.filter(col("vec_id") < DimBudgetProbes)
       .select(col("vec_id").as("pid"), col("embedding").as("pe"))
-    val train = t.fanout(t.embeddings).filter(col("vec_id") >= nProbes)
+    val train = t.fanout(t.embeddings).filter(col("vec_id") >= DimBudgetProbes)
       .select(col("vec_id").as("train_id"), col("embedding").as("te"))
-    val smCols = dims.map { d =>
+    val smCols = DimBudgetDims.map { d =>
       struct(lit(d).as("d"),
         round(graft.plans.CosineSim.cosine(
           slice(col("pe"), 1, d), slice(col("te"), 1, d)) * lit(1000000.0), 0)
@@ -1287,7 +1307,7 @@ object Similarity {
     val ranked = train.crossJoin(broadcast(probes))
       .select(col("pid"), col("train_id"), explode(array(smCols: _*)).as("x"))
       .select(col("pid"), col("train_id"), col("x.d").as("d"), col("x.sm").as("sm"))
-      .withColumn("rn", row_number().over(w)).filter(col("rn") <= k)
+      .withColumn("rn", row_number().over(w)).filter(col("rn") <= DimBudgetK)
       .select(col("pid"), col("d"), col("train_id"))
       .localCheckpoint() // one scan feeds both join sides below
     val fullSet = ranked.filter(col("d") === full)
@@ -1295,38 +1315,41 @@ object Similarity {
     ranked.join(fullSet, Seq("pid", "train_id"), "left_semi")
       .groupBy(col("pid"), col("d")).agg(count(lit(1)).as("n_overlap"))
       .select(col("pid"), col("d").cast("long").as("d"), col("n_overlap"),
-        (col("n_overlap").cast("double") / lit(k.toDouble)).as("recall_at_k"))
+        (col("n_overlap").cast("double") / lit(DimBudgetK.toDouble)).as("recall_at_k"))
       .orderBy(col("pid"), col("d"))
   }
 
   /** q274 oracle: the same prefix-cosine micro ranking via list_slice +
     * a dims VALUES table, semi-joined against the full-dim top-k. */
-  def qDimBudgetSql(k: Int = 10, nProbes: Int = 8,
-      dims: Seq[Int] = Seq(64, 32, 16, 8)): String = {
-    val full = dims.max
-    val vals = dims.map(d => s"($d)").mkString(", ")
+  def qDimBudgetSql: String = {
+    val full = DimBudgetDims.max
+    val vals = DimBudgetDims.map(d => s"($d)").mkString(", ")
     s"""WITH m AS (
        |  SELECT p.vec_id AS pid, t.vec_id AS train_id, dims.d,
        |    CAST(round(list_cosine_similarity(
        |      list_slice(CAST(p.embedding AS DOUBLE[]), 1, dims.d),
        |      list_slice(CAST(t.embedding AS DOUBLE[]), 1, dims.d))
        |      * 1000000.0::DOUBLE) AS BIGINT) AS sm
-       |  FROM (SELECT * FROM embeddings WHERE vec_id < $nProbes) p
-       |  JOIN embeddings t ON t.vec_id >= $nProbes
+       |  FROM (SELECT * FROM embeddings WHERE vec_id < $DimBudgetProbes) p
+       |  JOIN embeddings t ON t.vec_id >= $DimBudgetProbes
        |  CROSS JOIN (VALUES $vals) dims(d)),
        |ranked AS (
        |  SELECT pid, d, train_id,
        |    ROW_NUMBER() OVER (PARTITION BY pid, d
        |      ORDER BY sm DESC, train_id) AS rn
        |  FROM m),
-       |top AS (SELECT pid, d, train_id FROM ranked WHERE rn <= $k),
+       |top AS (SELECT pid, d, train_id FROM ranked WHERE rn <= $DimBudgetK),
        |fullset AS (SELECT pid, train_id FROM top WHERE d = $full)
        |SELECT t.pid, CAST(t.d AS BIGINT) AS d,
        |  COUNT(*)::BIGINT AS n_overlap,
-       |  CAST(COUNT(*) AS DOUBLE) / ${k}.0::DOUBLE AS recall_at_k
+       |  CAST(COUNT(*) AS DOUBLE) / ${DimBudgetK}.0::DOUBLE AS recall_at_k
        |FROM top t SEMI JOIN fullset f ON f.pid = t.pid AND f.train_id = t.train_id
        |GROUP BY t.pid, t.d ORDER BY pid, d""".stripMargin
   }
+
+  /** q259's neighborhood size and probe count. */
+  final val ShapleyK = 5
+  final val ShapleyProbes = 16
 
   /** Q259: exact KNN-Shapley data valuation over the embedding corpus —
     * the Shapley value of every train point under a K-NN utility, via the
@@ -1356,12 +1379,12 @@ object Similarity {
     * partition), exact because the terms are integers; the two-phase
     * bucket prefix (TextAnalysis.bucketRank idiom) swaps in per probe
     * when a single probe's ranking no longer fits one task. */
-  def qKnnShapley(t: Tables, k: Int = 5, nProbes: Int = 16): DataFrame = {
+  def qKnnShapley(t: Tables): DataFrame = {
     val emb = t.embeddings
-    val probes = emb.filter(col("vec_id") < nProbes)
+    val probes = emb.filter(col("vec_id") < ShapleyProbes)
       .select(col("vec_id").as("pid"), col("embedding").as("emb_p"),
         col("label").as("plabel"))
-    val train = emb.filter(col("vec_id") >= nProbes)
+    val train = emb.filter(col("vec_id") >= ShapleyProbes)
       .select(col("vec_id").as("train_id"), col("embedding").as("emb_t"),
         col("label"))
     val w = Window.partitionBy(col("pid")).orderBy(col("s").desc, col("train_id"))
@@ -1377,8 +1400,8 @@ object Similarity {
       when(col("rnk") === col("n"),
         col("ind") * round(lit(1e6) / col("n")).cast("long"))
         .otherwise((col("ind") - col("ind_next")) *
-          round(lit(1e6) * least(lit(k), col("rnk")) /
-            (lit(k) * col("rnk"))).cast("long")))
+          round(lit(1e6) * least(lit(ShapleyK), col("rnk")) /
+            (lit(ShapleyK) * col("rnk"))).cast("long")))
     // suffix sum as total − prefix + current: Spark's unbounded-FOLLOWING
     // sum frame recomputes from scratch per row (O(n²) per partition —
     // measured 30 s vs 1.5 s at sf1.0); the prefix frame and the whole-
@@ -1403,12 +1426,12 @@ object Similarity {
   /** q259 oracle: the identical recurrence — same rank total order, same
     * micro-rounded integer terms, same suffix window sum. */
   val qKnnShapleySql: String =
-    """WITH probes AS MATERIALIZED (
+    s"""WITH probes AS MATERIALIZED (
       |  SELECT vec_id AS pid, CAST(embedding AS DOUBLE[]) AS emb, label AS plabel
-      |  FROM embeddings WHERE vec_id < 16),
+      |  FROM embeddings WHERE vec_id < $ShapleyProbes),
       |train AS MATERIALIZED (
       |  SELECT vec_id AS train_id, CAST(embedding AS DOUBLE[]) AS emb, label
-      |  FROM embeddings WHERE vec_id >= 16),
+      |  FROM embeddings WHERE vec_id >= $ShapleyProbes),
       |scored AS (
       |  SELECT p.pid, tr.train_id, tr.label,
       |    list_cosine_similarity(p.emb, tr.emb) AS s,
@@ -1424,7 +1447,7 @@ object Similarity {
       |  SELECT pid, train_id, label, rnk,
       |    CASE WHEN rnk = n THEN ind * CAST(round(1e6 / n) AS BIGINT)
       |         ELSE (ind - ind_next) *
-      |           CAST(round(1e6 * LEAST(5, rnk) / (5 * rnk)) AS BIGINT)
+      |           CAST(round(1e6 * LEAST($ShapleyK, rnk) / ($ShapleyK * rnk)) AS BIGINT)
       |    END AS term_micro
       |  FROM ranked),
       |sv AS (
@@ -1436,6 +1459,11 @@ object Similarity {
       |  CAST(COUNT(*) AS BIGINT) AS n_probes,
       |  CAST(CAST(SUM(sv_micro) AS BIGINT) AS DOUBLE) / (1e6 * COUNT(*)) AS sv_mean
       |FROM sv GROUP BY train_id, label ORDER BY train_id""".stripMargin
+
+  /** q282's probes, candidates per probe and selected rows per probe. */
+  final val MmrProbes = 3
+  final val MmrCand = 20
+  final val MmrK = 5
 
   /** Q282: MMR-diversified top-k retrieval (Carbonell & Goldstein 1998):
     * per probe, fetch the top-C candidates by cosine relevance, then
@@ -1450,14 +1478,14 @@ object Similarity {
     * (at corpus scale, the ANN ladder front-ends it); the greedy phase
     * touches only C candidates per probe inside one flatMapGroups task
     * (C²·k integer ops — bounded-group kernel rule). */
-  def qMmrRerank(t: Tables, nProbes: Int = 3, cand: Int = 20, k: Int = 5): DataFrame = {
+  def qMmrRerank(t: Tables): DataFrame = {
     val spark = t.spark
     import spark.implicits._
     def microAway(x: Double): Long = { // signed micro grid: half away from zero
       val m = x * 1000000.0
       (if (m >= 0) math.floor(m + 0.5) else math.ceil(m - 0.5)).toLong
     }
-    val probes = t.embeddings.filter(col("vec_id") < nProbes)
+    val probes = t.embeddings.filter(col("vec_id") < MmrProbes)
       .select(col("vec_id").as("pid"), col("embedding").as("pe"))
     val w = Window.partitionBy(col("pid")).orderBy(col("rel").desc, col("nid"))
     val candDf = t.fanout(t.embeddings)
@@ -1467,7 +1495,7 @@ object Similarity {
       .withColumn("rel",
         round(graft.plans.CosineSim.cosine(col("pe"), col("ne")) * lit(1000000.0), 0)
           .cast("long"))
-      .withColumn("rn", row_number().over(w)).filter(col("rn") <= cand)
+      .withColumn("rn", row_number().over(w)).filter(col("rn") <= MmrCand)
       .select(col("pid"), col("nid"), col("rel"), col("ne"))
     candDf.as[(Long, Long, Long, Array[Float])]
       .groupByKey(_._1)
@@ -1487,7 +1515,7 @@ object Similarity {
         val selected = scala.collection.mutable.ArrayBuffer[Int]()
         val out = scala.collection.mutable.ArrayBuffer[(Long, Long, Long, Long, Long)]()
         var r = 1
-        while (r <= k && selected.length < n) {
+        while (r <= MmrK && selected.length < n) {
           var best = -1; var bestScore = Long.MinValue
           var c = 0
           while (c < n) {
@@ -1515,8 +1543,8 @@ object Similarity {
   /** q282 oracle: candidate + pairwise-sim micro tables, then the k greedy
     * rounds UNROLLED as chained MATERIALIZED CTEs (argmax per round via
     * ROW_NUMBER; the fixed-round iterative-oracle pattern — q119/q139). */
-  def qMmrRerankSql(nProbes: Int = 3, cand: Int = 20, k: Int = 5): String = {
-    val steps = (2 to k).map { r =>
+  def qMmrRerankSql: String = {
+    val steps = (2 to MmrK).map { r =>
       val p = r - 1
       s"""s$r AS MATERIALIZED (
          |  SELECT c.pid, c.nid, c.rel, 7 * c.rel - 3 * COALESCE(m.ms, 0) AS score
@@ -1535,18 +1563,18 @@ object Similarity {
          |ksel$r AS (SELECT pid, nid FROM ksel$p UNION ALL SELECT pid, nid FROM sel$r)"""
         .stripMargin
     }.mkString(",\n")
-    val unions = (1 to k).map(r => s"SELECT * FROM sel$r").mkString(" UNION ALL ")
+    val unions = (1 to MmrK).map(r => s"SELECT * FROM sel$r").mkString(" UNION ALL ")
     s"""WITH cand0 AS MATERIALIZED (
        |  SELECT p.vec_id AS pid, n.vec_id AS nid,
        |    CAST(round(list_cosine_similarity(CAST(p.embedding AS DOUBLE[]),
        |      CAST(n.embedding AS DOUBLE[])) * 1000000.0::DOUBLE) AS BIGINT) AS rel
-       |  FROM (SELECT * FROM embeddings WHERE vec_id < $nProbes) p
+       |  FROM (SELECT * FROM embeddings WHERE vec_id < $MmrProbes) p
        |  JOIN embeddings n ON n.vec_id != p.vec_id),
        |cand AS MATERIALIZED (
        |  SELECT pid, nid, rel FROM (
        |    SELECT pid, nid, rel,
        |      ROW_NUMBER() OVER (PARTITION BY pid ORDER BY rel DESC, nid) AS rn
-       |    FROM cand0) WHERE rn <= $cand),
+       |    FROM cand0) WHERE rn <= $MmrCand),
        |psim AS MATERIALIZED (
        |  SELECT c1.pid, c1.nid AS a, c2.nid AS b,
        |    CAST(round(list_cosine_similarity(CAST(e1.embedding AS DOUBLE[]),
@@ -1649,9 +1677,12 @@ object Similarity {
       |    - 2.0::DOUBLE * sqrt(var_a) * sqrt(var_b) AS term
       |FROM v ORDER BY label_a, label_b, dim""".stripMargin
 
+  /** q297's random-projection width. */
+  final val JlProjDims = 16
+
   /** Q297: Johnson–Lindenstrauss random-projection distortion audit — a
     * signed ±1 projection (Achlioptas 2003's database-friendly JL) from
-    * d = 64 to m = `projDims` dims, with the sign matrix derived from
+    * d = 64 to m = `JlProjDims` dims, with the sign matrix derived from
     * md5(j, i) so BOTH engines build the identical projection. For a
     * deterministic structured pair sample (vec_id deltas 1/17/257 —
     * co-partitioned shift equi-joins, never an all-pairs scan) the audit
@@ -1670,14 +1701,14 @@ object Similarity {
     * per side; pair joins are equi-joins on shifted vec_id
     * (co-partitioned); the per-(pair, dim) streams aggregate map-side.
     * The 16-row dim table and the md5 signs fold into codegen. */
-  def qJlDistortion(t: Tables, projDims: Int = 16): DataFrame = {
+  def qJlDistortion(t: Tables): DataFrame = {
     val deltas = Seq(1L, 17L, 257L)
     val e = t.fanout(t.embeddings)
       .select(col("vec_id"), posexplode(col("embedding")).as(Seq("dim", "x")))
       .select(col("vec_id"), col("dim").cast("long").as("dim"),
         round(col("x").cast("double") * lit(1000000.0), 0).cast("long").as("q"))
       .localCheckpoint() // feeds the projection AND the original-distance join
-    val js = explode(array((0 until projDims).map(j => lit(j.toLong)): _*)).as("j")
+    val js = explode(array((0 until JlProjDims).map(j => lit(j.toLong)): _*)).as("j")
     val proj = e.select(col("vec_id"), col("dim"), col("q"), js)
       .withColumn("sign",
         when(substring(md5(concat_ws("-", lit("jl"), col("j"), col("dim"))), 1, 1)
@@ -1701,7 +1732,7 @@ object Similarity {
       .withColumn("ratio",
         when(col("orig_d2") === 0L, lit(null).cast("double"))
           .otherwise(col("proj_d2").cast("double") /
-            (lit(projDims.toLong) * col("orig_d2")).cast("double")))
+            (lit(JlProjDims.toLong) * col("orig_d2")).cast("double")))
       .select(col("id_a"), (col("id_a") + col("delta")).as("id_b"), col("delta"),
         col("orig_d2"), col("proj_d2"), col("ratio"))
       .orderBy(col("delta"), col("id_a"))
@@ -1709,13 +1740,13 @@ object Similarity {
 
   /** q297 oracle: generate_subscripts explode, identical md5 sign matrix,
     * pure-integer distances. */
-  def qJlDistortionSql(projDims: Int = 16): String =
+  def qJlDistortionSql: String =
     s"""WITH e AS MATERIALIZED (
       |  SELECT vec_id,
       |    CAST(generate_subscripts(CAST(embedding AS DOUBLE[]), 1) - 1 AS BIGINT) AS dim,
       |    CAST(round(unnest(CAST(embedding AS DOUBLE[])) * 1000000.0::DOUBLE) AS BIGINT) AS q
       |  FROM embeddings),
-      |js AS (SELECT CAST(unnest(range(0, $projDims)) AS BIGINT) AS j),
+      |js AS (SELECT CAST(unnest(range(0, $JlProjDims)) AS BIGINT) AS j),
       |proj AS MATERIALIZED (
       |  SELECT e.vec_id, js.j,
       |    CAST(SUM(CASE WHEN substr(md5('jl' || '-' || CAST(js.j AS VARCHAR)
@@ -1738,7 +1769,7 @@ object Similarity {
       |SELECT d2.id_a, d2.id_a + d2.delta AS id_b, d2.delta, d2.orig_d2, p2.proj_d2,
       |  CASE WHEN d2.orig_d2 = 0 THEN NULL
       |       ELSE CAST(p2.proj_d2 AS DOUBLE)
-      |            / CAST($projDims * d2.orig_d2 AS DOUBLE) END AS ratio
+      |            / CAST($JlProjDims * d2.orig_d2 AS DOUBLE) END AS ratio
       |FROM d2 JOIN p2 ON p2.id_a = d2.id_a AND p2.delta = d2.delta
       |ORDER BY d2.delta, d2.id_a""".stripMargin
 
@@ -1791,6 +1822,10 @@ object Similarity {
     g.select(col("v"), col("rank"), col("w"), col("s"))
   }
 
+  /** q322's graph degree and NN-descent rounds. */
+  final val NnDescentK = 5
+  final val NnDescentRounds = 3
+
   /** Q322: the HASH-GATED fixed-round NN-descent face. Seeds are the
     * within-bucket all-pairs of TWO CROSS-CUTTING bucketings — vec_id % B
     * and an md5-hash bucket (B = max(1, n/(k+1)) ⇒ ~k+1 vectors per
@@ -1805,10 +1840,10 @@ object Similarity {
     * final graph plus an oracled recall_at_k column for the 10 smallest
     * ids (non-vacuous at every SF; the q121-style recall surface, here
     * itself under the hash gate). */
-  def qNnDescentGate(t: Tables, k: Int = 5, rounds: Int = 3): DataFrame = {
+  def qNnDescentGate(t: Tables): DataFrame = {
     val emb = t.embeddings
     val n = emb.count()
-    val buckets = math.max(1L, n / (k + 1L))
+    val buckets = math.max(1L, n / (NnDescentK + 1L))
     // axis A: id-mod; axis B: md5 bucket (conv/CAST-hex replay, q125 rule)
     def bucketed(vName: String): DataFrame = {
       val hashBk = conv(substring(md5(col("vec_id").cast("string")), 1, 8), 16, 10)
@@ -1822,10 +1857,10 @@ object Similarity {
       .union(ba.select(col("v"), col("bkb"))
         .join(bb.select(col("w"), col("bkb")), Seq("bkb"))
         .filter(col("v") =!= col("w")).select(col("v"), col("w")))
-    val graph = nnDescentGraph(emb, seeds, k, rounds)
+    val graph = nnDescentGraph(emb, seeds, NnDescentK, NnDescentRounds)
     val probeIds = emb.select(col("vec_id")).orderBy(col("vec_id")).limit(10)
     val probes = emb.join(probeIds, Seq("vec_id"))
-    val exact = bruteForceTopK(emb, probes, k)
+    val exact = bruteForceTopK(emb, probes, NnDescentK)
       .select(col("probe_id").as("v"), col("neighbor_id").as("w"), lit(1).as("hit"))
     val wv = Window.partitionBy(col("v"))
     graph
@@ -1833,7 +1868,7 @@ object Similarity {
       .join(exact, Seq("v", "w"), "left")
       .withColumn("recall_at_k",
         when(col("is_probe") === 1,
-          round(sum(coalesce(col("hit"), lit(0))).over(wv) / k.toDouble, 2))
+          round(sum(coalesce(col("hit"), lit(0))).over(wv) / NnDescentK.toDouble, 2))
           .otherwise(lit(null).cast("double")))
       .select(col("v"), col("rank"), col("w"), round(col("s"), 6).as("sim"),
         col("recall_at_k"))
@@ -1843,7 +1878,7 @@ object Similarity {
   /** q322 oracle: the 3 rounds unrolled as chained MATERIALIZED CTEs
     * (the q119/q139 recipe — materialization is mandatory or DuckDB's
     * CTE inlining expands the chain exponentially). */
-  def qNnDescentGateSql(k: Int = 5, rounds: Int = 3): String = {
+  def qNnDescentGateSql: String = {
     def roundCte(i: Int): String = {
       val prev = s"g${i - 1}"
       s"""u$i AS MATERIALIZED (
@@ -1860,9 +1895,9 @@ object Similarity {
          |g$i AS MATERIALIZED (
          |  SELECT v, w, s FROM (
          |    SELECT v, w, s, ROW_NUMBER() OVER (PARTITION BY v ORDER BY s DESC, w) AS rn
-         |    FROM s$i) WHERE rn <= $k),""".stripMargin
+         |    FROM s$i) WHERE rn <= $NnDescentK),""".stripMargin
     }
-    s"""WITH nb AS (SELECT GREATEST(1, COUNT(*) // ${k + 1}) AS b FROM embeddings),
+    s"""WITH nb AS (SELECT GREATEST(1, COUNT(*) // ${NnDescentK + 1}) AS b FROM embeddings),
        |bkt AS MATERIALIZED (
        |  SELECT vec_id,
        |    vec_id % (SELECT b FROM nb) AS bka,
@@ -1884,11 +1919,11 @@ object Similarity {
        |g0 AS MATERIALIZED (
        |  SELECT v, w, s FROM (
        |    SELECT v, w, s, ROW_NUMBER() OVER (PARTITION BY v ORDER BY s DESC, w) AS rn
-       |    FROM s0) WHERE rn <= $k),
-       |${(1 to rounds).map(roundCte).mkString("\n")}
+       |    FROM s0) WHERE rn <= $NnDescentK),
+       |${(1 to NnDescentRounds).map(roundCte).mkString("\n")}
        |gf AS MATERIALIZED (
        |  SELECT v, w, s, ROW_NUMBER() OVER (PARTITION BY v ORDER BY s DESC, w) AS rank
-       |  FROM g$rounds),
+       |  FROM g$NnDescentRounds),
        |probes AS (SELECT vec_id FROM embeddings ORDER BY vec_id LIMIT 10),
        |ex0 AS MATERIALIZED (
        |  SELECT p.vec_id AS v, e.vec_id AS w,
@@ -1898,11 +1933,11 @@ object Similarity {
        |exact AS MATERIALIZED (
        |  SELECT v, w FROM (
        |    SELECT v, w, ROW_NUMBER() OVER (PARTITION BY v ORDER BY s DESC, w) AS rn
-       |    FROM ex0) WHERE rn <= $k)
+       |    FROM ex0) WHERE rn <= $NnDescentK)
        |SELECT g.v AS v, CAST(g.rank AS INT) AS rank, g.w AS w, round(g.s, 6) AS sim,
        |  CASE WHEN g.v IN (SELECT vec_id FROM probes)
        |    THEN round(CAST(SUM(CASE WHEN e.w IS NOT NULL THEN 1 ELSE 0 END)
-       |               OVER (PARTITION BY g.v) AS DOUBLE) / $k, 2)
+       |               OVER (PARTITION BY g.v) AS DOUBLE) / $NnDescentK, 2)
        |    ELSE NULL END AS recall_at_k
        |FROM gf g LEFT JOIN exact e ON g.v = e.v AND g.w = e.w
        |ORDER BY g.v, rank""".stripMargin
@@ -1915,18 +1950,18 @@ object Similarity {
     * seeded spark-side bucketing is engine-specific, so the gate lives on
     * q322's replayable face; this one reports its own recall_at_k vs the
     * exact baseline for the standard probes. */
-  def qKnnGraph(t: Tables, k: Int = 10, rounds: Int = 2): DataFrame = {
+  def qKnnGraph(t: Tables): DataFrame = {
     val emb = t.embeddings
     val bud = srpBucketsUdf(6, 2)
     val bkt = emb.select(col("vec_id"), explode(bud(col("embedding"))).as("tb"))
     val seeds = bkt.select(col("vec_id").as("v"), col("tb"))
       .join(bkt.select(col("vec_id").as("w"), col("tb")), "tb")
       .filter(col("v") =!= col("w")).select(col("v"), col("w"))
-    val graph = nnDescentGraph(emb, seeds, k, rounds)
+    val graph = nnDescentGraph(emb, seeds, AnnK, 2)
     val ann = graph.filter(col("v") < 10)
       .select(col("v").as("probe_id"), col("rank"), col("w").as("neighbor_id"),
         round(col("s"), 6).as("sim"))
-    withRecallAtK(ann, exactTopKCached(t, k), k)
+    withRecallAtK(ann, exactTopKCached(t), AnnK)
       .orderBy(col("probe_id"), col("rank"))
   }
 }

@@ -63,7 +63,7 @@ object SuffixArray {
   /** Bench warm-structure hook (the r13 prewarm contract): force the
     * shared rank chain to the q324 depth. */
   private[graft] def prewarmShared(t: Tables): Seq[(String, Double)] =
-    Seq(Shared.timed("suffix_chain")(rankTables(t, 6)))
+    Seq(Shared.timed("suffix_chain")(rankTables(t, SaRounds)))
 
   private def rankRound0(t: Tables): DataFrame = {
     val toks = text.tokenize(col("text"))
@@ -98,6 +98,13 @@ object SuffixArray {
       .localCheckpoint()
   }
 
+  /** q324's prefix-doubling rounds (ranks resolve 2^6 = 64-token
+    * prefixes); the bench prewarm builds the same chain. */
+  final val SaRounds = 6
+
+  /** q325's duplicate-window width, a power of two (level log2 16 = 4). */
+  final val DupSpanW = 16
+
   /** Q324: the suffix-array BUILD gate — the per-level duplication
     * spectrum: for each doubling level r, the class count (= rank
     * cardinality), how many positions sit in non-singleton classes (start
@@ -107,14 +114,14 @@ object SuffixArray {
     * 1000003 + 1 — exact integer math both engines, the q131/q125 rule),
     * so the oracle hash-verifies every round's full rank structure, not
     * just its summary counts. */
-  def qSuffixArrayGate(t: Tables, rounds: Int = 6): DataFrame = {
-    val ranked = rankTables(t, rounds)
+  def qSuffixArrayGate(t: Tables): DataFrame = {
+    val ranked = rankTables(t, SaRounds)
     val hpos = ((col("doc_id") * 131L + col("off")) % 1000003L + 1L)
     // per-level class stats ride a partial-agg groupBy on the narrow rank
     // column (map-side combine), NOT a count window (which would sort the
     // full row set once per level — the r10 mega-bucket rule); the
     // fingerprint and position count are plain aggregates
-    val levels = (0 to rounds).map { r =>
+    val levels = (0 to SaRounds).map { r =>
       val rk = col(s"rank_$r")
       // the fingerprint decomposes over classes (Σ per-class partials), so
       // every statistic comes out of ONE grouped pass + ONE 1-row agg — no
@@ -163,8 +170,8 @@ object SuffixArray {
        |  SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS doc_len FROM pos GROUP BY doc_id),""".stripMargin
   }
 
-  def qSuffixArrayGateSql(rounds: Int = 6): String = {
-    val levelSql = (0 to rounds).map { r =>
+  def qSuffixArrayGateSql: String = {
+    val levelSql = (0 to SaRounds).map { r =>
       s"""SELECT CAST($r AS BIGINT) AS level, CAST(${1L << r} AS BIGINT) AS prefix_len,
          |  CAST(COUNT(*) AS BIGINT) AS n_positions,
          |  CAST(MAX(r$r) AS BIGINT) AS n_classes,
@@ -174,7 +181,7 @@ object SuffixArray {
          |FROM (SELECT doc_id, off, r$r,
          |        COUNT(*) OVER (PARTITION BY r$r) AS cls FROM r$r)""".stripMargin
     }.mkString("\nUNION ALL\n")
-    s"""WITH ${rankCtes(rounds)}
+    s"""WITH ${rankCtes(SaRounds)}
        |dummy AS (SELECT 1)
        |$levelSql
        |ORDER BY level""".stripMargin
@@ -192,7 +199,7 @@ object SuffixArray {
     * n_windows + W − 1 tokens. Cross-checked against the q143 detector in
     * SuffixArraySpec: every span's every W-gram is one q143 would count
     * at width W. */
-  def qDupSpansSa(t: Tables, w: Int = 16): DataFrame = {
+  def qDupSpansSa(t: Tables, w: Int = DupSpanW): DataFrame = {
     val level = (math.log(w) / math.log(2)).round.toInt
     require((1 << level) == w, "w must be a power of two")
     val ranked = rankTables(t, level)
@@ -215,8 +222,8 @@ object SuffixArray {
       .orderBy(col("doc_id"), col("start_off"))
   }
 
-  def qDupSpansSaSql(w: Int = 16): String = {
-    val level = (math.log(w) / math.log(2)).round.toInt
+  def qDupSpansSaSql: String = {
+    val level = (math.log(DupSpanW) / math.log(2)).round.toInt
     s"""WITH ${rankCtes(level)}
        |cls AS MATERIALIZED (
        |  SELECT r.doc_id, r.off,
@@ -224,14 +231,14 @@ object SuffixArray {
        |  FROM r$level r JOIN lens l ON l.doc_id = r.doc_id),
        |dup AS MATERIALIZED (
        |  SELECT doc_id, off, cls FROM cls
-       |  WHERE cls >= 2 AND off + $w <= doc_len),
+       |  WHERE cls >= 2 AND off + $DupSpanW <= doc_len),
        |isl AS (
        |  SELECT doc_id, off, cls,
        |    off - ROW_NUMBER() OVER (PARTITION BY doc_id ORDER BY off) AS isl
        |  FROM dup)
        |SELECT doc_id, CAST(MIN(off) AS BIGINT) AS start_off,
        |  CAST(COUNT(*) AS BIGINT) AS n_windows,
-       |  CAST(COUNT(*) + ${w - 1} AS BIGINT) AS span_len,
+       |  CAST(COUNT(*) + ${DupSpanW - 1} AS BIGINT) AS span_len,
        |  CAST(MIN(cls) AS BIGINT) AS min_class
        |FROM isl GROUP BY doc_id, isl
        |ORDER BY doc_id, start_off""".stripMargin

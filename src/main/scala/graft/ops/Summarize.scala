@@ -64,8 +64,9 @@ object Summarize {
     * caller's are: article id, sentence id, doc_id): the kernel sorts by
     * id, and equal ids would keep heap order, not arrival order. */
   def lexrankGrouped(sentences: DataFrame, groupCol: String, idCol: String,
-      textCol: String, threshold: Double = 0.1, damping: Double = 0.85,
-      iterations: Int = 20, stem: Boolean = true,
+      textCol: String, threshold: Double = LexrankThreshold,
+      damping: Double = LexrankDamping, iterations: Int = SummaryIterations,
+      stem: Boolean = true,
       maxGroup: Int = Int.MaxValue): DataFrame = {
     val spark = sentences.sparkSession
     import spark.implicits._
@@ -150,24 +151,31 @@ object Summarize {
     (size, sents, score)
   }
 
+  /** The LexRank program the q120/q246/q226 Spark arms and their oracle
+    * chain read: the cosine edge threshold and the damping (the grouped
+    * kernel's defaults, so serving shares them), the fixed power rounds
+    * and the top-k rows kept per group. */
+  final val LexrankThreshold = 0.1
+  final val LexrankDamping = 0.85
+  final val LexrankIterations = 10
+  final val LexrankTopK = 3
+
   /** Q246: qLexrankPower routed through the GOVERNED kernel
-    * (`lexrankGrouped` with `maxGroup = cap`). At every shipped SF the
+    * (`lexrankGrouped` with `maxGroup = 512`). At every shipped SF the
     * source groups are under the cap (sf0.1 max group = 250 < 512), so the
     * kernel trims nothing, the result is bit-identical to q120's program
     * and the oracle replays it exactly; at sf1.0 (groups of 2500) each
     * group runs on its 512 smallest doc_ids, and the kernel's stderr line
     * prices the drop. */
-  def qLexrankGoverned(t: Tables, threshold: Double = 0.1,
-      damping: Double = 0.85, iterations: Int = 10, topK: Int = 3,
-      cap: Int = 512): DataFrame = {
+  def qLexrankGoverned(t: Tables): DataFrame = {
     val scored = lexrankGrouped(
       t.fanout(t.documents).select(col("source"), col("doc_id"), col("text")),
-      "source", "doc_id", "text", threshold, damping, iterations,
-      stem = false, maxGroup = cap)
+      "source", "doc_id", "text", iterations = LexrankIterations,
+      stem = false, maxGroup = 512)
     val wnd = Window.partitionBy(col("source"))
       .orderBy(round(col("score"), 6).desc, col("doc_id"))
     scored.withColumn("rnk", row_number().over(wnd))
-      .filter(col("rnk") <= topK)
+      .filter(col("rnk") <= LexrankTopK)
       .select(col("source"), col("rnk").cast("long").as("rank"),
         col("doc_id"), round(col("score"), 6).as("score"))
       .orderBy(col("source"), col("rank"))
@@ -193,8 +201,9 @@ object Summarize {
   }
 
   /** The story-cluster size above which `summarize` and `joinedSummary`
-    * score only the smallest ids. */
+    * score only the smallest ids, and the power rounds both run. */
   private val SummaryCap = 2048
+  private final val SummaryIterations = 20
 
   /** One story cluster's summary on the serving path (reddit_api.py:148-150's
     * ' '.join of the top sentences): `summarize(…, k = 3)` for one group —
@@ -203,8 +212,8 @@ object Summarize {
     * `lexTokens(text)`); returns the group's size and its summary. */
   private[graft] def joinedSummary(grp: String,
       rows: Iterator[(Long, String, Seq[String])]): (Long, String) = {
-    val (size, kept, score) = groupScores(grp, rows, threshold = 0.1,
-      damping = 0.85, iterations = 20, maxGroup = SummaryCap)(_._1, _._3)
+    val (size, kept, score) = groupScores(grp, rows, LexrankThreshold,
+      LexrankDamping, SummaryIterations, SummaryCap)(_._1, _._3)
     val byRank = kept.indices.sortBy(i => (-score(i), kept(i)._1))(
       Ordering.Tuple2(Ordering.Double.TotalOrdering, Ordering.Long))
     (size, byRank.take(3).map(kept(_)._2).mkString(" "))
@@ -237,7 +246,7 @@ object Summarize {
     *    of all co-term pairs in one distributed pass, no per-group kernel
     *    (shuffle O(Σ_term df²); at 100 TB the threshold prefilter becomes
     *    LSH candidate generation, q34's machinery);
-    *  - `iterations` fixed damped rounds s = (1−d)/n + d·Σ_in s_j/deg_j;
+    *  - `LexrankIterations` fixed damped rounds s = (1−d)/n + d·Σ_in s_j/deg_j;
     *    fixed rounds rather than convergence so the DuckDB oracle can
     *    replay them as unrolled CTEs. Scores round(6): the two engines'
     *    sums run in different orders (kernel map order vs hash-aggregate
@@ -251,15 +260,14 @@ object Summarize {
     * ~1 s for the kernel, all of it Spark scheduling floor on tiny
     * per-round state; the measured reason the grouped kernel is this
     * surface's default.) */
-  def qLexrankPower(t: Tables, threshold: Double = 0.1, damping: Double = 0.85,
-      iterations: Int = 10, topK: Int = 3): DataFrame = {
+  def qLexrankPower(t: Tables): DataFrame = {
     val scored = lexrankGrouped(
       t.fanout(t.documents).select(col("source"), col("doc_id"), col("text")),
-      "source", "doc_id", "text", threshold, damping, iterations, stem = false)
+      "source", "doc_id", "text", iterations = LexrankIterations, stem = false)
     val wnd = Window.partitionBy(col("source"))
       .orderBy(round(col("score"), 6).desc, col("doc_id"))
     scored.withColumn("rnk", row_number().over(wnd))
-      .filter(col("rnk") <= topK)
+      .filter(col("rnk") <= LexrankTopK)
       .select(col("source"), col("rnk").cast("long").as("rank"),
         col("doc_id"), round(col("score"), 6).as("score"))
       .orderBy(col("source"), col("rank"))
@@ -270,33 +278,30 @@ object Summarize {
     * zero contribution stand in for the Spark side's left join, so every
     * vertex survives each round. Constants are written as the same IEEE
     * expressions Catalyst folds ((1.0 - 0.85), not a decimal 0.15). */
-  def qLexrankPowerSql(threshold: Double = 0.1, damping: Double = 0.85,
-      iterations: Int = 10, topK: Int = 3): String =
+  def qLexrankPowerSql: String =
     s"""WITH nodes AS (SELECT source AS grp, doc_id AS sid, text AS txt FROM documents),
-       |${lexrankPowerCtes(threshold, damping, iterations)}
+       |${lexrankPowerCtes()}
        |SELECT grp AS source, CAST(rnk AS BIGINT) AS rank, sid AS doc_id, score FROM (
        |  SELECT grp, sid, round(score, 6) AS score,
        |    ROW_NUMBER() OVER (PARTITION BY grp
        |      ORDER BY round(score, 6) DESC, sid) AS rnk
-       |  FROM s$iterations) WHERE rnk <= $topK
+       |  FROM s$LexrankIterations) WHERE rnk <= $LexrankTopK
        |ORDER BY source, rank""".stripMargin
 
   /** The q120 LexRank CTE chain over a caller-supplied `nodes(grp, sid,
-    * txt)` CTE — the final scores land in `s<iterations>(grp, sid,
+    * txt)` CTE — the final scores land in `s<LexrankIterations>(grp, sid,
     * score)`. Factored out so the composed news-pipeline gate (q226) can
     * run the identical rounds with grp = k-means cluster id.
     * `materialized` marks the per-round and shared-input CTEs with the
     * DuckDB hint (the r6 >5-round chain rule) for callers embedding the
     * chain in a longer program. */
-  private[graft] def lexrankPowerCtes(threshold: Double = 0.1,
-      damping: Double = 0.85, iterations: Int = 10,
-      materialized: Boolean = false): String = {
+  private[graft] def lexrankPowerCtes(materialized: Boolean = false): String = {
     val m = if (materialized) "MATERIALIZED " else ""
-    val iterCtes = (0 until iterations).map { i =>
+    val iterCtes = (0 until LexrankIterations).map { i =>
       s"""s${i + 1} AS $m(
          |  SELECT e.grp, e.dst AS sid,
-         |    (1.0::DOUBLE - $damping::DOUBLE) / CAST(n.n AS DOUBLE)
-         |      + $damping::DOUBLE * SUM(CASE WHEN e.src = e.dst THEN 0.0::DOUBLE
+         |    (1.0::DOUBLE - $LexrankDamping::DOUBLE) / CAST(n.n AS DOUBLE)
+         |      + $LexrankDamping::DOUBLE * SUM(CASE WHEN e.src = e.dst THEN 0.0::DOUBLE
          |          ELSE s.score / CAST(e.deg AS DOUBLE) END) AS score
          |  FROM s$i s JOIN eaug e ON e.grp = s.grp AND e.src = s.sid
          |  JOIN nd n ON n.grp = e.grp
@@ -326,7 +331,7 @@ object Summarize {
        |  SELECT d.grp, d.src, d.dst FROM dots d
        |  JOIN norms na ON na.grp = d.grp AND na.sid = d.src
        |  JOIN norms nb ON nb.grp = d.grp AND nb.sid = d.dst
-       |  WHERE d.dot / (na.nrm * nb.nrm) > $threshold::DOUBLE),
+       |  WHERE d.dot / (na.nrm * nb.nrm) > $LexrankThreshold::DOUBLE),
        |edges AS (SELECT grp, src, dst FROM sim_half
        |          UNION ALL SELECT grp, dst, src FROM sim_half),
        |deg AS (SELECT grp, src, CAST(COUNT(*) AS BIGINT) AS deg FROM edges GROUP BY grp, src),

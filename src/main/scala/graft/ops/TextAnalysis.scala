@@ -370,9 +370,13 @@ object TextAnalysis {
       |SELECT doc_id, COUNT(h)::BIGINT AS n_windows, MIN(h) AS fingerprint
       |FROM wins GROUP BY doc_id ORDER BY doc_id""".stripMargin
 
+  /** The winnowing window (q196, q218): every `WinnowW` consecutive
+    * hash windows select their minimum. */
+  final val WinnowW = 8
+
   /** The q196/q218 shared winnowing selection: each doc's distinct
     * window-minimum fingerprints (doc_id, fp). */
-  private def winnowedFps(t: Tables, w: Int): DataFrame = {
+  private def winnowedFps(t: Tables): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val byPos = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
     val hashes = t.fanout(t.documents)
@@ -382,11 +386,11 @@ object TextAnalysis {
         col("v") * lit(16974593L) + lead(col("v"), 1).over(byPos) * lit(66049L)
           + lead(col("v"), 2).over(byPos) * lit(257L) + lead(col("v"), 3).over(byPos))
       .filter(col("h").isNotNull)
-    val winFrame = byPos.rowsBetween(0, w - 1)
+    val winFrame = byPos.rowsBetween(0, WinnowW - 1)
     hashes
       .withColumn("mn", min(col("h")).over(winFrame))
       .withColumn("cw", count(lit(1)).over(winFrame))
-      .filter(col("cw") === w)
+      .filter(col("cw") === WinnowW)
       .select(col("doc_id"), col("mn").as("fp")).distinct()
   }
 
@@ -394,14 +398,14 @@ object TextAnalysis {
     * tokenize + md5 + rolling-hash window kernel on the identical
     * corpus; one checkpoint serves both (exact integers, bit-identical
     * hits). */
-  private[graft] def winnowedFpsShared(t: Tables, w: Int = 8): DataFrame =
-    Shared(t, s"winnow_fps#$w")(winnowedFps(t, w).localCheckpoint())
+  private[graft] def winnowedFpsShared(t: Tables): DataFrame =
+    Shared(t, "winnow_fps")(winnowedFps(t).localCheckpoint())
 
   /** Q196: winnowing fingerprint sets + shared-fingerprint pair mining
     * (Schleimer–Wilkerson–Aiken, SIGMOD 2003 — the MOSS algorithm): from
     * each document's rolling 4-token hashes (the q125 base-257 polynomial,
     * integer-replayable cross-engine), keep the MINIMUM hash of every
-    * window of `w`=8 consecutive positions. The winnowing guarantee: any
+    * window of `WinnowW` = 8 consecutive positions. The winnowing guarantee: any
     * shared token run of ≥ w+k−1 tokens yields a shared fingerprint, with
     * ~2/(w+1) selection density — the local-dedup/plagiarism primitive
     * that q125's single global min (one fingerprint per doc) cannot
@@ -419,12 +423,12 @@ object TextAnalysis {
     * fingerprint value — candidate cost is Σ postings², concentrated on
     * true shared content by the winnowing guarantee; a q185-style
     * governor caps boilerplate-fingerprint skew at 100 TB. */
-  def qWinnowing(t: Tables, w: Int = 8): DataFrame = {
+  def qWinnowing(t: Tables): DataFrame = {
     // barrier: the selected-fingerprint frame is referenced three times
     // (per-doc counts + both posting-join sides) and each re-ran the
     // tokenize + rolling-hash window kernel (r13 opt); r14: shared with
     // q218's source-level matrix. (doc_id, fp) rows.
-    val selected = winnowedFpsShared(t, w)
+    val selected = winnowedFpsShared(t)
     val perDoc = selected.groupBy(col("doc_id")).agg(count(lit(1)).as("n_fp"))
     val l = selected.select(col("fp"), col("doc_id").as("id_a"))
     val r = selected.select(col("fp"), col("doc_id").as("id_b"))
@@ -442,7 +446,7 @@ object TextAnalysis {
 
   /** The q196/q218 shared winnowing CTE chain ending in
     * `sel(doc_id, fp)`. */
-  private def winnowingSelCtes(w: Int): String =
+  private def winnowingSelCtes: String =
     s"""toks AS (
       |  SELECT doc_id,
       |    unnest(${text.tokenizeSql("text")}) AS term,
@@ -464,13 +468,13 @@ object TextAnalysis {
       |      COUNT(*) OVER wf AS cw
       |    FROM hs
       |    WINDOW wf AS (PARTITION BY doc_id ORDER BY pos
-      |                  ROWS BETWEEN CURRENT ROW AND ${w - 1} FOLLOWING))
-      |  WHERE cw = $w)""".stripMargin
+      |                  ROWS BETWEEN CURRENT ROW AND ${WinnowW - 1} FOLLOWING))
+      |  WHERE cw = $WinnowW)""".stripMargin
 
   /** q196 oracle: the q125 hash CTEs + the same ROWS-frame minima,
     * distinct selection, and posting self-join. */
-  def qWinnowingSql(w: Int = 8): String =
-    s"""WITH ${winnowingSelCtes(w)},
+  def qWinnowingSql: String =
+    s"""WITH ${winnowingSelCtes},
       |pd AS (SELECT doc_id, COUNT(*)::BIGINT AS n_fp FROM sel GROUP BY doc_id),
       |shared AS (
       |  SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*)::BIGINT AS n_shared
@@ -497,12 +501,12 @@ object TextAnalysis {
     * dimension BEFORE the pair join, so the self-join runs on
     * |sources|-bounded posting lists (≤|S| rows per fingerprint), not
     * doc-level postings — cost Σ_fp |sources ∋ fp|² ≤ |S|²·|fps|. */
-  def qReuseMatrix(t: Tables, w: Int = 8): DataFrame = {
+  def qReuseMatrix(t: Tables): DataFrame = {
     // barrier: referenced 3x (per-source totals + both sides of the
     // sharing self-join) — without it the winnowing fingerprint kernel
     // re-runs per reference; r14: the kernel itself rides the shared
     // session checkpoint (q196's sibling). Distinct (source, fp) rows.
-    val srcFp = winnowedFpsShared(t, w)
+    val srcFp = winnowedFpsShared(t)
       .join(t.documents.select(col("doc_id"), col("source")), Seq("doc_id"))
       .select(col("source"), col("fp")).distinct()
       .localCheckpoint()
@@ -523,8 +527,8 @@ object TextAnalysis {
   }
 
   /** q218 oracle: the shared winnowing chain + the source projection. */
-  def qReuseMatrixSql(w: Int = 8): String =
-    s"""WITH ${winnowingSelCtes(w)},
+  def qReuseMatrixSql: String =
+    s"""WITH ${winnowingSelCtes},
       |sf AS (
       |  SELECT DISTINCT d.source, sel.fp
       |  FROM sel JOIN documents d USING (doc_id)),
@@ -540,6 +544,9 @@ object TextAnalysis {
       |JOIN ps pa ON pa.source = s.src_a
       |JOIN ps pb ON pb.source = s.src_b
       |ORDER BY s.src_a, s.src_b""".stripMargin
+
+  /** Terms q219 ranks by burstiness. */
+  final val BurstinessK = 20
 
   /** Q219: term burstiness — the index of dispersion (variance-to-mean
     * ratio, Church & Gale 1995's burstiness observation) of per-doc
@@ -557,7 +564,7 @@ object TextAnalysis {
     *
     * Scale shape: two count aggregates + TakeOrderedAndProject for the
     * top-k; D is a 1-value driver fetch (the q203 min/max contract). */
-  def qBurstiness(t: Tables, k: Int = 20): DataFrame = {
+  def qBurstiness(t: Tables): DataFrame = {
     val dCount = t.documents.count()
     val per = t.fanout(t.documents)
       .select(col("doc_id"), explode(text.tokenize(col("text"))).as("term"))
@@ -567,7 +574,7 @@ object TextAnalysis {
         count(lit(1)).as("df"),
         sum(col("c") * col("c")).as("ssq"))
     val varNum = lit(dCount) * col("ssq") - col("tot") * col("tot")
-    per.orderBy(col("tot").desc, col("term")).limit(k)
+    per.orderBy(col("tot").desc, col("term")).limit(BurstinessK)
       .select(col("term"), col("tot"), col("df"), col("ssq"),
         (varNum.cast("double") / (lit(dCount) * col("tot")).cast("double")).as("vmr"),
         (varNum > lit(dCount) * col("tot")).as("bursty"))
@@ -575,7 +582,7 @@ object TextAnalysis {
   }
 
   /** q219 oracle: same moments; D enters as a scalar subquery. */
-  def qBurstinessSql(k: Int = 20): String =
+  def qBurstinessSql: String =
     s"""WITH dc AS (SELECT COUNT(*)::BIGINT AS d FROM documents),
       |per AS (
       |  SELECT term, CAST(SUM(c) AS BIGINT) AS tot,
@@ -587,12 +594,16 @@ object TextAnalysis {
       |      FROM documents)
       |    GROUP BY term, doc_id)
       |  GROUP BY term),
-      |top AS (SELECT * FROM per ORDER BY tot DESC, term LIMIT $k)
+      |top AS (SELECT * FROM per ORDER BY tot DESC, term LIMIT $BurstinessK)
       |SELECT term, tot, df, ssq,
       |  CAST((SELECT d FROM dc) * ssq - tot * tot AS DOUBLE)
       |    / CAST((SELECT d FROM dc) * tot AS DOUBLE) AS vmr,
       |  (SELECT d FROM dc) * ssq - tot * tot > (SELECT d FROM dc) * tot AS bursty
       |FROM top ORDER BY tot DESC, term""".stripMargin
+
+  /** q197's length-bin width and its treated source. */
+  final val MatchBinWidth = 50
+  final val MatchTreatedSource = "src1"
 
   /** Q197: caliper-matched control sampling (nearest-neighbor matching
     * with replacement, Rubin 1973 — the observational-comparison
@@ -612,16 +623,15 @@ object TextAnalysis {
     * Scale shape: one equi-join on (lang, bin) — cell sizes bound the
     * candidate fan-out (the caliper is also the skew bound) — and one
     * per-treated row_number window; both linear shuffles. */
-  def qMatchedSampling(t: Tables, binWidth: Int = 50,
-      treatedSource: String = "src1"): DataFrame = {
+  def qMatchedSampling(t: Tables): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val docs = t.documents
       .select(col("doc_id"), col("lang"), col("source"), col("n_chars"))
-      .withColumn("bin", expr(s"n_chars div $binWidth"))
-    val treated = docs.filter(col("source") === treatedSource)
+      .withColumn("bin", expr(s"n_chars div $MatchBinWidth"))
+    val treated = docs.filter(col("source") === MatchTreatedSource)
       .select(col("doc_id").as("t_id"), col("lang"), col("bin"),
         col("n_chars").as("t_chars"))
-    val controls = docs.filter(col("source") =!= treatedSource)
+    val controls = docs.filter(col("source") =!= MatchTreatedSource)
       .select(col("doc_id").as("c_id"), col("lang"), col("bin"),
         col("n_chars").as("c_chars"))
     val cand = treated.join(controls, Seq("lang", "bin"), "left")
@@ -635,14 +645,14 @@ object TextAnalysis {
   }
 
   /** q197 oracle: the same cell join + (delta, c_id) argmin window. */
-  def qMatchedSamplingSql(binWidth: Int = 50, treatedSource: String = "src1"): String =
+  def qMatchedSamplingSql: String =
     s"""WITH d AS (
-      |  SELECT doc_id, lang, source, n_chars, n_chars // $binWidth AS bin
+      |  SELECT doc_id, lang, source, n_chars, n_chars // $MatchBinWidth AS bin
       |  FROM documents),
       |t AS (SELECT doc_id AS t_id, lang, bin, n_chars AS t_chars
-      |      FROM d WHERE source = '$treatedSource'),
+      |      FROM d WHERE source = '$MatchTreatedSource'),
       |c AS (SELECT doc_id AS c_id, lang, bin, n_chars AS c_chars
-      |      FROM d WHERE source <> '$treatedSource'),
+      |      FROM d WHERE source <> '$MatchTreatedSource'),
       |cand AS (
       |  SELECT t.t_id, t.lang, t.bin, t.t_chars, c.c_id, c.c_chars,
       |    abs(c.c_chars - t.t_chars) AS delta
@@ -927,14 +937,14 @@ object TextAnalysis {
     * Window + rank≤K is the WindowGroupLimit shape: at 100 TB the shuffle
     * partitions by domain and each partition streams in sorted order —
     * skewed domains fall out of AQE or a pre-salted two-phase top-K. */
-  def qDomainCap(t: Tables, cap: Int = 10): DataFrame = {
+  def qDomainCap(t: Tables): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("source"))
       .orderBy(substring(md5(col("text")), 1, 16), col("doc_id"))
     t.fanout(t.documents)
       .select(col("doc_id"), col("source"), col("text"))
       .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= cap)
+      .filter(col("rank") <= 10)
       .select(col("source"), col("rank").cast("long").as("rank"), col("doc_id"))
       .orderBy(col("source"), col("rank"))
   }
@@ -959,7 +969,7 @@ object TextAnalysis {
   /** Q92: passage-level exact dedup with document reconstruction (the
     * C4/RefinedWeb sub-document dedup step: boilerplate passages repeated
     * across the corpus are dropped, documents are rebuilt from what
-    * survives). Unit = fixed window of `passageLen` tokens (the corpus has
+    * survives). Unit = fixed window of 10 tokens (the corpus has
     * no newline/sentence structure to split on — TESTDATA). Keep-first rule
     * is the exact-dedup contract: first (doc_id, position) occurrence of a
     * passage wins, corpus-wide — including self-repeats inside a document.
@@ -970,8 +980,8 @@ object TextAnalysis {
     * its 128-bit hash to shrink the shuffle payload; text kept here so the
     * oracle can replay reconstruction). Rebuild is a groupBy(doc_id)
     * collect of the KEPT passages only — bounded by document length. */
-  def qPassageDedup(t: Tables, passageLen: Int = 10): DataFrame = {
-    val p = passageLen
+  def qPassageDedup(t: Tables): DataFrame = {
+    val p = 10 // passage length in tokens
     val toks = t.fanout(t.documents)
       .select(col("doc_id"), text.tokenize(col("text")).as("toks"))
     // chunk ids 0..ceil(n/p)-1; sequence() flips to a DESCENDING range when
@@ -1032,7 +1042,9 @@ object TextAnalysis {
     * partition AND re-pack everything when any upstream doc changes.
     * Shuffle: one window per shard (hash on shard id) + the final
     * O(sequences) aggregate. fill_ratio is one IEEE division — raw. */
-  def qSequencePack(t: Tables, budget: Int = 256, shardSize: Long = 1000): DataFrame = {
+  def qSequencePack(t: Tables): DataFrame = {
+    val budget = 256
+    val shardSize = 1000L
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("shard")).orderBy(col("doc_id"))
     t.fanout(t.documents)
@@ -1147,7 +1159,9 @@ object TextAnalysis {
     * whole vocabulary (the tail vocab at 100 TB is huge even after the
     * minFreq filter). Rank is then assigned by a window over the already-
     * bounded maxRank-row result, and the fit is 1 row. */
-  def qZipfFit(t: Tables, minFreq: Long = 5, maxRank: Int = 200): DataFrame = {
+  def qZipfFit(t: Tables): DataFrame = {
+    val minFreq = 5L
+    val maxRank = 200
     import org.apache.spark.sql.expressions.Window
     val top = t.fanout(t.documents)
       .select(explode(text.tokenize(col("text"))).as("token"))
@@ -1192,6 +1206,9 @@ object TextAnalysis {
       |  round((sy - slope_raw * sx) / CAST(n_ranked AS DOUBLE), 6) AS intercept
       |FROM fit""".stripMargin
 
+  /** Corpus-prefix points q203's Heaps fit samples. */
+  final val HeapsPoints = 10
+
   /** Q203: Heaps'-law vocabulary-growth fit V(n) ≈ K·n^β (Heaps 1978;
     * Baeza-Yates & Ribeiro-Neto ch.6) — the corpus-statistics complement
     * of q117's Zipf fit: how fast does the vocabulary grow as the corpus
@@ -1210,9 +1227,9 @@ object TextAnalysis {
     * terms) ride the driver (≤101 rows), exclusive offsets broadcast
     * back, windows run partitioned BY BUCKET. First occurrences are one
     * min-aggregate over the exploded terms (map-side combinable); the
-    * OLS runs on the ≤`points`-row checkpoint frame (post-filter tiny-
+    * OLS runs on the ≤`HeapsPoints`-row checkpoint frame (post-filter tiny-
     * frame window precedent). No global sort at any size. */
-  def qHeapsFit(t: Tables, points: Int = 10): DataFrame = {
+  def qHeapsFit(t: Tables): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.types._
     val spark = t.spark
@@ -1263,7 +1280,7 @@ object TextAnalysis {
       .withColumn("rank", col("offN") + count(lit(1)).over(w))
       .withColumn("cum_tokens", col("offT") + sum(col("ntok")).over(w))
       .withColumn("vocab", col("offV") + sum(col("nv")).over(w))
-    val cpRanks = (1 to points).map(k => (n * k + points - 1) / points)
+    val cpRanks = (1 to HeapsPoints).map(k => (n * k + HeapsPoints - 1) / HeapsPoints)
       .distinct.filter(_ >= 1L)
     val cp = ranked.filter(col("rank").isInCollection(cpRanks))
       .select(col("rank"), col("cum_tokens"), col("vocab"),
@@ -1292,7 +1309,7 @@ object TextAnalysis {
   /** q203 oracle: global windows replace the two-phase prefix (fine in
     * DuckDB); checkpoint ranks re-derived as ⌈n·k/points⌉ in exact
     * integer math; β/K re-expressed with the identical IEEE sequences. */
-  def qHeapsFitSql(points: Int = 10): String =
+  def qHeapsFitSql: String =
     s"""WITH d AS (
       |  SELECT doc_id,
       |    ${text.tokenizeSql("text")} AS toks
@@ -1310,9 +1327,9 @@ object TextAnalysis {
       |  FROM d LEFT JOIN nv USING (doc_id)),
       |nn AS (SELECT COUNT(*)::BIGINT AS n FROM d),
       |cps AS (
-      |  SELECT DISTINCT (n * k + ${points - 1}) // $points AS r
-      |  FROM nn, range(1, ${points + 1}) t(k)
-      |  WHERE (n * k + ${points - 1}) // $points >= 1),
+      |  SELECT DISTINCT (n * k + ${HeapsPoints - 1}) // $HeapsPoints AS r
+      |  FROM nn, range(1, ${HeapsPoints + 1}) t(k)
+      |  WHERE (n * k + ${HeapsPoints - 1}) // $HeapsPoints >= 1),
       |cp AS (
       |  SELECT rank, cum_tokens, vocab,
       |    CAST(round(ln(CAST(greatest(cum_tokens, 1) AS DOUBLE)) * 1000000.0::DOUBLE) AS BIGINT) AS ln_t_micro,
@@ -1335,6 +1352,9 @@ object TextAnalysis {
       |    / (CAST(s.np AS DOUBLE) * 1000000.0::DOUBLE)), 6) AS k
       |FROM cp, s ORDER BY rank""".stripMargin
 
+  /** Equal-width bins of q204's mutual-information estimate. */
+  final val MiBins = 10
+
   /** Q204: mutual information I(source; quality-bucket) — the dependence
     * audit between a corpus facet and the quality signal (does quality
     * vary by source, and by how many nats?). Complements q173's
@@ -1354,7 +1374,7 @@ object TextAnalysis {
     * Scale shape: one corpus-scale count aggregate (map-side
     * combinable); marginals + the MI sum are windows over the bounded
     * |sources|·bins cell table (post-aggregate tiny-frame precedent). */
-  def qMutualInfo(t: Tables, bins: Int = 10): DataFrame = {
+  def qMutualInfo(t: Tables): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val q = qualityScoreShared(t).select(col("doc_id"), col("quality_score"))
     val cells = q
@@ -1362,7 +1382,7 @@ object TextAnalysis {
       .select(col("source"),
         round(col("quality_score") * lit(1000000.0), 0).cast("long").as("qm"))
       .select(col("source"),
-        expr(s"least((qm * $bins) div 1000000, ${(bins - 1).toLong}L)").as("bin"))
+        expr(s"least((qm * $MiBins) div 1000000, ${(MiBins - 1).toLong}L)").as("bin"))
       .groupBy(col("source"), col("bin")).agg(count(lit(1)).as("c_xy"))
     val wx = Window.partitionBy(col("source"))
     val wy = Window.partitionBy(col("bin"))
@@ -1385,12 +1405,12 @@ object TextAnalysis {
 
   /** q204 oracle: the shared q27 score chain + the same BIGINT bucket and
     * micro-grid cell terms; windows over the bounded cell table. */
-  def qMutualInfoSql(bins: Int = 10): String =
+  def qMutualInfoSql: String =
     s"""WITH $qualityScoreCtes,
       |cells AS (
       |  SELECT d.source,
       |    least((CAST(round(s.quality_score * 1000000.0::DOUBLE) AS BIGINT)
-      |           * $bins) // 1000000, ${bins - 1}) AS bin,
+      |           * $MiBins) // 1000000, ${MiBins - 1}) AS bin,
       |    COUNT(*)::BIGINT AS c_xy
       |  FROM scored s JOIN documents d USING (doc_id)
       |  GROUP BY 1, 2),
@@ -1456,12 +1476,12 @@ object TextAnalysis {
     * bucketRank two-phase prefix (no single-partition sort); one equi
     * join on doc_id + one aggregate. Reuses the session weight cache —
     * the fifth consumer of one training. */
-  def qSpearman(t: Tables, rounds: Int = 16, lr: Double = 8.0): DataFrame = {
+  def qSpearman(t: Tables): DataFrame = {
     import org.apache.spark.sql.types._
     val spark = t.documents.sparkSession
     val feats = logitFeaturesShared(t)
     locally {
-      logitTrainCached(t, feats, rounds, lr) match {
+      logitTrainCached(t, feats) match {
         case None =>
           Tables.emptyFrame(spark, "n" -> LongType, "sum_d2" -> LongType,
             "rho" -> DoubleType)
@@ -1491,8 +1511,8 @@ object TextAnalysis {
 
   /** q205 oracle: the shared weight chain + global ROW_NUMBERs (the
     * two-phase prefix is a Spark-side execution detail). */
-  def qSpearmanSql(rounds: Int = 16, lr: Double = 8.0): String = {
-    val (chain, wFinal) = logitChainCtes(rounds, lr)
+  def qSpearmanSql: String = {
+    val (chain, wFinal) = logitChainCtes
     val p = logitProbSql()
     s"""WITH $chain,
        |conf AS (
@@ -1534,14 +1554,14 @@ object TextAnalysis {
     * Scale shape: q200's exact scaffold — one aggregate per distinct
     * score, the descending prefix via bucket offsets (≤100-row driver
     * fetch) + per-bucket windows, one final aggregate. */
-  def qPrCurve(t: Tables, rounds: Int = 16, lr: Double = 8.0): DataFrame = {
+  def qPrCurve(t: Tables): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.types._
     val spark = t.documents.sparkSession
     import spark.implicits._
     val feats = logitFeaturesShared(t)
     locally {
-      logitTrainCached(t, feats, rounds, lr) match {
+      logitTrainCached(t, feats) match {
         case None =>
           Tables.emptyFrame(spark, "n_pos" -> LongType, "n_neg" -> LongType,
             "ap_micro" -> LongType, "ap" -> DoubleType,
@@ -1601,8 +1621,8 @@ object TextAnalysis {
 
   /** q206 oracle: the weight chain + plain descending windows; the argmax
     * decodes the same integer encoding with // and %. */
-  def qPrCurveSql(rounds: Int = 16, lr: Double = 8.0): String = {
-    val (chain, wFinal) = logitChainCtes(rounds, lr)
+  def qPrCurveSql: String = {
+    val (chain, wFinal) = logitChainCtes
     val p = logitProbSql()
     s"""WITH $chain,
        |sc AS (SELECT round(($p), 6) AS conf, y FROM f, $wFinal w),
@@ -1641,6 +1661,9 @@ object TextAnalysis {
        |FROM terms""".stripMargin
   }
 
+  /** q207's exponentiated-gradient step size. */
+  final val DoremiEta = 1.0
+
   /** Q207: excess-loss domain reweighting — a one-step, deterministic
     * variant of DoReMi (Xie et al. 2023): sources whose documents are
     * HARDER than the corpus average under a reference LM get upweighted
@@ -1662,7 +1685,7 @@ object TextAnalysis {
     * Scale shape: explode + one vocabulary aggregate + one term-keyed
     * shuffle join (q110's plan) + a per-source aggregate; the softmax
     * runs as windows over the bounded |sources| table. */
-  def qDoremiWeights(t: Tables, eta: Double = 1.0): DataFrame = {
+  def qDoremiWeights(t: Tables): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val toks = t.fanout(t.documents)
       .select(col("source"), col("doc_id"), explode(text.tokenize(col("text"))).as("term"))
@@ -1691,7 +1714,7 @@ object TextAnalysis {
         col("g_nll_sum").cast("double") / col("g_tokens").cast("double") / lit(1000000.0))
       .withColumn("excess", col("nll") - col("g_nll"))
       .withColumn("wu_micro",
-        round(exp(lit(eta) * col("excess")) * lit(1000000.0), 0).cast("long"))
+        round(exp(lit(DoremiEta) * col("excess")) * lit(1000000.0), 0).cast("long"))
       .withColumn("num", col("n_tokens") * col("wu_micro"))
       .withColumn("weight",
         col("num").cast("double") / sum(col("num")).over(all).cast("double"))
@@ -1701,7 +1724,7 @@ object TextAnalysis {
   }
 
   /** q207 oracle: same unigram reference, micro sums, and softmax windows. */
-  def qDoremiWeightsSql(eta: Double = 1.0): String =
+  def qDoremiWeightsSql: String =
     s"""WITH toks AS (
       |  SELECT source, doc_id,
       |    unnest(${text.tokenizeSql("text")}) AS term
@@ -1734,12 +1757,15 @@ object TextAnalysis {
       |      - (CAST(g_nll_sum AS DOUBLE) / CAST(g_tokens AS DOUBLE) / 1000000.0::DOUBLE) AS excess
       |  FROM m),
       |wu AS (
-      |  SELECT *, CAST(round(exp($eta::DOUBLE * excess) * 1000000.0::DOUBLE) AS BIGINT) AS wu_micro
+      |  SELECT *, CAST(round(exp($DoremiEta::DOUBLE * excess) * 1000000.0::DOUBLE) AS BIGINT) AS wu_micro
       |  FROM e)
       |SELECT source, n_docs, n_tokens, nll, excess, wu_micro,
       |  CAST(n_tokens * wu_micro AS DOUBLE)
       |    / CAST(SUM(n_tokens * wu_micro) OVER () AS DOUBLE) AS weight
       |FROM wu ORDER BY source""".stripMargin
+
+  /** q208's token budget. */
+  final val AllocBudget = 100000L
 
   /** Q208: temperature-based mixture allocation — the sampling-share
     * schedule p_i ∝ w_i^(1/τ) used to flatten a skewed source mix
@@ -1758,7 +1784,7 @@ object TextAnalysis {
     *
     * Scale shape: one per-source aggregate; apportionment runs on the
     * bounded |sources| table (windows over ≤|sources| rows). */
-  def qTemperatureAlloc(t: Tables, budget: Long = 100000L): DataFrame = {
+  def qTemperatureAlloc(t: Tables, budget: Long = AllocBudget): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val mass = t.fanout(t.documents)
       .groupBy(col("source"))
@@ -1786,7 +1812,7 @@ object TextAnalysis {
 
   /** q208 oracle: identical integer apportionment; the remainder rank is
     * the same total order on (rem desc, source). */
-  def qTemperatureAllocSql(budget: Long = 100000L): String =
+  def qTemperatureAllocSql: String =
     s"""WITH mass AS (
       |  SELECT source,
       |    CAST(SUM(len(${text.tokenizeSql("text")})) AS BIGINT) AS w
@@ -1798,12 +1824,12 @@ object TextAnalysis {
       |r AS (
       |  SELECT *,
       |    CAST(SUM(sm) OVER () AS BIGINT) AS s_tot,
-      |    ($budget * sm) // nullif(CAST(SUM(sm) OVER () AS BIGINT), 0) AS base,
-      |    ($budget * sm) % nullif(CAST(SUM(sm) OVER () AS BIGINT), 0) AS rem
+      |    ($AllocBudget * sm) // nullif(CAST(SUM(sm) OVER () AS BIGINT), 0) AS base,
+      |    ($AllocBudget * sm) % nullif(CAST(SUM(sm) OVER () AS BIGINT), 0) AS rem
       |  FROM sm),
       |k AS (
       |  SELECT *,
-      |    $budget - CAST(SUM(base) OVER () AS BIGINT) AS leftover,
+      |    $AllocBudget - CAST(SUM(base) OVER () AS BIGINT) AS leftover,
       |    CAST(ROW_NUMBER() OVER (ORDER BY rem DESC, source) AS BIGINT) AS rk
       |  FROM r)
       |SELECT source, w AS n_tokens, sm,
@@ -1812,6 +1838,9 @@ object TextAnalysis {
       |  CAST(CASE WHEN rk <= leftover THEN 1 ELSE 0 END AS BIGINT) AS extra,
       |  CAST(base + CASE WHEN rk <= leftover THEN 1 ELSE 0 END AS BIGINT) AS alloc
       |FROM k ORDER BY source""".stripMargin
+
+  /** Rows q209's weighted reservoir keeps. */
+  final val ReservoirK = 50
 
   /** Q209: weighted reservoir sampling (A-Res, Efraimidis & Spirakis
     * 2006) — weighted sampling WITHOUT replacement as one distributed
@@ -1830,7 +1859,7 @@ object TextAnalysis {
     * Scale shape: per-row hash + one TakeOrderedAndProject — per-
     * partition heaps of k rows, no global sort, no shuffle beyond the
     * final k-row gather. */
-  def qWeightedReservoir(t: Tables, k: Int = 50): DataFrame = {
+  def qWeightedReservoir(t: Tables, k: Int = ReservoirK): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val keyed = t.fanout(t.documents).select(
       col("doc_id"),
@@ -1849,7 +1878,7 @@ object TextAnalysis {
   }
 
   /** q209 oracle: the same md5-hex uniform and pico-grid key. */
-  def qWeightedReservoirSql(k: Int = 50): String =
+  def qWeightedReservoirSql: String =
     s"""WITH h AS (
       |  SELECT doc_id, greatest(n_chars, 1)::BIGINT AS w,
       |    greatest(CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 13)) AS BIGINT), 1) AS hv
@@ -1861,8 +1890,11 @@ object TextAnalysis {
       |  FROM h)
       |SELECT CAST(ROW_NUMBER() OVER (ORDER BY key_pico DESC, doc_id) AS BIGINT) AS rank,
       |  doc_id, w, key_pico
-      |FROM (SELECT * FROM keyed ORDER BY key_pico DESC, doc_id LIMIT $k)
+      |FROM (SELECT * FROM keyed ORDER BY key_pico DESC, doc_id LIMIT $ReservoirK)
       |ORDER BY rank""".stripMargin
+
+  /** q210's Kolmogorov–Smirnov c(α) (α = 0.05). */
+  final val KsCAlpha = 1.358
 
   /** Q210: per-source two-sample Kolmogorov–Smirnov test on the quality
     * distribution — does source s draw its quality scores from the same
@@ -1883,7 +1915,7 @@ object TextAnalysis {
     * source. Distinct qm is grid-bounded (≤1e6+1). The argmax encoding
     * d_num·1000001+qm needs n_s·n_r ≲ 9·10¹²; past that (≈3M docs per
     * side) split max and argmax into two aggregates — same contract. */
-  def qKsQuality(t: Tables, cAlpha: Double = 1.358): DataFrame = {
+  def qKsQuality(t: Tables): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val q = qualityScoreShared(t).select(col("doc_id"),
       round(col("quality_score") * lit(1000000.0), 0).cast("long").as("qm"))
@@ -1922,7 +1954,7 @@ object TextAnalysis {
       .withColumn("d_num", expr("enc div 1000001L"))
       .withColumn("at_qm", expr("enc % 1000001L"))
       .withColumn("d", col("d_num").cast("double") / den)
-      .withColumn("crit", lit(cAlpha) * sqrt((nsd + nrd) / den))
+      .withColumn("crit", lit(KsCAlpha) * sqrt((nsd + nrd) / den))
       .withColumn("reject", col("d") > col("crit"))
       .select(col("source"), col("n_s"), col("n_r"), col("d_num"),
         col("at_qm"), col("d"), col("crit"), col("reject"))
@@ -1931,7 +1963,7 @@ object TextAnalysis {
 
   /** q210 oracle: the q27 chain + the same windows and integer encoding;
     * the grid is a plain source×distinct-qm cross join (fine in DuckDB). */
-  def qKsQualitySql(cAlpha: Double = 1.358): String =
+  def qKsQualitySql: String =
     s"""WITH $qualityScoreCtes,
       |qq AS (
       |  SELECT d.source,
@@ -1969,11 +2001,11 @@ object TextAnalysis {
       |  CAST(enc % 1000001 AS BIGINT) AS at_qm,
       |  CAST(enc // 1000001 AS DOUBLE)
       |    / nullif(CAST(n_s AS DOUBLE) * CAST(n_r AS DOUBLE), 0.0::DOUBLE) AS d,
-      |  $cAlpha::DOUBLE * sqrt((CAST(n_s AS DOUBLE) + CAST(n_r AS DOUBLE))
+      |  $KsCAlpha::DOUBLE * sqrt((CAST(n_s AS DOUBLE) + CAST(n_r AS DOUBLE))
       |    / nullif(CAST(n_s AS DOUBLE) * CAST(n_r AS DOUBLE), 0.0::DOUBLE)) AS crit,
       |  CAST(enc // 1000001 AS DOUBLE)
       |    / nullif(CAST(n_s AS DOUBLE) * CAST(n_r AS DOUBLE), 0.0::DOUBLE)
-      |    > $cAlpha::DOUBLE * sqrt((CAST(n_s AS DOUBLE) + CAST(n_r AS DOUBLE))
+      |    > $KsCAlpha::DOUBLE * sqrt((CAST(n_s AS DOUBLE) + CAST(n_r AS DOUBLE))
       |      / nullif(CAST(n_s AS DOUBLE) * CAST(n_r AS DOUBLE), 0.0::DOUBLE)) AS reject
       |FROM e ORDER BY source""".stripMargin
 
@@ -2067,6 +2099,9 @@ object TextAnalysis {
       |JOIN nj njx ON njx.source = o.src_j
       |ORDER BY o.src_i, o.src_j""".stripMargin
 
+  /** Top terms per topic q212 scores. */
+  final val CoherenceK = 5
+
   /** Q212: UMass topic coherence (Mimno et al. EMNLP 2011) of each
     * source's top-k terms — the intrinsic quality score for topic/
     * cluster word lists: C = Σ_{i>j} ln((D(w_i,w_j)+1)/D(w_j)) over the
@@ -2085,7 +2120,7 @@ object TextAnalysis {
     * occurrence counts run only over terms IN the top-word set (an
     * equi semi join prunes the exploded stream before the doc-keyed
     * self-join); the coherence sum is |S|·k(k−1)/2 bounded rows. */
-  def qTopicCoherence(t: Tables, k: Int = 5): DataFrame = {
+  def qTopicCoherence(t: Tables): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val toks = t.fanout(t.documents)
       .select(col("source"), col("doc_id"), explode(text.tokenize(col("text"))).as("term"))
@@ -2097,7 +2132,7 @@ object TextAnalysis {
     val top = sourceTermCountsShared(t)
       .withColumn("rk", row_number().over(
         Window.partitionBy(col("source")).orderBy(col("c").desc, col("term"))))
-      .filter(col("rk") <= k)
+      .filter(col("rk") <= CoherenceK)
       .localCheckpoint()
     val w = top.select(col("term")).distinct()
     val docTerm = toks.select(col("doc_id"), col("term")).distinct()
@@ -2136,7 +2171,7 @@ object TextAnalysis {
   }
 
   /** q212 oracle: same top-k ranks, D counts, and micro log terms. */
-  def qTopicCoherenceSql(k: Int = 5): String =
+  def qTopicCoherenceSql: String =
     s"""WITH toks AS (
       |  SELECT source, doc_id,
       |    unnest(${text.tokenizeSql("text")}) AS term
@@ -2147,7 +2182,7 @@ object TextAnalysis {
       |      ROW_NUMBER() OVER (PARTITION BY source
       |        ORDER BY COUNT(*) DESC, term) AS rk
       |    FROM toks GROUP BY source, term)
-      |  WHERE rk <= $k),
+      |  WHERE rk <= $CoherenceK),
       |w AS (SELECT DISTINCT term FROM top),
       |dt AS (
       |  SELECT DISTINCT t.doc_id, t.term FROM toks t JOIN w USING (term)),
@@ -2178,6 +2213,9 @@ object TextAnalysis {
       |GROUP BY t.source, words.top_words
       |ORDER BY t.source""".stripMargin
 
+  /** q214's cross-validation folds. */
+  final val CvFolds = 5
+
   /** Q214: cross-validation fold stability of the quality classifier —
     * deterministic hash folds (the q209 md5-hex replay contract), the
     * CACHED q139 weights scored per fold, and the fold-accuracy spread
@@ -2193,14 +2231,13 @@ object TextAnalysis {
     *
     * Scale shape: one scan to score + one fold aggregate; the summary
     * is a window over k rows. */
-  def qCvFolds(t: Tables, folds: Int = 5, rounds: Int = 16,
-      lr: Double = 8.0): DataFrame = {
+  def qCvFolds(t: Tables): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.types._
     val spark = t.documents.sparkSession
     val feats = logitFeaturesShared(t)
     locally {
-      logitTrainCached(t, feats, rounds, lr) match {
+      logitTrainCached(t, feats) match {
         case None =>
           Tables.emptyFrame(spark, "fold" -> LongType, "n" -> LongType,
             "n_pos" -> LongType, "correct" -> LongType, "acc" -> DoubleType,
@@ -2210,7 +2247,7 @@ object TextAnalysis {
           val p = logitProb(w)
           val scored = feats.select(col("y"),
             expr(("cast(conv(substring(md5(cast(doc_id as string)), 1, 13), 16, 10) " +
-              s"as bigint) % ${folds}L")).as("fold"),
+              s"as bigint) % ${CvFolds}L")).as("fold"),
             when((round(p, 6) > 0.5).cast("int") === col("y").cast("int"), 1L)
               .otherwise(0L).as("ok"))
           val perFold = scored.groupBy(col("fold")).agg(
@@ -2238,14 +2275,14 @@ object TextAnalysis {
 
   /** q214 oracle: the weight chain + the same md5 folds and k-row
     * summary windows. */
-  def qCvFoldsSql(folds: Int = 5, rounds: Int = 16, lr: Double = 8.0): String = {
-    val (chain, wFinal) = logitChainCtes(rounds, lr)
+  def qCvFoldsSql: String = {
+    val (chain, wFinal) = logitChainCtes
     val p = logitProbSql()
     s"""WITH $chain,
        |sc AS (
        |  SELECT y,
        |    CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 13)) AS BIGINT)
-       |      % $folds AS fold,
+       |      % $CvFolds AS fold,
        |    CASE WHEN (round($p, 6) > 0.5::DOUBLE) = (y = 1.0::DOUBLE)
        |         THEN 1 ELSE 0 END AS ok
        |  FROM f, $wFinal w),
@@ -2541,6 +2578,11 @@ object TextAnalysis {
       |JOIN gq ON gq.target_rank = r.target_rank
       |ORDER BY r.doc_id""".stripMargin
 
+  /** q225's k, l and length-bin width. */
+  final val KAnonK = 5
+  final val KAnonL = 2
+  final val KAnonBinWidth = 100
+
   /** Q225: k-anonymity / l-diversity audit (Sweeney 2002; Machanavajjhala
     * et al. 2007) over the release-style quasi-identifiers (source,
     * lang, length-bin): the privacy-ops gate that runs BEFORE q84's
@@ -2554,11 +2596,10 @@ object TextAnalysis {
     *
     * Scale shape: one (qid) aggregate over a two-level rollup (class ×
     * content first — no countDistinct expand on the row stream). */
-  def qKAnonymity(t: Tables, k: Int = 5, l: Int = 2,
-      binWidth: Int = 100): DataFrame = {
+  def qKAnonymity(t: Tables): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val classed = t.documents.select(col("source"), col("lang"),
-      expr(s"n_chars div ${binWidth}L").as("bin"),
+      expr(s"n_chars div ${KAnonBinWidth}L").as("bin"),
       substring(md5(col("text")), 1, 16).as("content"))
     val perContent = classed.groupBy(col("source"), col("lang"), col("bin"),
       col("content")).agg(count(lit(1)).as("cc"))
@@ -2566,13 +2607,13 @@ object TextAnalysis {
       .agg(sum(col("cc")).as("n"), count(lit(1)).as("l_distinct"))
     val all = Window.partitionBy()
     classes
-      .withColumn("k_ok", col("n") >= k)
-      .withColumn("l_ok", col("l_distinct") >= l)
+      .withColumn("k_ok", col("n") >= KAnonK)
+      .withColumn("l_ok", col("l_distinct") >= KAnonL)
       .withColumn("n_classes", count(lit(1)).over(all))
       .withColumn("n_violating",
-        sum(when(col("n") < k || col("l_distinct") < l, 1L).otherwise(0L)).over(all))
+        sum(when(col("n") < KAnonK || col("l_distinct") < KAnonL, 1L).otherwise(0L)).over(all))
       .withColumn("rows_at_risk",
-        sum(when(col("n") < k, col("n")).otherwise(0L)).over(all))
+        sum(when(col("n") < KAnonK, col("n")).otherwise(0L)).over(all))
       .select(col("source"), col("lang"), col("bin"), col("n"),
         col("l_distinct"), col("k_ok"), col("l_ok"),
         col("n_classes"), col("n_violating"), col("rows_at_risk"))
@@ -2580,9 +2621,9 @@ object TextAnalysis {
   }
 
   /** q225 oracle: the same two-level rollup and class-table windows. */
-  def qKAnonymitySql(k: Int = 5, l: Int = 2, binWidth: Int = 100): String =
+  def qKAnonymitySql: String =
     s"""WITH pc AS (
-      |  SELECT source, lang, n_chars // $binWidth AS bin,
+      |  SELECT source, lang, n_chars // $KAnonBinWidth AS bin,
       |    substr(md5(text), 1, 16) AS content, COUNT(*)::BIGINT AS cc
       |  FROM documents GROUP BY 1, 2, 3, 4),
       |cls AS (
@@ -2590,15 +2631,19 @@ object TextAnalysis {
       |    COUNT(*)::BIGINT AS l_distinct
       |  FROM pc GROUP BY 1, 2, 3)
       |SELECT source, lang, bin, n, l_distinct,
-      |  n >= $k AS k_ok, l_distinct >= $l AS l_ok,
+      |  n >= $KAnonK AS k_ok, l_distinct >= $KAnonL AS l_ok,
       |  CAST(COUNT(*) OVER () AS BIGINT) AS n_classes,
-      |  CAST(SUM(CASE WHEN n < $k OR l_distinct < $l THEN 1 ELSE 0 END)
+      |  CAST(SUM(CASE WHEN n < $KAnonK OR l_distinct < $KAnonL THEN 1 ELSE 0 END)
       |    OVER () AS BIGINT) AS n_violating,
-      |  CAST(SUM(CASE WHEN n < $k THEN n ELSE 0 END) OVER () AS BIGINT) AS rows_at_risk
+      |  CAST(SUM(CASE WHEN n < $KAnonK THEN n ELSE 0 END) OVER () AS BIGINT) AS rows_at_risk
       |FROM cls ORDER BY source, lang, bin""".stripMargin
 
+  /** The token chunk size and stride of q99 and q273's passages. */
+  final val ChunkSize = 8
+  final val ChunkStride = 4
+
   /** Q99: overlapping sliding-window chunking (RAG / retrieval indexing:
-    * fixed `size`-token windows every `stride` tokens, so passage
+    * fixed `ChunkSize`-token windows every `ChunkStride` tokens, so passage
     * boundaries can't hide a span — the complement of q92's disjoint
     * passages). Emits a compact per-doc signature (ordered concat of each
     * chunk's md5 prefix) instead of the chunk rows themselves, so the
@@ -2606,16 +2651,16 @@ object TextAnalysis {
     * construction is per-row over the token array (O(tokens) work, each
     * token lands in ≤ size/stride chunks); the only shuffle is the final
     * per-doc aggregate — linear end to end. */
-  def qSlidingChunks(t: Tables, size: Int = 8, stride: Int = 4): DataFrame = {
+  def qSlidingChunks(t: Tables): DataFrame = {
     val toks = t.fanout(t.documents)
       .select(col("doc_id"), text.tokenize(col("text")).as("toks"))
     // sequence() flips to a DESCENDING range when start > stop — guard the
     // short-doc case (fewer than `size` tokens ⇒ zero full windows)
     val chunks = toks
       .select(col("doc_id"), posexplode(expr(
-        s"""CASE WHEN size(toks) < $size THEN cast(array() as array<string>)
-           |ELSE transform(sequence(0, (size(toks) - $size) div $stride),
-           |               i -> array_join(slice(toks, i * $stride + 1, $size), ' '))
+        s"""CASE WHEN size(toks) < $ChunkSize THEN cast(array() as array<string>)
+           |ELSE transform(sequence(0, (size(toks) - $ChunkSize) div $ChunkStride),
+           |               i -> array_join(slice(toks, i * $ChunkStride + 1, $ChunkSize), ' '))
            |END""".stripMargin)).as(Seq("idx", "chunk")))
     chunks
       .withColumn("sig4", substring(md5(col("chunk")), 1, 4))
@@ -2833,7 +2878,8 @@ object TextAnalysis {
     * broadcasts (|vocab| rows at any corpus size). Ranking orders by the
     * ROUNDED pmi (identical on both engines) with a (a,b) tie-break, so
     * the top-20 cut is deterministic cross-engine. */
-  def qPmiCollocations(t: Tables, minCount: Long = 5): DataFrame = {
+  def qPmiCollocations(t: Tables): DataFrame = {
+    val minCount = 5L
     // r14: uf/bf ride the shared session n-gram counts (identical exact
     // integers; nb stays the Σc over the bigram table — r13 opt)
     val uf = unigramCountsShared(t)
@@ -2944,6 +2990,13 @@ object TextAnalysis {
       |FROM rates r LEFT JOIN sampled s USING (source)
       |ORDER BY r.source""".stripMargin
 
+  /** The retrieval family's query (q123, q138, q273, q300), the rows it
+    * returns and the BM25 k1/b (q123, q138, q273). */
+  val RetrievalQuery: Seq[String] = Seq("spark", "window", "join")
+  final val RetrievalTopK = 20
+  final val Bm25K1 = 1.2
+  final val Bm25B = 0.75
+
   /** Q123: BM25 retrieval scoring (Robertson-Walker-Jones Okapi BM25, the
     * Lucene-practical variant: idf = ln(1 + (N−df+0.5)/(df+0.5))) — the
     * retrieval half of a RAG pipeline next to the vector ANN block. Score
@@ -2959,14 +3012,13 @@ object TextAnalysis {
     * both engines; the ≤|query|-term per-doc sum is aggregation-ordered →
     * round(6). b = 0.75 is exactly binary; k1 literals are written in
     * both engines' parsers identically. */
-  def qBm25(t: Tables, queryTerms: Seq[String] = Seq("spark", "window", "join"),
-      k1: Double = 1.2, b: Double = 0.75, topK: Int = 20): DataFrame = {
+  def qBm25(t: Tables, topK: Int = RetrievalTopK): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     // the one-pass unpivot assumes distinct query terms (a duplicate
     // would double-count df/cf where the old groupBy shape deduped) —
     // normalize instead of documenting the precondition (ADVICE r13);
     // identity for the shipped default
-    val query = queryTerms.distinct
+    val query = RetrievalQuery.distinct
     val toks = t.fanout(t.documents)
       .select(col("doc_id"), explode(text.tokenize(col("text"))).as("term"))
     // ONE tokenize+explode pass: per-doc length AND the per-query-term
@@ -3002,9 +3054,10 @@ object TextAnalysis {
           / (col("df").cast("double") + lit(0.5))))
     val scored = tf.join(broadcast(dfs), "term").join(lens, "doc_id")
       .withColumn("term_score",
-        col("idf") * (col("tf").cast("double") * lit(k1 + 1.0))
+        col("idf") * (col("tf").cast("double") * lit(Bm25K1 + 1.0))
           / (col("tf").cast("double")
-            + lit(k1) * (lit(1.0) - lit(b) + lit(b) * col("len").cast("double") / avgdl)))
+            + lit(Bm25K1) * (lit(1.0) - lit(Bm25B)
+              + lit(Bm25B) * col("len").cast("double") / avgdl)))
       .groupBy(col("doc_id"))
       .agg(round(sum(col("term_score")), 6).as("score"),
         count(lit(1)).as("n_terms_hit"))
@@ -3016,25 +3069,25 @@ object TextAnalysis {
       .orderBy(col("rank"))
   }
 
-  /** q123 oracle, parameterized EXACTLY like qBm25 (the qKmeansStepSql
-    * pattern — round-5 advice: a hard-coded term list/LIMIT silently broke
-    * oracle parity for any non-default invocation). The float literals are
+  /** q123 oracle: it reads the constants qBm25 reads (`RetrievalQuery`,
+    * `Bm25K1`, `Bm25B`, `RetrievalTopK`), so the arms cannot drift apart
+    * (round-5 advice: a hard-coded term list/LIMIT silently broke oracle
+    * parity once the Spark arm's value changed). The float literals are
     * interpolated so both engines parse the SAME doubles, and composite
     * constants (k1+1, 1-b) stay written as the two-operand IEEE expression
     * in both parsers. */
-  def qBm25Sql(query: Seq[String] = Seq("spark", "window", "join"),
-      k1: Double = 1.2, b: Double = 0.75, topK: Int = 20): String =
-    s"""WITH ${bm25Ctes(query, k1, b)}
+  def qBm25Sql: String =
+    s"""WITH ${bm25Ctes}
       |SELECT CAST(ROW_NUMBER() OVER (ORDER BY score DESC, doc_id) AS BIGINT) AS rank,
       |  doc_id, score, n_terms_hit
-      |FROM (SELECT * FROM scored ORDER BY score DESC, doc_id LIMIT $topK)
+      |FROM (SELECT * FROM scored ORDER BY score DESC, doc_id LIMIT $RetrievalTopK)
       |ORDER BY rank""".stripMargin
 
   /** The BM25 CTE chain (tokenize → lens/stats → tf/df → `scored`), shared
     * verbatim between the q123 oracle and the q138 hybrid-fusion oracle so
     * the sparse arm cannot drift between them. */
-  private def bm25Ctes(query: Seq[String], k1: Double, b: Double): String = {
-    val terms = query.map(q => "'" + q.replace("'", "''") + "'").mkString(", ")
+  private def bm25Ctes: String = {
+    val terms = RetrievalQuery.map(q => "'" + q.replace("'", "''") + "'").mkString(", ")
     s"""toks AS (
       |  SELECT doc_id,
       |    unnest(${text.tokenizeSql("text")}) AS term
@@ -3050,22 +3103,29 @@ object TextAnalysis {
       |    round(SUM(
       |      ln(1.0::DOUBLE + (CAST(s.n - dfs.df AS DOUBLE) + 0.5::DOUBLE)
       |                       / (CAST(dfs.df AS DOUBLE) + 0.5::DOUBLE))
-      |      * (CAST(tf.tf AS DOUBLE) * ($k1::DOUBLE + 1.0::DOUBLE))
+      |      * (CAST(tf.tf AS DOUBLE) * ($Bm25K1::DOUBLE + 1.0::DOUBLE))
       |      / (CAST(tf.tf AS DOUBLE)
-      |         + $k1::DOUBLE * (1.0::DOUBLE - $b::DOUBLE
-      |            + $b::DOUBLE * CAST(l.len AS DOUBLE)
+      |         + $Bm25K1::DOUBLE * (1.0::DOUBLE - $Bm25B::DOUBLE
+      |            + $Bm25B::DOUBLE * CAST(l.len AS DOUBLE)
       |              / (CAST(s.sum_len AS DOUBLE) / CAST(s.n AS DOUBLE))))), 6) AS score,
       |    CAST(COUNT(*) AS BIGINT) AS n_terms_hit
       |  FROM tf JOIN dfs USING (term) JOIN lens l ON l.doc_id = tf.doc_id, stats s
       |  GROUP BY tf.doc_id)""".stripMargin
   }
 
+  /** q138: candidates per arm, the dense arm's probe, the RRF k and the
+    * fused rows kept. */
+  final val RrfN = 20
+  final val RrfProbeId = 0L
+  final val RrfK = 60
+  final val RrfTopK = 10
+
   /** Q138: hybrid sparse+dense retrieval with reciprocal-rank fusion
     * (Cormack, Clarke & Buettcher 2009, "Reciprocal rank fusion
     * outperforms Condorcet and individual rank learning methods") — the
     * standard RAG retrieval composition: BM25 term ranking and exact
-    * embedding-cosine ranking each produce a top-`n` list, fused by
-    * rrf(d) = Σ_arms 1/(k + rank_arm(d)) with k = `rrfK` (60, the
+    * embedding-cosine ranking each produce a top-`RrfN` list, fused by
+    * rrf(d) = Σ_arms 1/(k + rank_arm(d)) with k = `RrfK` (60, the
     * published constant).
     *
     * Scale shape: the sparse arm is q123's inverted-index probe
@@ -3074,7 +3134,7 @@ object TextAnalysis {
     * SQ8-params contract) and scores the corpus with a scan-stage
     * CosineSim expression + TakeOrderedAndProject: NO join at all on the
     * dense side, so no broadcast-NLJ and nothing shuffles except two
-    * ≤`n`-row lists. The fusion itself is a full-outer equi-join of two
+    * ≤`RrfN`-row lists. The fusion itself is a full-outer equi-join of two
     * bounded lists — constant-size work regardless of corpus scale. At
     * 100 TB the dense arm would swap in an ANN rung (q40/q56/q81/q137)
     * unchanged above the fusion.
@@ -3082,35 +3142,34 @@ object TextAnalysis {
     * Oracle parity: ranks are integers with total tie-break orders; the
     * RRF score is the identical two-term IEEE expression both engines
     * (1.0/(60.0+rank), coalesced to 0 for a one-arm doc) → emitted RAW. */
-  def qHybridRrf(t: Tables, query: Seq[String] = Seq("spark", "window", "join"),
-      probeId: Long = 0L, n: Int = 20, topK: Int = 10, rrfK: Int = 60): DataFrame = {
+  def qHybridRrf(t: Tables): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.types._
     val spark = t.documents.sparkSession
-    val sparse = qBm25(t, query, topK = n)
+    val sparse = qBm25(t, topK = RrfN)
       .select(col("doc_id"), col("rank").as("rank_sparse"))
     // bounded parameter fetch: one dim-float probe vector rides the driver
-    val probeRows = t.embeddings.filter(col("vec_id") === probeId)
+    val probeRows = t.embeddings.filter(col("vec_id") === RrfProbeId)
       .select(col("embedding")).collect()
     if (probeRows.isEmpty)
       return Tables.emptyFrame(spark, "rank" -> LongType, "doc_id" -> LongType,
         "rrf_score" -> DoubleType, "rank_sparse" -> LongType,
         "rank_dense" -> LongType)
     val pv = probeRows(0).getSeq[Float](0).toArray
-    val dense = t.embeddings.filter(col("vec_id") =!= probeId)
+    val dense = t.embeddings.filter(col("vec_id") =!= RrfProbeId)
       .withColumn("sim",
         graft.plans.CosineSim.cosine(typedLit(pv), col("embedding")))
-      .orderBy(col("sim").desc, col("vec_id")).limit(n)
+      .orderBy(col("sim").desc, col("vec_id")).limit(RrfN)
       // post-limit ≤n rows: the partition-less window is bounded by construction
       .withColumn("rank_dense", row_number().over(
         Window.orderBy(col("sim").desc, col("vec_id"))).cast("long"))
       .select(col("vec_id").as("doc_id"), col("rank_dense"))
-    val kD = lit(rrfK.toDouble)
+    val kD = lit(RrfK.toDouble)
     val fused = sparse.join(dense, Seq("doc_id"), "full_outer")
       .withColumn("rrf_score",
         coalesce(lit(1.0) / (kD + col("rank_sparse").cast("double")), lit(0.0))
           + coalesce(lit(1.0) / (kD + col("rank_dense").cast("double")), lit(0.0)))
-      .orderBy(col("rrf_score").desc, col("doc_id")).limit(topK)
+      .orderBy(col("rrf_score").desc, col("doc_id")).limit(RrfTopK)
     fused
       .withColumn("rank", row_number().over(
         Window.orderBy(col("rrf_score").desc, col("doc_id"))).cast("long"))
@@ -3122,30 +3181,29 @@ object TextAnalysis {
   /** q138 oracle: the shared BM25 CTE chain (bm25Ctes — cannot drift from
     * q123) + the q38 dense-cosine pattern + the RRF expression written as
     * the same IEEE two-term sum. */
-  def qHybridRrfSql(query: Seq[String] = Seq("spark", "window", "join"),
-      probeId: Long = 0L, n: Int = 20, topK: Int = 10, rrfK: Int = 60): String =
-    s"""WITH ${bm25Ctes(query, 1.2, 0.75)},
+  def qHybridRrfSql: String =
+    s"""WITH ${bm25Ctes},
       |sparse AS (
       |  SELECT doc_id,
       |    CAST(ROW_NUMBER() OVER (ORDER BY score DESC, doc_id) AS BIGINT) AS rank_sparse
-      |  FROM (SELECT * FROM scored ORDER BY score DESC, doc_id LIMIT $n)),
+      |  FROM (SELECT * FROM scored ORDER BY score DESC, doc_id LIMIT $RrfN)),
       |dense0 AS (
       |  SELECT vec_id AS doc_id,
       |    list_cosine_similarity(CAST(embedding AS DOUBLE[]),
-      |      (SELECT CAST(embedding AS DOUBLE[]) FROM embeddings WHERE vec_id = $probeId)) AS sim
-      |  FROM embeddings WHERE vec_id != $probeId),
+      |      (SELECT CAST(embedding AS DOUBLE[]) FROM embeddings WHERE vec_id = $RrfProbeId)) AS sim
+      |  FROM embeddings WHERE vec_id != $RrfProbeId),
       |dense AS (
       |  SELECT doc_id,
       |    CAST(ROW_NUMBER() OVER (ORDER BY sim DESC, doc_id) AS BIGINT) AS rank_dense
-      |  FROM (SELECT * FROM dense0 ORDER BY sim DESC, doc_id LIMIT $n)),
+      |  FROM (SELECT * FROM dense0 ORDER BY sim DESC, doc_id LIMIT $RrfN)),
       |fused AS (
       |  SELECT COALESCE(s.doc_id, d.doc_id) AS doc_id, s.rank_sparse, d.rank_dense,
-      |    COALESCE(1.0::DOUBLE / ($rrfK.0::DOUBLE + CAST(s.rank_sparse AS DOUBLE)), 0.0::DOUBLE)
-      |    + COALESCE(1.0::DOUBLE / ($rrfK.0::DOUBLE + CAST(d.rank_dense AS DOUBLE)), 0.0::DOUBLE) AS rrf_score
+      |    COALESCE(1.0::DOUBLE / ($RrfK.0::DOUBLE + CAST(s.rank_sparse AS DOUBLE)), 0.0::DOUBLE)
+      |    + COALESCE(1.0::DOUBLE / ($RrfK.0::DOUBLE + CAST(d.rank_dense AS DOUBLE)), 0.0::DOUBLE) AS rrf_score
       |  FROM sparse s FULL OUTER JOIN dense d ON s.doc_id = d.doc_id)
       |SELECT CAST(ROW_NUMBER() OVER (ORDER BY rrf_score DESC, doc_id) AS BIGINT) AS rank,
       |  doc_id, rrf_score, rank_sparse, rank_dense
-      |FROM (SELECT * FROM fused ORDER BY rrf_score DESC, doc_id LIMIT $topK)
+      |FROM (SELECT * FROM fused ORDER BY rrf_score DESC, doc_id LIMIT $RrfTopK)
       |ORDER BY rank""".stripMargin
 
   /** Q273: composed passage-retrieval EVAL gate — the q226-class
@@ -3170,17 +3228,14 @@ object TextAnalysis {
     * containing a query term (the inverted-index asymmetry, candidates ≈
     * Σ df); the head is TakeOrderedAndProject. Nothing joins corpus ×
     * corpus. */
-  def qPassageRetrieval(t: Tables,
-      query: Seq[String] = Seq("spark", "window", "join"),
-      size: Int = 8, stride: Int = 4, k1: Double = 1.2, b: Double = 0.75,
-      topK: Int = 20): DataFrame = {
+  def qPassageRetrieval(t: Tables): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val toks = t.fanout(t.documents)
       .select(col("doc_id"), text.tokenize(col("text")).as("toks"))
     val chunks = toks.select(col("doc_id"), posexplode(expr(
-      s"""CASE WHEN size(toks) < $size THEN cast(array() as array<array<string>>)
-         |ELSE transform(sequence(0, (size(toks) - $size) div $stride),
-         |               i -> slice(toks, i * $stride + 1, $size))
+      s"""CASE WHEN size(toks) < $ChunkSize THEN cast(array() as array<array<string>>)
+         |ELSE transform(sequence(0, (size(toks) - $ChunkSize) div $ChunkStride),
+         |               i -> slice(toks, i * $ChunkStride + 1, $ChunkSize))
          |END""".stripMargin)).as(Seq("idx0", "ct")))
       .select(col("doc_id"), col("idx0").cast("long").as("idx"), col("ct"))
     val lens = chunks.select(col("doc_id"), col("idx"),
@@ -3191,7 +3246,7 @@ object TextAnalysis {
     // the q123 empty-corpus guard: a folded 0/0 throws under ANSI
     val avgdl = lit(if (nChunks == 0L) 0.0 else sumLen.toDouble / nChunks.toDouble)
     val tf = chunks.select(col("doc_id"), col("idx"), explode(col("ct")).as("term"))
-      .filter(col("term").isin(query: _*))
+      .filter(col("term").isin(RetrievalQuery: _*))
       .groupBy(col("doc_id"), col("idx"), col("term")).agg(count(lit(1)).as("tf"))
     val dfs = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
       .withColumn("idf", log(lit(1.0) +
@@ -3200,19 +3255,20 @@ object TextAnalysis {
     val scored = tf.join(broadcast(dfs), "term")
       .join(lens, Seq("doc_id", "idx"))
       .withColumn("term_score",
-        col("idf") * (col("tf").cast("double") * lit(k1 + 1.0))
+        col("idf") * (col("tf").cast("double") * lit(Bm25K1 + 1.0))
           / (col("tf").cast("double")
-            + lit(k1) * (lit(1.0) - lit(b) + lit(b) * col("len").cast("double") / avgdl)))
+            + lit(Bm25K1) * (lit(1.0) - lit(Bm25B)
+              + lit(Bm25B) * col("len").cast("double") / avgdl)))
       .groupBy(col("doc_id"), col("idx"))
       .agg(round(sum(col("term_score")), 6).as("score"),
         count(lit(1)).as("n_hit_terms"))
-      .withColumn("relevant", col("n_hit_terms") === lit(query.size.toLong))
+      .withColumn("relevant", col("n_hit_terms") === lit(RetrievalQuery.size.toLong))
       // one materialization feeds the n_relevant fetch AND the top-k
       .localCheckpoint()
     val nRelevant = scored.filter(col("relevant")).count()
     val wo = Window.orderBy(col("score").desc, col("doc_id"), col("idx"))
     val wRun = wo.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    scored.orderBy(col("score").desc, col("doc_id"), col("idx")).limit(topK)
+    scored.orderBy(col("score").desc, col("doc_id"), col("idx")).limit(RetrievalTopK)
       .withColumn("rank", row_number().over(wo).cast("long"))
       .withColumn("hits_at",
         sum(when(col("relevant"), 1L).otherwise(0L)).over(wRun))
@@ -3234,22 +3290,19 @@ object TextAnalysis {
   /** q273 oracle: the full chain replayed — q99's chunk CTEs, the q123
     * BM25 formula over passages, the relevance count as a 1-row CTE, and
     * the same bounded top-k windows. */
-  def qPassageRetrievalSql(
-      query: Seq[String] = Seq("spark", "window", "join"),
-      size: Int = 8, stride: Int = 4, k1: Double = 1.2, b: Double = 0.75,
-      topK: Int = 20): String = {
-    val terms = query.map(q => "'" + q.replace("'", "''") + "'").mkString(", ")
-    val nq = query.size
+  def qPassageRetrievalSql: String = {
+    val terms = RetrievalQuery.map(q => "'" + q.replace("'", "''") + "'").mkString(", ")
+    val nq = RetrievalQuery.size
     s"""WITH toks AS (
        |  SELECT doc_id,
        |    ${text.tokenizeSql("text")} AS toks
        |  FROM documents),
        |chunks AS (
        |  SELECT doc_id, CAST(i AS BIGINT) AS idx,
-       |    list_slice(toks, i * $stride + 1, i * $stride + $size) AS ct
+       |    list_slice(toks, i * $ChunkStride + 1, i * $ChunkStride + $ChunkSize) AS ct
        |  FROM (SELECT doc_id, toks,
-       |          unnest(range(CASE WHEN len(toks) >= $size
-       |                       THEN (len(toks) - $size) // $stride + 1
+       |          unnest(range(CASE WHEN len(toks) >= $ChunkSize
+       |                       THEN (len(toks) - $ChunkSize) // $ChunkStride + 1
        |                       ELSE 0 END)) AS i
        |        FROM toks)),
        |lens AS (SELECT doc_id, idx, CAST(len(ct) AS BIGINT) AS len FROM chunks),
@@ -3264,10 +3317,10 @@ object TextAnalysis {
        |    round(SUM(
        |      ln(1.0::DOUBLE + (CAST(s.n - dfs.df AS DOUBLE) + 0.5::DOUBLE)
        |                       / (CAST(dfs.df AS DOUBLE) + 0.5::DOUBLE))
-       |      * (CAST(tf.tf AS DOUBLE) * ($k1::DOUBLE + 1.0::DOUBLE))
+       |      * (CAST(tf.tf AS DOUBLE) * ($Bm25K1::DOUBLE + 1.0::DOUBLE))
        |      / (CAST(tf.tf AS DOUBLE)
-       |         + $k1::DOUBLE * (1.0::DOUBLE - $b::DOUBLE
-       |            + $b::DOUBLE * CAST(l.len AS DOUBLE)
+       |         + $Bm25K1::DOUBLE * (1.0::DOUBLE - $Bm25B::DOUBLE
+       |            + $Bm25B::DOUBLE * CAST(l.len AS DOUBLE)
        |              / (CAST(s.sum_len AS DOUBLE) / CAST(s.n AS DOUBLE))))), 6)
        |      AS score,
        |    CAST(COUNT(*) AS BIGINT) AS n_hit_terms
@@ -3275,7 +3328,7 @@ object TextAnalysis {
        |  JOIN lens l ON l.doc_id = tf.doc_id AND l.idx = tf.idx, stats s
        |  GROUP BY 1, 2),
        |rel AS (SELECT COUNT(*)::BIGINT AS nr FROM scored WHERE n_hit_terms = $nq),
-       |top AS (SELECT * FROM scored ORDER BY score DESC, doc_id, idx LIMIT $topK),
+       |top AS (SELECT * FROM scored ORDER BY score DESC, doc_id, idx LIMIT $RetrievalTopK),
        |rk AS (
        |  SELECT *, CAST(ROW_NUMBER() OVER
        |    (ORDER BY score DESC, doc_id, idx) AS BIGINT) AS rank
@@ -3356,6 +3409,9 @@ object TextAnalysis {
       |    / nullif(CAST(SUM(n_chars) AS DOUBLE), 0.0::DOUBLE) AS rel_err
       |FROM d GROUP BY source ORDER BY source""".stripMargin
 
+  /** Scheduled positions q145 emits. */
+  final val MixtureTopN = 200
+
   /** Q145: deterministic weighted mixture schedule — the training-order
     * interleave that realizes q122's mixture weights as a SEQUENCE:
     * stride scheduling (Waldspurger & Weihl 1995), emission key
@@ -3363,14 +3419,14 @@ object TextAnalysis {
     * contains each source in proportion to its weight (the property a
     * data-mixing loader needs; shuffling-by-hash gives it only in
     * expectation). Weights mirror q122's derivation (even source id → 3,
-    * odd → 1). Emits the first `topN` scheduled positions.
+    * odd → 1). Emits the first `MixtureTopN` scheduled positions.
     *
     * Scale shape: per-source rank is one partitioned window (bounded by
     * the source's docs); the schedule head is orderBy+limit →
     * TakeOrderedAndProject (no global sort); the position stamp is a
     * post-limit ≤topN-row window (bounded by construction). The stride
     * key is one IEEE division of exact integers — emitted raw. */
-  def qMixtureSchedule(t: Tables, topN: Int = 200): DataFrame = {
+  def qMixtureSchedule(t: Tables): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val w = when(expr("substring(source, 4)").cast("long") % 2 === 0, 3.0)
       .otherwise(1.0)
@@ -3379,7 +3435,7 @@ object TextAnalysis {
         Window.partitionBy(col("source")).orderBy(col("doc_id"))).cast("long"))
       .withColumn("stride_key",
         (col("src_rank").cast("double") - lit(0.5)) / w)
-      .orderBy(col("stride_key"), col("source"), col("src_rank")).limit(topN)
+      .orderBy(col("stride_key"), col("source"), col("src_rank")).limit(MixtureTopN)
       .withColumn("position", row_number().over(
         Window.orderBy(col("stride_key"), col("source"), col("src_rank"))).cast("long"))
       .select(col("position"), col("doc_id"), col("source"),
@@ -3387,7 +3443,7 @@ object TextAnalysis {
       .orderBy(col("position"))
   }
 
-  def qMixtureScheduleSql(topN: Int = 200): String =
+  def qMixtureScheduleSql: String =
     s"""WITH d AS (
        |  SELECT doc_id, source,
        |    CAST(ROW_NUMBER() OVER (PARTITION BY source ORDER BY doc_id) AS BIGINT) AS src_rank,
@@ -3397,15 +3453,18 @@ object TextAnalysis {
        |  doc_id, source, src_rank, stride_key
        |FROM (SELECT doc_id, source, src_rank,
        |        (CAST(src_rank AS DOUBLE) - 0.5::DOUBLE) / w AS stride_key
-       |      FROM d ORDER BY stride_key, source, src_rank LIMIT $topN)
+       |      FROM d ORDER BY stride_key, source, src_rank LIMIT $MixtureTopN)
        |ORDER BY position""".stripMargin
+
+  /** q144's token budget. */
+  final val SelectBudget = 10000L
 
   /** Q144: token-budget-constrained corpus selection — keep the best
     * documents by quality score until a token budget is exhausted (the
     * data-selection step when compute, not data, is the binding
     * constraint; cf. Hoffmann et al. 2022 "Chinchilla" token budgets).
     * Greedy prefix of the (quality desc, doc_id) order by cumulative
-    * token count ≤ `budget`.
+    * token count ≤ `SelectBudget`.
     *
     * Scale shape: a naive global cumulative window is a single-partition
     * sort — the classic scale-killer. This plan is the distributed
@@ -3419,7 +3478,7 @@ object TextAnalysis {
     * desc, doc_id) order equals the global order exactly, so cum_tokens
     * is the true global prefix sum. All-integer cumulation; quality is
     * the q27 per-row IEEE-exact double — emitted raw. */
-  def qBudgetSelect(t: Tables, budget: Long = 10000L): DataFrame = {
+  def qBudgetSelect(t: Tables): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.types._
     val spark = t.documents.sparkSession
@@ -3443,23 +3502,23 @@ object TextAnalysis {
       .orderBy(col("quality_score").desc, col("doc_id"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     q.join(offDf, Seq("bucket"))
-      .filter(col("offset") <= budget) // prune hopeless buckets pre-window
+      .filter(col("offset") <= SelectBudget) // prune hopeless buckets pre-window
       .withColumn("cum_tokens", col("offset") + sum(col("n_tokens")).over(w))
-      .filter(col("cum_tokens") <= budget)
+      .filter(col("cum_tokens") <= SelectBudget)
       .select(col("doc_id"), col("n_tokens"), col("quality_score"), col("cum_tokens"))
       .orderBy(col("cum_tokens"), col("doc_id"))
   }
 
   /** q144 oracle: the shared q27 chain + one global window (fine for the
     * oracle; the Spark plan does the distributed two-phase instead). */
-  def qBudgetSelectSql(budget: Long = 10000L): String =
+  def qBudgetSelectSql: String =
     s"""WITH $qualityScoreCtes,
        |c AS (
        |  SELECT doc_id, n_tokens, quality_score,
        |    CAST(SUM(n_tokens) OVER (ORDER BY quality_score DESC, doc_id) AS BIGINT) AS cum_tokens
        |  FROM scored)
        |SELECT doc_id, n_tokens, quality_score, cum_tokens
-       |FROM c WHERE cum_tokens <= $budget ORDER BY cum_tokens, doc_id""".stripMargin
+       |FROM c WHERE cum_tokens <= $SelectBudget ORDER BY cum_tokens, doc_id""".stripMargin
 
   /** Q169: Pareto frontier (skyline) of the corpus on (quality ↑,
     * length ↓) — multi-objective data selection: the documents no other
@@ -3521,6 +3580,9 @@ object TextAnalysis {
        |WHERE pm IS NULL OR n_tokens < pm
        |ORDER BY quality_score DESC, doc_id""".stripMargin
 
+  /** q181's packed-sequence capacity in tokens. */
+  final val ChunkCapacity = 512L
+
   /** Q181: GPT-style concat-and-chunk sequence packing (Brown et al.
     * 2020 §2.3 — training examples are the corpus concatenated in a fixed
     * document order and cut every `capacity` tokens, no padding): maps
@@ -3538,7 +3600,7 @@ object TextAnalysis {
     * BUCKET — no global sort). The chunk fan-out per document is
     * ⌈n/capacity⌉+1 rows, and the final aggregate shuffles by chunk_id.
     * All-integer arithmetic end to end — exact on both engines. */
-  def qConcatChunks(t: Tables, capacity: Long = 512L): DataFrame = {
+  def qConcatChunks(t: Tables, capacity: Long = ChunkCapacity): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.types._
     val spark = t.documents.sparkSession
@@ -3594,7 +3656,7 @@ object TextAnalysis {
 
   /** q181 oracle: the same layout via the naive global window (plans
     * differ, results hash-equal — the q144 contract). */
-  def qConcatChunksSql(capacity: Long = 512L): String =
+  def qConcatChunksSql: String =
     s"""WITH d AS (
        |  SELECT doc_id,
        |    CAST(len(${text.tokenizeSql("text")}) AS BIGINT) AS n
@@ -3605,14 +3667,19 @@ object TextAnalysis {
        |  FROM d WHERE n > 0),
        |e AS (
        |  SELECT doc_id, n, start,
-       |    unnest(range(start // $capacity, (start + n - 1) // $capacity + 1)) AS chunk_id
+       |    unnest(range(start // $ChunkCapacity, (start + n - 1) // $ChunkCapacity + 1)) AS chunk_id
        |  FROM p)
        |SELECT chunk_id, CAST(COUNT(*) AS BIGINT) AS n_docs,
-       |  CAST(SUM(CASE WHEN start // $capacity = chunk_id THEN 1 ELSE 0 END) AS BIGINT) AS n_starting,
+       |  CAST(SUM(CASE WHEN start // $ChunkCapacity = chunk_id THEN 1 ELSE 0 END) AS BIGINT) AS n_starting,
        |  min(doc_id) AS first_doc, max(doc_id) AS last_doc,
-       |  CAST(SUM(least(start + n, (chunk_id + 1) * $capacity)
-       |           - greatest(start, chunk_id * $capacity)) AS BIGINT) AS fill_tokens
+       |  CAST(SUM(least(start + n, (chunk_id + 1) * $ChunkCapacity)
+       |           - greatest(start, chunk_id * $ChunkCapacity)) AS BIGINT) AS fill_tokens
        |FROM e GROUP BY chunk_id ORDER BY chunk_id""".stripMargin
+
+  /** The token-span width of the span family (q143, q172, q245, q248)
+    * and the documents a q143 span must appear in. */
+  final val SpanW = 8
+  final val DupSpanMinDocs = 2
 
   /** Q143: cross-document duplicated token spans — the fixed-width
     * relaxation of ExactSubstr dedup (Lee et al. 2022, "Deduplicating
@@ -3630,7 +3697,7 @@ object TextAnalysis {
     * sketch mixing); the HAVING prunes to the duplicated tail. At 100 TB
     * this is the span-level dedup candidate generator; the removal step
     * composes with q92's passage rewrite. */
-  def qDupSpans(t: Tables, w: Int = 8, minDocs: Int = 2): DataFrame = {
+  def qDupSpans(t: Tables, w: Int = SpanW, minDocs: Int = DupSpanMinDocs): DataFrame = {
     val toks = text.tokenize(col("text"))
     t.fanout(t.documents).select(col("doc_id"), toks.as("toks"))
       .select(col("doc_id"), explode(text.ngrams(col("toks"), w)).as("span"))
@@ -3642,25 +3709,25 @@ object TextAnalysis {
       .orderBy(col("span_hash"))
   }
 
-  def qDupSpansSql(w: Int = 8, minDocs: Int = 2): String =
+  def qDupSpansSql: String =
     s"""WITH tok AS (SELECT doc_id,
        |    ${text.tokenizeSql("text")} AS toks
        |  FROM documents),
        |spans AS (
        |  SELECT doc_id,
-       |    unnest(list_transform(range(len(toks) - $w + 1),
-       |      i -> array_to_string(toks[i+1:i+$w], ' '))) AS span
-       |  FROM tok WHERE len(toks) >= $w)
+       |    unnest(list_transform(range(len(toks) - $SpanW + 1),
+       |      i -> array_to_string(toks[i+1:i+$SpanW], ' '))) AS span
+       |  FROM tok WHERE len(toks) >= $SpanW)
        |SELECT substr(md5(span), 1, 16) AS span_hash,
        |  CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS n_docs,
        |  COUNT(*)::BIGINT AS n_occ,
        |  MIN(doc_id) AS first_doc
-       |FROM spans GROUP BY 1 HAVING COUNT(DISTINCT doc_id) >= $minDocs
+       |FROM spans GROUP BY 1 HAVING COUNT(DISTINCT doc_id) >= $DupSpanMinDocs
        |ORDER BY span_hash""".stripMargin
 
   /** Q245: ExactSubstr REMOVAL — the composition of q143's span detector
     * with q92's document rebuild (Lee et al. 2022's actual dedup step,
-    * not just its detector): every `w`-token window occurring in ≥ 2
+    * not just its detector): every `SpanW`-token window occurring in ≥ 2
     * distinct documents is removed from all but its FIRST occurrence
     * (first = min (doc_id, position) corpus-wide, the q92 keep-first
     * contract), where removal drops every token covered by a removed
@@ -3680,7 +3747,7 @@ object TextAnalysis {
     * for coverage, and per-doc aggregates for the rebuild. All linear;
     * no pair joins anywhere — THIS is why span-level dedup (vs pairwise
     * near-dup) is the 100 TB workhorse. */
-  def qSubstrRemoval(t: Tables, w: Int = 8): DataFrame = {
+  def qSubstrRemoval(t: Tables): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val toks = t.fanout(t.documents)
       .select(col("doc_id"), text.tokenize(col("text")).as("toks"))
@@ -3689,7 +3756,7 @@ object TextAnalysis {
     // 5 corpus scans -> 2 (spans rows are (long, int, 16-char hash);
     // removable is dup positions only).
     val spans = toks
-      .select(col("doc_id"), posexplode(text.ngrams(col("toks"), w)).as(Seq("idx", "span")))
+      .select(col("doc_id"), posexplode(text.ngrams(col("toks"), SpanW)).as(Seq("idx", "span")))
       .select(col("doc_id"), col("idx"), substring(md5(col("span")), 1, 16).as("h"))
       .localCheckpoint()
     val nd = spans.groupBy(col("h")).agg(countDistinct(col("doc_id")).as("nd"))
@@ -3702,7 +3769,7 @@ object TextAnalysis {
     val dupWindows = removable.groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_dup_windows"))
     val removedPos = removable
-      .select(col("doc_id"), explode(sequence(col("idx"), col("idx") + w - 1)).as("p"))
+      .select(col("doc_id"), explode(sequence(col("idx"), col("idx") + SpanW - 1)).as("p"))
       .distinct()
       .withColumn("removed", lit(true))
     val tokens = toks.select(col("doc_id"), posexplode(col("toks")).as(Seq("p", "tok")))
@@ -3730,15 +3797,15 @@ object TextAnalysis {
 
   /** q245 oracle: the q143 span CTEs + the keep-first rank, coverage via
     * a position unnest, rebuild via ordered string_agg (q92's pattern). */
-  def qSubstrRemovalSql(w: Int = 8): String =
+  def qSubstrRemovalSql: String =
     s"""WITH tok AS (SELECT doc_id,
        |    ${text.tokenizeSql("text")} AS toks
        |  FROM documents),
        |spans AS (
        |  SELECT doc_id, CAST(i AS INT) AS idx,
-       |    substr(md5(array_to_string(toks[i+1:i+$w], ' ')), 1, 16) AS h
-       |  FROM (SELECT doc_id, toks, unnest(range(len(toks) - $w + 1)) AS i
-       |        FROM tok WHERE len(toks) >= $w)),
+       |    substr(md5(array_to_string(toks[i+1:i+$SpanW], ' ')), 1, 16) AS h
+       |  FROM (SELECT doc_id, toks, unnest(range(len(toks) - $SpanW + 1)) AS i
+       |        FROM tok WHERE len(toks) >= $SpanW)),
        |nd AS (SELECT h, COUNT(DISTINCT doc_id) AS n FROM spans GROUP BY h),
        |removable AS (
        |  SELECT doc_id, idx FROM (
@@ -3748,7 +3815,7 @@ object TextAnalysis {
        |  WHERE n >= 2 AND rn > 1),
        |dw AS (SELECT doc_id, COUNT(*)::BIGINT AS n_dup_windows
        |       FROM removable GROUP BY doc_id),
-       |rem AS (SELECT DISTINCT doc_id, CAST(unnest(range(idx, idx + $w)) AS INT) AS p
+       |rem AS (SELECT DISTINCT doc_id, CAST(unnest(range(idx, idx + $SpanW)) AS INT) AS p
        |        FROM removable),
        |tokens AS (
        |  SELECT doc_id, CAST(i AS INT) AS p, toks[i+1] AS tok
@@ -3769,12 +3836,15 @@ object TextAnalysis {
        |FROM agg a LEFT JOIN dw USING (doc_id)
        |ORDER BY doc_id""".stripMargin
 
+  /** q248's benchmark split: the docs with doc_id % `DecontamMod` = 0. */
+  final val DecontamMod = 97L
+
   /** Q248: benchmark DECONTAMINATION audit — the eval-overlap check every
     * LLM training pipeline runs before shipping a corpus (the 13-gram
     * overlap methodology of GPT-3 appendix C / Lee et al. 2022 §5, at
     * this corpus's w=8 window): a deterministic ~1% slice (doc_id % 97 =
     * 0) stands in for the held-out benchmark suite; for every benchmark
-    * document, count its `w`-token windows that appear ANYWHERE in the
+    * document, count its `SpanW`-token windows that appear ANYWHERE in the
     * training remainder, and flag it contaminated when ≥ half its
     * windows are hit (an all-integer predicate — no float threshold).
     * Differs from q172 (novelty): the overlap here is against a
@@ -3788,20 +3858,20 @@ object TextAnalysis {
     * corpus, so the join probe is tiny; at 100 TB the distinct train
     * hashes shard by hash prefix and the benchmark probes broadcast or
     * bloom-filter per shard. */
-  def qDecontamination(t: Tables, w: Int = 8, mod: Long = 97L): DataFrame = {
+  def qDecontamination(t: Tables): DataFrame = {
     val toks = text.tokenize(col("text"))
     val spans = t.fanout(t.documents)
       .select(col("doc_id"), toks.as("toks"))
-      .select(col("doc_id"), explode(text.ngrams(col("toks"), w)).as("span"))
+      .select(col("doc_id"), explode(text.ngrams(col("toks"), SpanW)).as("span"))
       .select(col("doc_id"), substring(md5(col("span")), 1, 16).as("h"))
-    val trainHashes = spans.filter(col("doc_id") % mod =!= 0)
+    val trainHashes = spans.filter(col("doc_id") % DecontamMod =!= 0)
       .select(col("h")).distinct().withColumn("hit", lit(true))
-    val benchSpans = spans.filter(col("doc_id") % mod === 0)
+    val benchSpans = spans.filter(col("doc_id") % DecontamMod === 0)
     val counts = benchSpans.join(trainHashes, Seq("h"), "left")
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_windows"),
         count(col("hit")).as("n_hit"))
-    t.documents.filter(col("doc_id") % mod === 0)
+    t.documents.filter(col("doc_id") % DecontamMod === 0)
       .select(col("doc_id"))
       .join(counts, Seq("doc_id"), "left")
       .select(col("doc_id"),
@@ -3818,22 +3888,22 @@ object TextAnalysis {
 
   /** q248 oracle: same split predicate, distinct train hashes, left join
     * + per-doc integer counts. */
-  def qDecontaminationSql(w: Int = 8, mod: Long = 97L): String =
+  def qDecontaminationSql: String =
     s"""WITH tok AS (SELECT doc_id,
        |    ${text.tokenizeSql("text")} AS toks
        |  FROM documents),
        |sp AS (
        |  SELECT doc_id, substr(md5(span), 1, 16) AS h FROM (
        |    SELECT doc_id,
-       |      unnest(list_transform(range(len(toks) - $w + 1),
-       |        i -> array_to_string(toks[i+1:i+$w], ' '))) AS span
-       |    FROM tok WHERE len(toks) >= $w)),
-       |train AS (SELECT DISTINCT h FROM sp WHERE doc_id % $mod != 0),
+       |      unnest(list_transform(range(len(toks) - $SpanW + 1),
+       |        i -> array_to_string(toks[i+1:i+$SpanW], ' '))) AS span
+       |    FROM tok WHERE len(toks) >= $SpanW)),
+       |train AS (SELECT DISTINCT h FROM sp WHERE doc_id % $DecontamMod != 0),
        |bench AS (
        |  SELECT sp.doc_id, COUNT(*)::BIGINT AS n_windows,
        |    CAST(COUNT(*) FILTER (WHERE train.h IS NOT NULL) AS BIGINT) AS n_hit
        |  FROM sp LEFT JOIN train ON sp.h = train.h
-       |  WHERE sp.doc_id % $mod = 0
+       |  WHERE sp.doc_id % $DecontamMod = 0
        |  GROUP BY sp.doc_id)
        |SELECT d.doc_id,
        |  COALESCE(b.n_windows, 0) AS n_windows,
@@ -3842,14 +3912,14 @@ object TextAnalysis {
        |    AS contamination,
        |  COALESCE(b.n_hit, 0) * 2 >= COALESCE(b.n_windows, 0)
        |    AND COALESCE(b.n_windows, 0) > 0 AS contaminated
-       |FROM (SELECT doc_id FROM documents WHERE doc_id % $mod = 0) d
+       |FROM (SELECT doc_id FROM documents WHERE doc_id % $DecontamMod = 0) d
        |LEFT JOIN bench b USING (doc_id)
        |ORDER BY doc_id""".stripMargin
 
   /** Q172: n-gram novelty score — the per-document memorization-risk
     * readout composing q143's span table (Lee et al. 2022: text whose
     * windows recur across documents is what models memorize): for every
-    * document, the fraction of its `w`-token windows that appear in at
+    * document, the fraction of its `SpanW`-token windows that appear in at
     * least one OTHER document (shared) vs nowhere else (novel). The
     * curation pass reads novelty directly as "how much of this document
     * is boilerplate the corpus already has".
@@ -3861,14 +3931,14 @@ object TextAnalysis {
     * emitted RAW. Shared-with-other-docs means n_docs ≥ 2 — a doc
     * repeating its OWN window stays novel (within-doc repetition is
     * q140's job). */
-  def qNgramNovelty(t: Tables, w: Int = 8): DataFrame = {
+  def qNgramNovelty(t: Tables): DataFrame = {
     val toks = text.tokenize(col("text"))
     // NOTE r13: spans is referenced twice (per-hash aggregate + join back)
     // and a localCheckpoint barrier was A/B'd here — it LOSES (1.5 s -> 1.6
     // to 2.1 s warm at sf0.1): ~1M narrow rows whose tokenize+md5 kernel is
     // cheaper to recompute than to materialize (the r9 q34 class).
     val spans = t.fanout(t.documents).select(col("doc_id"), toks.as("toks"))
-      .select(col("doc_id"), explode(text.ngrams(col("toks"), w)).as("span"))
+      .select(col("doc_id"), explode(text.ngrams(col("toks"), SpanW)).as("span"))
       .select(col("doc_id"), substring(md5(col("span")), 1, 16).as("h"))
     val spanDocs = spans.groupBy(col("h"))
       .agg(countDistinct(col("doc_id")).as("nd"))
@@ -3881,16 +3951,16 @@ object TextAnalysis {
       .orderBy(col("doc_id"))
   }
 
-  def qNgramNoveltySql(w: Int = 8): String =
+  def qNgramNoveltySql: String =
     s"""WITH tok AS (SELECT doc_id,
        |    ${text.tokenizeSql("text")} AS toks
        |  FROM documents),
        |sp AS (
        |  SELECT doc_id, substr(md5(span), 1, 16) AS h FROM (
        |    SELECT doc_id,
-       |      unnest(list_transform(range(len(toks) - $w + 1),
-       |        i -> array_to_string(toks[i+1:i+$w], ' '))) AS span
-       |    FROM tok WHERE len(toks) >= $w)),
+       |      unnest(list_transform(range(len(toks) - $SpanW + 1),
+       |        i -> array_to_string(toks[i+1:i+$SpanW], ' '))) AS span
+       |    FROM tok WHERE len(toks) >= $SpanW)),
        |sd AS (SELECT h, CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS nd
        |       FROM sp GROUP BY h)
        |SELECT doc_id, COUNT(*)::BIGINT AS n_windows,
@@ -3899,6 +3969,12 @@ object TextAnalysis {
        |    / CAST(COUNT(*) AS DOUBLE) AS novelty
        |FROM sp JOIN sd USING (h)
        |GROUP BY doc_id ORDER BY doc_id""".stripMargin
+
+  /** q140's n-gram orders and its top-n-gram and duplicate-n-gram
+    * thresholds. */
+  val RepetitionNs: Seq[Int] = Seq(2, 3, 5, 10)
+  final val RepetitionTopThresh = 0.05
+  final val RepetitionDupThresh = 0.10
 
   /** Q140: within-document repetition filters (Rae et al. 2021 "Gopher",
     * table A1: fraction of characters in the most common 2/3/4-gram;
@@ -3917,12 +3993,11 @@ object TextAnalysis {
     * (doc_id, n, gram) then (doc_id, n); work is O(tokens·|ns|), shuffle
     * is the gram-count aggregate — linear at 100 TB. Fractions are single
     * integer divisions → emitted RAW (per-row IEEE-identical). */
-  def qRepetitionFilter(t: Tables, ns: Seq[Int] = Seq(2, 3, 5, 10),
-      topThresh: Double = 0.05, dupThresh: Double = 0.10): DataFrame = {
+  def qRepetitionFilter(t: Tables): DataFrame = {
     val toks = text.tokenize(col("text"))
     val grams = t.fanout(t.documents)
       .select(col("doc_id"), toks.as("toks"))
-      .select(col("doc_id"), explode(flatten(array(ns.map(n =>
+      .select(col("doc_id"), explode(flatten(array(RepetitionNs.map(n =>
         transform(text.ngrams(col("toks"), n),
           g => struct(lit(n).as("n"), g.as("gram")))): _*))).as("ng"))
       .select(col("doc_id"), col("ng.n").as("n"), col("ng.gram").as("gram"))
@@ -3937,16 +4012,15 @@ object TextAnalysis {
         (col("top_count").cast("double") / col("m_grams").cast("double")).as("top_frac"),
         (col("dup_instances").cast("double") / col("m_grams").cast("double")).as("dup_frac"))
       .withColumn("rule_pass",
-        col("top_frac") <= topThresh && col("dup_frac") <= dupThresh)
+        col("top_frac") <= RepetitionTopThresh && col("dup_frac") <= RepetitionDupThresh)
       .orderBy(col("doc_id"), col("n"))
   }
 
   /** q140 oracle: DuckDB's list slicing `toks[i+1:i+n]` is 1-based
     * inclusive — exactly Spark's slice(toks, i+1, n); range(len-n+1)
     * matches sequence(0, size-n) inclusive. */
-  def qRepetitionFilterSql(ns: Seq[Int] = Seq(2, 3, 5, 10),
-      topThresh: Double = 0.05, dupThresh: Double = 0.10): String = {
-    val nsList = ns.mkString(", ")
+  def qRepetitionFilterSql: String = {
+    val nsList = RepetitionNs.mkString(", ")
     s"""WITH tok AS (SELECT doc_id,
        |    ${text.tokenizeSql("text")} AS toks
        |  FROM documents),
@@ -3965,10 +4039,16 @@ object TextAnalysis {
        |SELECT doc_id, CAST(n AS INT) AS n, m_grams, top_count, dup_instances,
        |  CAST(top_count AS DOUBLE) / CAST(m_grams AS DOUBLE) AS top_frac,
        |  CAST(dup_instances AS DOUBLE) / CAST(m_grams AS DOUBLE) AS dup_frac,
-       |  (CAST(top_count AS DOUBLE) / CAST(m_grams AS DOUBLE) <= $topThresh::DOUBLE
-       |   AND CAST(dup_instances AS DOUBLE) / CAST(m_grams AS DOUBLE) <= $dupThresh::DOUBLE) AS rule_pass
+       |  (CAST(top_count AS DOUBLE) / CAST(m_grams AS DOUBLE) <= $RepetitionTopThresh::DOUBLE
+       |   AND CAST(dup_instances AS DOUBLE) / CAST(m_grams AS DOUBLE) <= $RepetitionDupThresh::DOUBLE) AS rule_pass
        |FROM a ORDER BY doc_id, n""".stripMargin
   }
+
+  /** The one logistic model every logit query and oracle reads (q139 and
+    * its ~15 consumers): full-batch GD rounds and the power-of-two
+    * learning rate. */
+  final val LogitRounds = 16
+  final val LogitLr = 8.0
 
   /** The q139/q188/q198 shared feature frame: Gopher-rule label `y` + the
     * five per-rule margin features (see qLogitClassifier scaladoc), keyed
@@ -4001,57 +4081,52 @@ object TextAnalysis {
   private def logitFeaturesShared(t: Tables): DataFrame =
     Shared(t, "logit_features")(logitFeatures(t).localCheckpoint())
 
-  /** Registry name of the trained logistic weights (a `graft.Shared`
-    * entry, like the fitted ANN indexes) for `logitTrain`: the GD
-    * sequence is deterministic (round(6) gradient averages, exact
-    * power-of-two lr), so a hit is bit-identical to a refit and every
-    * downstream oracle (q188/q198/q200) stays hash-green. Shared, the
-    * identical 16-round training runs once instead of once per
-    * q139/q188/q198/q200 (64 redundant full-corpus scans per bench). */
-  private def logitWeightsName(rounds: Int, lr: Double): String =
-    s"logit_weights#$rounds#$lr"
-
-  /** Cached front of [[logitTrain]]; whichever of q139/q188/q198/q200
-    * runs first in a session pays the training scans, the rest score. */
-  private def logitTrainCached(t: Tables, feats: DataFrame, rounds: Int,
-      lr: Double): Option[Array[Double]] =
-    Shared(t, logitWeightsName(rounds, lr))(logitTrain(feats, rounds, lr))
+  /** The trained logistic weights as a `graft.Shared` entry (like the
+    * fitted ANN indexes): the GD sequence is deterministic (round(6)
+    * gradient averages, exact power-of-two lr), so a hit is bit-identical
+    * to a refit and every downstream oracle (q188/q198/q200) stays
+    * hash-green. Shared, the identical `LogitRounds`-round training runs
+    * once instead of once per q139/q188/q198/q200 (64 redundant
+    * full-corpus scans per bench): whichever runs first in a session pays
+    * the training scans, the rest score. */
+  private def logitTrainCached(t: Tables, feats: DataFrame): Option[Array[Double]] =
+    Shared(t, "logit_weights")(logitTrain(feats))
 
   /** Bench warm-structure hook (VERDICT r12 item 1). Forces, in a FIXED
     * order, every shared structure this module's timed queries ride:
     * the [[logitFeaturesShared]] session checkpoint plus the driver-side
     * weights/BPE/Dawid–Skene entries (all survive clearCache; forcing
-    * them here makes a fresh session order-independent). All params are
-    * the query defaults — (16, 8.0) logit, 8 BPE rounds, 5 DS rounds —
-    * so the registry names match every consumer. Returns
+    * them here makes a fresh session order-independent). Each entry is
+    * built from the constants its consumers read (`LogitRounds`/`LogitLr`,
+    * `BpeRounds`, `DawidSkeneRounds`), so every consumer hits it. Returns
     * (structure, seconds) for the bench stderr record. */
   private[graft] def prewarmShared(t: Tables): Seq[(String, Double)] = Seq(
     // logitFeaturesShared is an EAGER localCheckpoint: the call itself
     // materializes the session structure (a no-op hit when warm)
     Shared.timed("logit_features")(logitFeaturesShared(t)),
-    Shared.timed("logit_weights")(logitTrainCached(t, logitFeaturesShared(t), 16, 8.0)),
+    Shared.timed("logit_weights")(logitTrainCached(t, logitFeaturesShared(t))),
     Shared.timed("quality_score")(qualityScoreShared(t)),
     Shared.timed("unigram_counts")(unigramCountsShared(t)),
     Shared.timed("bigram_counts")(bigramCountsShared(t)),
     Shared.timed("srcterm_counts")(sourceTermCountsShared(t)),
-    Shared.timed("bpe_merges")(bpeMerges(t, 8)),
-    Shared.timed("dawid_skene")(dawidSkeneCached(t, 5)))
+    Shared.timed("bpe_merges")(bpeMerges(t)),
+    Shared.timed("dawid_skene")(dawidSkeneCached(t)))
 
-  /** The trained-weight vector after `rounds` full-batch GD updates over
+  /** The trained-weight vector after `LogitRounds` full-batch GD updates over
     * `feats` — the q139 gradient sequence verbatim (round(6) aggregates,
     * exact power-of-two lr updates). Returns None on an empty corpus. */
-  private def logitTrain(feats: DataFrame, rounds: Int, lr: Double): Option[Array[Double]] = {
+  private def logitTrain(feats: DataFrame): Option[Array[Double]] = {
     val dims = 6
     var w = Array.fill(dims)(0.0)
     var r = 0
-    while (r < rounds) {
+    while (r < LogitRounds) {
       val p = logitProb(w)
       val err = p - col("y")
       val gradCols = round(avg(err), 6) +: (1 until dims).map(j =>
         round(avg(err * col(s"f$j")), 6))
       val row = feats.agg(gradCols.head, gradCols.tail: _*).collect()(0)
       if (row.isNullAt(0)) return None
-      w = Array.tabulate(dims)(j => w(j) - lr * row.getDouble(j))
+      w = Array.tabulate(dims)(j => w(j) - LogitLr * row.getDouble(j))
       r += 1
     }
     Some(w)
@@ -4068,7 +4143,7 @@ object TextAnalysis {
     * floor rules) plus the weakest-rule margin least(f1..f4), so the AND
     * label is near-linearly separable; trained accuracy reaches ~0.93-0.95
     * vs the ~0.81-0.83 majority baseline at all three SFs. Emits one row
-    * per round r = 0..`rounds`: the weights AFTER r updates and training
+    * per round r = 0..`LogitRounds`: the weights AFTER r updates and training
     * accuracy under those weights.
     *
     * Determinism (the q119/q120/q132 fixed-round recipe): weights start at
@@ -4086,7 +4161,7 @@ object TextAnalysis {
     * between rounds (the k-means-centroid bounded-fetch contract, 6
     * doubles). At 100 TB each round is one pass — exactly how distributed
     * full-batch GD is shaped on a cluster. */
-  def qLogitClassifier(t: Tables, rounds: Int = 16, lr: Double = 8.0): DataFrame = {
+  def qLogitClassifier(t: Tables): DataFrame = {
     import org.apache.spark.sql.types._
     val spark = t.documents.sparkSession
     val feats = logitFeaturesShared(t)
@@ -4096,7 +4171,7 @@ object TextAnalysis {
       .empty[(Long, Double, Double, Double, Double, Double, Double, Double, Long)]
     var r = 0
     var nonEmpty = true
-    while (r <= rounds && nonEmpty) {
+    while (r <= LogitRounds && nonEmpty) {
       val p = logitProb(w)
       val err = p - col("y")
       val gradCols = round(avg(err), 6) +: (1 until dims).map(j =>
@@ -4110,15 +4185,15 @@ object TextAnalysis {
         val n = row.getLong(dims + 1)
         out += ((r.toLong, w(0), w(1), w(2), w(3), w(4), w(5),
           row.getLong(dims).toDouble / n.toDouble, n))
-        if (r < rounds)
-          w = Array.tabulate(dims)(j => w(j) - lr * row.getDouble(j))
+        if (r < LogitRounds)
+          w = Array.tabulate(dims)(j => w(j) - LogitLr * row.getDouble(j))
         r += 1
       }
     }
     // Seed the shared weights entry: after the trace loop w is exactly
     // logitTrain's result (updates are applied only for r < rounds), so
     // a q139 run warms q188/q198/q200 regardless of execution order.
-    Shared(t, logitWeightsName(rounds, lr))(if (out.nonEmpty) Some(w) else None)
+    Shared(t, "logit_weights")(if (out.nonEmpty) Some(w) else None)
     val names = Seq("round") ++ (0 until dims).map(j => s"w$j") ++ Seq("acc", "n")
     if (out.isEmpty)
       return graft.Tables.emptyFrame(spark, names.map(nm =>
@@ -4146,7 +4221,7 @@ object TextAnalysis {
     * plus the exact correct-prediction count under the incoming weights;
     * each weights CTE applies w − lr·g. Feature/label expressions are
     * q86's parity pairs verbatim plus the margin rescalings. */
-  def qLogitClassifierSql(rounds: Int = 16, lr: Double = 8.0): String = {
+  def qLogitClassifierSql: String = {
     val dims = 6
     def feat(j: Int): String = if (j == 0) "1.0::DOUBLE" else s"f$j"
     def passCte(name: String, wFrom: Option[String]): String = {
@@ -4168,8 +4243,8 @@ object TextAnalysis {
     }
     def wCte(name: String, prevW: Option[String], pass: String): String = {
       val base = prevW match {
-        case Some(pw) => (j: Int) => s"$pw.w$j - $lr::DOUBLE * $pass.g$j"
-        case None     => (j: Int) => s"0.0::DOUBLE - $lr::DOUBLE * $pass.g$j"
+        case Some(pw) => (j: Int) => s"$pw.w$j - $LogitLr::DOUBLE * $pass.g$j"
+        case None     => (j: Int) => s"0.0::DOUBLE - $LogitLr::DOUBLE * $pass.g$j"
       }
       val from = prevW.map(pw => s"FROM $pass, $pw").getOrElse(s"FROM $pass")
       val cols = (0 until dims).map(j => s"${base(j)} AS w$j").mkString(",\n    ")
@@ -4181,7 +4256,7 @@ object TextAnalysis {
     ctes += logitFeatureCtes
     var prevW: Option[String] = None
     val rows = new scala.collection.mutable.ArrayBuffer[String]
-    for (r <- 0 to rounds) {
+    for (r <- 0 to LogitRounds) {
       val pass = s"p$r"
       ctes += passCte(pass, prevW)
       val wRefs = (0 until dims).map { j =>
@@ -4190,7 +4265,7 @@ object TextAnalysis {
       val wCols = (0 until dims).map(j => s"${wRefs(j)} AS w$j").mkString(", ")
       rows += s"""SELECT ${r}::BIGINT AS round, $wCols,
          |  CAST(correct AS DOUBLE) / CAST(n AS DOUBLE) AS acc, n FROM $pass""".stripMargin
-      if (r < rounds) {
+      if (r < LogitRounds) {
         val wName = s"w${r + 1}"
         ctes += wCte(wName, prevW, pass)
         prevW = Some(wName)
@@ -4202,6 +4277,9 @@ object TextAnalysis {
        |) ORDER BY round""".stripMargin
   }
 
+  /** Confidence bins of the calibration family (q188, q299, q301). */
+  final val CalibrationBins = 10
+
   /** Q188: calibration audit (reliability diagram + ECE, Guo et al. ICML
     * 2017) of the q139 quality classifier — the audit a production
     * pipeline runs before using classifier scores as sampling weights or
@@ -4209,7 +4287,7 @@ object TextAnalysis {
     * training mix even at high accuracy). Re-trains the identical q139
     * weight sequence (shared logitTrain — same round(6) gradient
     * aggregates, so weights are bit-identical to q139's final row), bins
-    * every document by predicted probability into `bins` equal-width bins,
+    * every document by predicted probability into `CalibrationBins` equal-width bins,
     * and emits per bin: n, positives, mean confidence, empirical positive
     * rate, and the |sum_conf − positives| gap; ECE rides every row.
     *
@@ -4223,16 +4301,16 @@ object TextAnalysis {
     * n_pos·1e6| is an exact BIGINT sum (order-independent).
     *
     * Scale shape: training is q139's per-round linear scans; scoring +
-    * binning is one more scan into a ≤`bins`-row aggregate; the ECE
+    * binning is one more scan into a ≤`CalibrationBins`-row aggregate; the ECE
     * window runs over that bounded aggregate (the post-limit tiny-frame
     * precedent), never over the corpus. */
-  def qCalibration(t: Tables, rounds: Int = 16, lr: Double = 8.0, bins: Int = 10): DataFrame = {
+  def qCalibration(t: Tables): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.types._
     val spark = t.documents.sparkSession
     val feats = logitFeaturesShared(t)
     locally {
-      logitTrainCached(t, feats, rounds, lr) match {
+      logitTrainCached(t, feats) match {
         case None =>
           Tables.emptyFrame(spark, "bin" -> LongType, "n" -> LongType,
             "n_pos" -> LongType, "sum_conf_micro" -> LongType,
@@ -4248,8 +4326,8 @@ object TextAnalysis {
             .select(col("y"),
               round(p * lit(1000000.0), 0).cast("long").as("conf_micro"))
             .select(col("y"), col("conf_micro"),
-              expr(s"least((conf_micro * $bins) div 1000000, " +
-                s"${(bins - 1).toLong}L)").as("bin"))
+              expr(s"least((conf_micro * $CalibrationBins) div 1000000, " +
+                s"${(CalibrationBins - 1).toLong}L)").as("bin"))
           val agg = binned.groupBy(col("bin")).agg(
             count(lit(1)).as("n"),
             sum(col("y").cast("long")).as("n_pos"),
@@ -4286,11 +4364,11 @@ object TextAnalysis {
     s"1.0::DOUBLE / (1.0::DOUBLE + exp(-($z)))"
 
   /** The shared logit-oracle scaffold (q188/q198/q200/q205): the feature
-    * CTEs plus `rounds` unrolled (gradient-pass, weights) CTE pairs —
+    * CTEs plus `LogitRounds` unrolled (gradient-pass, weights) CTE pairs —
     * returns (cte list joined with ",\n", final-weights CTE name).
     * q139's builder stays inline: its pass CTEs also track per-round
     * accuracy. MATERIALIZED per the >5-round CTE-inlining invariant. */
-  private def logitChainCtes(rounds: Int, lr: Double): (String, String) = {
+  private def logitChainCtes: (String, String) = {
     val dims = 6
     def passCte(name: String, wFrom: Option[String]): String = {
       val (z, from) = wFrom match {
@@ -4308,8 +4386,8 @@ object TextAnalysis {
     }
     def wCte(name: String, prevW: Option[String], pass: String): String = {
       val base = prevW match {
-        case Some(pw) => (j: Int) => s"$pw.w$j - $lr::DOUBLE * $pass.g$j"
-        case None     => (j: Int) => s"0.0::DOUBLE - $lr::DOUBLE * $pass.g$j"
+        case Some(pw) => (j: Int) => s"$pw.w$j - $LogitLr::DOUBLE * $pass.g$j"
+        case None     => (j: Int) => s"0.0::DOUBLE - $LogitLr::DOUBLE * $pass.g$j"
       }
       val from = prevW.map(pw => s"FROM $pass, $pw").getOrElse(s"FROM $pass")
       val cols = (0 until dims).map(j => s"${base(j)} AS w$j").mkString(",\n    ")
@@ -4320,7 +4398,7 @@ object TextAnalysis {
     val ctes = new scala.collection.mutable.ArrayBuffer[String]
     ctes += logitFeatureCtes
     var prevW: Option[String] = None
-    for (r <- 0 until rounds) {
+    for (r <- 0 until LogitRounds) {
       val pass = s"p$r"
       ctes += passCte(pass, prevW)
       val wName = s"w${r + 1}"
@@ -4333,8 +4411,8 @@ object TextAnalysis {
   /** q188 oracle: the q139 weight chain (gradient-only pass CTEs) to the
     * final weights, then score/bin/aggregate with the same BIGINT-micro
     * arithmetic; ECE via window sums over the bounded bin table. */
-  def qCalibrationSql(rounds: Int = 16, lr: Double = 8.0, bins: Int = 10): String = {
-    val (chain, wFinal) = logitChainCtes(rounds, lr)
+  def qCalibrationSql: String = {
+    val (chain, wFinal) = logitChainCtes
     val p = logitProbSql()
     s"""WITH $chain,
        |scored0 AS (
@@ -4343,7 +4421,7 @@ object TextAnalysis {
        |  FROM f, $wFinal w),
        |scored AS (
        |  SELECT y, conf_micro,
-       |    least((conf_micro * $bins) // 1000000, ${bins - 1}) AS bin
+       |    least((conf_micro * $CalibrationBins) // 1000000, ${CalibrationBins - 1}) AS bin
        |  FROM scored0),
        |agg AS (
        |  SELECT bin, COUNT(*)::BIGINT AS n,
@@ -4436,6 +4514,9 @@ object TextAnalysis {
       |       ELSE CAST(budget - sum_uncapped AS DOUBLE) / CAST(n_capped AS DOUBLE) END AS alloc
       |FROM solved ORDER BY source""".stripMargin
 
+  /** Rows q198 selects nearest the decision boundary. */
+  final val UncertaintyK = 25
+
   /** Q198: active-learning uncertainty sampling (Lewis & Gale 1994 —
     * the label-acquisition step that closes the q86→q139→q188 classifier
     * loop): train the q139 weights, score every document, and select the
@@ -4452,13 +4533,12 @@ object TextAnalysis {
     * Scale shape: scoring is one linear scan; selection is
     * orderBy+limit = TakeOrderedAndProject (per-partition top-k, no
     * global sort). */
-  def qUncertaintySampling(t: Tables, rounds: Int = 16, lr: Double = 8.0,
-      k: Int = 25): DataFrame = {
+  def qUncertaintySampling(t: Tables, k: Int = UncertaintyK): DataFrame = {
     import org.apache.spark.sql.types._
     val spark = t.documents.sparkSession
     val feats = logitFeaturesShared(t)
     locally {
-      logitTrainCached(t, feats, rounds, lr) match {
+      logitTrainCached(t, feats) match {
         case None =>
           Tables.emptyFrame(spark, "rank" -> LongType, "doc_id" -> LongType,
             "y" -> DoubleType, "conf" -> DoubleType, "margin" -> DoubleType)
@@ -4479,8 +4559,8 @@ object TextAnalysis {
   }
 
   /** q198 oracle: the q188 weight chain + the same rounded-margin top-k. */
-  def qUncertaintySamplingSql(rounds: Int = 16, lr: Double = 8.0, k: Int = 25): String = {
-    val (chain, wFinal) = logitChainCtes(rounds, lr)
+  def qUncertaintySamplingSql: String = {
+    val (chain, wFinal) = logitChainCtes
     val p = logitProbSql()
     s"""WITH $chain,
        |scored AS (
@@ -4489,7 +4569,7 @@ object TextAnalysis {
        |    round(abs(($p) - 0.5::DOUBLE), 6) AS margin
        |  FROM f, $wFinal w),
        |picked AS (
-       |  SELECT * FROM scored ORDER BY margin, doc_id LIMIT $k)
+       |  SELECT * FROM scored ORDER BY margin, doc_id LIMIT $UncertaintyK)
        |SELECT CAST(ROW_NUMBER() OVER (ORDER BY margin, doc_id) AS BIGINT) AS rank,
        |  doc_id, y, conf, margin
        |FROM picked ORDER BY rank""".stripMargin
@@ -4513,14 +4593,14 @@ object TextAnalysis {
     * prefix (score is on the 1e-6 grid — percent buckets, offsets are a
     * bounded ≤101-row driver fetch), one final aggregate. No
     * single-partition sort at any size. */
-  def qRocAuc(t: Tables, rounds: Int = 16, lr: Double = 8.0): DataFrame = {
+  def qRocAuc(t: Tables): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.types._
     val spark = t.documents.sparkSession
     import spark.implicits._
     val feats = logitFeaturesShared(t)
     locally {
-      logitTrainCached(t, feats, rounds, lr) match {
+      logitTrainCached(t, feats) match {
         case None =>
           Tables.emptyFrame(spark, "n_pos" -> LongType, "n_neg" -> LongType,
             "rank_sum2" -> LongType, "auc" -> DoubleType, "gini" -> DoubleType)
@@ -4563,8 +4643,8 @@ object TextAnalysis {
 
   /** q200 oracle: the weight chain + plain score-group windows (DuckDB
     * replays the bucket-prefix rank as one ordered window). */
-  def qRocAucSql(rounds: Int = 16, lr: Double = 8.0): String = {
-    val (chain, wFinal) = logitChainCtes(rounds, lr)
+  def qRocAucSql: String = {
+    val (chain, wFinal) = logitChainCtes
     val p = logitProbSql()
     s"""WITH $chain,
        |groups_ AS (
@@ -4591,6 +4671,9 @@ object TextAnalysis {
        |FROM agg""".stripMargin
   }
 
+  /** Pairs q135 reports. */
+  final val BpePairsTopK = 50
+
   /** Q135: one BPE-training iteration's merge-pair count (Sennrich et al.
     * 2016, "Neural Machine Translation of Rare Words with Subword Units",
     * algorithm 1 step: count adjacent symbol pairs over the word-frequency
@@ -4605,7 +4688,7 @@ object TextAnalysis {
     * pair aggregate is map-side combinable; the only corpus-sized work is
     * the token count, one shuffle. Top-k via orderBy+limit plans
     * TakeOrderedAndProject (no global sort). */
-  def qBpePairs(t: Tables, topK: Int = 50): DataFrame = {
+  def qBpePairs(t: Tables): DataFrame = {
     val wf = t.fanout(t.documents)
       .select(explode(text.tokenize(col("text"))).as("term"))
       .filter(length(col("term")) >= 2)
@@ -4619,10 +4702,10 @@ object TextAnalysis {
     inner.union(endOfWord)
       .groupBy(col("pair")).agg(sum(col("f")).as("total"))
       .orderBy(col("total").desc, col("pair"))
-      .limit(topK)
+      .limit(BpePairsTopK)
   }
 
-  def qBpePairsSql(topK: Int = 50): String =
+  def qBpePairsSql: String =
     s"""WITH toks AS (
        |  SELECT unnest(${text.tokenizeSql("text")}) AS term
        |  FROM documents),
@@ -4637,7 +4720,11 @@ object TextAnalysis {
        |  SELECT substr(term, len(term), 1) || '</w>' AS pair, f FROM wf)
        |SELECT pair, CAST(SUM(f) AS BIGINT) AS total
        |FROM (SELECT * FROM inner_pairs UNION ALL SELECT * FROM eow_pairs)
-       |GROUP BY pair ORDER BY total DESC, pair LIMIT $topK""".stripMargin
+       |GROUP BY pair ORDER BY total DESC, pair LIMIT $BpePairsTopK""".stripMargin
+
+  /** BPE merge rounds (q244 trains them; q247, q249, q250 encode with
+    * them; the bench prewarm builds the same merges). */
+  final val BpeRounds = 8
 
   /** Q244: multi-round BPE-merge TRAINER (Sennrich et al. 2016 algorithm
     * 1, the full loop q135 computes one step of): K chained merge rounds
@@ -4671,8 +4758,8 @@ object TextAnalysis {
     * entry: the loop is deterministic, so hits are bit-identical and hash
     * gates are unaffected; q244 (the merge table) and q247 (the encoder)
     * share one training. */
-  private def bpeMerges(t: Tables, rounds: Int): Seq[(Int, String, String, Long)] =
-    Shared(t, s"bpe_merges#$rounds") {
+  private def bpeMerges(t: Tables): Seq[(Int, String, String, Long)] =
+    Shared(t, "bpe_merges") {
       var wf = t.fanout(t.documents)
         .select(explode(text.tokenize(col("text"))).as("term"))
         .filter(length(col("term")) >= 2)
@@ -4681,7 +4768,7 @@ object TextAnalysis {
           concat(regexp_replace(col("term"), "(.)", "$1 "), lit("</w>")).as("syms"))
         .localCheckpoint()
       val merges = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, Long)]
-      for (r <- 1 to rounds) {
+      for (r <- 1 to BpeRounds) {
         val best = wf.select(col("f"), split(col("syms"), " ").as("s"))
           .filter(size(col("s")) >= 2) // a fully-merged word has no pairs
           .withColumn("i", explode(sequence(lit(0), size(col("s")) - 2)))
@@ -4701,10 +4788,10 @@ object TextAnalysis {
       merges.toSeq
     }
 
-  def qBpeTrainer(t: Tables, rounds: Int = 8): DataFrame = {
+  def qBpeTrainer(t: Tables): DataFrame = {
     val spark = t.documents.sparkSession
     import spark.implicits._
-    bpeMerges(t, rounds).toDF("round", "pair", "merged", "total")
+    bpeMerges(t).toDF("round", "pair", "merged", "total")
       .select(col("round").cast("int").as("round"), col("pair"),
         col("merged"), col("total"))
       .orderBy(col("round"))
@@ -4714,8 +4801,8 @@ object TextAnalysis {
     * (term, syms) with syms the space-separated encoded symbols ending in
     * the `</w>` marker. Shared by q247 (symbol counts) and q262 (census +
     * round-trip audit); vocab-bounded, K scan-stage replaces. */
-  private def bpeEncodedVocab(t: Tables, rounds: Int): DataFrame = {
-    val merges = bpeMerges(t, rounds)
+  private def bpeEncodedVocab(t: Tables): DataFrame = {
+    val merges = bpeMerges(t)
     val vocab0 = t.fanout(t.documents)
       .select(explode(text.tokenize(col("text"))).as("term"))
       .select(col("term")).distinct()
@@ -4745,11 +4832,11 @@ object TextAnalysis {
     * pays one explode + one co-partitioned join on the term + one
     * per-doc aggregate. The training itself is the cached q244 loop —
     * one fetch per (session, sfDir, rounds). */
-  def qBpeEncode(t: Tables, rounds: Int = 8): DataFrame = {
+  def qBpeEncode(t: Tables): DataFrame = {
     val toks = t.fanout(t.documents)
       .select(col("doc_id"), col("n_chars"),
         explode(text.tokenize(col("text"))).as("term"))
-    val encoded = bpeEncodedVocab(t, rounds)
+    val encoded = bpeEncodedVocab(t)
       .select(col("term"), size(split(col("syms"), " ")).cast("long").as("n_syms"))
     toks.join(encoded, Seq("term"))
       .groupBy(col("doc_id"))
@@ -4768,8 +4855,8 @@ object TextAnalysis {
     * [[bpeEncodedVocab]]): each round's 1-row best merge applied via
     * scalar subqueries against the training chain's b$r CTEs. Shared by
     * the q247 and q262 oracles; must be composed after [[bpeChainCtes]]. */
-  private def bpeEvCtes(rounds: Int): String = {
-    val evCtes = (1 to rounds).map { r =>
+  private def bpeEvCtes: String = {
+    val evCtes = (1 to BpeRounds).map { r =>
       s"""ev$r AS MATERIALIZED (
          |  SELECT term,
          |    trim(replace(' ' || syms || ' ',
@@ -4787,11 +4874,11 @@ object TextAnalysis {
   /** q247 oracle: the q244 training chain (shared CTE text) + the
     * distinct-vocab encode chain, joined back to the corpus tokens per
     * document. */
-  def qBpeEncodeSql(rounds: Int = 8): String = {
-    s"""WITH ${bpeChainCtes(rounds)},
-       |${bpeEvCtes(rounds)},
+  def qBpeEncodeSql: String = {
+    s"""WITH ${bpeChainCtes},
+       |${bpeEvCtes},
        |enc AS (SELECT term,
-       |  CAST(len(string_split(syms, ' ')) AS BIGINT) AS n_syms FROM ev$rounds),
+       |  CAST(len(string_split(syms, ' ')) AS BIGINT) AS n_syms FROM ev$BpeRounds),
        |dt AS (
        |  SELECT doc_id, n_chars,
        |    unnest(${text.tokenizeSql("text")}) AS term
@@ -4817,8 +4904,8 @@ object TextAnalysis {
     *
     * Scale: the encode is q247's linear explode + vocab-bounded merge
     * chain; this adds one |sources|-row aggregate. */
-  def qBpeFertility(t: Tables, rounds: Int = 8): DataFrame =
-    qBpeEncode(t, rounds)
+  def qBpeFertility(t: Tables): DataFrame =
+    qBpeEncode(t)
       .join(t.documents.select(col("doc_id"), col("source"), col("n_chars")),
         Seq("doc_id"))
       .groupBy(col("source"))
@@ -4836,7 +4923,7 @@ object TextAnalysis {
   /** q255 oracle: the q247 encode query as a derived table (its own WITH
     * chain — no outer CTEs to collide with), joined to documents and
     * rolled up by source. */
-  def qBpeFertilitySql(rounds: Int = 8): String =
+  def qBpeFertilitySql: String =
     s"""SELECT d.source, COUNT(*)::BIGINT AS n_docs,
       |  CAST(SUM(e.n_tokens) AS BIGINT) AS n_tokens,
       |  CAST(SUM(e.n_symbols) AS BIGINT) AS n_symbols,
@@ -4844,7 +4931,7 @@ object TextAnalysis {
       |    / CAST(SUM(e.n_tokens) AS DOUBLE) AS symbols_per_token,
       |  CAST(SUM(d.n_chars) AS DOUBLE) / CAST(SUM(e.n_symbols) AS DOUBLE)
       |    AS chars_per_symbol
-      |FROM (${qBpeEncodeSql(rounds)}) e
+      |FROM (${qBpeEncodeSql}) e
       |JOIN documents d USING (doc_id)
       |GROUP BY d.source ORDER BY d.source""".stripMargin
 
@@ -4867,12 +4954,12 @@ object TextAnalysis {
     * comes from the cached ≤K-row merge table (a bounded literal lookup,
     * the Lloyd-centroid contract). All columns exact (strings, BIGINTs,
     * booleans) — no float discipline needed. */
-  def qBpeRoundtrip(t: Tables, rounds: Int = 8): DataFrame = {
-    val mergedSyms = bpeMerges(t, rounds).map(_._3)
+  def qBpeRoundtrip(t: Tables): DataFrame = {
+    val mergedSyms = bpeMerges(t).map(_._3)
     val tf = t.fanout(t.documents)
       .select(explode(text.tokenize(col("text"))).as("term"))
       .groupBy(col("term")).agg(count(lit(1)).as("f"))
-    val enc = bpeEncodedVocab(t, rounds)
+    val enc = bpeEncodedVocab(t)
       .withColumn("rt",
         replace(col("syms"), lit(" "), lit("")) === concat(col("term"), lit("</w>")))
     enc.join(tf, Seq("term"))
@@ -4891,12 +4978,12 @@ object TextAnalysis {
   /** q262 oracle: the training chain + encode chain (shared CTE text), a
     * token-frequency CTE, the merge products derived independently from
     * the b$r CTEs, and one census aggregate. */
-  def qBpeRoundtripSql(rounds: Int = 8): String = {
-    val mt = (1 to rounds)
+  def qBpeRoundtripSql: String = {
+    val mt = (1 to BpeRounds)
       .map(r => s"SELECT replace(pair, ' ', '') AS m FROM b$r")
       .mkString("\n  UNION ALL\n  ")
-    s"""WITH ${bpeChainCtes(rounds)},
-       |${bpeEvCtes(rounds)},
+    s"""WITH ${bpeChainCtes},
+       |${bpeEvCtes},
        |tf AS MATERIALIZED (
        |  SELECT term, COUNT(*)::BIGINT AS f FROM toks GROUP BY term),
        |mt AS (
@@ -4904,7 +4991,7 @@ object TextAnalysis {
        |sy AS (
        |  SELECT unnest(string_split(e.syms, ' ')) AS symbol, tf.f,
        |    (replace(e.syms, ' ', '') = e.term || '</w>') AS rt
-       |  FROM ev$rounds e JOIN tf USING (term))
+       |  FROM ev$BpeRounds e JOIN tf USING (term))
        |SELECT symbol,
        |  CAST(len(replace(symbol, '</w>', '')) AS BIGINT) AS sym_chars,
        |  symbol IN (SELECT m FROM mt) AS is_merge,
@@ -4918,8 +5005,8 @@ object TextAnalysis {
   /** The q244 training CTE chain (toks → w0 word-freq symbolization →
     * per-round p/b/w triples), shared by the q244 merge-table oracle and
     * the q247 encoder oracle. */
-  private def bpeChainCtes(rounds: Int): String = {
-    val roundCtes = (1 to rounds).map { r =>
+  private def bpeChainCtes: String = {
+    val roundCtes = (1 to BpeRounds).map { r =>
       s"""p$r AS MATERIALIZED (
          |  SELECT s[i+1] || ' ' || s[i+2] AS pair, f
          |  FROM (SELECT string_split(syms, ' ') AS s, f FROM w${r - 1}),
@@ -4948,21 +5035,24 @@ object TextAnalysis {
     * per-round CTE triples (pairs → 1-row best → rewritten vocab), best
     * pair applied via the same padded-space replace, merges unioned at
     * the end (the q139/q179 chained-CTE replay shape). */
-  def qBpeTrainerSql(rounds: Int = 8): String = {
-    val out = (1 to rounds).map(r =>
+  def qBpeTrainerSql: String = {
+    val out = (1 to BpeRounds).map(r =>
       s"SELECT $r AS round, pair, replace(pair, ' ', '') AS merged, total FROM b$r")
       .mkString("\n  UNION ALL\n  ")
-    s"""WITH ${bpeChainCtes(rounds)}
+    s"""WITH ${bpeChainCtes}
        |SELECT CAST(round AS INT) AS round, pair, merged, total FROM (
        |  $out)
        |ORDER BY round""".stripMargin
   }
 
+  /** Hashed n-gram buckets of q136's DSIR features. */
+  final val DsirBuckets = 256
+
   /** Q136: DSIR importance-resampling scores (Xie et al. 2023, "Data
     * Selection for Language Models via Importance Resampling") — the
     * data-selection step that picks raw-corpus documents resembling a
     * target domain. Features are hashed uni+bigrams (md5 → first 4 bytes
-    * mod `buckets`, the q125 integer-hash pattern — exactly replayable in
+    * mod `DsirBuckets`, the q125 integer-hash pattern — exactly replayable in
     * DuckDB via the '0x' cast); the target bag-of-words model here is the
     * English slice (`lang = 'en'`), the raw model the whole corpus, both
     * add-alpha smoothed. Per document: log importance weight
@@ -4972,12 +5062,12 @@ object TextAnalysis {
     * rank.
     *
     * Scale shape: the two n-gram language models are ONE aggregate each,
-    * collapsing the corpus to ≤`buckets` rows; their totals come from
+    * collapsing the corpus to ≤`DsirBuckets` rows; their totals come from
     * windows over that tiny table (never a 1-row-aggregate scalar join —
     * the q114 rule) and the per-doc scoring join broadcasts the
-    * `buckets`-row model. Everything else is map-side combinable. */
-  def qDsirScores(t: Tables, buckets: Int = 256): DataFrame = {
-    val B = buckets
+    * `DsirBuckets`-row model. Everything else is map-side combinable. */
+  def qDsirScores(t: Tables): DataFrame = {
+    val B = DsirBuckets
     val tk = text.tokenize(col("text"))
     // One tokenize+md5 pass: Catalyst shares no common subtrees, so deriving
     // raw/tgt/feat directly from the exploded gram stream evaluated the
@@ -5016,14 +5106,14 @@ object TextAnalysis {
       .orderBy(col("doc_id"))
   }
 
-  def qDsirScoresSql(buckets: Int = 256): String =
+  def qDsirScoresSql: String =
     s"""WITH toks AS (
        |  SELECT doc_id, lang,
        |    ${text.tokenizeSql("text")} AS tk
        |  FROM documents),
        |grams AS (
        |  SELECT doc_id, lang,
-       |    CAST('0x' || substr(md5(g), 1, 8) AS BIGINT) % $buckets AS b
+       |    CAST('0x' || substr(md5(g), 1, 8) AS BIGINT) % $DsirBuckets AS b
        |  FROM (SELECT doc_id, lang,
        |          unnest(tk || [list_aggregate(tk[i:i+1], 'string_agg', ' ')
        |                        FOR i IN range(1, len(tk))]) AS g
@@ -5033,8 +5123,8 @@ object TextAnalysis {
        |        WHERE lang = 'en' GROUP BY b),
        |model AS (
        |  SELECT b, round(
-       |    ln((CAST(tg AS DOUBLE) + 0.01) / (CAST(tt AS DOUBLE) + 0.01 * ${buckets}.0))
-       |    - ln((CAST(r AS DOUBLE) + 0.01) / (CAST(rt AS DOUBLE) + 0.01 * ${buckets}.0)),
+       |    ln((CAST(tg AS DOUBLE) + 0.01) / (CAST(tt AS DOUBLE) + 0.01 * ${DsirBuckets}.0))
+       |    - ln((CAST(r AS DOUBLE) + 0.01) / (CAST(rt AS DOUBLE) + 0.01 * ${DsirBuckets}.0)),
        |    6) AS lr
        |  FROM (SELECT raw.b, raw.r, COALESCE(tgt.tg, 0) AS tg,
        |          SUM(raw.r) OVER () AS rt,
@@ -5291,6 +5381,10 @@ object TextAnalysis {
       |    / nullif(CAST(COUNT(*) AS DOUBLE), 0.0::DOUBLE) AS gini
       |FROM r""".stripMargin
 
+  /** q231's list depth and rank-biased-overlap persistence. */
+  final val RboK = 100
+  final val RboP = 0.9
+
   /** Q231: rank-biased overlap (Webber, Moffat & Zobel 2010) between the
     * two quality RANKINGS this engine ships — the hand-written q27 score
     * and the trained q139 classifier confidence. q205's Spearman weighs
@@ -5313,14 +5407,13 @@ object TextAnalysis {
     * Scale shape: two linear scoring scans, two bucketRank prefixes, one
     * doc_id equi-join, one ≤k-row grid. 7th consumer of the weight
     * cache. */
-  def qRankOverlap(t: Tables, rounds: Int = 16, lr: Double = 8.0,
-      k: Int = 100, p: Double = 0.9): DataFrame = {
+  def qRankOverlap(t: Tables): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.types._
     val spark = t.documents.sparkSession
     val feats = logitFeaturesShared(t)
     locally {
-      logitTrainCached(t, feats, rounds, lr) match {
+      logitTrainCached(t, feats) match {
         case None =>
           Tables.emptyFrame(spark, "n" -> LongType, "k" -> LongType,
             "o_k" -> LongType, "sum_term_micro" -> LongType,
@@ -5349,9 +5442,9 @@ object TextAnalysis {
           val n = nRow.getLong(0)
           val m = joined.select(
             greatest(lit(n + 1) - col("ra"), lit(n + 1) - col("rb")).as("ra_rb_max"))
-          val mc = m.filter(col("ra_rb_max") <= k)
+          val mc = m.filter(col("ra_rb_max") <= RboK)
             .groupBy(col("ra_rb_max")).agg(count(lit(1)).as("c"))
-          val grid = spark.range(1, k + 1).select(col("id").as("d"))
+          val grid = spark.range(1, RboK + 1).select(col("id").as("d"))
             .join(mc, col("d") === col("ra_rb_max"), "left")
             .withColumn("c", coalesce(col("c"), lit(0L)))
           // bounded k-row single-partition window (q221 grid argument)
@@ -5360,15 +5453,15 @@ object TextAnalysis {
           val terms = grid
             .withColumn("o_d", sum(col("c")).over(wAll))
             .withColumn("term_micro", round(
-              pow(lit(p), col("d").cast("double") - lit(1.0)) *
+              pow(lit(RboP), col("d").cast("double") - lit(1.0)) *
                 col("o_d").cast("double") / col("d").cast("double") *
                 lit(1000000.0), 0).cast("long"))
           terms.agg(
-              max(when(col("d") === k, col("o_d"))).as("o_k"),
+              max(when(col("d") === RboK, col("o_d"))).as("o_k"),
               coalesce(sum(col("term_micro")), lit(0L)).as("sum_term_micro"))
-            .select(lit(n).as("n"), lit(k.toLong).as("k"), col("o_k"),
+            .select(lit(n).as("n"), lit(RboK.toLong).as("k"), col("o_k"),
               col("sum_term_micro"),
-              ((lit(1.0) - lit(p)) * col("sum_term_micro").cast("double") /
+              ((lit(1.0) - lit(RboP)) * col("sum_term_micro").cast("double") /
                 lit(1000000.0)).as("rbo"))
       }
     }
@@ -5377,9 +5470,8 @@ object TextAnalysis {
   /** q231 oracle: the logit chain + the q27 CTEs (renamed `f`, the q228
     * lesson), plain windows for the two descending ranks, the same
     * bounded depth grid and micro terms. */
-  def qRankOverlapSql(rounds: Int = 16, lr: Double = 8.0,
-      k: Int = 100, p: Double = 0.9): String = {
-    val (chain, wFinal) = logitChainCtes(rounds, lr)
+  def qRankOverlapSql: String = {
+    val (chain, wFinal) = logitChainCtes
     val prob = logitProbSql()
     val qsCtes = qualityScoreCtes
       .replace("f AS (", "qsf AS (").replace("FROM f)", "FROM qsf)")
@@ -5400,10 +5492,10 @@ object TextAnalysis {
       |  FROM qual q JOIN conf c USING (doc_id)),
       |mc AS (
       |  SELECT greatest(ra, rb) AS m, COUNT(*)::BIGINT AS c FROM ranks
-      |  WHERE greatest(ra, rb) <= $k GROUP BY 1),
+      |  WHERE greatest(ra, rb) <= $RboK GROUP BY 1),
       |grid AS (
       |  SELECT CAST(d AS BIGINT) AS d, COALESCE(mc.c, 0)::BIGINT AS c
-      |  FROM (SELECT unnest(range(1, ${k + 1})) AS d) g
+      |  FROM (SELECT unnest(range(1, ${RboK + 1})) AS d) g
       |  LEFT JOIN mc ON mc.m = g.d),
       |terms AS (
       |  SELECT d,
@@ -5411,22 +5503,25 @@ object TextAnalysis {
       |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS o_d
       |  FROM grid),
       |agg AS (
-      |  SELECT CAST(MAX(CASE WHEN d = $k THEN o_d END) AS BIGINT) AS o_k,
-      |    CAST(COALESCE(SUM(CAST(round(power($p::DOUBLE, CAST(d AS DOUBLE) - 1.0::DOUBLE)
+      |  SELECT CAST(MAX(CASE WHEN d = $RboK THEN o_d END) AS BIGINT) AS o_k,
+      |    CAST(COALESCE(SUM(CAST(round(power($RboP::DOUBLE, CAST(d AS DOUBLE) - 1.0::DOUBLE)
       |      * CAST(o_d AS DOUBLE) / CAST(d AS DOUBLE)
       |      * 1000000.0::DOUBLE) AS BIGINT)), 0) AS BIGINT) AS sum_term_micro
       |  FROM terms)
-      |SELECT (SELECT COUNT(*)::BIGINT FROM ranks) AS n, CAST($k AS BIGINT) AS k,
+      |SELECT (SELECT COUNT(*)::BIGINT FROM ranks) AS n, CAST($RboK AS BIGINT) AS k,
       |  o_k, sum_term_micro,
-      |  (1.0::DOUBLE - $p::DOUBLE) * CAST(sum_term_micro AS DOUBLE)
+      |  (1.0::DOUBLE - $RboP::DOUBLE) * CAST(sum_term_micro AS DOUBLE)
       |    / 1000000.0::DOUBLE AS rbo
       |FROM agg""".stripMargin
   }
 
+  /** Bootstrap replicates q232 draws. */
+  final val BootstrapB = 32
+
   /** Q232: deterministic Poisson-bootstrap confidence interval for the
     * corpus mean quality score — the stability audit behind any
     * quality-threshold decision (is the mean, and therefore a q144-style
-    * cut, an artifact of a few documents?). Each of `b` replicates
+    * cut, an artifact of a few documents?). Each of `BootstrapB` replicates
     * weights every document w ~ Poisson(1) (the distributed bootstrap:
     * Poisson weights ≈ multinomial resampling without coordination —
     * Chamandy et al. 2012, "Estimating uncertainty for massive data
@@ -5448,14 +5543,14 @@ object TextAnalysis {
     * the b-row table. No joins between 1-row aggregates (q114): the
     * full-corpus mean derives from the same exploded frame (Σqm over
     * replicates is exactly b·Σqm). */
-  def qBootstrapCi(t: Tables, b: Int = 32): DataFrame = {
+  def qBootstrapCi(t: Tables): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     // Poisson(1) inverse-CDF thresholds on the 2^52 grid, shared with SQL
     val thr = poissonThresholds52
     val qual = qualityScoreShared(t).select(col("doc_id"),
       round(col("quality_score") * lit(1000000.0), 0).cast("long").as("qm"))
     val exploded = qual.select(col("doc_id"), col("qm"),
-      explode(sequence(lit(0), lit(b - 1))).as("rep"))
+      explode(sequence(lit(0), lit(BootstrapB - 1))).as("rep"))
       .withColumn("u", conv(substring(
         md5(concat_ws(":", col("doc_id"), col("rep"))), 1, 13), 16, 10).cast("long"))
       .withColumn("w",
@@ -5473,15 +5568,15 @@ object TextAnalysis {
     // bounded b-row table: windows/sort are single-partition by design
     val wOrd = Window.orderBy(col("mm"), col("rep"))
     val ranked = perRep.withColumn("rn", row_number().over(wOrd))
-    val bd = lit(b.toDouble)
+    val bd = lit(BootstrapB.toDouble)
     ranked.agg(
         max(col("cnt")).as("n_docs"),
         max(col("srow")).as("sum_qm"),
         max(when(col("rn") === 2, col("mm"))).as("lo_micro"),
-        max(when(col("rn") === b - 1, col("mm"))).as("hi_micro"),
+        max(when(col("rn") === BootstrapB - 1, col("mm"))).as("hi_micro"),
         coalesce(sum(col("mm")), lit(0L)).as("sm"),
         coalesce(sum(col("mm") * col("mm")), lit(0L)).as("smm"))
-      .select(col("n_docs"), lit(b.toLong).as("b_reps"),
+      .select(col("n_docs"), lit(BootstrapB.toLong).as("b_reps"),
         (col("sum_qm").cast("double") /
           nullif(col("n_docs").cast("double"), lit(0.0)) /
           lit(1000000.0)).as("mean"),
@@ -5504,7 +5599,7 @@ object TextAnalysis {
 
   /** q232 oracle: identical thresholds (interpolated constants), hex
     * parity, exact integer replicate stats and order statistics. */
-  def qBootstrapCiSql(b: Int = 32): String = {
+  def qBootstrapCiSql: String = {
     val thr = poissonThresholds52
     s"""WITH $qualityScoreCtes,
       |qual AS (
@@ -5514,7 +5609,7 @@ object TextAnalysis {
       |ex AS (
       |  SELECT doc_id, qm, CAST(rep AS BIGINT) AS rep,
       |    CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR) || ':' || CAST(rep AS VARCHAR)), 1, 13) AS BIGINT) AS u
-      |  FROM qual, (SELECT unnest(range(0, $b)) AS rep)),
+      |  FROM qual, (SELECT unnest(range(0, $BootstrapB)) AS rep)),
       |wts AS (
       |  SELECT rep, qm,
       |    CASE WHEN u < ${thr(0)} THEN 0 WHEN u < ${thr(1)} THEN 1
@@ -5534,14 +5629,14 @@ object TextAnalysis {
       |    ROW_NUMBER() OVER (ORDER BY CAST(round(CAST(num AS DOUBLE)
       |      / nullif(CAST(den AS DOUBLE), 0.0::DOUBLE)) AS BIGINT), rep) AS rn
       |  FROM per)
-      |SELECT CAST(MAX(cnt) AS BIGINT) AS n_docs, CAST($b AS BIGINT) AS b_reps,
+      |SELECT CAST(MAX(cnt) AS BIGINT) AS n_docs, CAST($BootstrapB AS BIGINT) AS b_reps,
       |  CAST(MAX(srow) AS DOUBLE) / nullif(CAST(MAX(cnt) AS DOUBLE), 0.0::DOUBLE)
       |    / 1000000.0::DOUBLE AS mean,
       |  CAST(MAX(CASE WHEN rn = 2 THEN mm END) AS BIGINT) AS lo_micro,
-      |  CAST(MAX(CASE WHEN rn = ${b - 1} THEN mm END) AS BIGINT) AS hi_micro,
-      |  sqrt(($b.0::DOUBLE * CAST(SUM(mm * mm) AS DOUBLE)
+      |  CAST(MAX(CASE WHEN rn = ${BootstrapB - 1} THEN mm END) AS BIGINT) AS hi_micro,
+      |  sqrt(($BootstrapB.0::DOUBLE * CAST(SUM(mm * mm) AS DOUBLE)
       |        - CAST(SUM(mm) AS DOUBLE) * CAST(SUM(mm) AS DOUBLE))
-      |       / ($b.0::DOUBLE * ($b.0::DOUBLE - 1.0::DOUBLE)))
+      |       / ($BootstrapB.0::DOUBLE * ($BootstrapB.0::DOUBLE - 1.0::DOUBLE)))
       |    / 1000000.0::DOUBLE AS se
       |FROM mm""".stripMargin
   }
@@ -5616,6 +5711,9 @@ object TextAnalysis {
        |  CAST(SUM(CASE WHEN bitmap = 1 THEN n_docs ELSE 0 END) OVER () AS BIGINT) AS sole_r4
        |FROM cls ORDER BY bitmap""".stripMargin
 
+  /** q241's miscoverage level. */
+  final val ConformalAlpha = 0.1
+
   /** Q241: split-conformal coverage audit (Vovk's conformal prediction,
     * the Angelopoulos–Bates split recipe) for the q139 classifier — the
     * distribution-free check that turns raw confidences into calibrated
@@ -5635,13 +5733,12 @@ object TextAnalysis {
     *
     * Scale shape: one scoring scan, one bucketRank over the calibration
     * half, one filtered count over the eval half, a 1-row readout. */
-  def qConformalCoverage(t: Tables, rounds: Int = 16, lr: Double = 8.0,
-      alpha: Double = 0.1): DataFrame = {
+  def qConformalCoverage(t: Tables): DataFrame = {
     import org.apache.spark.sql.types._
     val spark = t.documents.sparkSession
     val feats = logitFeaturesShared(t)
     locally {
-      logitTrainCached(t, feats, rounds, lr) match {
+      logitTrainCached(t, feats) match {
         case None =>
           Tables.emptyFrame(spark, "n_cal" -> LongType, "n_eval" -> LongType,
             "target_rank" -> LongType, "qhat_micro" -> LongType,
@@ -5664,7 +5761,7 @@ object TextAnalysis {
               "qhat_micro" -> LongType, "n_covered" -> LongType,
               "coverage" -> DoubleType, "alpha" -> DoubleType)
           val targetRank = math.min(nCal,
-            math.ceil((nCal + 1) * (1.0 - alpha)).toLong)
+            math.ceil((nCal + 1) * (1.0 - ConformalAlpha)).toLong)
           val qhat = bucketRank(cal, "s_micro", 1000001L,
             Seq(col("s_micro"), col("doc_id")), "rk")
             .filter(col("rk") === targetRank)
@@ -5677,7 +5774,7 @@ object TextAnalysis {
               col("n_covered"),
               (col("n_covered").cast("double") /
                 nullif(col("n_eval").cast("double"), lit(0.0))).as("coverage"),
-              lit(alpha).as("alpha"))
+              lit(ConformalAlpha).as("alpha"))
       }
     }
   }
@@ -5685,9 +5782,8 @@ object TextAnalysis {
   /** q241 oracle: the logit chain + the same split, order statistic and
     * counts (a plain ROW_NUMBER for the quantile — the Spark side uses
     * bucketRank; results hash-equal, the q144 contract). */
-  def qConformalCoverageSql(rounds: Int = 16, lr: Double = 8.0,
-      alpha: Double = 0.1): String = {
-    val (chain, wFinal) = logitChainCtes(rounds, lr)
+  def qConformalCoverageSql: String = {
+    val (chain, wFinal) = logitChainCtes
     val p = logitProbSql()
     s"""WITH $chain,
       |scored AS (
@@ -5706,10 +5802,10 @@ object TextAnalysis {
       |  FROM s WHERE cal),
       |qhat AS (
       |  SELECT n_cal,
-      |    least(n_cal, CAST(ceil((n_cal + 1) * (1.0::DOUBLE - $alpha::DOUBLE)) AS BIGINT)) AS target_rank,
+      |    least(n_cal, CAST(ceil((n_cal + 1) * (1.0::DOUBLE - $ConformalAlpha::DOUBLE)) AS BIGINT)) AS target_rank,
       |    s_micro AS qhat_micro
       |  FROM calset
-      |  WHERE rk = least(n_cal, CAST(ceil((n_cal + 1) * (1.0::DOUBLE - $alpha::DOUBLE)) AS BIGINT))),
+      |  WHERE rk = least(n_cal, CAST(ceil((n_cal + 1) * (1.0::DOUBLE - $ConformalAlpha::DOUBLE)) AS BIGINT))),
       |ev AS (
       |  SELECT COUNT(*)::BIGINT AS n_eval,
       |    CAST(SUM(CASE WHEN s_micro <= (SELECT qhat_micro FROM qhat)
@@ -5718,14 +5814,17 @@ object TextAnalysis {
       |SELECT q.n_cal, e.n_eval, q.target_rank, q.qhat_micro, e.n_covered,
       |  CAST(e.n_covered AS DOUBLE)
       |    / nullif(CAST(e.n_eval AS DOUBLE), 0.0::DOUBLE) AS coverage,
-      |  $alpha::DOUBLE AS alpha
+      |  $ConformalAlpha::DOUBLE AS alpha
       |FROM qhat q, ev e""".stripMargin
   }
+
+  /** The quality-score threshold q228's second rater applies. */
+  final val KappaThresh = 0.7
 
   /** Q228: Cohen's κ inter-rater agreement (Cohen 1960) between the two
     * INDEPENDENT quality raters this engine ships — the trained q139
     * logistic classifier (rater A: micro-rounded confidence > 0.5) and
-    * the hand-written q27 composite score (rater B: score ≥ `thresh`) —
+    * the hand-written q27 composite score (rater B: score ≥ `KappaThresh`) —
     * the chance-corrected agreement check a labeling pipeline runs
     * before trusting heuristic labels as classifier supervision. κ =
     * (p_o − p_e)/(1 − p_e) from the exact 2×2 confusion matrix.
@@ -5739,13 +5838,12 @@ object TextAnalysis {
     *
     * Scale shape: scoring is one linear scan each; one doc_id equi-join;
     * ONE aggregate row. */
-  def qCohensKappa(t: Tables, rounds: Int = 16, lr: Double = 8.0,
-      thresh: Double = 0.7): DataFrame = {
+  def qCohensKappa(t: Tables): DataFrame = {
     import org.apache.spark.sql.types._
     val spark = t.documents.sparkSession
     val feats = logitFeaturesShared(t)
     locally {
-      logitTrainCached(t, feats, rounds, lr) match {
+      logitTrainCached(t, feats) match {
         case None =>
           Tables.emptyFrame(spark, "n" -> LongType, "n11" -> LongType,
             "n10" -> LongType, "n01" -> LongType, "n00" -> LongType,
@@ -5755,7 +5853,7 @@ object TextAnalysis {
           val ra = feats.select(col("doc_id"),
             (round(p * lit(1000000.0), 0).cast("long") > 500000L).as("a"))
           val rb = qualityScoreShared(t).select(col("doc_id"),
-            (col("quality_score") >= lit(thresh)).as("b"))
+            (col("quality_score") >= lit(KappaThresh)).as("b"))
           val m = ra.join(rb, Seq("doc_id")).agg(
             count(lit(1)).as("n"),
             sum(when(col("a") && col("b"), 1L).otherwise(0L)).as("n11"),
@@ -5791,7 +5889,8 @@ object TextAnalysis {
     * prefix are windows partitioned BY doc_id (never global); chunk
     * sharing is one groupBy on the chunk hash + an equi-join back —
     * every shuffle is keyed, nothing quadratic. */
-  def qCdcChunking(t: Tables, mod: Int = 32): DataFrame = {
+  def qCdcChunking(t: Tables): DataFrame = {
+    val mod = 32
     import org.apache.spark.sql.expressions.Window
     val toks = t.fanout(t.documents)
       .select(col("doc_id"),
@@ -5871,12 +5970,15 @@ object TextAnalysis {
       |FROM chunks c JOIN sharing s USING (chash)
       |GROUP BY c.doc_id ORDER BY c.doc_id""".stripMargin
 
+  /** Rows per batch in q253's shuffle audit. */
+  final val ShuffleBlock = 100
+
   /** Q253: training-order shuffle-quality audit — a sequential trainer
     * sees the corpus in storage order, so a bad global shuffle (source-
     * clumped data) shows up as drift/instability; this audits a SEEDED
     * deterministic permutation (md5 of doc_id — how a production pipeline
     * assigns shuffle order, never random()) by slicing it into contiguous
-    * blocks of `block` docs and scoring each block's source mix against
+    * blocks of `ShuffleBlock` docs and scoring each block's source mix against
     * the corpus mix with a per-block χ². Missing cells need no synthesis:
     * Σ_all e_s = n_b, so χ²_b = Σ_present((o−e)²/e − e) + n_b — present
     * cells only. Per-cell terms are micro-rounded BIGINTs (q204), χ² is
@@ -5886,7 +5988,7 @@ object TextAnalysis {
     * aggregate on (block, source); per-source totals are a 5-row
     * broadcast aggregate — the only windows run per block (≤ |sources|
     * rows each). Nothing global, nothing quadratic. */
-  def qShuffleQualityAudit(t: Tables, block: Int = 100): DataFrame = {
+  def qShuffleQualityAudit(t: Tables): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val docs = t.fanout(t.documents).select(col("doc_id"), col("source"))
       .withColumn("h",
@@ -5894,7 +5996,7 @@ object TextAnalysis {
           .cast("long"))
     val ranked = bucketRank(docs, "h", 1L << 52,
       Seq(col("h"), col("doc_id")), "pos")
-      .withColumn("blk", expr(s"(pos - 1) div $block"))
+      .withColumn("blk", expr(s"(pos - 1) div $ShuffleBlock"))
     val cells = ranked.groupBy(col("blk"), col("source"))
       .agg(count(lit(1)).as("observed"))
     val srcTot = docs.groupBy(col("source"))
@@ -5921,12 +6023,12 @@ object TextAnalysis {
 
   /** q253 oracle: ROW_NUMBER over the same md5 key (provably equal to
     * bucketRank), identical χ² identity and micro terms. */
-  def qShuffleQualityAuditSql(block: Int = 100): String =
+  def qShuffleQualityAuditSql: String =
     s"""WITH ranked AS (
       |  SELECT doc_id, source,
       |    (ROW_NUMBER() OVER (ORDER BY
       |       CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 13) AS BIGINT),
-      |       doc_id) - 1) // $block AS blk
+      |       doc_id) - 1) // $ShuffleBlock AS blk
       |  FROM documents),
       |cells AS (
       |  SELECT blk, source, COUNT(*)::BIGINT AS observed
@@ -5967,9 +6069,8 @@ object TextAnalysis {
     * collide with the logit feature CTE — DuckDB resolves an inner CTE
     * reference against the outer chain, no shadowing); identical integer
     * matrix and IEEE κ sequence. */
-  def qCohensKappaSql(rounds: Int = 16, lr: Double = 8.0,
-      thresh: Double = 0.7): String = {
-    val (chain, wFinal) = logitChainCtes(rounds, lr)
+  def qCohensKappaSql: String = {
+    val (chain, wFinal) = logitChainCtes
     val p = logitProbSql()
     val qsCtes = qualityScoreCtes
       .replace("f AS (", "qsf AS (").replace("FROM f)", "FROM qsf)")
@@ -5980,7 +6081,7 @@ object TextAnalysis {
       |  FROM f, $wFinal w),
       |$qsCtes,
       |rb AS MATERIALIZED (
-      |  SELECT doc_id, quality_score >= $thresh::DOUBLE AS b FROM scored),
+      |  SELECT doc_id, quality_score >= $KappaThresh::DOUBLE AS b FROM scored),
       |m AS (
       |  SELECT COUNT(*)::BIGINT AS n,
       |    CAST(SUM(CASE WHEN a AND b THEN 1 ELSE 0 END) AS BIGINT) AS n11,
@@ -6031,12 +6132,15 @@ object TextAnalysis {
   }
   private case class DsModel(rounds: Seq[DsRound], nPos: Long, postMass: Long)
 
+  /** EM rounds of q260's Dawid–Skene fit (shared, prewarmed). */
+  final val DawidSkeneRounds = 5
+
   /** Trained Dawid–Skene state per (session, sfDir, rounds), a
     * `graft.Shared` entry: the EM sequence is fully
     * deterministic (micro-grid posteriors, exact integer masses), so a
     * cache hit is bit-identical to a refit. */
-  private def dawidSkeneCached(t: Tables, rounds: Int): Option[DsModel] =
-    Shared(t, s"dawid_skene#$rounds")(dawidSkeneTrain(t, rounds))
+  private def dawidSkeneCached(t: Tables): Option[DsModel] =
+    Shared(t, "dawid_skene")(dawidSkeneTrain(t))
 
   /** Fixed-round binary Dawid–Skene EM (Dawid & Skene 1979): posterior
     * class probabilities live on the exact micro grid (pm = round(1e6·p),
@@ -6048,14 +6152,14 @@ object TextAnalysis {
     * aggregate over the checkpointed vote table + a bounded 8-long driver
     * fetch (the logitTrain shape); per-document work never leaves the
     * executors. */
-  private def dawidSkeneTrain(t: Tables, rounds: Int): Option[DsModel] = {
+  private def dawidSkeneTrain(t: Tables): Option[DsModel] = {
     val votes = dsVotes(t).localCheckpoint()
     var cur = votes.withColumn("pm",
       round(lit(1e6) * (col("v1") + col("v2") + col("v3")) / lit(3))
         .cast("long"))
     val hist = scala.collection.mutable.ArrayBuffer.empty[DsRound]
     var r = 0
-    while (r < rounds) {
+    while (r < DawidSkeneRounds) {
       val row = cur.agg(
         count(lit(1)), sum(col("pm")),
         sum(col("pm") * col("v1")), sum(col("pm") * col("v2")),
@@ -6107,10 +6211,10 @@ object TextAnalysis {
     * Scale: each EM round is one map-side-combinable aggregate over a
     * 4-column vote table + an 8-long driver fetch; the corpus never
     * leaves the executors and no per-round shuffle grows with data. */
-  def qDawidSkene(t: Tables, rounds: Int = 5): DataFrame = {
+  def qDawidSkene(t: Tables): DataFrame = {
     import org.apache.spark.sql.types._
     val spark = t.documents.sparkSession
-    dawidSkeneCached(t, rounds) match {
+    dawidSkeneCached(t) match {
       case None => Tables.emptyFrame(spark,
         "annotator" -> StringType, "match_mass" -> LongType,
         "pos_mass" -> LongType, "sensitivity" -> DoubleType,
@@ -6134,7 +6238,7 @@ object TextAnalysis {
     * votes → micro posterior p0 → (masses s_r → rates d_r → posterior
     * p_r) × rounds — with the identical left-associated update expression
     * and ::DOUBLE literal discipline. */
-  def qDawidSkeneSql(rounds: Int = 5): String = {
+  def qDawidSkeneSql: String = {
     val base =
       s"""v AS MATERIALIZED (
         |  SELECT doc_id,
@@ -6147,7 +6251,7 @@ object TextAnalysis {
         |p0 AS MATERIALIZED (
         |  SELECT doc_id, v1, v2, v3,
         |    CAST(round(1e6 * (v1 + v2 + v3) / 3) AS BIGINT) AS pm FROM v)""".stripMargin
-    val chain = (1 to rounds).map { r =>
+    val chain = (1 to DawidSkeneRounds).map { r =>
       val p = s"p${r - 1}"
       s"""s$r AS MATERIALIZED (
          |  SELECT COUNT(*) AS cnt, CAST(SUM(pm) AS BIGINT) AS sp,
@@ -6183,22 +6287,25 @@ object TextAnalysis {
        |$chain,
        |fin AS MATERIALIZED (
        |  SELECT CAST(SUM(CASE WHEN pm > 500000 THEN 1 ELSE 0 END) AS BIGINT) AS n_pos,
-       |    CAST(SUM(pm) AS BIGINT) AS post_mass FROM p$rounds)
+       |    CAST(SUM(pm) AS BIGINT) AS post_mass FROM p$DawidSkeneRounds)
        |SELECT * FROM (
        |  SELECT 'a1_length' AS annotator, s.a1 AS match_mass, s.sp AS pos_mass,
        |    d.al1 AS sensitivity, s.b1 AS miss_mass, s.sn AS neg_mass,
        |    d.be1 AS specificity, d.pi AS pi, f.n_pos, f.post_mass
-       |  FROM s$rounds s CROSS JOIN d$rounds d CROSS JOIN fin f
+       |  FROM s$DawidSkeneRounds s CROSS JOIN d$DawidSkeneRounds d CROSS JOIN fin f
        |  UNION ALL
        |  SELECT 'a2_alpha', s.a2, s.sp, d.al2, s.b2, s.sn, d.be2, d.pi,
        |    f.n_pos, f.post_mass
-       |  FROM s$rounds s CROSS JOIN d$rounds d CROSS JOIN fin f
+       |  FROM s$DawidSkeneRounds s CROSS JOIN d$DawidSkeneRounds d CROSS JOIN fin f
        |  UNION ALL
        |  SELECT 'a3_distinct', s.a3, s.sp, d.al3, s.b3, s.sn, d.be3, d.pi,
        |    f.n_pos, f.post_mass
-       |  FROM s$rounds s CROSS JOIN d$rounds d CROSS JOIN fin f)
+       |  FROM s$DawidSkeneRounds s CROSS JOIN d$DawidSkeneRounds d CROSS JOIN fin f)
        |ORDER BY annotator""".stripMargin
   }
+
+  /** The share of the corpus, in percent, q263 keeps. */
+  final val DietKeepPct = 70
 
   /** Q263: data-diet selection by EL2N score (Paul, Ganguli & Dziugaite
     * 2021, "Deep Learning on a Data Diet") — score every document by the
@@ -6222,13 +6329,12 @@ object TextAnalysis {
     * tie-break, rank_desc = n+1−rank_asc); one equi join back to sources
     * + one |sources|-row aggregate. Ninth consumer of the session weight
     * cache — a cache hit scores without retraining. */
-  def qDataDiet(t: Tables, rounds: Int = 16, lr: Double = 8.0,
-      keepPct: Int = 70): DataFrame = {
+  def qDataDiet(t: Tables, keepPct: Int = DietKeepPct): DataFrame = {
     import org.apache.spark.sql.types._
     val spark = t.documents.sparkSession
     val feats = logitFeaturesShared(t)
     locally {
-      logitTrainCached(t, feats, rounds, lr) match {
+      logitTrainCached(t, feats) match {
         case None =>
           Tables.emptyFrame(spark, "source" -> StringType,
             "n_docs" -> LongType, "n_kept" -> LongType,
@@ -6260,12 +6366,16 @@ object TextAnalysis {
     }
   }
 
+  /** q265's seed tokens (the most frequent) and decode steps. */
+  final val DecodeSeeds = 5
+  final val DecodeSteps = 10
+
   /** Q265: greedy bigram decode walk — deterministic Markov-chain text
     * generation from the corpus bigram graph (the synthetic-data /
     * LM-smoke-test step: "what does the corpus model actually say?").
-    * From each of the `nSeeds` most frequent tokens, repeatedly follow
+    * From each of the `DecodeSeeds` most frequent tokens, repeatedly follow
     * the most frequent observed successor (argmax count, ties by token
-    * ascending) for `steps` steps; a token with no observed successor
+    * ascending) for `DecodeSteps` steps; a token with no observed successor
     * ends its walk early. Emits (seed, step, token, supporting count) —
     * step 0 carries the seed's unigram frequency.
     *
@@ -6280,7 +6390,7 @@ object TextAnalysis {
     * construction) against it — K vocab-bounded scans, nothing
     * corpus-proportional after the first aggregate. The oracle replays
     * the walk as a recursive CTE (the q227 sequential-walk precedent). */
-  def qGreedyDecode(t: Tables, steps: Int = 10, nSeeds: Int = 5): DataFrame = {
+  def qGreedyDecode(t: Tables): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.types._
     val spark = t.documents.sparkSession
@@ -6298,12 +6408,12 @@ object TextAnalysis {
     // re-evaluates the full unigram aggregate (tokenize scan included)
     // per reference — 11 corpus scans for a 10-step walk (r13 opt). The
     // checkpointed frame is nSeeds rows.
-    val seeds = uf.orderBy(col("f").desc, col("w")).limit(nSeeds)
+    val seeds = uf.orderBy(col("f").desc, col("w")).limit(DecodeSeeds)
       .localCheckpoint()
     var cur = seeds.select(col("w").as("seed"), lit(0L).as("step"),
       col("w").as("token"), col("f").as("c"))
     var out = cur
-    for (_ <- 1 to steps) {
+    for (_ <- 1 to DecodeSteps) {
       cur = broadcast(cur).as("w").join(am.as("m"), col("w.token") === col("m.a"))
         .select(col("w.seed").as("seed"), (col("w.step") + lit(1L)).as("step"),
           col("m.b").as("token"), col("m.c").as("c"))
@@ -6314,7 +6424,7 @@ object TextAnalysis {
 
   /** q265 oracle: the same bigram argmax table + the walk as a recursive
     * CTE over it. */
-  def qGreedyDecodeSql(steps: Int = 10, nSeeds: Int = 5): String =
+  def qGreedyDecodeSql: String =
     s"""WITH RECURSIVE toks AS MATERIALIZED (
        |  SELECT ${text.tokenizeSql("text")} AS tk
        |  FROM documents),
@@ -6330,13 +6440,13 @@ object TextAnalysis {
        |    SELECT a, b, c,
        |      ROW_NUMBER() OVER (PARTITION BY a ORDER BY c DESC, b) AS rn
        |    FROM bf) WHERE rn = 1),
-       |seeds AS (SELECT w AS seed, f AS c FROM uf ORDER BY f DESC, w LIMIT $nSeeds),
+       |seeds AS (SELECT w AS seed, f AS c FROM uf ORDER BY f DESC, w LIMIT $DecodeSeeds),
        |walk AS (
        |  SELECT seed, CAST(0 AS BIGINT) AS step, seed AS token, c FROM seeds
        |  UNION ALL
        |  SELECT w.seed, w.step + 1, m.b, m.c
        |  FROM walk w JOIN am m ON m.a = w.token
-       |  WHERE w.step < $steps)
+       |  WHERE w.step < $DecodeSteps)
        |SELECT seed, step, token, c FROM walk ORDER BY seed, step""".stripMargin
 
   /** Q264: pairwise source Jensen–Shannon divergence matrix — the
@@ -6452,9 +6562,8 @@ object TextAnalysis {
   /** q263 oracle: the shared weight chain + a global ROW_NUMBER over the
     * micro scores (the two-phase prefix is a Spark execution detail) and
     * the same integer budget. */
-  def qDataDietSql(rounds: Int = 16, lr: Double = 8.0,
-      keepPct: Int = 70): String = {
-    val (chain, wFinal) = logitChainCtes(rounds, lr)
+  def qDataDietSql: String = {
+    val (chain, wFinal) = logitChainCtes
     val p = logitProbSql()
     s"""WITH $chain,
        |scored AS (
@@ -6467,7 +6576,7 @@ object TextAnalysis {
        |    CAST(COUNT(*) OVER () AS BIGINT) AS n
        |  FROM scored),
        |kept AS (
-       |  SELECT doc_id, sm FROM ranked WHERE r <= ($keepPct * n) // 100)
+       |  SELECT doc_id, sm FROM ranked WHERE r <= ($DietKeepPct * n) // 100)
        |SELECT d.source, COUNT(*)::BIGINT AS n_docs,
        |  CAST(COUNT(k.sm) AS BIGINT) AS n_kept,
        |  CAST(COALESCE(SUM(k.sm), 0) AS BIGINT) AS kept_score_micro,
@@ -6496,13 +6605,13 @@ object TextAnalysis {
     * Scale shape: training is the shared 16-round GD (`graft.Shared`); the
     * audit is two linear scans (threshold aggregate, cell aggregate) plus
     * windows over the ≤4-row cell table. */
-  def qLabelNoise(t: Tables, rounds: Int = 16, lr: Double = 8.0): DataFrame = {
+  def qLabelNoise(t: Tables): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.types._
     val spark = t.documents.sparkSession
     val feats = logitFeaturesShared(t)
     locally {
-      logitTrainCached(t, feats, rounds, lr) match {
+      logitTrainCached(t, feats) match {
         case None =>
           Tables.emptyFrame(spark, "y" -> LongType, "yhat" -> LongType,
             "n" -> LongType, "n_assigned" -> LongType, "off_diag" -> LongType,
@@ -6541,8 +6650,8 @@ object TextAnalysis {
 
   /** q286 oracle: the weight chain + the same micro thresholds via a
     * 1-row CTE cross join and identical decision CASE. */
-  def qLabelNoiseSql(rounds: Int = 16, lr: Double = 8.0): String = {
-    val (chain, wFinal) = logitChainCtes(rounds, lr)
+  def qLabelNoiseSql: String = {
+    val (chain, wFinal) = logitChainCtes
     val p = logitProbSql()
     s"""WITH $chain,
        |sc AS MATERIALIZED (
@@ -6672,6 +6781,11 @@ object TextAnalysis {
        |FROM g ORDER BY v""".stripMargin
   }
 
+  /** q289's token-length bin width and its last bin, which takes every
+    * longer doc. */
+  final val WoeBinWidth = 10
+  final val WoeMaxBin = 12
+
   /** Q289: weight-of-evidence / information-value binning (the
     * credit-scoring WOE/IV battery applied to a pretraining quality gate):
     * documents bucketed by token-count bins, per bin the Gopher-gate
@@ -6688,13 +6802,13 @@ object TextAnalysis {
     *
     * Scale shape: one tokenize scan + one bin aggregate; windows over the
     * bounded bin table. */
-  def qWoeIv(t: Tables, binWidth: Int = 10, maxBin: Int = 12): DataFrame = {
+  def qWoeIv(t: Tables): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val counts = gopherCounts(t.fanout(t.documents))
     val y = when(gopherKeep, 1L).otherwise(0L)
     val w = Window.partitionBy(lit(0))
     counts
-      .select(least(expr(s"n_tokens div ${binWidth}L"), lit(maxBin.toLong)).as("bin"),
+      .select(least(expr(s"n_tokens div ${WoeBinWidth}L"), lit(WoeMaxBin.toLong)).as("bin"),
         y.as("y"))
       .groupBy(col("bin"))
       .agg(count(lit(1)).as("n"), sum(col("y")).as("pos"))
@@ -6718,10 +6832,10 @@ object TextAnalysis {
 
   /** q289 oracle: the logit-feature gate defs + the same exact-rational
     * WOE/IV arithmetic over the bounded bin table. */
-  def qWoeIvSql(binWidth: Int = 10, maxBin: Int = 12): String =
+  def qWoeIvSql: String =
     s"""WITH c AS (${gopherCountsSql()}),
        |b AS (
-       |  SELECT LEAST(n_tokens // $binWidth, $maxBin) AS bin,
+       |  SELECT LEAST(n_tokens // $WoeBinWidth, $WoeMaxBin) AS bin,
        |    CASE WHEN $gopherKeepSql THEN 1 ELSE 0 END AS y
        |  FROM c),
        |cells AS (
@@ -6752,6 +6866,9 @@ object TextAnalysis {
        |  CAST(SUM(iv_term_micro) OVER () AS BIGINT) AS iv_total_micro
        |FROM iv ORDER BY bin""".stripMargin
 
+  /** Order statistics q292's Hill estimator uses. */
+  final val HillK = 20
+
   /** Q292: Hill tail-index estimator over the token-frequency
     * distribution (Hill 1975) — the MLE of the Pareto exponent from the
     * top-k order statistics: α̂ = k / Σᵢ ln(fᵢ/f₍ₖ₊₁₎). Complements q117's
@@ -6771,7 +6888,7 @@ object TextAnalysis {
     * Scale shape: one tokenize scan + vocabulary aggregate; the rank
     * window runs over the vocabulary-bounded census (the corpus-scale
     * form swaps in bucketRank). */
-  def qHillTail(t: Tables, k: Int = 20): DataFrame = {
+  def qHillTail(t: Tables): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy(lit(0))
     val freq = t.fanout(t.documents)
@@ -6780,17 +6897,17 @@ object TextAnalysis {
     freq
       .withColumn("rank",
         row_number().over(w.orderBy(col("freq").desc, col("token"))).cast("long"))
-      .filter(col("rank") <= k + 1)
+      .filter(col("rank") <= HillK + 1)
       .localCheckpoint() // bounded k+1 rows; stops the census re-running per window
-      .withColumn("fref", max(when(col("rank") === (k + 1).toLong, col("freq"))).over(w))
-      .filter(col("rank") <= k.toLong && col("fref").isNotNull)
+      .withColumn("fref", max(when(col("rank") === (HillK + 1).toLong, col("freq"))).over(w))
+      .filter(col("rank") <= HillK.toLong && col("fref").isNotNull)
       .withColumn("lr_micro",
         round(log(col("freq").cast("double") / col("fref").cast("double")) *
           lit(1000000.0), 0).cast("long"))
       .withColumn("sum_lr_micro", sum(col("lr_micro")).over(w))
       .withColumn("hill_alpha",
         when(col("sum_lr_micro") === 0L, lit(null).cast("double"))
-          .otherwise(lit(k * 1000000L).cast("double") /
+          .otherwise(lit(HillK * 1000000L).cast("double") /
             col("sum_lr_micro").cast("double")))
       .select(col("rank"), col("token"), col("freq"), col("fref"),
         col("lr_micro"), col("sum_lr_micro"), col("hill_alpha"))
@@ -6799,7 +6916,7 @@ object TextAnalysis {
 
   /** q292 oracle: the q25 tokenizer census, the same rank cut and
     * micro-grid log ratios. */
-  def qHillTailSql(k: Int = 20): String =
+  def qHillTailSql: String =
     s"""WITH freq AS MATERIALIZED (
       |  SELECT token, COUNT(*)::BIGINT AS freq FROM (
       |    SELECT unnest(${text.tokenizeSql("text")}) AS token
@@ -6809,20 +6926,20 @@ object TextAnalysis {
       |  SELECT token, freq,
       |    CAST(ROW_NUMBER() OVER (ORDER BY freq DESC, token) AS BIGINT) AS rank
       |  FROM freq),
-      |cut AS (SELECT * FROM rk WHERE rank <= ${k + 1}),
+      |cut AS (SELECT * FROM rk WHERE rank <= ${HillK + 1}),
       |wr AS (
-      |  SELECT *, CAST(MAX(CASE WHEN rank = ${k + 1} THEN freq END) OVER () AS BIGINT)
+      |  SELECT *, CAST(MAX(CASE WHEN rank = ${HillK + 1} THEN freq END) OVER () AS BIGINT)
       |    AS fref
       |  FROM cut),
       |lr AS (
       |  SELECT rank, token, freq, fref,
       |    CAST(round(ln(CAST(freq AS DOUBLE) / CAST(fref AS DOUBLE))
       |               * 1000000.0::DOUBLE) AS BIGINT) AS lr_micro
-      |  FROM wr WHERE rank <= $k AND fref IS NOT NULL)
+      |  FROM wr WHERE rank <= $HillK AND fref IS NOT NULL)
       |SELECT rank, token, freq, fref, lr_micro,
       |  CAST(SUM(lr_micro) OVER () AS BIGINT) AS sum_lr_micro,
       |  CASE WHEN SUM(lr_micro) OVER () = 0 THEN NULL
-      |       ELSE CAST(${k * 1000000L} AS DOUBLE)
+      |       ELSE CAST(${HillK * 1000000L} AS DOUBLE)
       |            / CAST(SUM(lr_micro) OVER () AS DOUBLE) END AS hill_alpha
       |FROM lr ORDER BY rank""".stripMargin
 
@@ -7065,6 +7182,9 @@ object TextAnalysis {
       |  CAST(SUM(2 * bits - 1) AS DOUBLE) / CAST(64 * COUNT(*) AS DOUBLE) AS gamma_ratio
       |FROM bits GROUP BY term ORDER BY term""".stripMargin
 
+  /** q300's Dirichlet smoothing mass. */
+  final val QlmMu = 2000.0
+
   /** Q300: query-likelihood retrieval with Dirichlet smoothing (Zhai &
     * Lafferty 2001) — the LM-based ranking that sits beside q123's BM25
     * in every retrieval stack: score(q,d) ∝ Σ_w ln(tf + μ·p(w|C)) −
@@ -7081,12 +7201,11 @@ object TextAnalysis {
     * Scale shape: the match side filters to |q| terms BEFORE any join;
     * the per-doc penalty is one projection over the cached length table;
     * top-k is a bounded take. */
-  def qQlmRetrieval(t: Tables, queryTerms: Seq[String] = Seq("spark", "window", "join"),
-      mu: Double = 2000.0, topK: Int = 20): DataFrame = {
+  def qQlmRetrieval(t: Tables): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     // distinct-terms normalization for the one-pass unpivot (ADVICE r13;
     // identity for the shipped default — see qBm25)
-    val query = queryTerms.distinct
+    val query = RetrievalQuery.distinct
     val toks = t.fanout(t.documents)
       .select(col("doc_id"), explode(text.tokenize(col("text"))).as("term"))
     // ONE tokenize pass (the q123 shape): per-doc length + per-query-term
@@ -7118,7 +7237,7 @@ object TextAnalysis {
       val cf = tf.groupBy(col("term")).agg(sum(col("tf")).as("cf"))
       val matched = tf.join(broadcast(cf), Seq("term"))
         .withColumn("mup",
-          lit(mu) * col("cf").cast("double") / lit(totTok.toDouble))
+          lit(QlmMu) * col("cf").cast("double") / lit(totTok.toDouble))
         .withColumn("corr_micro",
           round(log(col("tf").cast("double") + col("mup")) * lit(1000000.0), 0)
             .cast("long") -
@@ -7129,12 +7248,12 @@ object TextAnalysis {
       val scored = lens.join(matched, Seq("doc_id"), "left")
         .withColumn("pen_micro",
           lit(query.length.toLong) *
-            round(log(col("len").cast("double") + lit(mu)) * lit(1000000.0), 0)
+            round(log(col("len").cast("double") + lit(QlmMu)) * lit(1000000.0), 0)
               .cast("long"))
         .select(col("doc_id"),
           (coalesce(col("match_micro"), lit(0L)) - col("pen_micro")).as("score_micro"),
           coalesce(col("n_terms_hit"), lit(0L)).as("n_terms_hit"))
-        .orderBy(col("score_micro").desc, col("doc_id")).limit(topK)
+        .orderBy(col("score_micro").desc, col("doc_id")).limit(RetrievalTopK)
       scored
         .withColumn("rank", row_number().over(
           Window.orderBy(col("score_micro").desc, col("doc_id"))).cast("long"))
@@ -7147,9 +7266,8 @@ object TextAnalysis {
 
   /** q300 oracle, parameterized exactly like qQlmRetrieval (the q123
     * rule). */
-  def qQlmRetrievalSql(query: Seq[String] = Seq("spark", "window", "join"),
-      mu: Double = 2000.0, topK: Int = 20): String = {
-    val qlist = query.map(q => s"'$q'").mkString(", ")
+  def qQlmRetrievalSql: String = {
+    val qlist = RetrievalQuery.map(q => s"'$q'").mkString(", ")
     s"""WITH toks AS (
       |  SELECT doc_id,
       |    unnest(${text.tokenizeSql("text")}) AS term
@@ -7167,9 +7285,9 @@ object TextAnalysis {
       |  SELECT f.doc_id,
       |    CAST(SUM(
       |      CAST(round(ln(CAST(f.tf AS DOUBLE)
-      |          + $mu::DOUBLE * CAST(c.cf AS DOUBLE) / CAST(o.t AS DOUBLE))
+      |          + $QlmMu::DOUBLE * CAST(c.cf AS DOUBLE) / CAST(o.t AS DOUBLE))
       |        * 1000000.0::DOUBLE) AS BIGINT)
-      |      - CAST(round(ln($mu::DOUBLE * CAST(c.cf AS DOUBLE) / CAST(o.t AS DOUBLE))
+      |      - CAST(round(ln($QlmMu::DOUBLE * CAST(c.cf AS DOUBLE) / CAST(o.t AS DOUBLE))
       |        * 1000000.0::DOUBLE) AS BIGINT)) AS BIGINT) AS match_micro,
       |    COUNT(*)::BIGINT AS n_terms_hit
       |  FROM tf f JOIN cf c USING (term) CROSS JOIN tot o
@@ -7177,11 +7295,11 @@ object TextAnalysis {
       |sc AS (
       |  SELECT l.doc_id,
       |    CAST(COALESCE(m.match_micro, 0)
-      |      - ${query.length} * CAST(round(ln(CAST(l.len AS DOUBLE) + $mu::DOUBLE)
+      |      - ${RetrievalQuery.length} * CAST(round(ln(CAST(l.len AS DOUBLE) + $QlmMu::DOUBLE)
       |          * 1000000.0::DOUBLE) AS BIGINT) AS BIGINT) AS score_micro,
       |    CAST(COALESCE(m.n_terms_hit, 0) AS BIGINT) AS n_terms_hit
       |  FROM lens l LEFT JOIN mt m ON m.doc_id = l.doc_id
-      |  ORDER BY score_micro DESC, l.doc_id LIMIT $topK)
+      |  ORDER BY score_micro DESC, l.doc_id LIMIT $RetrievalTopK)
       |SELECT CAST(ROW_NUMBER() OVER (ORDER BY score_micro DESC, doc_id) AS BIGINT)
       |    AS rank,
       |  doc_id, score_micro, n_terms_hit,
@@ -7193,16 +7311,15 @@ object TextAnalysis {
     * confidence bin (the q188 BIGINT-micro binning off the cached q139
     * weights), n / positives / Σconf_micro / Σ(conf_micro − y·1e6)².
     * None on an empty corpus. */
-  private def calibrationBins(t: Tables, rounds: Int, lr: Double,
-      bins: Int): Option[DataFrame] = {
+  private def calibrationBins(t: Tables): Option[DataFrame] = {
     val feats = logitFeaturesShared(t)
-    val out = logitTrainCached(t, feats, rounds, lr).map { w =>
+    val out = logitTrainCached(t, feats).map { w =>
       val p = logitProb(w)
       feats
         .select(col("y").cast("long").as("y"),
           round(p * lit(1000000.0), 0).cast("long").as("cm"))
         .select(col("y"), col("cm"),
-          expr(s"least((cm * $bins) div 1000000, ${(bins - 1).toLong}L)").as("bin"))
+          expr(s"least((cm * $CalibrationBins) div 1000000, ${(CalibrationBins - 1).toLong}L)").as("bin"))
         .groupBy(col("bin")).agg(
           count(lit(1)).as("n"),
           sum(col("y")).as("o"),
@@ -7216,15 +7333,15 @@ object TextAnalysis {
 
   /** The shared oracle CTE for [[calibrationBins]] (chains on
     * logitChainCtes' final weights): one `cal` CTE, ≤bins rows. */
-  private def calibrationBinsCtes(rounds: Int, lr: Double, bins: Int): String = {
-    val (chain, wFinal) = logitChainCtes(rounds, lr)
+  private def calibrationBinsCtes: String = {
+    val (chain, wFinal) = logitChainCtes
     s"""$chain,
        |cmicro AS (
        |  SELECT CAST(y AS BIGINT) AS y,
        |    CAST(round(${logitProbSql()} * 1000000.0::DOUBLE) AS BIGINT) AS cm
        |  FROM f, $wFinal w),
        |cal AS MATERIALIZED (
-       |  SELECT LEAST((cm * $bins) // 1000000, ${bins - 1}) AS bin,
+       |  SELECT LEAST((cm * $CalibrationBins) // 1000000, ${CalibrationBins - 1}) AS bin,
        |    COUNT(*)::BIGINT AS n, CAST(SUM(y) AS BIGINT) AS o,
        |    CAST(SUM(cm) AS BIGINT) AS sum_cm,
        |    CAST(SUM((cm - y * 1000000) * (cm - y * 1000000)) AS BIGINT) AS bp_pico
@@ -7248,11 +7365,10 @@ object TextAnalysis {
     *
     * Scale shape: training + binning is q188's (cached weights, one
     * scan); everything after runs on ≤10 rows. */
-  def qIsotonicCalibration(t: Tables, rounds: Int = 16, lr: Double = 8.0,
-      bins: Int = 10): DataFrame = {
+  def qIsotonicCalibration(t: Tables): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.types._
-    calibrationBins(t, rounds, lr, bins) match {
+    calibrationBins(t) match {
       case None =>
         Tables.emptyFrame(t.spark, "bin" -> LongType, "n" -> LongType,
           "n_pos" -> LongType, "frac_pos" -> DoubleType, "iso" -> DoubleType)
@@ -7295,9 +7411,8 @@ object TextAnalysis {
 
   /** q299 oracle: shared cal CTE + lateral range() triples, identical
     * max-min. */
-  def qIsotonicCalibrationSql(rounds: Int = 16, lr: Double = 8.0,
-      bins: Int = 10): String =
-    s"""WITH ${calibrationBinsCtes(rounds, lr, bins)},
+  def qIsotonicCalibrationSql: String =
+    s"""WITH ${calibrationBinsCtes},
       |pre AS MATERIALIZED (
       |  SELECT bin, n, o,
       |    CAST(ROW_NUMBER() OVER (ORDER BY bin) AS BIGINT) AS r,
@@ -7343,11 +7458,10 @@ object TextAnalysis {
     *
     * Scale shape: q188's one-scan binning; windows over the ≤bins-row
     * aggregate. */
-  def qBrierDecomposition(t: Tables, rounds: Int = 16, lr: Double = 8.0,
-      bins: Int = 10): DataFrame = {
+  def qBrierDecomposition(t: Tables): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.types._
-    calibrationBins(t, rounds, lr, bins) match {
+    calibrationBins(t) match {
       case None =>
         Tables.emptyFrame(t.spark, "bin" -> LongType, "n" -> LongType,
           "n_pos" -> LongType, "gap_pico_num" -> LongType,
@@ -7390,9 +7504,8 @@ object TextAnalysis {
 
   /** q301 oracle: shared cal CTE + identical micro-rounded bin terms and
     * single-division components. */
-  def qBrierDecompositionSql(rounds: Int = 16, lr: Double = 8.0,
-      bins: Int = 10): String =
-    s"""WITH ${calibrationBinsCtes(rounds, lr, bins)},
+  def qBrierDecompositionSql: String =
+    s"""WITH ${calibrationBinsCtes},
       |g AS (
       |  SELECT bin, n, o,
       |    CAST(SUM(n) OVER () AS BIGINT) AS nn,
@@ -7488,6 +7601,10 @@ object TextAnalysis {
       |     - SUM(b) OVER () * SUM(c) OVER () > 0) AS reversed
       |FROM cl ORDER BY source""".stripMargin
 
+  /** The longest word q303 segments and its longest piece. */
+  final val SegMaxLen = 12
+  final val SegMaxPiece = 4
+
   /** Q303: unigram-LM tokenizer segmentation (the Viterbi E-step of
     * SentencePiece's trainer, Kudo 2018) — every vocabulary word is
     * segmented into the MINIMUM-COST sequence of candidate pieces
@@ -7508,20 +7625,19 @@ object TextAnalysis {
     * once); pieces, costs, and the DP all live on vocab-bounded tables
     * (broadcast joins). At 100 TB the vocab census is the only
     * corpus-scale aggregate — exactly how SentencePiece shards. */
-  def qUnigramSegmentation(t: Tables, maxLen: Int = 12,
-      maxPiece: Int = 4): DataFrame = {
+  def qUnigramSegmentation(t: Tables): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val w0 = Window.partitionBy(lit(0))
     val words = t.fanout(t.documents)
       .select(explode(text.tokenize(col("text"))).as("word"))
       .groupBy(col("word")).agg(count(lit(1)).as("wcnt"))
       .withColumn("len", length(col("word")).cast("long"))
-      .filter(col("len") <= maxLen.toLong)
+      .filter(col("len") <= SegMaxLen.toLong)
       .localCheckpoint() // vocab-bounded; feeds pieces AND every DP round
     val spans = words.select(col("word"), col("wcnt"), col("len"),
         explode(expr("sequence(1L, len)")).as("s"))
       .select(col("word"), col("wcnt"), col("len"), col("s"),
-        explode(expr(s"sequence(1L, least(${maxPiece}L, len - s + 1L))")).as("l"))
+        explode(expr(s"sequence(1L, least(${SegMaxPiece}L, len - s + 1L))")).as("l"))
     val costs = spans
       .select(expr("substring(word, cast(s as int), cast(l as int))").as("piece"),
         col("wcnt"))
@@ -7546,7 +7662,7 @@ object TextAnalysis {
       var p = 1
       while (p <= ln) {
         var l = 1
-        val lm = math.min(maxPiece, p)
+        val lm = math.min(SegMaxPiece, p)
         while (l <= lm) {
           val prev = dp(p - l)
           if (prev != Long.MaxValue) {
@@ -7570,9 +7686,9 @@ object TextAnalysis {
 
   /** q303 oracle: vocab census + piece costs, DP positions unrolled as
     * chained MATERIALIZED CTEs (sg0..sg{maxLen}). */
-  def qUnigramSegmentationSql(maxLen: Int = 12, maxPiece: Int = 4): String = {
-    val steps = (1 to maxLen).map { p =>
-      val arms = (1 to math.min(maxPiece, p)).map { l =>
+  def qUnigramSegmentationSql: String = {
+    val steps = (1 to SegMaxLen).map { p =>
+      val arms = (1 to math.min(SegMaxPiece, p)).map { l =>
         s"""SELECT d.word, d.len,
            |    d.dpval + c.cost_micro * 16 + 1 AS cand
            |  FROM sg${p - l} d JOIN pcost c
@@ -7584,20 +7700,20 @@ object TextAnalysis {
          |  $arms)
          |  GROUP BY word, len)""".stripMargin
     }.mkString(",\n")
-    val finals = (1 to maxLen).map(p =>
+    val finals = (1 to SegMaxLen).map(p =>
       s"SELECT word, dpval FROM sg$p WHERE len = $p").mkString("\n  UNION ALL ")
     s"""WITH wd AS MATERIALIZED (
        |  SELECT word, CAST(COUNT(*) AS BIGINT) AS wcnt,
        |    CAST(length(word) AS BIGINT) AS len
        |  FROM (SELECT unnest(${text.tokenizeSql("text")}) AS word
        |        FROM documents)
-       |  GROUP BY word HAVING length(word) <= $maxLen),
+       |  GROUP BY word HAVING length(word) <= $SegMaxLen),
        |sp AS (
        |  SELECT word, wcnt, len, CAST(unnest(range(1, len + 1)) AS BIGINT) AS s
        |  FROM wd),
        |sp2 AS (
        |  SELECT word, wcnt, s,
-       |    CAST(unnest(range(1, least($maxPiece, len - s + 1) + 1)) AS BIGINT) AS l
+       |    CAST(unnest(range(1, least($SegMaxPiece, len - s + 1) + 1)) AS BIGINT) AS l
        |  FROM sp),
        |pcost AS MATERIALIZED (
        |  SELECT piece,
@@ -7858,6 +7974,9 @@ object TextAnalysis {
       |FROM cg a JOIN cg b ON b.v = a.v AND a.source < b.source
       |GROUP BY a.source, b.source ORDER BY sa, sb""".stripMargin
 
+  /** The largest count q312's Good–Turing table smooths. */
+  final val GoodTuringMaxR = 10
+
   /** Q312: Good–Turing frequency smoothing (Good 1953) over the BIGRAM
     * census — the adjusted counts r* = (r+1)·n_{r+1}/n_r for the low
     * frequencies and the unseen-mass estimate P₀ = n₁/N, the smoothing
@@ -7873,7 +7992,7 @@ object TextAnalysis {
     * Scale shape: the bigram census is one transform/explode +
     * aggregate; n_r is one more aggregate over the type-bounded census;
     * the r ladder rides a bounded self-join. */
-  def qGoodTuring(t: Tables, maxR: Int = 10): DataFrame = {
+  def qGoodTuring(t: Tables): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy(lit(0))
     val freq = t.fanout(t.documents)
@@ -7892,7 +8011,7 @@ object TextAnalysis {
     // note) still yields a populated ladder
     val ladder = nr
       .withColumn("rrk", row_number().over(w.orderBy(col("r"))))
-      .filter(col("rrk") <= maxR).drop("rrk")
+      .filter(col("rrk") <= GoodTuringMaxR).drop("rrk")
     val next = nr.select((col("r") - lit(1L)).as("r"), col("n_r").as("n_next"))
     ladder.join(next, Seq("r"), "left")
       .select(col("r"), col("n_r"), coalesce(col("n_next"), lit(0L)).as("n_next"),
@@ -7907,7 +8026,7 @@ object TextAnalysis {
 
   /** q312 oracle: same census, frequencies-of-frequencies, single
     * divisions. */
-  def qGoodTuringSql(maxR: Int = 10): String =
+  def qGoodTuringSql: String =
     s"""WITH tl AS (
       |  SELECT ${text.tokenizeSql("text")} AS toks
       |  FROM documents),
@@ -7927,7 +8046,7 @@ object TextAnalysis {
       |lad AS (
       |  SELECT * FROM (
       |    SELECT *, ROW_NUMBER() OVER (ORDER BY r) AS rrk FROM nr)
-      |  WHERE rrk <= $maxR)
+      |  WHERE rrk <= $GoodTuringMaxR)
       |SELECT l.r, l.n_r,
       |  CAST(COALESCE(x.n_r, 0) AS BIGINT) AS n_next,
       |  l.n_total, CAST(COALESCE(l.n1, 0) AS BIGINT) AS n1,
@@ -8048,14 +8167,14 @@ object TextAnalysis {
     * Scale shape: one cached-feature scan per grid point over a
     * broadcastable literal grid — a single corpus pass with a 12-way
     * projection fan, then a ≤|grid| bounded table. */
-  def qTemperatureFit(t: Tables, rounds: Int = 16, lr: Double = 8.0): DataFrame = {
+  def qTemperatureFit(t: Tables): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.types._
     val spark = t.documents.sparkSession
     val grid = (2 to 12).map(_ * 0.25) // 0.50, 0.75, …, 3.00 (binary-exact)
     val feats = logitFeaturesShared(t)
     locally {
-      logitTrainCached(t, feats, rounds, lr) match {
+      logitTrainCached(t, feats) match {
         case None =>
           Tables.emptyFrame(spark, "temp" -> DoubleType, "n" -> LongType,
             "nll_micro" -> LongType, "nll_mean" -> DoubleType,
@@ -8091,8 +8210,8 @@ object TextAnalysis {
   /** q318 oracle: the logit weight chain + the same grid fan and
     * micro-NLL sums (argmin via the cost·16+gridIndex integer
     * encoding). */
-  def qTemperatureFitSql(rounds: Int = 16, lr: Double = 8.0): String = {
-    val (chain, wFinal) = logitChainCtes(rounds, lr)
+  def qTemperatureFitSql: String = {
+    val (chain, wFinal) = logitChainCtes
     val gridList = (2 to 12).map(k => s"${k * 0.25}::DOUBLE").mkString(", ")
     s"""WITH $chain,
       |zt AS (
@@ -8221,6 +8340,12 @@ object TextAnalysis {
       |FROM zs a JOIN zs b ON b.w = a.w AND a.source < b.source
       |GROUP BY a.source, b.source ORDER BY sa, sb""".stripMargin
 
+  /** q316's training-set ladder, in 1/65536ths of the md5 draw (a 4-hex
+    * h < 65536). It ends at 65536, the whole corpus, so the Spark arm's
+    * positional "last fraction evaluates every doc" and the oracle's
+    * `thr >= 65536` select the same rows. */
+  val LearningCurveFracs: Seq[Int] = Seq(6554, 16384, 32768, 65536)
+
   /** Q316: NB learning curve over md5-nested training fractions — the
     * data-scaling audit (how much accuracy does each doubling of
     * training data buy?) run with the one classifier that retrains in a
@@ -8234,8 +8359,7 @@ object TextAnalysis {
     * Exactness: q293's discipline throughout — integer counts, micro ln
     * grid terms, integer argmax; the md5 slice is exact integer hex
     * math. */
-  def qLearningCurve(t: Tables,
-      fracs: Seq[Int] = Seq(6554, 16384, 32768, 65536)): DataFrame = {
+  def qLearningCurve(t: Tables): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     def microAway(x: Double): Long = {
       val m = x * 1000000.0
@@ -8255,10 +8379,10 @@ object TextAnalysis {
     // aggregate — fb = first fraction containing h — and each fraction's
     // per-term counts are a cheap re-aggregation of the ≤|vocab|·|fracs|
     // checkpointed cell table (identical exact integer counts).
-    val fbExpr = fracs.zipWithIndex.tail.foldLeft(
-        when(col("h") < fracs.head, 0)) { case (e, (thr, i)) =>
+    val fbExpr = LearningCurveFracs.zipWithIndex.tail.foldLeft(
+        when(col("h") < LearningCurveFracs.head, 0)) { case (e, (thr, i)) =>
       e.when(col("h") < thr, i)
-    }.otherwise(fracs.length)
+    }.otherwise(LearningCurveFracs.length)
     val dtl = dt.join(lab, Seq("doc_id"))
       .withColumn("fb", fbExpr)
       .groupBy(col("term"), col("fb")).agg(
@@ -8281,7 +8405,7 @@ object TextAnalysis {
     // branch computed, so the four output rows are unchanged.
     val spark2 = t.documents.sparkSession
     import spark2.implicits._
-    val priors = fracs.zipWithIndex.map { case (thr, fi) =>
+    val priors = LearningCurveFracs.zipWithIndex.map { case (thr, fi) =>
       val inTrain = labBuckets.filter(_._1 <= fi)
       val n1 = inTrain.map(_._2).sum; val n = inTrain.map(_._3).sum
       val lp0 = microAway(math.log((n - n1 + 1).toDouble / (n + 2).toDouble))
@@ -8295,8 +8419,9 @@ object TextAnalysis {
     val ll = dtl
       // fb = fracs.length (doc in no fraction) must not fan out — and
       // sequence(n, n-1) is DESCENDING in Spark (the q309 guard rule)
-      .filter(col("fb") < fracs.length)
-      .select(col("term"), explode(expr(s"sequence(fb, ${fracs.length - 1})")).as("fi"),
+      .filter(col("fb") < LearningCurveFracs.length)
+      .select(col("term"),
+        explode(expr(s"sequence(fb, ${LearningCurveFracs.length - 1})")).as("fi"),
         col("b0"), col("b1"))
       .groupBy(col("term"), col("fi"))
       .agg(sum(col("b0")).as("c0"), sum(col("b1")).as("c1"))
@@ -8310,8 +8435,9 @@ object TextAnalysis {
         round(log((col("c1") + lit(1L)).cast("double") /
           (col("tok1") + col("v_size")).cast("double")) * lit(1000000.0), 0)
           .cast("long").as("ll1"))
-    // (doc, fraction) eval membership: fi = last fraction (resubstitution)
-    // takes every doc, earlier fractions take the held-out complement.
+    // (doc, fraction) eval membership: fi = last fraction (resubstitution,
+    // the whole draw) takes every doc, earlier fractions take the held-out
+    // complement.
     // Literal-array explode, NOT a crossJoin against the 4-row frame — a
     // map-side fan keeps PlanAuditSpec's no-NLJ gate clean and is the
     // better scale shape anyway (no broadcast relation at all)
@@ -8319,7 +8445,7 @@ object TextAnalysis {
       struct(lit(fi).as("fi"), lit(thr).as("thr")) }: _*)
     val evalAll = lab.select(col("doc_id"), col("y"), col("h"),
         explode(fracArr).as("fx"))
-      .filter(col("fx.fi") === (fracs.length - 1) || col("h") >= col("fx.thr"))
+      .filter(col("fx.fi") === (LearningCurveFracs.length - 1) || col("h") >= col("fx.thr"))
       .select(col("doc_id"), col("y"), col("fx.fi").as("fi"))
     // eval docs may hold terms unseen in training: the inner model join
     // drops them (standard NB ignore-OOV convention, mirrored in the
@@ -8344,8 +8470,8 @@ object TextAnalysis {
 
   /** q316 oracle: per-fraction NB counting chains (q293's CTE shapes
     * parameterized by the md5 slice). */
-  def qLearningCurveSql(fracs: Seq[Int] = Seq(6554, 16384, 32768, 65536)): String = {
-    val blocks = fracs.map { thr =>
+  def qLearningCurveSql: String = {
+    val blocks = LearningCurveFracs.map { thr =>
       val evalPred = if (thr >= 65536) "TRUE" else s"h >= $thr"
       s"""SELECT $thr AS thr, *
          |FROM (

@@ -8,6 +8,19 @@ import org.apache.spark.sql.functions._
 
 class DedupSpec extends SparkSpec {
 
+  /** The ungoverned LSH reference: the production band keys (64 minhash
+    * perms over 8-char shingles, 16 bands) self-joined on the key with no
+    * bucket cap, so every pair sharing a key is a candidate. */
+  private def lshCandidatePairs(df: DataFrame): DataFrame = {
+    val keysUdf = graft.functions.fasthash.minhashBandKeysUdf(64, 16, Dedup.ShingleLen)
+    val banded = df.repartition(df.sparkSession.sparkContext.defaultParallelism)
+      .select(col("doc_id").as("id"), explode(keysUdf(col("text"))).as("bk"))
+    banded.select(col("bk"), col("id").as("id_a"))
+      .join(banded.select(col("bk"), col("id").as("id_b")), Seq("bk"))
+      .filter(col("id_a") < col("id_b"))
+      .select(col("id_a"), col("id_b")).distinct()
+  }
+
   test("q141 leak-safe split: near-dup pairs never straddle splits; shares ≈ 80/10/10") {
     val t = sf0001
     val split = Dedup.qLeakSafeSplit(t).collect()
@@ -372,7 +385,7 @@ class DedupSpec extends SparkSpec {
     assert(lines.nonEmpty, "no governor line")
     assert(dropped(lines, "buckets") == 16 && dropped(lines, "docs") == 16 * 40 &&
       dropped(lines, "pairs") == 16 * (40 * 39 / 2), s"$lines")
-    val unGoverned = Dedup.lshCandidatePairs(df, "text", "doc_id")
+    val unGoverned = lshCandidatePairs(df)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(unGoverned.count { case (a, b) => a < 40 && b < 40 } == 40 * 39 / 2,
       "ungoverned generator must emit the full quadratic mega-bucket")
@@ -381,7 +394,7 @@ class DedupSpec extends SparkSpec {
     val (relaxed, quiet) = governorLines("lsh bands")(
       Dedup.governedLshCandidatePairs(df, "text", "doc_id", cap = 64).collect())
     val rPairs = relaxed.map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(rPairs == unGoverned, "under the cap the pairs must equal lshCandidatePairs")
+    assert(rPairs == unGoverned, "under the cap the pairs must equal the ungoverned self-join")
     assert(quiet.isEmpty, s"no bucket dropped, yet: $quiet")
   }
 

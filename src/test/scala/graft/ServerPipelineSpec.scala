@@ -150,6 +150,19 @@ class ServerPipelineSpec extends SparkSpec {
     assert(jobs > 0 && jobs <= 5, s"$jobs jobs")
   }
 
+  test("building searchPipeline over local frames fires no Spark job") {
+    import spark.implicits._
+    val articles = Seq(
+      (1L, "City approves new transit plan for the north side", "u1", "bbc", 1),
+      (2L, "Design awards announced for the riverfront bridge", "u2", "bbc", 2))
+      .toDF("id", "title", "url", "source", "section_id")
+    val (_, jobs) = JobCounter(spark.sparkContext)(
+      ServerFlow.searchPipeline(sections, articles, "Test Topic", html.redditSelectors,
+        Map.empty[String, String].get))
+    // the sections are ranked on the driver; a window over them cost a job
+    assert(jobs == 0, s"$jobs jobs at construction")
+  }
+
   test("the pipeline extracts each fetched, registered article exactly once") {
     ExtractCounter.calls.set(0)
     val out = runFixture(pages => pages.get, (s, a, title, registry, fetcher) =>
