@@ -307,11 +307,14 @@ object Affinity {
        |ORDER BY a.vec_id""".stripMargin
   }
 
+  /** q183's subset size, read by its Spark arm and its oracle entry. */
+  final val ApSmallN = 6
+
   /** Q183: the small-group AP gate — same kernel and oracle generator as
-    * q179 at n=6 (below the default subset), so the bounded-group regime
-    * the grouped operators actually see (story/feed buckets of a handful
-    * of members) is hash-oracled, not just spec-covered. */
-  def qAffinityPropSmall(t: Tables): DataFrame = qAffinityProp(t, n = 6)
+    * q179 at n=`ApSmallN` (below the default subset), so the bounded-group
+    * regime the grouped operators actually see (story/feed buckets of a
+    * handful of members) is hash-oracled, not just spec-covered. */
+  def qAffinityPropSmall(t: Tables): DataFrame = qAffinityProp(t, n = ApSmallN)
 
   // ------------------------------------------------------------------ M4
 
@@ -402,10 +405,17 @@ object Affinity {
       .orderBy(col("vec_id"))
   }
 
+  /** q184's subset size and cluster count, read by its Spark arm and its
+    * oracle entry. */
+  final val AggloSmallN = 8
+  final val AggloSmallK = 3
+
   /** Q184: the small-group agglomerative gate — q180's kernel and oracle
-    * generator at n=8, k=3 (5 merge rounds). Together with q183 this
-    * hash-gates the below-default-subset territory. */
-  def qAgglomerativeSmall(t: Tables): DataFrame = qAgglomerative(t, n = 8, k = 3)
+    * generator at n=`AggloSmallN`, k=`AggloSmallK` (5 merge rounds).
+    * Together with q183 this hash-gates the below-default-subset
+    * territory. */
+  def qAgglomerativeSmall(t: Tables): DataFrame =
+    qAgglomerative(t, n = AggloSmallN, k = AggloSmallK)
 
   /** q180 oracle: n−k merge rounds unrolled; each round joins the base
     * pair-distance matrix to the live labels, takes the min

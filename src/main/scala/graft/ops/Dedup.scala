@@ -244,32 +244,36 @@ object Dedup {
       .orderBy(col("id_a"), col("id_b"))
   }
 
+  /** The q128/q243 band table's constants, read by the Spark arm
+    * (`lshGateBands`) and the oracle (`lshGateCtes`): tokens per shingle,
+    * the Mersenne prime 2^31 − 1, and the Carter–Wegman multipliers and
+    * offsets (any a_i ∈ [1, P) works; these are arbitrary). Declared above
+    * `qLshCandidatesGateSql`, an object `val` that reads them. */
+  final val GateShingleTokens = 8
+  final val GateP = 2147483647L
+  val GateA: Seq[Long] = Seq(1103515245L, 1299709L, 492876847L, 715225739L,
+    179424673L, 982451653L, 32452843L, 613651349L)
+  val GateB: Seq[Long] = Seq(12345L, 543210L, 998877L, 192837L,
+    564738L, 102938L, 777777L, 246813L)
+
   /** The q128 engine-neutral band table (doc_id, band, bkey) — md5-based
     * minhash signatures banded 4 × 2 rows; shared by the q128 candidate
     * gate and the q243 band-population audit. */
   private def lshGateBands(t: Tables): DataFrame = {
-    val shingleLen = 8
     import org.apache.spark.sql.expressions.Window
-    val P = 2147483647L // 2^31 − 1
-    // fixed odd multipliers/offsets (any a_i ∈ [1, P) works; these are
-    // arbitrary constants shared with the SQL below)
-    val A = Seq(1103515245L, 1299709L, 492876847L, 715225739L,
-      179424673L, 982451653L, 32452843L, 613651349L)
-    val B = Seq(12345L, 543210L, 998877L, 192837L,
-      564738L, 102938L, 777777L, 246813L)
     val w = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
-    val parts = col("term") +: (1 until shingleLen)
+    val parts = col("term") +: (1 until GateShingleTokens)
       .map(j => lead(col("term"), j).over(w))
     val shingles = t.fanout(t.documents)
       .select(col("doc_id"), posexplode(text.tokenize(col("text"))).as(Seq("pos", "term")))
       .withColumn("shingle", concat_ws(" ", parts: _*))
-      .withColumn("tail", lead(col("term"), shingleLen - 1).over(w))
+      .withColumn("tail", lead(col("term"), GateShingleTokens - 1).over(w))
       .filter(col("tail").isNotNull)
       .select(col("doc_id"), col("shingle")).distinct()
       .withColumn("u",
-        conv(substring(md5(col("shingle")), 1, 15), 16, 10).cast("long") % P)
-    val sigCols = A.indices.map(i =>
-      min((col("u") * A(i) + B(i)) % P).as(s"s$i"))
+        conv(substring(md5(col("shingle")), 1, 15), 16, 10).cast("long") % GateP)
+    val sigCols = GateA.indices.map(i =>
+      min((col("u") * GateA(i) + GateB(i)) % GateP).as(s"s$i"))
     val sigs = shingles.groupBy(col("doc_id")).agg(sigCols.head, sigCols.tail: _*)
     // ONE projection stacks the 4 band keys (a 4-way union of selects
     // would recompute the whole signature pipeline per branch — the
@@ -338,13 +342,12 @@ object Dedup {
   /** q128's CTE chain (toks → shingles → hashed md5 minhash → sigs →
     * bands), shared by the q128 candidate gate and the q243 band audit. */
   private def lshGateCtes: String = {
-    val P = "2147483647"
-    val A = Seq(1103515245L, 1299709L, 492876847L, 715225739L,
-      179424673L, 982451653L, 32452843L, 613651349L)
-    val B = Seq(12345L, 543210L, 998877L, 192837L,
-      564738L, 102938L, 777777L, 246813L)
-    val sigExprs = A.indices.map(i =>
-      s"MIN((u * ${A(i)} + ${B(i)}) % $P) AS s$i").mkString(",\n      |    ")
+    val sigExprs = GateA.indices.map(i =>
+      s"MIN((u * ${GateA(i)} + ${GateB(i)}) % $GateP) AS s$i").mkString(",\n      |    ")
+    // term || ' ' || LEAD(term, 1) OVER w || … two LEADs per line
+    val shingle = (1 until GateShingleTokens).map(j => s"LEAD(term, $j) OVER w")
+      .grouped(2).map(_.mkString(" || ' ' || ")).toSeq
+      .mkString("term || ' ' || ", "\n       |        || ' ' || ", " AS shingle")
     val bandSelects = (0 until 4).map(b =>
       s"""SELECT doc_id, $b AS band,
          |    md5(CAST(s${2 * b} AS VARCHAR) || '|' || CAST(s${2 * b + 1} AS VARCHAR)) AS bkey
@@ -357,15 +360,12 @@ object Dedup {
        |shingles AS (
        |  SELECT DISTINCT doc_id, shingle FROM (
        |    SELECT doc_id,
-       |      term || ' ' || LEAD(term, 1) OVER w || ' ' || LEAD(term, 2) OVER w
-       |        || ' ' || LEAD(term, 3) OVER w || ' ' || LEAD(term, 4) OVER w
-       |        || ' ' || LEAD(term, 5) OVER w || ' ' || LEAD(term, 6) OVER w
-       |        || ' ' || LEAD(term, 7) OVER w AS shingle
+       |      $shingle
        |    FROM toks WINDOW w AS (PARTITION BY doc_id ORDER BY pos))
        |  WHERE shingle IS NOT NULL),
        |hashed AS (
        |  SELECT doc_id,
-       |    CAST('0x' || substr(md5(shingle), 1, 15) AS BIGINT) % $P AS u
+       |    CAST('0x' || substr(md5(shingle), 1, 15) AS BIGINT) % $GateP AS u
        |  FROM shingles),
        |sigs AS (
        |  SELECT doc_id,
@@ -569,26 +569,27 @@ object Dedup {
     * r9). Production pipelines therefore CAP bucket size, skipping (or
     * sub-sharding) buckets above the cap and accepting the documented
     * recall loss. This query is that decision's evidence, per band:
-    * bucket counts, the size of the skew tail above `cap`, and the exact
-    * candidate-pair population with and without the cap — all integers
-    * over the q131 SimHash bands, so the whole audit is hash-gated.
+    * bucket counts, the size of the skew tail above `GovernorCap`, and
+    * the exact candidate-pair population with and without the cap — all
+    * integers over the q131 SimHash bands, so the whole audit is
+    * hash-gated.
     *
     * Scale shape: O(n·4) band rows → one (chunk, cv) count aggregate →
     * one per-chunk aggregate. No join at all — the audit costs less than
     * the stage it governs by construction; the bands are 4 longs per doc
     * on the exchange. */
-  def qBucketGovernor(t: Tables, cap: Int = GovernorCap): DataFrame = {
+  def qBucketGovernor(t: Tables): DataFrame = {
     val buckets = simhashBands(t)
       .groupBy(col("chunk"), col("cv"))
       .agg(count(lit(1)).as("c"))
     buckets.groupBy(col("chunk")).agg(
         count(lit(1)).as("n_buckets"),
         sum(when(col("c") >= 2, 1L).otherwise(0L)).as("n_pair_buckets"),
-        sum(when(col("c") > cap, 1L).otherwise(0L)).as("n_governed"),
-        sum(when(col("c") > cap, col("c")).otherwise(0L)).as("governed_docs"),
+        sum(when(col("c") > GovernorCap, 1L).otherwise(0L)).as("n_governed"),
+        sum(when(col("c") > GovernorCap, col("c")).otherwise(0L)).as("governed_docs"),
         max(col("c")).as("max_bucket"),
         sum(expr("c * (c - 1) div 2")).as("pairs_raw"),
-        sum(when(col("c") <= cap, expr("c * (c - 1) div 2"))
+        sum(when(col("c") <= GovernorCap, expr("c * (c - 1) div 2"))
           .otherwise(0L)).as("pairs_capped"))
       .select(col("chunk").cast("long").as("chunk"), col("n_buckets"),
         col("n_pair_buckets"), col("n_governed"), col("governed_docs"),
@@ -668,26 +669,26 @@ object Dedup {
     * and a degenerate common-prefix block (every doc starting "breaking
     * news…") is a quadratic single join task with no cap. This audit
     * prices that tail for the shared blocking key: block counts, the
-    * governed tail above `cap`, and the exact pair population with and
-    * without the cap — all integers, hash-gated. On the shipped data the
+    * governed tail above `GovernorCap`, and the exact pair population
+    * with and without the cap — all integers, hash-gated. On the shipped data the
     * tail is real but small (sf0.1: one 32-doc block holds 496 of 12,075
     * raw pairs), which is exactly the evidence a cap decision needs.
     *
     * Scale shape: one map-side-combinable count aggregate over the
     * corpus plus a 1-row reduce — strictly cheaper than any of the four
     * joins it governs. */
-  def qPrefixGovernor(t: Tables, cap: Int = GovernorCap): DataFrame = {
+  def qPrefixGovernor(t: Tables): DataFrame = {
     val blocks = t.documents
       .groupBy(substring(col("text"), 1, 10).as("blk"))
       .agg(count(lit(1)).as("c"))
     blocks.agg(
       count(lit(1)).as("n_blocks"),
       sum(when(col("c") >= 2, 1L).otherwise(0L)).as("n_pair_blocks"),
-      sum(when(col("c") > cap, 1L).otherwise(0L)).as("n_governed"),
-      sum(when(col("c") > cap, col("c")).otherwise(0L)).as("governed_docs"),
+      sum(when(col("c") > GovernorCap, 1L).otherwise(0L)).as("n_governed"),
+      sum(when(col("c") > GovernorCap, col("c")).otherwise(0L)).as("governed_docs"),
       max(col("c")).as("max_block"),
       sum(expr("c * (c - 1) div 2")).as("pairs_raw"),
-      sum(when(col("c") <= cap, expr("c * (c - 1) div 2"))
+      sum(when(col("c") <= GovernorCap, expr("c * (c - 1) div 2"))
         .otherwise(0L)).as("pairs_capped"))
   }
 

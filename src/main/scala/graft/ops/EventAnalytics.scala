@@ -309,9 +309,9 @@ object EventAnalytics {
     * top-k probe side is bounded (k keys × d lookups against the ≤ d·w
     * cell table). The exact counts ride along as ground truth, making
     * the CMS guarantee est ≥ exact a driver-checked column. */
-  def qCmsFreq(t: Tables, d: Int = CmsD, w: Int = CmsW, topK: Int = CmsTopK): DataFrame = {
+  def qCmsFreq(t: Tables, w: Int = CmsW, topK: Int = CmsTopK): DataFrame = {
     val ev = t.events.select(col("user_id"))
-    val js = array((0 until d).map(lit): _*)
+    val js = array((0 until CmsD).map(lit): _*)
     def bucket(j: org.apache.spark.sql.Column, key: org.apache.spark.sql.Column) =
       conv(substring(md5(concat(j.cast("string"), lit(":"), key.cast("string"))), 1, 8),
         16, 10).cast("long") % w

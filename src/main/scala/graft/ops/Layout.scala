@@ -221,8 +221,8 @@ object Layout {
   /** Q155: compaction planner — the small-files fix every 100 TB lake
     * runs nightly (Delta OPTIMIZE / Iceberg rewrite_data_files): pack
     * documents in doc_id (write) order into target-size output files of
-    * `target` chars, and emit the per-file manifest (doc range, size).
-    * File assignment is floor(exclusive-prefix-chars / target) — the
+    * `CompactionTarget` chars, and emit the per-file manifest (doc range, size).
+    * File assignment is floor(exclusive-prefix-chars / CompactionTarget) — the
     * deterministic bin layout a compactor materializes.
     *
     * Scale shape: the global prefix sum uses the q144 two-phase
@@ -234,7 +234,7 @@ object Layout {
     * doc_id order, so the prefix — and every file boundary — is exact.
     * All-BIGINT arithmetic; the oracle replays it with a naive global
     * window (plans differ, results hash-equal — the q144 contract). */
-  def q155CompactionPlan(t: Tables, target: Long = CompactionTarget): DataFrame = {
+  def q155CompactionPlan(t: Tables): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.types._
     val spark = t.spark
@@ -257,7 +257,7 @@ object Layout {
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     b.join(offDf, Seq("bucket"))
       .withColumn("cum_before", col("offset") + sum(col("nc")).over(w) - col("nc"))
-      .withColumn("file_id", expr(s"cum_before div ${target}L"))
+      .withColumn("file_id", expr(s"cum_before div ${CompactionTarget}L"))
       .groupBy(col("file_id"))
       .agg(count(lit(1)).as("n_docs"), sum(col("nc")).as("sum_chars"),
         min(col("doc_id")).as("first_doc"), max(col("doc_id")).as("last_doc"))

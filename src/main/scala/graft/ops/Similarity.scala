@@ -55,8 +55,12 @@ object Similarity {
     * standard probes against the exact top-`AnnK` (`exactTopKCached`). */
   final val AnnK = 10
 
-  /** Exact-cosine top-k baseline for the STANDARD probes (vec_id < 10)
-    * over the full embeddings corpus, a `graft.Shared` entry: q38 plus
+  /** The standard probe set of the ANN family, read by every Spark arm and
+    * oracle: the vectors with vec_id < `AnnProbes`. */
+  final val AnnProbes = 10
+
+  /** Exact-cosine top-k baseline for the STANDARD probes
+    * (vec_id < `AnnProbes`) over the full embeddings corpus, a `graft.Shared` entry: q38 plus
     * every ANN rung's in-plan recall join (q40/q56/q81/q137/q323) and the q165/q166
     * binary-rung pair consume the IDENTICAL brute-force pass. The pass is
     * deterministic, so a hit is bit-identical and every downstream oracle
@@ -64,7 +68,7 @@ object Similarity {
     * another's baseline. */
   private[graft] def exactTopKCached(t: Tables): DataFrame =
     Shared(t, "exact_topk")(
-      bruteForceTopK(t.embeddings, t.embeddings.filter(col("vec_id") < 10), AnnK)
+      bruteForceTopK(t.embeddings, t.embeddings.filter(col("vec_id") < AnnProbes), AnnK)
         .localCheckpoint())
 
   /** The cosine threshold of the shared pair graph (q39, q64, q313). */
@@ -81,8 +85,8 @@ object Similarity {
     Shared(t, "cosine_pairs")(
       cosinePairs(t.embeddings, PairThreshold, exactOnly = true).localCheckpoint())
 
-  /** Oracle-checked ANN baseline: top-10 cosine neighbors for probes
-    * vec_id < 10. */
+  /** Oracle-checked ANN baseline: top-`AnnK` cosine neighbors for probes
+    * vec_id < `AnnProbes`. */
   def qKnnBruteForce(t: Tables): DataFrame =
     exactTopKCached(t)
       .orderBy(col("probe_id"), col("rank"))
@@ -91,7 +95,7 @@ object Similarity {
     s"""WITH sims AS (
       |  SELECT p.vec_id AS probe_id, n.vec_id AS neighbor_id,
       |    list_cosine_similarity(CAST(p.embedding AS DOUBLE[]), CAST(n.embedding AS DOUBLE[])) AS s
-      |  FROM (SELECT * FROM embeddings WHERE vec_id < 10) p
+      |  FROM (SELECT * FROM embeddings WHERE vec_id < $AnnProbes) p
       |  JOIN embeddings n ON p.vec_id != n.vec_id),
       |ranked AS (
       |  SELECT probe_id, neighbor_id, s,
@@ -434,7 +438,7 @@ object Similarity {
     * (rows-only; recall floor asserted in SimilaritySpec AND emitted as a
     * recall_at_k column for the driver). */
   def qKnnLsh(t: Tables): DataFrame = {
-    val probes = t.embeddings.filter(col("vec_id") < 10)
+    val probes = t.embeddings.filter(col("vec_id") < AnnProbes)
     withRecallAtK(lshTopK(t.embeddings, probes, AnnK), exactTopKCached(t), AnnK)
       .orderBy(col("probe_id"), col("rank"))
   }
@@ -498,7 +502,7 @@ object Similarity {
   /** ANN via IVF for the same probes as the baseline (rows-only; recall
     * floor asserted in SimilaritySpec AND emitted as recall_at_k). */
   def qKnnIvf(t: Tables): DataFrame = {
-    val probes = t.embeddings.filter(col("vec_id") < 10)
+    val probes = t.embeddings.filter(col("vec_id") < AnnProbes)
     withRecallAtK(ivfTopK(t.embeddings, probes, AnnK, index = Some(t)),
       exactTopKCached(t), AnnK)
       .orderBy(col("probe_id"), col("rank"))
@@ -613,7 +617,7 @@ object Similarity {
   /** ANN via SQ8 for the baseline probes (rows-only; recall floor in
     * SimilaritySpec, recall_at_k emitted for the driver). */
   def qKnnSq8(t: Tables): DataFrame = {
-    val probes = t.embeddings.filter(col("vec_id") < 10)
+    val probes = t.embeddings.filter(col("vec_id") < AnnProbes)
     withRecallAtK(sq8TopK(t.embeddings, probes, AnnK), exactTopKCached(t), AnnK)
       .orderBy(col("probe_id"), col("rank"))
   }
@@ -754,7 +758,7 @@ object Similarity {
   /** ANN via PQ for the baseline probes (rows-only; recall floor in
     * SimilaritySpec, recall_at_k emitted for the driver). */
   def qKnnPq(t: Tables): DataFrame = {
-    val probes = t.embeddings.filter(col("vec_id") < 10)
+    val probes = t.embeddings.filter(col("vec_id") < AnnProbes)
     // 8x rerank budget: 8-byte codes on isotropic noise make the ADC
     // ordering the lossiest of the ladder; the rerank set is still
     // k-proportional and the scan still reads only codes
@@ -777,16 +781,17 @@ object Similarity {
     * HASH-GATED since r9 (the q23/q109/q182 envelope discipline, VERDICT
     * r8 item 6): the seed-dependent mean recall — which no SQL replay can
     * reproduce — folds into the `pass_floor` boolean the oracle asserts
-    * TRUE; method, k, the probe count (= |vec_id < 10|, exact SQL) and
+    * TRUE; method, k, the probe count (= |vec_id < AnnProbes|, exact SQL) and
     * each floor literal replay exactly. The recall VALUES remain
     * driver-visible per method in the rows-only ANN ladder queries
     * (q40/q56/q81/q137) — this row set is the gate; AnnAuditSpec still
     * pins the floors in-process. */
   def qAnnRecallAudit(t: Tables): DataFrame = {
     // pass_floor is vacuously TRUE when the probe set is empty: sf dirs
-    // with shifted id spaces (the sf1.0 ScaleUp ids) have no vec_id < 10
-    // rows, mean_recall is then NULL and a bare `NULL >= floor` would
-    // diverge from the oracle's literal-TRUE contract (r13 sf1.0 sweep)
+    // with shifted id spaces (the sf1.0 ScaleUp ids) have no
+    // vec_id < AnnProbes rows, mean_recall is then NULL and a bare
+    // `NULL >= floor` would diverge from the oracle's literal-TRUE
+    // contract (r13 sf1.0 sweep)
     def audit(name: String, ann: DataFrame, floor: Double): DataFrame =
       ann.select(col("probe_id"), col("recall_at_k")).distinct()
         .agg(count(lit(1)).as("n_probes"),
@@ -820,7 +825,7 @@ object Similarity {
     * pass_floor asserted TRUE per method and on the "all" AND-row. */
   def qAnnRecallAuditSql: String =
     s"""WITH np AS (SELECT CAST(COUNT(*) AS BIGINT) AS n
-       |            FROM embeddings WHERE vec_id < 10)
+       |            FROM embeddings WHERE vec_id < $AnnProbes)
        |SELECT 'all' AS method, $AnnK AS k, CAST(4 * n AS BIGINT) AS n_probes,
        |       CAST(NULL AS DOUBLE) AS floor, TRUE AS pass_floor FROM np
        |UNION ALL SELECT 'ivf', $AnnK, n, CAST(0.375 AS DOUBLE), TRUE FROM np
@@ -878,7 +883,7 @@ object Similarity {
       // dim-explode + median join + pack ran twice (and q165 composes this
       // whole pipeline again). n rows × 3 longs.
       .localCheckpoint()
-    val p = codes.filter(col("vec_id") < 10)
+    val p = codes.filter(col("vec_id") < AnnProbes)
       .select(col("vec_id").as("probe_id"), col("lo").as("plo"), col("hi").as("phi"))
     val w = Window.partitionBy(col("probe_id"))
       .orderBy(col("hamming").asc, col("neighbor_id"))
@@ -890,7 +895,7 @@ object Similarity {
       .withColumn("hrank", row_number().over(w))
       .filter(col("hrank") <= KnnRerank)
       .select(col("probe_id"), col("neighbor_id"), col("hamming"))
-    val pemb = t.embeddings.filter(col("vec_id") < 10)
+    val pemb = t.embeddings.filter(col("vec_id") < AnnProbes)
       .select(col("vec_id").as("probe_id"), col("embedding").as("emb_p"))
     val wExact = Window.partitionBy(col("probe_id"))
       .orderBy(col("sim").desc, col("neighbor_id"))
@@ -934,7 +939,7 @@ object Similarity {
        |  SELECT p.vec_id AS probe_id, c.vec_id AS neighbor_id,
        |    CAST(bit_count(xor(c.lo, p.lo)) + bit_count(xor(c.hi, p.hi))
        |      AS BIGINT) AS hamming
-       |  FROM (SELECT * FROM codes WHERE vec_id < 10) p
+       |  FROM (SELECT * FROM codes WHERE vec_id < $AnnProbes) p
        |  JOIN codes c ON c.vec_id <> p.vec_id),
        |cand AS (
        |  SELECT probe_id, neighbor_id, hamming FROM (
@@ -958,7 +963,7 @@ object Similarity {
        |    SELECT p.vec_id AS probe_id, n.vec_id AS neighbor_id,
        |      ROW_NUMBER() OVER (PARTITION BY p.vec_id
        |        ORDER BY list_cosine_similarity(p.e, n.e) DESC, n.vec_id) AS xr
-       |    FROM (SELECT * FROM emb WHERE vec_id < 10) p
+       |    FROM (SELECT * FROM emb WHERE vec_id < $AnnProbes) p
        |    JOIN emb n ON p.vec_id != n.vec_id)
        |  WHERE xr <= $AnnK)""".stripMargin
 
@@ -1822,9 +1827,11 @@ object Similarity {
     g.select(col("v"), col("rank"), col("w"), col("s"))
   }
 
-  /** q322's graph degree and NN-descent rounds. */
+  /** q322's graph degree, NN-descent rounds and recall probes (the
+    * smallest vec_ids). */
   final val NnDescentK = 5
   final val NnDescentRounds = 3
+  final val NnDescentProbes = 10
 
   /** Q322: the HASH-GATED fixed-round NN-descent face. Seeds are the
     * within-bucket all-pairs of TWO CROSS-CUTTING bucketings — vec_id % B
@@ -1837,9 +1844,9 @@ object Similarity {
     * measured), so the second, hash-derived axis is what makes the seed
     * graph an expander the local joins can mix through. n comes from one
     * count() (the exact-ladder rung-fetch precedent). Emits the FULL
-    * final graph plus an oracled recall_at_k column for the 10 smallest
-    * ids (non-vacuous at every SF; the q121-style recall surface, here
-    * itself under the hash gate). */
+    * final graph plus an oracled recall_at_k column for the
+    * `NnDescentProbes` smallest ids (non-vacuous at every SF; the
+    * q121-style recall surface, here itself under the hash gate). */
   def qNnDescentGate(t: Tables): DataFrame = {
     val emb = t.embeddings
     val n = emb.count()
@@ -1858,7 +1865,8 @@ object Similarity {
         .join(bb.select(col("w"), col("bkb")), Seq("bkb"))
         .filter(col("v") =!= col("w")).select(col("v"), col("w")))
     val graph = nnDescentGraph(emb, seeds, NnDescentK, NnDescentRounds)
-    val probeIds = emb.select(col("vec_id")).orderBy(col("vec_id")).limit(10)
+    val probeIds = emb.select(col("vec_id")).orderBy(col("vec_id"))
+      .limit(NnDescentProbes)
     val probes = emb.join(probeIds, Seq("vec_id"))
     val exact = bruteForceTopK(emb, probes, NnDescentK)
       .select(col("probe_id").as("v"), col("neighbor_id").as("w"), lit(1).as("hit"))
@@ -1924,7 +1932,7 @@ object Similarity {
        |gf AS MATERIALIZED (
        |  SELECT v, w, s, ROW_NUMBER() OVER (PARTITION BY v ORDER BY s DESC, w) AS rank
        |  FROM g$NnDescentRounds),
-       |probes AS (SELECT vec_id FROM embeddings ORDER BY vec_id LIMIT 10),
+       |probes AS (SELECT vec_id FROM embeddings ORDER BY vec_id LIMIT $NnDescentProbes),
        |ex0 AS MATERIALIZED (
        |  SELECT p.vec_id AS v, e.vec_id AS w,
        |    list_cosine_similarity(CAST(p.embedding AS DOUBLE[]), CAST(e.embedding AS DOUBLE[])) AS s
@@ -1958,7 +1966,7 @@ object Similarity {
       .join(bkt.select(col("vec_id").as("w"), col("tb")), "tb")
       .filter(col("v") =!= col("w")).select(col("v"), col("w"))
     val graph = nnDescentGraph(emb, seeds, AnnK, 2)
-    val ann = graph.filter(col("v") < 10)
+    val ann = graph.filter(col("v") < AnnProbes)
       .select(col("v").as("probe_id"), col("rank"), col("w").as("neighbor_id"),
         round(col("s"), 6).as("sim"))
     withRecallAtK(ann, exactTopKCached(t), AnnK)

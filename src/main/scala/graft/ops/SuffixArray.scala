@@ -199,9 +199,9 @@ object SuffixArray {
     * n_windows + W − 1 tokens. Cross-checked against the q143 detector in
     * SuffixArraySpec: every span's every W-gram is one q143 would count
     * at width W. */
-  def qDupSpansSa(t: Tables, w: Int = DupSpanW): DataFrame = {
-    val level = (math.log(w) / math.log(2)).round.toInt
-    require((1 << level) == w, "w must be a power of two")
+  def qDupSpansSa(t: Tables): DataFrame = {
+    val level = (math.log(DupSpanW) / math.log(2)).round.toInt
+    require((1 << level) == DupSpanW, "DupSpanW must be a power of two")
     val ranked = rankTables(t, level)
     val rk = col(s"rank_$level")
     // class sizes via partial-agg groupBy + equi-join back (not a count
@@ -209,7 +209,7 @@ object SuffixArray {
     val clsCounts = ranked.groupBy(rk).agg(count(lit(1)).as("cls"))
       .filter(col("cls") >= 2)
     val dup = ranked.join(clsCounts, Seq(s"rank_$level"))
-      .filter(col("off") + w <= col("doc_len"))
+      .filter(col("off") + DupSpanW <= col("doc_len"))
     val wd = Window.partitionBy(col("doc_id")).orderBy(col("off"))
     dup
       .withColumn("isl", col("off") - row_number().over(wd))
@@ -218,7 +218,7 @@ object SuffixArray {
         count(lit(1)).as("n_windows"),
         min(col("cls")).as("min_class"))
       .select(col("doc_id"), col("start_off"), col("n_windows"),
-        (col("n_windows") + (w - 1)).as("span_len"), col("min_class"))
+        (col("n_windows") + (DupSpanW - 1)).as("span_len"), col("min_class"))
       .orderBy(col("doc_id"), col("start_off"))
   }
 

@@ -1771,8 +1771,9 @@ object TextAnalysis {
     * schedule p_i ∝ w_i^(1/τ) used to flatten a skewed source mix
     * (multilingual/multidomain training; cf. the T=2…5 schedules in
     * XLM-R, Conneau et al. 2020), materialized as an exact integer
-    * allocation of `budget` samples by largest-remainder apportionment
-    * (Hamilton's method — deterministic, total = budget by construction).
+    * allocation of `AllocBudget` samples by largest-remainder
+    * apportionment (Hamilton's method — deterministic, total = budget by
+    * construction).
     *
     * Exactness: τ=2 means w^(1/τ) = √w, and IEEE sqrt is correctly
     * rounded — but the SHARES would still divide by an aggregation-
@@ -1784,7 +1785,7 @@ object TextAnalysis {
     *
     * Scale shape: one per-source aggregate; apportionment runs on the
     * bounded |sources| table (windows over ≤|sources| rows). */
-  def qTemperatureAlloc(t: Tables, budget: Long = AllocBudget): DataFrame = {
+  def qTemperatureAlloc(t: Tables): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val mass = t.fanout(t.documents)
       .groupBy(col("source"))
@@ -1795,9 +1796,9 @@ object TextAnalysis {
       .withColumn("s_tot", sum(col("sm")).over(all))
       // all-empty corpus => s_tot = 0: nullif the integer denominators
       // (ANSI div-by-zero; the q170 degenerate-denominator rule)
-      .withColumn("base", expr(s"(${budget}L * sm) div nullif(s_tot, 0L)"))
-      .withColumn("rem", expr(s"(${budget}L * sm) % nullif(s_tot, 0L)"))
-      .withColumn("leftover", lit(budget) - sum(col("base")).over(all))
+      .withColumn("base", expr(s"(${AllocBudget}L * sm) div nullif(s_tot, 0L)"))
+      .withColumn("rem", expr(s"(${AllocBudget}L * sm) % nullif(s_tot, 0L)"))
+      .withColumn("leftover", lit(AllocBudget) - sum(col("base")).over(all))
       .withColumn("rk", row_number().over(
         Window.orderBy(col("rem").desc, col("source"))).cast("long"))
     ranked
@@ -1844,7 +1845,8 @@ object TextAnalysis {
 
   /** Q209: weighted reservoir sampling (A-Res, Efraimidis & Spirakis
     * 2006) — weighted sampling WITHOUT replacement as one distributed
-    * top-k: key_i = ln(u_i)/w_i with u_i uniform, keep the k largest.
+    * top-k: key_i = ln(u_i)/w_i with u_i uniform, keep the `ReservoirK`
+    * largest.
     * The training-data use is proportional-to-length subsampling that a
     * resample pass (q122) or mixture builder draws repeatedly; unlike
     * q100's with-replacement sampler this one never duplicates a doc.
@@ -1859,7 +1861,7 @@ object TextAnalysis {
     * Scale shape: per-row hash + one TakeOrderedAndProject — per-
     * partition heaps of k rows, no global sort, no shuffle beyond the
     * final k-row gather. */
-  def qWeightedReservoir(t: Tables, k: Int = ReservoirK): DataFrame = {
+  def qWeightedReservoir(t: Tables): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val keyed = t.fanout(t.documents).select(
       col("doc_id"),
@@ -1870,7 +1872,7 @@ object TextAnalysis {
         log(col("hv").cast("double") / lit(4503599627370496.0)) /
           col("w").cast("double") * lit(1.0e12), 0).cast("long"))
     val picked = keyed
-      .orderBy(col("key_pico").desc, col("doc_id")).limit(k)
+      .orderBy(col("key_pico").desc, col("doc_id")).limit(ReservoirK)
     picked.withColumn("rank", row_number().over(
         Window.orderBy(col("key_pico").desc, col("doc_id"))).cast("long"))
       .select(col("rank"), col("doc_id"), col("w"), col("key_pico"))
@@ -3000,8 +3002,8 @@ object TextAnalysis {
   /** Q123: BM25 retrieval scoring (Robertson-Walker-Jones Okapi BM25, the
     * Lucene-practical variant: idf = ln(1 + (N−df+0.5)/(df+0.5))) — the
     * retrieval half of a RAG pipeline next to the vector ANN block. Score
-    * for a fixed query term set over the documents table; top-`topK` docs
-    * by rounded score with a doc_id tie-break.
+    * for a fixed query term set over the documents table; top-
+    * `RetrievalTopK` docs by rounded score with a doc_id tie-break.
     *
     * Scale shape: the tf table is filtered to the query's terms at the
     * scan (an inverted-index probe — candidate rows ≈ Σ df(term), never
@@ -3012,7 +3014,7 @@ object TextAnalysis {
     * both engines; the ≤|query|-term per-doc sum is aggregation-ordered →
     * round(6). b = 0.75 is exactly binary; k1 literals are written in
     * both engines' parsers identically. */
-  def qBm25(t: Tables, topK: Int = RetrievalTopK): DataFrame = {
+  def qBm25(t: Tables): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     // the one-pass unpivot assumes distinct query terms (a duplicate
     // would double-count df/cf where the old groupBy shape deduped) —
@@ -3061,7 +3063,7 @@ object TextAnalysis {
       .groupBy(col("doc_id"))
       .agg(round(sum(col("term_score")), 6).as("score"),
         count(lit(1)).as("n_terms_hit"))
-      .orderBy(col("score").desc, col("doc_id")).limit(topK)
+      .orderBy(col("score").desc, col("doc_id")).limit(RetrievalTopK)
     scored
       .withColumn("rank", row_number().over(
         Window.orderBy(col("score").desc, col("doc_id"))).cast("long"))
@@ -3113,9 +3115,10 @@ object TextAnalysis {
       |  GROUP BY tf.doc_id)""".stripMargin
   }
 
-  /** q138: candidates per arm, the dense arm's probe, the RRF k and the
-    * fused rows kept. */
-  final val RrfN = 20
+  /** q138: candidates per arm (the sparse arm is q123's list, so both arms
+    * keep `RetrievalTopK`), the dense arm's probe, the RRF k and the fused
+    * rows kept. */
+  final val RrfN = RetrievalTopK
   final val RrfProbeId = 0L
   final val RrfK = 60
   final val RrfTopK = 10
@@ -3146,7 +3149,7 @@ object TextAnalysis {
     import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.types._
     val spark = t.documents.sparkSession
-    val sparse = qBm25(t, topK = RrfN)
+    val sparse = qBm25(t)
       .select(col("doc_id"), col("rank").as("rank_sparse"))
     // bounded parameter fetch: one dim-float probe vector rides the driver
     val probeRows = t.embeddings.filter(col("vec_id") === RrfProbeId)
@@ -3585,11 +3588,11 @@ object TextAnalysis {
 
   /** Q181: GPT-style concat-and-chunk sequence packing (Brown et al.
     * 2020 §2.3 — training examples are the corpus concatenated in a fixed
-    * document order and cut every `capacity` tokens, no padding): maps
+    * document order and cut every `ChunkCapacity` tokens, no padding): maps
     * every document's token span [start, start+n) onto its chunk range
     * and reports the packing layout per chunk — documents touching it,
     * documents STARTING in it, id range, and the exact token fill (full
-    * `capacity` everywhere but the tail chunk). The operational
+    * `ChunkCapacity` everywhere but the tail chunk). The operational
     * complement of q116: q116 prices padding waste under per-example
     * layouts; this is the layout that eliminates it.
     *
@@ -3598,9 +3601,9 @@ object TextAnalysis {
     * (doc_id-range buckets are value-monotone; per-bucket sums ride the
     * driver, offsets broadcast back, the window runs partitioned BY
     * BUCKET — no global sort). The chunk fan-out per document is
-    * ⌈n/capacity⌉+1 rows, and the final aggregate shuffles by chunk_id.
+    * ⌈n/ChunkCapacity⌉+1 rows, and the final aggregate shuffles by chunk_id.
     * All-integer arithmetic end to end — exact on both engines. */
-  def qConcatChunks(t: Tables, capacity: Long = ChunkCapacity): DataFrame = {
+  def qConcatChunks(t: Tables): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.types._
     val spark = t.documents.sparkSession
@@ -3640,16 +3643,16 @@ object TextAnalysis {
     d.join(offDf, Seq("bucket"))
       .withColumn("start", col("offset") + sum(col("n")).over(w) - col("n"))
       .withColumn("chunk_id",
-        explode(sequence(expr(s"start div $capacity"),
-          expr(s"(start + n - 1) div $capacity"))))
+        explode(sequence(expr(s"start div $ChunkCapacity"),
+          expr(s"(start + n - 1) div $ChunkCapacity"))))
       .groupBy(col("chunk_id"))
       .agg(count(lit(1)).as("n_docs"),
-        sum(when(expr(s"start div $capacity") === col("chunk_id"), 1L)
+        sum(when(expr(s"start div $ChunkCapacity") === col("chunk_id"), 1L)
           .otherwise(0L)).as("n_starting"),
         min(col("doc_id")).as("first_doc"),
         max(col("doc_id")).as("last_doc"),
-        sum(least(col("start") + col("n"), (col("chunk_id") + 1) * capacity)
-          - greatest(col("start"), col("chunk_id") * capacity))
+        sum(least(col("start") + col("n"), (col("chunk_id") + 1) * ChunkCapacity)
+          - greatest(col("start"), col("chunk_id") * ChunkCapacity))
           .as("fill_tokens"))
       .orderBy(col("chunk_id"))
   }

@@ -106,8 +106,8 @@ class BucketingSpec extends SparkSpec {
 
   test("q155: compaction plan preserves every char in contiguous bounded files") {
     val t = sf001
-    val target = 65536L
-    val files = ops.Layout.q155CompactionPlan(t, target).collect()
+    val target = ops.Layout.CompactionTarget
+    val files = ops.Layout.q155CompactionPlan(t).collect()
     val totalChars = t.documents.agg(sum(col("n_chars"))).head().getLong(0)
     val maxDoc = t.documents.agg(max(col("n_chars"))).head().getLong(0)
     // nothing lost, file ids contiguous from 0

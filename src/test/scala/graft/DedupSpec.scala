@@ -154,8 +154,8 @@ class DedupSpec extends SparkSpec {
 
   test("q185 bucket governor: pair math matches an actual banded self-join") {
     val t = sf0001
-    val cap = 16
-    val gov = Dedup.qBucketGovernor(t, cap).collect()
+    val cap = Dedup.GovernorCap
+    val gov = Dedup.qBucketGovernor(t).collect()
     assert(gov.length == 4, "one row per SimHash band")
     gov.foreach { r =>
       val Seq(chunk, nBuckets, nPairBuckets, nGoverned, governedDocs,
@@ -196,8 +196,8 @@ class DedupSpec extends SparkSpec {
 
   test("q201 prefix governor: pair math matches the blocked join it audits") {
     val t = sf0001
-    val cap = 16
-    val r = Dedup.qPrefixGovernor(t, cap).head()
+    val cap = Dedup.GovernorCap
+    val r = Dedup.qPrefixGovernor(t).head()
     val Seq(nBlocks, nPairBlocks, nGoverned, governedDocs, maxBlock,
       pairsRaw, pairsCapped) = (0 until 7).map(r.getLong)
     assert(nPairBlocks <= nBlocks && nGoverned <= nPairBlocks)

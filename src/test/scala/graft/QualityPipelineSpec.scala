@@ -89,7 +89,7 @@ class QualityPipelineSpec extends SparkSpec {
 
   test("q138 hybrid RRF: fusion recomputes from the two arms; both arms contribute") {
     val t = sf0001
-    val sparse = TextAnalysis.qBm25(t, topK = 20).collect()
+    val sparse = TextAnalysis.qBm25(t).collect()
       .map(r => r.getLong(1) -> r.getLong(0)).toMap // doc_id -> rank
     val embs = t.embeddings.select("vec_id", "embedding").collect()
       .map(r => r.getLong(0) -> r.getSeq[Float](1).toArray)
@@ -177,8 +177,8 @@ class QualityPipelineSpec extends SparkSpec {
 
   test("q181 concat-chunk packing: contiguous full chunks, conserved tokens") {
     val t = sf0001
-    val cap = 512L
-    val chunks = TextAnalysis.qConcatChunks(t, cap).collect()
+    val cap = TextAnalysis.ChunkCapacity
+    val chunks = TextAnalysis.qConcatChunks(t).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(5)))
     assert(chunks.nonEmpty)
     // chunk ids are 0..max contiguous
@@ -970,8 +970,8 @@ class QualityPipelineSpec extends SparkSpec {
 
   test("q208 temperature allocation: exact apportionment; flatter than raw shares") {
     val t = sf0001
-    val budget = 100000L
-    val rows = TextAnalysis.qTemperatureAlloc(t, budget).collect()
+    val budget = TextAnalysis.AllocBudget
+    val rows = TextAnalysis.qTemperatureAlloc(t).collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getDouble(3),
         r.getLong(4), r.getLong(5), r.getLong(6), r.getLong(7)))
     assert(rows.nonEmpty)
@@ -995,8 +995,8 @@ class QualityPipelineSpec extends SparkSpec {
 
   test("q209 weighted reservoir: keys recompute from md5; heavier docs rank higher at equal hash") {
     val t = sf0001
-    val k = 50
-    val rows = TextAnalysis.qWeightedReservoir(t, k).collect()
+    val k = TextAnalysis.ReservoirK
+    val rows = TextAnalysis.qWeightedReservoir(t).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
     assert(rows.length == k)
     assert(rows.map(_._1).toSeq == (1L to k.toLong))

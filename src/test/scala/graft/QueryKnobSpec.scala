@@ -24,26 +24,17 @@ class QueryKnobSpec extends AnyFunSuite {
     "Affinity.qAgglomerativeSql$default$1" -> "n: SparkEntry.oracleSql q184",
     "Affinity.qAgglomerativeSql$default$2" -> "k: SparkEntry.oracleSql q184",
     "Clustering.qKmeansStep$default$2" -> "updates: ClusteringSpec",
-    "Dedup.qBucketGovernor$default$2" -> "cap: DedupSpec",
     "Dedup.qGovernedFuzzy$default$2" -> "cap: DedupSpec",
     "Dedup.qGovernedPairs$default$2" -> "cap: DedupSpec",
-    "Dedup.qPrefixGovernor$default$2" -> "cap: DedupSpec",
     "Dedup.qSimhashGate$default$2" -> "maxHamming: DedupSpec",
-    "EventAnalytics.qCmsFreq$default$2" -> "d: SketchSpec",
-    "EventAnalytics.qCmsFreq$default$3" -> "w: SketchSpec",
-    "EventAnalytics.qCmsFreq$default$4" -> "topK: SketchSpec",
+    "EventAnalytics.qCmsFreq$default$2" -> "w: SketchSpec",
+    "EventAnalytics.qCmsFreq$default$3" -> "topK: SketchSpec",
     "EventAnalytics.qPseudonymize$default$2" -> "salt: EventAnalyticsSpec",
-    "Layout.q155CompactionPlan$default$2" -> "target: BucketingSpec",
     "Relational.qIncrementalAgg$default$2" -> "splitDate: ProfilingSpec",
-    "SuffixArray.qDupSpansSa$default$2" -> "w: SuffixArraySpec",
-    "TextAnalysis.qBm25$default$2" -> "topK: qHybridRrf (q138), QualityPipelineSpec",
-    "TextAnalysis.qConcatChunks$default$2" -> "capacity: QualityPipelineSpec",
     "TextAnalysis.qDataDiet$default$2" -> "keepPct: QualityPipelineSpec",
     "TextAnalysis.qDupSpans$default$2" -> "w: SuffixArraySpec",
     "TextAnalysis.qDupSpans$default$3" -> "minDocs: SuffixArraySpec",
-    "TextAnalysis.qTemperatureAlloc$default$2" -> "budget: QualityPipelineSpec",
     "TextAnalysis.qUncertaintySampling$default$2" -> "k: QualityPipelineSpec",
-    "TextAnalysis.qWeightedReservoir$default$2" -> "k: QualityPipelineSpec",
   )
 
   /** The top-level objects of the query packages, by simple name. */

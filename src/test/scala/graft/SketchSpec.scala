@@ -48,7 +48,7 @@ class SketchSpec extends SparkSpec {
   test("q156 CMS: one-sided guarantee for every key and per-row mass conservation") {
     val t = sf0001
     // narrow sketch (w=8) forces collisions — the approximate regime
-    val out = ops.EventAnalytics.qCmsFreq(t, d = 4, w = 8, topK = 50).collect()
+    val out = ops.EventAnalytics.qCmsFreq(t, w = 8, topK = 50).collect()
     assert(out.nonEmpty)
     // CMS NEVER undercounts: est ≥ exact for every probed key
     out.foreach { r =>
@@ -58,12 +58,12 @@ class SketchSpec extends SparkSpec {
     // with w=8 and ~hundreds of users, collisions must actually occur
     assert(out.exists(_.getLong(4) > 0), "no collisions at w=8 — sketch inert")
     // and at the default width the top keys should be nearly collision-free
-    val wide = ops.EventAnalytics.qCmsFreq(t, d = 4, w = 64, topK = 10).collect()
+    val wide = ops.EventAnalytics.qCmsFreq(t).collect()
     val n = t.events.count().toDouble
     wide.foreach { r =>
       // standard CMS bound: overcount ≤ e/w · N with prob 1 - e^-d per row;
       // min over d=4 rows makes exceeding it on ALL rows vanishingly rare
-      assert(r.getLong(4) <= (math.E / 64.0) * n * 2,
+      assert(r.getLong(4) <= (math.E / ops.EventAnalytics.CmsW) * n * 2,
         s"overcount ${r.getLong(4)} beyond twice the CMS bound")
     }
   }
